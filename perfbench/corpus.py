@@ -97,31 +97,33 @@ def oracle_state(docs: list[tuple[str, str]]) -> GraphState:
 
 
 def diff_tables(spark_tables: dict, ref: GraphState) -> list[str]:
-    """Names of the tables whose committed content differs from ``ref``."""
+    """Names of the tables whose committed rows differ from ``ref``
+    (compared as sorted lists, so a duplicated row is a difference)."""
     want = {
-        "nodes": {(l, i, tuple(sorted(p.items()))) for (l, i), p in ref.nodes.items()},
-        "edges": ref.edges,
-        "triples": ref.triples,
+        "nodes": sorted((l, i, tuple(sorted(p.items()))) for (l, i), p in ref.nodes.items()),
+        "edges": sorted(ref.edges),
+        "triples": sorted(ref.triples),
     }
     return [t for t in want if spark_tables[t] != want[t]]
 
 
 def collect_tables(spark, catalog) -> dict:
+    """The committed graph tables' rows, each table a sorted list."""
     return {
-        "nodes": {
+        "nodes": sorted(
             (r.node_label, r.node_id, tuple(sorted((r.properties or {}).items())))
             for r in catalog.read(spark, "nodes").collect()
-        },
-        "edges": {
+        ),
+        "edges": sorted(
             tuple(r)
             for r in catalog.read(spark, "edges")
             .select("src_label", "src_id", "rel_type", "dst_label", "dst_id")
             .collect()
-        },
-        "triples": {
+        ),
+        "triples": sorted(
             tuple(r)
             for r in catalog.read(spark, "triples").select("subj", "pred", "obj").collect()
-        },
+        ),
     }
 
 
