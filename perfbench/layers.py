@@ -42,7 +42,6 @@ PER_LAYER_UNITS = {
     "tableio.overwrite_s": "s",
     "tableio.bytes_written": "bytes",
     "tableio.files_written": "count",
-    "tableio.merge.rewrite_ratio": "ratio",
     "tableio.log_reads": "count",
     "tableio.log_read_s": "s",
     "tableio.snapshots": "count",
@@ -172,11 +171,6 @@ def layer_metrics(
 
     m["tableio.bytes_written"] = per_op(is_write, value=lambda s: s["bytes"])
     m["tableio.files_written"] = per_op(is_write, value=lambda s: s["files"])
-    merges = [s for op in ops for s in desc[op["id"]] if s["name"] == "tableio.merge"]
-    net_new = sum(s["rows"] - s["prev_rows"] for s in merges)
-    m["tableio.merge.rewrite_ratio"] = (
-        sum(s["rows"] for s in merges) / net_new if net_new > 0 else 0.0
-    )
     m["tableio.log_reads"] = per_op(lambda s: s["name"] == "tableio.log", value=lambda s: 1)
     m["tableio.log_read_s"] = per_op(lambda s: s["name"] == "tableio.log")
     m["tableio.snapshots"] = per_op(is_write, value=lambda s: 1)

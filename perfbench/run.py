@@ -37,7 +37,7 @@ DRIVER_MEMORY = "1g"
 
 END_TO_END_UNITS = {
     "setup_s": "s",
-    "op_ms_p50": "ms",
+    "op_ms": "ms",
     "peak_rss_mb": "MB",
     "head_bytes_per_input_byte": "ratio",
 }
@@ -235,6 +235,13 @@ def workload_figures(name: str, ops: list[dict]) -> dict:
         }
     if name == "graph_query" and done:
         fig["query_ms_p50"] = {"value": 1e3 * statistics.median(lat), "unit": "ms", "n": len(lat)}
+        by_kind: dict[str, list[float]] = {}
+        for o in done:
+            by_kind.setdefault(o["kind"], []).append(o["lat"])
+        fig["kind_ms_p50"] = {
+            "value": {k: 1e3 * statistics.median(v) for k, v in sorted(by_kind.items())},
+            "unit": "ms",
+        }
         # The highest percentile with at least ten samples beyond it.
         for q in (90, 80, 75):
             if len(lat) * (100 - q) / 100 >= 10:
@@ -243,10 +250,24 @@ def workload_figures(name: str, ops: list[dict]) -> dict:
     return fig
 
 
+def jvm_gc_s(spark) -> float:
+    """Seconds the driver JVM (in local mode, also the executor) has
+    spent in garbage collection so far."""
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    return sum(b.getCollectionTime() for b in beans) / 1e3
+
+
+def cpu_times() -> list[int]:
+    """Machine-wide CPU time counters from /proc/stat: user, nice,
+    system, idle, iowait, irq, softirq, steal (clock ticks)."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:9]]
+
+
 def run(args, work: str) -> dict:
     from layers import PER_LAYER_UNITS, kernel_bench, kernel_seconds, layer_metrics, prediction_checks
     from tracing import Tracer, spark_counts
-    from workloads import FULL, SMOKE, WORKLOADS
+    from workloads import FULL, SMOKE, WORKLOADS, round_latencies
 
     cores = len(os.sched_getaffinity(0))
     wl = WORKLOADS[args.workload](SMOKE if args.smoke else FULL, cores)
@@ -267,25 +288,35 @@ def run(args, work: str) -> dict:
         phases = {"session_s": session_s, "setup_s": setup_s, "warm_up_s": time.perf_counter() - t0}
 
         if not args.trace:
+            gc0, cpu0 = jvm_gc_s(spark), cpu_times()
             with PeakRss() as rss:
-                ops = wl.loop(spark, args.seconds, None, "run")
+                ops = wl.loop(spark, args.seconds)
+            cpu = [b - a for a, b in zip(cpu0, cpu_times())]
+            # Time the host gave to other guests, and the machine's busy
+            # share: what explains a slow run that no code change caused.
+            phases["loop_gc_s"] = jvm_gc_s(spark) - gc0
+            phases["loop_steal_share"] = cpu[7] / max(1, sum(cpu))
+            phases["loop_busy_share"] = 1 - (cpu[3] + cpu[4]) / max(1, sum(cpu))
             # An operation that raised is timed until it raised: it still
-            # counts against the latency the user saw.
+            # counts against the latency the user saw. Per round, so every
+            # operation kind of the mix weighs in.
             metrics = {
                 "setup_s": setup_s,
-                "op_ms_p50": 1e3 * statistics.median(o["lat"] for o in ops),
+                "op_ms": 1e3 * statistics.median(round_latencies(ops)),
                 "peak_rss_mb": rss.peak_bytes / 2**20,
                 "head_bytes_per_input_byte": wl.head_ratio,
             }
             units, info = END_TO_END_UNITS, {"workload_metrics": workload_figures(wl.name, ops)}
             info["phases"] = phases
+            info["round_ms"] = [1e3 * x for x in round_latencies(ops)]
             info["latencies_s"] = [o["lat"] for o in ops]
         else:
-            # Untraced then traced, half the time each, both from the same
-            # starting state: their difference is the tracing overhead.
-            untraced = wl.loop(spark, args.seconds / 2, None, "untraced")
+            # Untraced and traced rounds alternate; only the traced ones
+            # feed the spans and the Spark counts.
             tracer = Tracer()
-            traced = wl.loop(spark, args.seconds / 2, tracer, "traced")
+            ops = wl.loop(spark, args.seconds, tracer)
+            untraced = [o for o in ops if not o["traced"]]
+            traced = [o for o in ops if o["traced"]]
             try:
                 resume_ok = wl.resume(spark, tracer)
             except Exception:  # a resume that raises is a failed operation
@@ -301,8 +332,8 @@ def run(args, work: str) -> dict:
             spark = None
             counts = spark_counts(os.path.join(work, "events"), app_id, "traced")
 
-            overhead = statistics.median(o["lat"] for o in traced) / statistics.median(
-                o["lat"] for o in untraced
+            overhead = statistics.median(round_latencies(traced)) / statistics.median(
+                round_latencies(untraced)
             ) - 1
             metrics = layer_metrics(tracer, cores, kernel_s, counts, overhead)
             checks = prediction_checks(tracer, wl.name)
@@ -310,10 +341,14 @@ def run(args, work: str) -> dict:
                 checks["resume_commits_nothing"] = resume_ok
             out = os.path.join(ROOT, ".perfbench", "out", f"spans-{wl.name}-{args.seed}.jsonl")
             tracer.dump(out)
-            ops = untraced + traced + ([] if resume_ok is None else [{"ok": resume_ok}])
+            ops += [] if resume_ok is None else [{"ok": resume_ok}]
             units = PER_LAYER_UNITS
             info = {
                 "workload_metrics": workload_figures(wl.name, untraced),
+                "round_ms": {
+                    "untraced": [1e3 * x for x in round_latencies(untraced)],
+                    "traced": [1e3 * x for x in round_latencies(traced)],
+                },
                 "checks": checks,
                 "spans": {"count": len(tracer.spans), "file": os.path.relpath(out, ROOT)},
             }

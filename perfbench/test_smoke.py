@@ -34,7 +34,6 @@ EXERCISED = {
         "tableio.overwrite_s",
         "tableio.bytes_written",
         "tableio.files_written",
-        "tableio.merge.rewrite_ratio",
         "tableio.log_reads",
         "pipeline.run_s",
         "pipeline.counts_s",
@@ -85,6 +84,10 @@ def test_prints_every_metric_and_checks_outputs(workload, trace):
         assert all(result["metrics"][k]["value"] > 0 for k in ran), {
             k: result["metrics"][k]["value"] for k in ran
         }
+
+    if trace:
+        # untraced and traced rounds alternate in whole blocks of four
+        assert len(info["round_ms"]["untraced"]) == len(info["round_ms"]["traced"]) >= 2
 
     figures = info["workload_metrics"]
     assert figures["ops_checked"]["value"] == figures["ops"]["value"] >= 1

@@ -75,8 +75,7 @@ class Tracer:
 class TracingCatalog(LocalTableCatalog):
     """A catalog that spans ``overwrite``, ``merge``, ``read`` and ``log``.
 
-    Write spans also record the snapshot directory they committed and,
-    for a merge, the data directories of the head it replaced, so the
+    Write spans also record the snapshot directory they committed, so the
     bytes, files and rows written can be measured after the operation
     without adding to its time."""
 
@@ -101,11 +100,9 @@ class TracingCatalog(LocalTableCatalog):
         rec["snap_dir"] = self._snap_dir(name, self._head(name)[-1]["snapshot"])
 
     def merge(self, spark, df, name, keys, run_id="", stage=""):
-        prev = self._head(name)
         with self.tracer.span("tableio.merge", table=name) as rec:
             super().merge(spark, df, name, keys, run_id, stage)
         rec["snap_dir"] = self._snap_dir(name, self._head(name)[-1]["snapshot"])
-        rec["prev_dirs"] = self._chain_dirs(name, prev) if prev else []
 
 
 def parquet_stats(dirs: list[str]) -> dict:
@@ -123,13 +120,10 @@ def parquet_stats(dirs: list[str]) -> dict:
 
 
 def annotate_writes(tracer: Tracer) -> None:
-    """Fill bytes/files/rows (and rows of the replaced head) into the
-    write spans not yet annotated."""
+    """Fill bytes/files/rows into the write spans not yet annotated."""
     for s in tracer.spans:
         if "snap_dir" in s and "rows" not in s:
             s.update(parquet_stats([s["snap_dir"]]))
-            if s["name"] == "tableio.merge":
-                s["prev_rows"] = parquet_stats(s["prev_dirs"])["rows"]
 
 
 PHASE_PROPERTY = "perfbench.phase"

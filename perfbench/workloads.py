@@ -8,15 +8,18 @@ between operations.
 
 ``setup`` builds everything a run needs from the seed (inputs, reference
 answers, the warehouse graph_query reads); ``warm_up`` then runs the
-loop's code paths once, untimed. ``loop`` runs operations until
-``window_done`` and returns one record per operation. With a ``Tracer``,
-every operation is spanned and the catalog is a ``TracingCatalog``.
+loop's code paths once, untimed. ``loop`` runs rounds until
+``window_done`` and returns one record per operation. A round is one
+build (batch_build) or one whole deck of the query mix (graph_query).
+With a ``Tracer``, rounds alternate untraced and traced; a traced round's
+operations are spanned and its catalog is a ``TracingCatalog``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import statistics
 import sys
 import time
 import traceback
@@ -48,15 +51,35 @@ FULL = {"convs": 1000, "decks": 200}
 SMOKE = {"convs": 60, "decks": 4}
 
 GRAPH_TABLES = ("nodes", "edges", "triples")
-MIN_OPS = 3
+WARM_UP_DECKS = 2
+MIN_ROUNDS = 3
 
 
-def window_done(ops: list[dict], seconds: float) -> bool:
+def window_done(ops: list[dict], rounds: int, seconds: float, paired: bool) -> bool:
     """The measuring window is ``seconds`` of operation time (checks
-    between operations do not count) and at least ``MIN_OPS`` operations,
-    so a run's operation count depends only on how fast the operations
-    are."""
-    return len(ops) >= MIN_OPS and sum(o["lat"] for o in ops) >= seconds
+    between operations do not count) and at least ``MIN_ROUNDS`` rounds,
+    so a run's round count depends only on how fast the operations are;
+    ``paired`` windows end on a whole block of ``traced_round``."""
+    return (
+        rounds >= MIN_ROUNDS
+        and sum(o["lat"] for o in ops) >= seconds
+        and not (paired and rounds % 4)
+    )
+
+
+def traced_round(r: int) -> bool:
+    """Rounds run untraced, traced, traced, untraced, block after block:
+    drift that is linear over a block falls on both halves alike."""
+    return r % 4 in (1, 2)
+
+
+def round_latencies(ops: list[dict]) -> list[float]:
+    """Mean operation latency of each round, in round order. Every round
+    of a workload holds the same operation kinds, so rounds compare."""
+    by_round: dict[int, list[float]] = {}
+    for o in ops:
+        by_round.setdefault(o["round"], []).append(o["lat"])
+    return [statistics.fmean(v) for _r, v in sorted(by_round.items())]
 
 
 def head_bytes(catalog: LocalTableCatalog) -> int:
@@ -80,6 +103,22 @@ class Workload:
     def __init__(self, sizes: dict, cores: int):
         self.sizes = sizes
         self.cores = cores
+
+    def loop(self, spark, seconds: float, tracer: Tracer | None = None) -> list[dict]:
+        """Run rounds until the window is done; one record per operation.
+
+        With ``tracer``, rounds alternate untraced and traced
+        (``traced_round``) and the window ends on a whole block, so drift
+        over the run (JIT, caches, a busy host) falls on both halves
+        alike and their difference is the tracing overhead."""
+        ops: list[dict] = []
+        rounds = 0
+        while not window_done(ops, rounds, seconds, tracer is not None):
+            traced = tracer is not None and traced_round(rounds)
+            for o in self.round(spark, rounds, tracer if traced else None):
+                ops.append({**o, "round": rounds, "traced": traced})
+            rounds += 1
+        return ops
 
     def catalog(self, root: str, tracer: Tracer | None) -> LocalTableCatalog:
         return TracingCatalog(root, tracer) if tracer else LocalTableCatalog(root)
@@ -126,35 +165,34 @@ class BatchBuild(Workload):
             LocalTableCatalog(os.path.join(self.work, "warm-wh")), run_id="warm", fused=True,
         )
 
-    def loop(self, spark, seconds: float, tracer: Tracer | None, tag: str) -> list[dict]:
-        ops: list[dict] = []
-        while not window_done(ops, seconds):
-            op_id = f"{tag}-build-{len(ops)}"
-            wh = os.path.join(self.work, op_id)
-            cat = self.catalog(wh, tracer)
-            df = spark.read.parquet(self.corpus_path)
-            run = (
-                tracer.wrap("pipeline.run_pipeline", pipeline.run_pipeline)
-                if tracer
-                else pipeline.run_pipeline
-            )
-            lat, _res, err = self.timed(
-                spark, tracer, op_id,
-                lambda: run(spark, df, cat, run_id=op_id, fused=True),
-            )
-            ok = err is None and self._matches(spark, wh)
-            ops.append({
-                "id": op_id, "lat": lat, "ok": ok, "error": err is not None, "checked": err is None,
-                "turns": self.corpus["turns"], "input_bytes": self.corpus["bytes"],
-                "write_bytes": dir_bytes(wh),
-            })
-            if tracer:  # before the warehouse it measures is deleted
-                annotate_writes(tracer)
-            if self.last_wh:
-                shutil.rmtree(self.last_wh, ignore_errors=True)
-            self.last_wh, self.last_run = wh, op_id
-        self.head_ratio = head_bytes(LocalTableCatalog(self.last_wh)) / self.corpus["bytes"]
-        return ops
+    def round(self, spark, r: int, tracer: Tracer | None) -> list[dict]:
+        """One build into a fresh warehouse, checked against the oracle."""
+        op_id = f"{'traced' if tracer else 'run'}-build-{r}"
+        wh = os.path.join(self.work, op_id)
+        cat = self.catalog(wh, tracer)
+        df = spark.read.parquet(self.corpus_path)
+        run = (
+            tracer.wrap("pipeline.run_pipeline", pipeline.run_pipeline)
+            if tracer
+            else pipeline.run_pipeline
+        )
+        lat, _res, err = self.timed(
+            spark, tracer, op_id,
+            lambda: run(spark, df, cat, run_id=op_id, fused=True),
+        )
+        ok = err is None and self._matches(spark, wh)
+        op = {
+            "id": op_id, "lat": lat, "ok": ok, "error": err is not None, "checked": err is None,
+            "turns": self.corpus["turns"], "input_bytes": self.corpus["bytes"],
+            "write_bytes": dir_bytes(wh),
+        }
+        if tracer:  # before the warehouse it measures is deleted
+            annotate_writes(tracer)
+        if self.last_wh:
+            shutil.rmtree(self.last_wh, ignore_errors=True)
+        self.last_wh, self.last_run = wh, op_id
+        self.head_ratio = head_bytes(LocalTableCatalog(wh)) / self.corpus["bytes"]
+        return [op]
 
     def _matches(self, spark, wh: str) -> bool:
         try:
@@ -198,9 +236,9 @@ class GraphQuery(Workload):
         self.head_ratio = head_bytes(cat) / self.corpus["bytes"]
 
     def warm_up(self, spark) -> None:
-        """Every query kind once, so no query is timed cold."""
-        for spec in {kind: (kind, arg) for kind, arg in self.plan}.values():
-            self.execute(spark, spec, None)
+        """The plan's last decks, untimed, so no query kind is timed cold."""
+        for r in range(WARM_UP_DECKS):
+            self.round(spark, self.sizes["decks"] - 1 - r, None)
 
     def execute(self, spark, spec: tuple, tracer: Tracer | None) -> list:
         kind, arg = spec
@@ -222,17 +260,18 @@ class GraphQuery(Workload):
                 return df.collect()
         return fn(spark, *args).collect()
 
-    def loop(self, spark, seconds: float, tracer: Tracer | None, tag: str) -> list[dict]:
+    def round(self, spark, r: int, tracer: Tracer | None) -> list[dict]:
+        """One whole deck of the plan: every query kind, in its shares."""
+        base = r % self.sizes["decks"] * DECK_SIZE
         ops: list[dict] = []
-        # Whole decks only, so every run sees the mix in its exact shares.
-        while len(ops) % DECK_SIZE or not window_done(ops, seconds):
-            spec = self.plan[len(ops) % len(self.plan)]
+        for i, spec in enumerate(self.plan[base : base + DECK_SIZE]):
+            op_id = f"{'traced' if tracer else 'run'}-q{r}.{i}"
             lat, rows, err = self.timed(
-                spark, tracer, f"{tag}-q{len(ops)}",
+                spark, tracer, op_id,
                 lambda: self.execute(spark, spec, tracer), kind=spec[0],
             )
             ok = err is None and normalize(spec[0], rows) == self.answers[spec]
-            ops.append({"id": f"{tag}-q{len(ops)}", "lat": lat, "ok": ok,
+            ops.append({"id": op_id, "lat": lat, "ok": ok,
                         "error": err is not None, "checked": err is None, "kind": spec[0]})
         return ops
 
