@@ -97,19 +97,26 @@ class PeakRss:
     def __init__(self, interval_s: float = 0.5):
         self.interval_s = interval_s
         self.peak_bytes = 0
+        # each command's own peak (java, python3, ...), for diagnosis
+        self.peak_by_command: dict[str, int] = {}
         self._stop = threading.Event()
         self._page = os.sysconf("SC_PAGE_SIZE")
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _sample(self) -> int:
-        total = 0
+        by_command: dict[str, int] = {}
         for pid in tree_pids(os.getpid()):
             try:
                 with open(f"/proc/{pid}/statm") as f:
-                    total += int(f.read().split()[1]) * self._page
+                    rss = int(f.read().split()[1]) * self._page
+                with open(f"/proc/{pid}/comm") as f:
+                    command = f.read().strip()
             except OSError:
-                pass
-        return total
+                continue
+            by_command[command] = by_command.get(command, 0) + rss
+        for command, rss in by_command.items():
+            self.peak_by_command[command] = max(self.peak_by_command.get(command, 0), rss)
+        return sum(by_command.values())
 
     def _run(self):
         while not self._stop.is_set():
@@ -143,9 +150,11 @@ def configure_env(work: str) -> None:
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["PYSPARK_PYTHON"] = sys.executable
     # Every JVM (the launcher and the driver) keeps its temp files in the
-    # checkout and writes no /tmp/hsperfdata file.
+    # checkout and writes no /tmp/hsperfdata file. The heap starts at its
+    # maximum: a heap G1 grows on demand reached 1 GB in some runs and not
+    # in others, which moved peak RSS by half between runs.
     os.environ["JAVA_TOOL_OPTIONS"] = (
-        f"-XX:-UsePerfData -Djava.io.tmpdir={os.path.join(work, 'tmp')}"
+        f"-Xms{DRIVER_MEMORY} -XX:-UsePerfData -Djava.io.tmpdir={os.path.join(work, 'tmp')}"
     )
     os.environ.pop("SPARK_MASTER", None)
 
@@ -243,7 +252,7 @@ def workload_figures(name: str, ops: list[dict]) -> dict:
             "unit": "ms",
         }
         # The highest percentile with at least ten samples beyond it.
-        for q in (90, 80, 75):
+        for q in (90, 80, 75, 70, 60):
             if len(lat) * (100 - q) / 100 >= 10:
                 fig[f"query_ms_p{q}"] = {"value": 1e3 * percentile(lat, q), "unit": "ms", "n": len(lat)}
                 break
@@ -295,6 +304,9 @@ def run(args, work: str) -> dict:
             # Time the host gave to other guests, and the machine's busy
             # share: what explains a slow run that no code change caused.
             phases["loop_gc_s"] = jvm_gc_s(spark) - gc0
+            phases["peak_rss_mb_by_command"] = {
+                k: v / 2**20 for k, v in sorted(rss.peak_by_command.items())
+            }
             phases["loop_steal_share"] = cpu[7] / max(1, sum(cpu))
             phases["loop_busy_share"] = 1 - (cpu[3] + cpu[4]) / max(1, sum(cpu))
             # An operation that raised is timed until it raised: it still
