@@ -150,11 +150,9 @@ def configure_env(work: str) -> None:
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["PYSPARK_PYTHON"] = sys.executable
     # Every JVM (the launcher and the driver) keeps its temp files in the
-    # checkout and writes no /tmp/hsperfdata file. The heap starts at its
-    # maximum: a heap G1 grows on demand reached 1 GB in some runs and not
-    # in others, which moved peak RSS by half between runs.
+    # checkout and writes no /tmp/hsperfdata file.
     os.environ["JAVA_TOOL_OPTIONS"] = (
-        f"-Xms{DRIVER_MEMORY} -XX:-UsePerfData -Djava.io.tmpdir={os.path.join(work, 'tmp')}"
+        f"-XX:-UsePerfData -Djava.io.tmpdir={os.path.join(work, 'tmp')}"
     )
     os.environ.pop("SPARK_MASTER", None)
 
@@ -162,6 +160,10 @@ def configure_env(work: str) -> None:
 def session_conf(work: str, trace: bool) -> dict[str, str]:
     conf = {
         "spark.ui.showConsoleProgress": "false",
+        # The driver heap starts at its maximum: a heap G1 grows on demand
+        # reached 1 GB in some runs and not in others, which moved peak RSS
+        # by half between runs.
+        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY}",
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "spark-warehouse"),
     }
@@ -301,12 +303,12 @@ def run(args, work: str) -> dict:
             with PeakRss() as rss:
                 ops = wl.loop(spark, args.seconds)
             cpu = [b - a for a, b in zip(cpu0, cpu_times())]
-            # Time the host gave to other guests, and the machine's busy
-            # share: what explains a slow run that no code change caused.
             phases["loop_gc_s"] = jvm_gc_s(spark) - gc0
             phases["peak_rss_mb_by_command"] = {
                 k: v / 2**20 for k, v in sorted(rss.peak_by_command.items())
             }
+            # Time the host gave to other guests, and the machine's busy
+            # share: what explains a slow run that no code change caused.
             phases["loop_steal_share"] = cpu[7] / max(1, sum(cpu))
             phases["loop_busy_share"] = 1 - (cpu[3] + cpu[4]) / max(1, sum(cpu))
             # An operation that raised is timed until it raised: it still
