@@ -51,8 +51,8 @@ FULL = {"convs": 1000, "decks": 200}
 SMOKE = {"convs": 60, "decks": 4}
 
 GRAPH_TABLES = ("nodes", "edges", "triples")
-WARM_UP_DECKS = 2
-MIN_ROUNDS = 3
+WARM_UP_DECKS = 1
+MIN_ROUNDS = 2
 
 
 def window_done(ops: list[dict], rounds: int, seconds: float, paired: bool) -> bool:
