@@ -110,13 +110,20 @@ class Workload:
         With ``tracer``, rounds alternate untraced and traced
         (``traced_round``) and the window ends on a whole block, so drift
         over the run (JIT, caches, a busy host) falls on both halves
-        alike and their difference is the tracing overhead."""
+        alike and their difference is the tracing overhead. The first
+        round after warm-up still runs slow, and would fall on the
+        untraced half alone, so a traced run does it unrecorded."""
         ops: list[dict] = []
         rounds = 0
+        first = 0
+        if tracer is not None:
+            self.round(spark, 0, None)
+            first = 1
         while not window_done(ops, rounds, seconds, tracer is not None):
             traced = tracer is not None and traced_round(rounds)
-            for o in self.round(spark, rounds, tracer if traced else None):
-                ops.append({**o, "round": rounds, "traced": traced})
+            r = first + rounds
+            for o in self.round(spark, r, tracer if traced else None):
+                ops.append({**o, "round": r, "traced": traced})
             rounds += 1
         return ops
 
