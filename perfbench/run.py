@@ -286,8 +286,8 @@ def run(args, work: str) -> dict:
     spark = None
     try:
         # One set-up per run: a repeat in the same JVM would be warm, which
-        # is not the cost a user pays, and the driver's time budget leaves
-        # no room for more cold ones (see DESIGN.md). Warm-up runs after
+        # is not the cost a user pays, and the time budget of a full
+        # comparison leaves no room for more cold ones (see DESIGN.md). Warm-up runs after
         # it, outside both set-up and measurement.
         t0 = time.perf_counter()
         spark = start_session(cores, conf)
