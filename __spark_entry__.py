@@ -20,22 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from threat_intelligence_knowledge_graph_spark.operators.chunker import chunk_documents
-from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-    minhash_near_duplicates,
-    simhash_signatures_df,
-)
 from threat_intelligence_knowledge_graph_spark.operators.extraction import (
     extract_graph_records,
-)
-from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-    BPE_TOKEN_REGEX,
-    LANG_STOPWORDS,
-    STOPWORDS_EN,
-    fingerprints,
-    language_id,
-    quality_score,
-    tfidf_top_terms,
-    token_counts,
 )
 
 
@@ -565,23 +551,6 @@ def q_html_to_text(spark, sf_dir):
     )
 
 
-def q_multimodal_decode(spark, sf_dir):
-    """Multimodal binary-column plumbing end-to-end: pack a 16-byte-header
-    payload per orderkey (arithmetic dims), ship the binary column through
-    Arrow, decode with the real mapInPandas kernel, emit typed metadata.
-    The oracle recomputes the header fields analytically."""
-    from threat_intelligence_knowledge_graph_spark.operators.multimodal import (
-        decode_assets,
-        pack_assets,
-    )
-
-    ids = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("asset_id")
-    )
-    decoded = decode_assets(pack_assets(ids), fake=True)
-    return decoded.select("asset_id", "kind", "width", "height", "n_frames")
-
-
 def q_skew_hot_entities(spark, sf_dir):
     """Salted two-phase rollup (value-independent salt) over the
     constructed triple table — must equal a plain GROUP BY count."""
@@ -590,25 +559,6 @@ def q_skew_hot_entities(spark, sf_dir):
     )
 
     return hot_entity_counts(_constructed_triples(spark, sf_dir), n_salts=32)
-
-
-def q_pack_documents(spark, sf_dir):
-    """Sequence packing for pretraining batches: documents → fixed-token
-    packs via the deterministic bin-by-prefix-sum operator (one window
-    cumsum — exactly SQL-reproducible, unlike greedy first-fit)."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        pack_documents,
-    )
-
-    d = token_counts(_t(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.col("ws_tokens").cast("long").alias("n_tokens"),
-        (F.col("doc_id") % 4).cast("long").alias("shard"),
-    )
-    # Sharded packing (the 100 TB shape): the cumsum window partitions by
-    # shard so no single task sees the whole corpus; (shard, pack_id) is
-    # the global pack key.
-    return pack_documents(d, token_budget=500, shard_col="shard")
 
 
 def q_train_val_split(spark, sf_dir):
@@ -622,29 +572,6 @@ def q_train_val_split(spark, sf_dir):
     return split_by_hash(d, "doc_id", train_frac=0.9)
 
 
-def q_ngram_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: (doc, eval-item) pairs sharing a word
-    3-gram. The eval set is synthesized from the corpus itself (every
-    25th doc's first 12 tokens) so the oracle needs no external data and
-    hits are guaranteed non-vacuous (each eval item at least matches its
-    own source doc)."""
-    from threat_intelligence_knowledge_graph_spark.operators.decontaminate import (
-        ngram_contamination,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    ev = d.filter(F.col("doc_id") % 25 == 0).select(
-        F.col("doc_id").alias("eval_id"),
-        F.array_join(F.slice(toks, 1, 12), " ").alias("text"),
-    )
-    return ngram_contamination(d, ev, n=3).select(
-        "doc_id",
-        "eval_id",
-        F.col("shared_ngrams").cast("long").alias("shared_ngrams"),
-    )
-
-
 def q_sample_stratified(spark, sf_dir):
     """Deterministic stratified sampling by engine-portable md5 bucket —
     per-stratum rates, partition-independent, monotone in the rate."""
@@ -656,170 +583,6 @@ def q_sample_stratified(spark, sf_dir):
     return sample_by_hash(
         o, "o_orderkey", "o_orderstatus", {"O": 0.1, "F": 0.05, "P": 0.5}
     )
-
-
-def _planted_curation_docs(spark, sf_dir):
-    """Curation-pipeline corpus: the planted near-dup families (every
-    7th orderkey — k % 3 ≠ 0 families carry a jaccard-1.0 pair) plus
-    four crafted extras, one per upstream filter stage:
-
-      -301  punct/caps junk       → dropped by the quality filter
-      -302  Spanish stopword text → dropped by the language filter
-      -200  exact copy of -201    → dropped by exact dedup (min id kept)
-      -201  standalone English    → survives everything
-    """
-    base = _planted_near_dup_docs(spark, sf_dir, every=7)
-    extras = spark.createDataFrame(
-        [
-            (-301, "A. B. C."),
-            (-302, "el la de que y un los se no por el la de que y un los se no por"),
-            (-201, "the and of to in it is was for on the and of to in it is was for on"),
-            (-200, "the and of to in it is was for on the and of to in it is was for on"),
-        ],
-        "doc_id long, text string",
-    )
-    return base.select(F.col("doc_id").cast("long"), "text").unionByName(extras)
-
-
-def q_curate_corpus(spark, sf_dir):
-    """The COMPOSED curation pipeline (plans/curation.py) end-to-end:
-    quality → language → exact dedup → minhash near-dedup →
-    decontamination → split → token counts → packing, over a corpus
-    planted so every stage bites and every stage's survivor set is
-    analytic (the minhash_near_dup_docs soundness argument extends to
-    the composition: same-cycle families are jaccard-1.0 clusters, so
-    the approximate near-dedup provably equals the exact answer).
-
-    Eval items for decontamination are the first 12 tokens of the j=0
-    doc of every k % 5 == 0 family — an 8-gram window of a wd-cycle
-    always contains 'wd<k>', so exactly those source docs (and no
-    we-cycle survivor) are contaminated."""
-    from threat_intelligence_knowledge_graph_spark.plans.curation import (
-        curate_documents,
-    )
-
-    docs = _planted_curation_docs(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    ev = docs.filter((F.col("doc_id") >= 0) & (F.col("doc_id") % 10 == 0)).select(
-        F.col("doc_id").alias("eval_id"),
-        F.array_join(F.slice(toks, 1, 12), " ").alias("text"),
-    )
-    curated, _metrics = curate_documents(
-        docs,
-        ev,
-        min_quality=0.3,
-        languages=("en",),
-        near_dup_threshold=0.8,
-        decontaminate_n=8,
-        train_frac=0.9,
-        token_budget=64,
-    )
-    return curated.select(
-        "doc_id",
-        F.round("quality", 6).alias("quality"),
-        "lang_pred",
-        "split",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("pack_id").cast("long").alias("pack_id"),
-    )
-
-
-def q_curate_increment(spark, sf_dir):
-    """Steady-state incremental curation (plans/curation.py::
-    curate_increment) — TWO increments against a throwaway warehouse,
-    every admission decision analytic:
-
-    Batch 1 (id 10k per every-7th orderkey k): the 4-word cycle doc
-    'wa<k> wb<k> wc<k> wd<k>' ×5. Eval items are the first 12 tokens of
-    the k%5==0 docs (a 12-word window of a period-4 cycle contains all
-    four 8-gram phases, so exactly those docs are contaminated — the
-    q_curate_corpus argument); everything else is accepted.
-
-    Batch 2 (id 10k + OFFSET where OFFSET = 10·max(orderkey)+10,
-    computed from the data so the monotone-across-batches invariant
-    holds at ANY scale factor — a fixed 10^8 offset would interleave
-    below batch-1 ids at sf10+), one doc per k by k%4: 0 → exact copy of batch-1's doc (exact_dup — via the SHADOW
-    hash set when k%5==0, i.e. when the original was itself rejected as
-    contaminated); 1 → same cycle ×7 (jaccard-1.0 near_dup, via the
-    band index incl. shadow rows); 2 → fresh 'xa<k>…' cycle (accepted —
-    disjoint word shingles, eval-clean); 3 → Spanish stopword text
-    (language).
-
-    Output: (batch, doc_id, status) for every input doc; the DuckDB
-    oracle states the same decisions as CASE arithmetic on the keys."""
-    import shutil
-    import tempfile
-
-    from threat_intelligence_knowledge_graph_spark.plans.curation import (
-        curate_increment,
-    )
-    from threat_intelligence_knowledge_graph_spark.sources.tableio import (
-        LocalTableCatalog,
-    )
-
-    ks = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 7 == 0)
-        .select(F.col("o_orderkey").alias("k"))
-    )
-    s = F.col("k").cast("string")
-    cycle = F.concat_ws(
-        " ",
-        F.concat(F.lit("wa"), s), F.concat(F.lit("wb"), s),
-        F.concat(F.lit("wc"), s), F.concat(F.lit("wd"), s),
-    )
-    xcycle = F.concat_ws(
-        " ",
-        F.concat(F.lit("xa"), s), F.concat(F.lit("xb"), s),
-        F.concat(F.lit("xc"), s), F.concat(F.lit("xd"), s),
-    )
-    rep = lambda c, n: F.array_join(F.array_repeat(c, n), " ")  # noqa: E731
-    b1 = ks.select((F.col("k") * 10).alias("doc_id"), rep(cycle, 5).alias("text"))
-    ev = ks.filter(F.col("k") % 5 == 0).select(
-        F.col("k").alias("eval_id"), rep(cycle, 3).alias("text")
-    )
-    spanish = F.concat(
-        F.lit("el la de que y un los se no por el la de que y un los se no por s"),
-        s,
-    )
-    b2_text = (
-        F.when(F.col("k") % 4 == 0, rep(cycle, 5))
-        .when(F.col("k") % 4 == 1, rep(cycle, 7))
-        .when(F.col("k") % 4 == 2, rep(xcycle, 5))
-        .otherwise(spanish)
-    )
-    # bounded 1-row collect (the IVF-centroid precedent) to derive the
-    # scale-proof monotone offset from the data itself
-    offset = 10 * ks.agg(F.max("k")).first()[0] + 10
-    b2 = ks.select(
-        (F.col("k") * 10 + F.lit(offset)).alias("doc_id"),
-        b2_text.alias("text"),
-    )
-
-    wh = tempfile.mkdtemp(prefix="tikg-contract-incr-")
-    try:
-        catalog = LocalTableCatalog(wh)
-        acc1, rej1 = curate_increment(
-            spark, b1, catalog, ev, run_id="b1", decontaminate_n=8
-        )
-        acc2, rej2 = curate_increment(
-            spark, b2, catalog, ev, run_id="b2", decontaminate_n=8
-        )
-        tag = lambda df, b, st: df.select(  # noqa: E731
-            F.lit(b).alias("batch"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-            st.alias("status"),
-        )
-        out = (
-            tag(acc1, 1, F.lit("accepted"))
-            .unionByName(tag(rej1, 1, F.col("reason")))
-            .unionByName(tag(acc2, 2, F.lit("accepted")))
-            .unionByName(tag(rej2, 2, F.col("reason")))
-        )
-        # materialize before the warehouse dir disappears
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 def q_sample_mixture(spark, sf_dir):
@@ -851,30 +614,6 @@ def q_split_oversized_docs(spark, sf_dir):
         F.col("piece_idx").cast("int").alias("piece_idx"),
         "text",
         F.col("n_tokens").cast("long").alias("n_tokens"),
-    )
-
-
-def q_text_scrub_pii(spark, sf_dir):
-    """PII redaction (emails/phones/SSNs/cards → typed placeholders) —
-    a pure regexp_replace chain whose pattern strings are shared
-    verbatim with the RE2 oracle (PII_PATTERNS is written lookaround-
-    free for exactly this portability)."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        scrub_pii,
-    )
-
-    return scrub_pii(_t(spark, sf_dir, "documents"))
-
-
-def q_text_repetition_ratio(spark, sf_dir):
-    """Gopher/RefinedWeb-style repetition signal: 1 − distinct/total
-    8-char shingles, pure Catalyst."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        repetition_ratio,
-    )
-
-    return repetition_ratio(_t(spark, sf_dir, "documents")).select(
-        "doc_id", F.round("rep_ratio", 6).alias("rep_ratio")
     )
 
 
@@ -1584,67 +1323,6 @@ def q_graph_betweenness(spark, sf_dir):
     return betweenness(edges, srcs, max_hops=13)
 
 
-def q_text_unigram_logprob(spark, sf_dir):
-    """Unigram-LM quality signal (CCNet/Gopher perplexity-proxy): mean
-    ln p(token) per document under the corpus's own MLE unigram model.
-    Same tokenizer as tfidf_top_terms; rounded post-mean."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        unigram_logprob,
-    )
-
-    return unigram_logprob(_t(spark, sf_dir, "documents"))
-
-
-def q_text_bigram_logprob(spark, sf_dir):
-    """Bigram-LM quality signal (order-2 of the CCNet/KenLM perplexity
-    family): mean ln p(w2|w1) per document under the corpus's own MLE
-    bigram model. Same tokenizer as unigram_logprob; rounded
-    post-mean."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        bigram_logprob,
-    )
-
-    return bigram_logprob(_t(spark, sf_dir, "documents"))
-
-
-def q_source_datasheet(spark, sf_dir):
-    """Per-source dataset-card rollup: doc counts, exact-dup rate
-    (md5 identity), language spread, distinct vocabulary — the
-    composition sheet next to corpus_fertility's token budget."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        source_datasheet,
-    )
-
-    return source_datasheet(_t(spark, sf_dir, "documents"))
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance log-weights (Xie et al. 2023): every document
-    scored by the smoothed log-likelihood ratio of its hashed
-    unigram+bigram bag under the src0 target distribution vs the raw
-    corpus's own. Every ln argument is an exact integer; rounded
-    post-sum."""
-    from threat_intelligence_knowledge_graph_spark.operators.dsir import (
-        dsir_logratio,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return dsir_logratio(docs, docs.filter("source = 'src0'"), dim=512)
-
-
-def q_dsir_resample(spark, sf_dir):
-    """DSIR Gumbel-top-k resample: 100 docs drawn without replacement
-    proportionally to exp(log_weight) via hash-seeded standard-Gumbel
-    noise; key rounded BEFORE ranking, ties broken on doc_id, so the
-    selected set is a deterministic total-order prefix on any engine."""
-    from threat_intelligence_knowledge_graph_spark.operators.dsir import (
-        dsir_resample,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return dsir_resample(docs, docs.filter("source = 'src0'"), 100, dim=512)
-
-
 def q_ip_cidr_enrich(spark, sf_dir):
     """IP→CIDR block enrichment with longest-prefix match: the IOC
     corpus's 10.a.b.c addresses against 25 /16 blocks (from nation)
@@ -1679,39 +1357,6 @@ def q_ip_cidr_enrich(spark, sf_dir):
     corp = spark.createDataFrame([("10.0.0.0/8", "corp")], ["cidr", "label"])
     return ip_cidr_enrich(ips, nat.union(corp)).select(
         "ip_id", "ip", "cidr", "label"
-    )
-
-
-def q_feature_hash(spark, sf_dir):
-    """Hashing-trick featurization of the documents table: sparse
-    (doc, idx, weight) at dim=1024 with a ±1 sign hash — vocabulary-
-    free classifier features, bit-reproducible across engines via the
-    md5_number_upper family (collisions and sign cancellations match
-    exactly)."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        feature_hash,
-    )
-
-    return feature_hash(_t(spark, sf_dir, "documents"), dim=1024)
-
-
-def q_quality_model_score(spark, sf_dir):
-    """Model-based quality filtering (fastText/DCLM-style): a pinned
-    linear model over the dim=1024 hashing-trick features —
-    score = round(sigmoid(dot + bias), 6), keep = score >= 0.5.
-    Weights come from the deterministic md5 hash grid (the stand-in
-    for a trained model's exported (idx, w) frame), so the oracle
-    recomputes the exact same model; the corpus is scanned once and
-    the weight table is broadcast."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        hash_grid_weights,
-        quality_model_score,
-    )
-
-    return quality_model_score(
-        _t(spark, sf_dir, "documents"),
-        hash_grid_weights(spark, dim=1024),
-        dim=1024,
     )
 
 
@@ -1914,36 +1559,6 @@ def q_graph_katz(spark, sf_dir):
     return katz_centrality(cyc.union(reg), iterations=3)
 
 
-def q_span_dup_stats(spark, sf_dir):
-    """Substring-level duplication profile (Lee et al. 2021 at 6-token
-    granularity): per document the count of positional 6-grams whose
-    md5 occurs >= 2 times corpus-wide, the distinct token positions
-    they cover, and the covered ratio. The near-dup families planted in
-    `documents` make the coverage non-trivial; the oracle recomputes
-    the identical positional-gram arithmetic in SQL."""
-    from threat_intelligence_knowledge_graph_spark.operators.span_dedup import (
-        duplicated_span_stats,
-    )
-
-    return duplicated_span_stats(
-        _t(spark, sf_dir, "documents"), n=6, min_occurrences=2
-    )
-
-
-def q_span_scrub(spark, sf_dir):
-    """Duplicated-span removal (Lee et al. substring dedup at 6-token
-    granularity): every token covered by a corpus-duplicated 6-gram is
-    dropped; output is the normalized token stream re-joined with
-    single spaces. Wholly-boilerplate docs scrub to ''."""
-    from threat_intelligence_knowledge_graph_spark.operators.span_dedup import (
-        scrub_duplicated_spans,
-    )
-
-    return scrub_duplicated_spans(
-        _t(spark, sf_dir, "documents"), n=6, min_occurrences=2
-    )
-
-
 def q_kmv_distinct_users(spark, sf_dir):
     """KMV distinct-count sketch (k=256) over events.user_id: the k
     smallest md5-family hashes of the distinct keys + the classic
@@ -1977,548 +1592,6 @@ def q_events_percentiles_exact(spark, sf_dir):
     )
 
 
-def q_embeddings_kmeans(spark, sf_dir):
-    """Integer-exact Lloyd k-means (k=4, 2 rounds, scale 1024) over the
-    embeddings table: components quantized to the integer grid once
-    (floor(x·1024 + 0.5)), so distance and centroid sums are order-
-    independent integer arithmetic and the assignment is bit-identical
-    on any engine/partitioning — the deterministic coarse quantizer the
-    IVF ANN path and mixture balancing need. Seeds = 4 smallest ids."""
-    from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-        kmeans_assign,
-    )
-
-    return kmeans_assign(
-        _t(spark, sf_dir, "embeddings"), k=4, iterations=2, scale=1024
-    )
-
-
-def _synth_transcripts(spark, sf_dir):
-    """Deterministic multi-turn transcripts in the pipeline's input
-    shape (conv_id, turn_idx, role, text, tool, ts): conv = order,
-    turns 1..(o_orderkey % 7 + 2) via sequence-explode (turn_idx UNIQUE
-    per conv by construction — lineitem's l_linenumber has duplicate
-    keys in the synthetic data, which would make the lag window's tie
-    order engine-dependent), roles drawn irregularly from
-    {user, assistant, tool} by (okey + turn²) mod 3 so all 9 role
-    transitions occur, tool names keyed by (okey + turn), ts on an
-    irregular-but-monotone
-    epoch grid (gaps 24..56 s) so latency stats are non-trivial. The
-    oracle rebuilds the identical table in SQL."""
-    o = _t(spark, sf_dir, "orders")
-    okey = F.col("o_orderkey")
-    rows = o.select(
-        okey,
-        F.explode(
-            F.sequence(F.lit(1).cast("long"), okey % 7 + 2)
-        ).alias("turn_idx"),
-    )
-    i = F.col("turn_idx")
-    role_idx = ((okey + i * i) % 3).cast("int")
-    role = F.element_at(
-        F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-        role_idx + 1,
-    )
-    tool = F.when(
-        role == "tool",
-        F.element_at(
-            F.array(
-                F.lit("search"), F.lit("browser"), F.lit("python"), F.lit("sql")
-            ),
-            ((okey + i) % 4).cast("int") + 1,
-        ),
-    )
-    text = F.concat(
-        F.lit("turn "), i.cast("string"),
-        F.lit(" of conv "), okey.cast("string"),
-        F.lit(" re order "), ((okey * 31 + i * 7) % 1000).cast("string"),
-    )
-    ts_sec = (
-        F.lit(1600000000) + okey * 1000 + i * 40 + (okey * 7 + i * i) % 17
-    )
-    return rows.select(
-        okey.cast("string").alias("conv_id"),
-        i.cast("int").alias("turn_idx"),
-        role.alias("role"),
-        text.alias("text"),
-        tool.alias("tool"),
-        F.timestamp_seconds(ts_sec).alias("ts"),
-    )
-
-
-_SYNTH_TRANSCRIPTS_SQL = """
-          SELECT cast(o_orderkey AS varchar) AS conv_id,
-                 cast(i AS int) AS turn_idx,
-                 (['user','assistant','tool'])[((o_orderkey + i * i) % 3) + 1]
-                   AS role,
-                 'turn ' || cast(i AS varchar)
-                 || ' of conv ' || cast(o_orderkey AS varchar)
-                 || ' re order '
-                 || cast((o_orderkey * 31 + i * 7) % 1000 AS varchar)
-                   AS text,
-                 CASE WHEN ((o_orderkey + i * i) % 3) = 2
-                      THEN (['search','browser','python','sql'])
-                             [((o_orderkey + i) % 4) + 1] END AS tool,
-                 1600000000 + o_orderkey * 1000 + i * 40
-                 + (o_orderkey * 7 + i * i) % 17 AS epoch
-          FROM orders,
-               UNNEST(generate_series(1, (o_orderkey % 7) + 2)) AS t(i)
-"""
-
-
-def _synth_transcripts_pii(spark, sf_dir):
-    """The shared synthetic transcripts with DETERMINISTIC planted PII:
-    modulo-gated suffixes append an email, a formatted phone, a bare
-    10-digit phone, an SSN, a 16-digit card, and a 15-digit Amex —
-    every PII_PATTERNS class occurs, gated on coprime moduli (5, 7, 11,
-    13, 17) so classes overlap on some turns and miss others. The
-    oracle rebuilds the identical text in SQL (same concat, same lpad,
-    same moduli)."""
-    t = _synth_transcripts(spark, sf_dir)
-    o = F.col("conv_id").cast("long")
-    i = F.col("turn_idx").cast("long")
-
-    def pad4(e):
-        return F.lpad(e.cast("string"), 4, "0")
-
-    sfx = F.concat(
-        F.when(
-            (o + i) % 5 == 0,
-            F.concat(
-                F.lit(" reach me at agent"),
-                (o % 97).cast("string"),
-                F.lit("@corp.example.com"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            (o + i) % 7 == 1,
-            F.concat(F.lit(" call (555) 123-"), pad4((o * 3 + i) % 10000)),
-        ).otherwise(F.lit("")),
-        F.when(
-            (o + i) % 7 == 3,
-            F.concat(F.lit(" or 555123"), pad4((o + i * 11) % 10000)),
-        ).otherwise(F.lit("")),
-        F.when(
-            (o + i) % 11 == 2,
-            F.concat(F.lit(" ssn 123-45-"), pad4((o + i) % 10000)),
-        ).otherwise(F.lit("")),
-        F.when(
-            (o + i) % 13 == 3,
-            F.concat(F.lit(" card 4111 1111 1111 "), pad4((o + i) % 10000)),
-        ).otherwise(F.lit("")),
-        F.when((o + i) % 17 == 4, F.lit(" amex 3714 496353 98431")).otherwise(
-            F.lit("")
-        ),
-    )
-    return t.withColumn("text", F.concat(F.col("text"), sfx))
-
-
-_SYNTH_PII_SUFFIX_SQL = """
-            || CASE WHEN (o + i) % 5 = 0
-                 THEN ' reach me at agent' || cast(o % 97 AS varchar)
-                      || '@corp.example.com' ELSE '' END
-            || CASE WHEN (o + i) % 7 = 1
-                 THEN ' call (555) 123-'
-                      || lpad(cast((o * 3 + i) % 10000 AS varchar), 4, '0')
-                 ELSE '' END
-            || CASE WHEN (o + i) % 7 = 3
-                 THEN ' or 555123'
-                      || lpad(cast((o + i * 11) % 10000 AS varchar), 4, '0')
-                 ELSE '' END
-            || CASE WHEN (o + i) % 11 = 2
-                 THEN ' ssn 123-45-'
-                      || lpad(cast((o + i) % 10000 AS varchar), 4, '0')
-                 ELSE '' END
-            || CASE WHEN (o + i) % 13 = 3
-                 THEN ' card 4111 1111 1111 '
-                      || lpad(cast((o + i) % 10000 AS varchar), 4, '0')
-                 ELSE '' END
-            || CASE WHEN (o + i) % 17 = 4
-                 THEN ' amex 3714 496353 98431' ELSE '' END
-"""
-
-
-def q_transcript_pii_audit(spark, sf_dir):
-    """PII-leakage audit over the planted-PII transcripts
-    (operators/text_quality.py::pii_audit): per (role, pii_class)
-    total occurrences, leaking turns, and distinct leaking
-    conversations, counted SEQUENTIALLY in scrub order (class k counted
-    with classes 0..k-1 already replaced — exactly the placeholders
-    scrub_pii would emit). All-integer output; the oracle interpolates
-    the same PII_PATTERNS strings under RE2."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        pii_audit,
-    )
-
-    return pii_audit(_synth_transcripts_pii(spark, sf_dir))
-
-
-def _pii_audit_oracle_sql() -> str:
-    """Per-class sequential counts generated from PII_PATTERNS (same
-    strings, same order) over the SQL twin of the planted-PII
-    transcripts."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        PII_PATTERNS,
-    )
-
-    arms = []
-    for k, (pat, repl) in enumerate(PII_PATTERNS):
-        cls = repl.strip("<>")
-        expr = "text"
-        for ppat, prepl in PII_PATTERNS[:k]:
-            expr = f"regexp_replace({expr}, '{ppat}', '{prepl}', 'g')"
-        arms.append(
-            f"SELECT role, conv_id, '{cls}' AS pii_class,\n"
-            f"       len(regexp_extract_all({expr}, '{pat}')) AS cnt FROM t"
-        )
-    union = "\n          UNION ALL\n          ".join(arms)
-    return f"""
-        WITH base AS ({_SYNTH_TRANSCRIPTS_SQL}),
-        b2 AS (
-          SELECT role, conv_id, text,
-                 cast(conv_id AS bigint) AS o,
-                 cast(turn_idx AS bigint) AS i
-          FROM base
-        ),
-        t AS (
-          SELECT role, conv_id, text {_SYNTH_PII_SUFFIX_SQL} AS text
-          FROM b2
-        ),
-        c AS (
-          {union}
-        )
-        SELECT role, pii_class,
-               cast(sum(cnt) AS bigint) AS n_hits,
-               cast(sum(CASE WHEN cnt > 0 THEN 1 ELSE 0 END) AS bigint)
-                 AS n_turns,
-               count(DISTINCT CASE WHEN cnt > 0 THEN conv_id END) AS n_convs
-        FROM c GROUP BY role, pii_class
-    """
-
-
-def q_transcript_latency(spark, sf_dir):
-    """Role-handoff latency profile over the shared synthetic
-    transcripts (irregular-but-monotone ts grid): epoch-integer gaps
-    in turn_idx order, exact integer sums and max, ONE round-6 mean
-    division per (from_role, to_role) pair."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        response_latency,
-    )
-
-    return response_latency(_synth_transcripts(spark, sf_dir))
-
-
-def q_transcript_tool_profile(spark, sf_dir):
-    """Per-tool fleet profile over the shared synthetic transcripts:
-    n_calls / conversation reach / post-call stall stats (epoch gap to
-    the NEXT turn), last-turn calls counted but excluded from gap
-    stats (n_gaps carries the effective sample size), ONE round-6
-    mean division per tool."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        tool_profile,
-    )
-
-    return tool_profile(_synth_transcripts(spark, sf_dir))
-
-
-def q_transcript_stats(spark, sf_dir):
-    """Per-conversation transcript analytics (role mix, tool diversity,
-    chars, duration, mean inter-turn gap, final role) over the
-    pipeline's exact input shape — ONE conv_id exchange shared by the
-    gap window and the aggregation."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        conversation_stats,
-    )
-
-    return conversation_stats(_synth_transcripts(spark, sf_dir))
-
-
-def q_transcript_role_transitions(spark, sf_dir):
-    """Corpus-wide consecutive-turn role-transition counts — the
-    conversation-flow profile that surfaces malformed traces."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        role_transitions,
-    )
-
-    return role_transitions(_synth_transcripts(spark, sf_dir))
-
-
-def _triage_loop_corpus(spark, sf_dir):
-    """Synthetic transcripts with planted stutter runs: every 11th
-    conversation has turns 3-5 overwritten with one constant string (a
-    3-turn loop where the conversation is long enough) and every 23rd
-    has turns 2-3 overwritten with another (a 2-turn stutter, below the
-    min_run=3 looping bar). Base texts embed (conv, turn) so no
-    accidental run exists — the planted runs are the only ones."""
-    tr = _synth_transcripts(spark, sf_dir)
-    key = F.col("conv_id").cast("long")
-    return tr.withColumn(
-        "text",
-        F.when(
-            (key % 11 == 0) & F.col("turn_idx").between(3, 5),
-            F.lit("retrying tool call"),
-        )
-        .when(
-            (key % 23 == 0) & F.col("turn_idx").between(2, 3),
-            F.lit("echo"),
-        )
-        .otherwise(F.col("text")),
-    )
-
-
-def q_transcript_loops(spark, sf_dir):
-    """Stuck-agent detection over the loop-planted transcripts:
-    NULL-safe consecutive-text run lengths via a lag-flag cumulative
-    sum, is_looping at min_run=3 — everything on ONE conv_id
-    exchange."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        loop_detection,
-    )
-
-    return loop_detection(_triage_loop_corpus(spark, sf_dir), min_run=3)
-
-
-def q_transcript_context_growth(spark, sf_dir):
-    """Context-budget profile at budget_chars=150 over the shared
-    synthetic transcripts (turn texts ~30 chars, conversations 2-8
-    turns, so the corpus straddles the budget): first turn over budget,
-    turns-over count and round-6 share, per conversation."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        context_growth,
-    )
-
-    return context_growth(_synth_transcripts(spark, sf_dir), budget_chars=150)
-
-
-def _triage_error_corpus(spark, sf_dir):
-    """Synthetic transcripts with planted tool failures: every tool
-    turn where (conv_key + turn_idx) % 5 = 0 gets ' ERROR: tool failed'
-    appended — a deterministic ~20% failure rate spread across all four
-    tools. Base texts never match the error pattern."""
-    tr = _synth_transcripts(spark, sf_dir)
-    key = F.col("conv_id").cast("long")
-    return tr.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                (F.col("role") == "tool")
-                & ((key + F.col("turn_idx")) % 5 == 0),
-                F.lit(" ERROR: tool failed"),
-            ).otherwise(F.lit("")),
-        ),
-    )
-
-
-def q_transcript_tool_errors(spark, sf_dir):
-    """Per-tool failure profile over the error-planted transcripts:
-    regex error detection (scan-local), round-6 error rate,
-    conversation blast radius — one map-side aggregate to |tools|
-    rows."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        tool_errors,
-    )
-
-    return tool_errors(_triage_error_corpus(spark, sf_dir))
-
-
-def q_transcript_tool_chains(spark, sf_dir):
-    """Tool-workflow graph of the agent fleet: consecutive tool-call
-    transitions (user/assistant turns skipped) with conversation reach,
-    from a scan-local filter + one conv_id lag window."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        tool_chains,
-    )
-
-    return tool_chains(_synth_transcripts(spark, sf_dir))
-
-
-def _curate_transcripts_base(spark, sf_dir):
-    """Synthetic transcripts with one planted failure per content
-    stage: every 19th conversation gets turn 2 emptied (structural
-    invalid), every 11th gets turns 3-5 overwritten with one constant
-    (a stuck-agent loop). Plantings touch disjoint turns, so a
-    conversation can carry several and the fixed precedence decides."""
-    tr = _synth_transcripts(spark, sf_dir)
-    key = F.col("conv_id").cast("long")
-    return tr.withColumn(
-        "text",
-        F.when((key % 19 == 0) & (F.col("turn_idx") == 2), F.lit(""))
-        .when(
-            (key % 11 == 0) & F.col("turn_idx").between(3, 5),
-            F.lit("retrying tool call"),
-        )
-        .otherwise(F.col("text")),
-    )
-
-
-def _curate_transcripts_corpus(spark, sf_dir):
-    """``_curate_transcripts_base`` plus every 13th conversation
-    replayed byte-identically under a fresh ``_dup`` key AFTER the
-    transforms (so the replay fingerprints identically)."""
-    base = _curate_transcripts_base(spark, sf_dir)
-    dups = base.filter(F.col("conv_id").cast("long") % 13 == 0).withColumn(
-        "conv_id", F.concat(F.col("conv_id"), F.lit("_dup"))
-    )
-    return base.unionByName(dups)
-
-
-def q_curate_transcripts(spark, sf_dir):
-    """Composed conversation-level curation over the planted corpus:
-    structural validity → loop rejection → exact replay dedup →
-    context-budget gate (200 chars), first matching reason wins;
-    every stage bites on its planted family."""
-    from threat_intelligence_knowledge_graph_spark.plans.transcript_curation import (
-        curate_transcripts,
-    )
-
-    return curate_transcripts(
-        _curate_transcripts_corpus(spark, sf_dir),
-        min_run=3,
-        budget_chars=200,
-    )
-
-
-def q_curate_transcripts_increment(spark, sf_dir):
-    """Steady-state incremental transcript curation
-    (plans/transcript_curation.py::curate_transcripts_increment) — TWO
-    increments against a throwaway warehouse, every verdict analytic:
-
-    Batch 1 = the planted base corpus (empty-turn invalids every 19th
-    conv, stuck loops every 11th; budget 200 chars). Batch 2 (conv ids
-    z-prefixed, so monotone above batch 1's digit keys): every 13th
-    base conv replayed byte-identically as ``z<k>r`` (→ ``invalid`` /
-    ``looping`` when the original fails its own content stage, else
-    ``exact_dup`` via the persisted fingerprint table — INCLUDING
-    originals that were rejected ``over_budget``, which reached dedup
-    and are canonical for their family), every 26th replayed AGAIN as
-    ``z<k>r2`` (within-batch-2 dup of ``z<k>r``), and a fresh 2-turn
-    conversation ``z<k>f`` per every-7th key (→ ``accepted``).
-
-    Output: (batch, conv_id, status); the oracle replays both batches'
-    verdict pipelines in SQL with the known-fingerprint set = batch 1's
-    dedup-reaching fingerprints."""
-    import shutil
-    import tempfile
-
-    from threat_intelligence_knowledge_graph_spark.plans.transcript_curation import (
-        curate_transcripts_increment,
-    )
-    from threat_intelligence_knowledge_graph_spark.sources.tableio import (
-        LocalTableCatalog,
-    )
-
-    cols = ["conv_id", "turn_idx", "role", "text"]
-    b1 = _curate_transcripts_base(spark, sf_dir).select(*cols)
-    key = F.col("conv_id").cast("long")
-
-    def z(suffix):
-        return F.concat(F.lit("z"), F.col("conv_id"), F.lit(suffix))
-
-    replays = b1.filter(key % 13 == 0).withColumn("conv_id", z("r"))
-    replays2 = b1.filter(key % 26 == 0).withColumn("conv_id", z("r2"))
-    fresh = (
-        b1.select("conv_id")
-        .distinct()
-        .filter(key % 7 == 0)
-        .select(z("f").alias("conv_id"))
-        .select(
-            "conv_id",
-            F.explode(F.array(F.lit(1), F.lit(2))).alias("_i"),
-        )
-        .select(
-            "conv_id",
-            F.col("_i").cast("int").alias("turn_idx"),
-            F.when(F.col("_i") == 1, F.lit("user"))
-            .otherwise(F.lit("assistant"))
-            .alias("role"),
-            F.concat(
-                F.lit("fresh "),
-                F.col("conv_id"),
-                F.lit(" "),
-                F.col("_i").cast("string"),
-            ).alias("text"),
-        )
-    )
-    b2 = replays.unionByName(replays2).unionByName(fresh)
-
-    wh = tempfile.mkdtemp(prefix="tikg-contract-tincr-")
-    try:
-        catalog = LocalTableCatalog(wh)
-        kw = dict(min_run=3, budget_chars=200)
-        v1 = curate_transcripts_increment(spark, b1, catalog, run_id="b1", **kw)
-        v2 = curate_transcripts_increment(spark, b2, catalog, run_id="b2", **kw)
-        tag = lambda df, b: df.select(  # noqa: E731
-            F.lit(b).alias("batch"),
-            "conv_id",
-            F.coalesce(F.col("reason"), F.lit("accepted")).alias("status"),
-        )
-        # materialize before the warehouse dir disappears
-        return tag(v1, 1).unionByName(tag(v2, 2)).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-
-
-def _line_dedup_corpus(spark, sf_dir):
-    """Documents rebuilt as multi-line texts with planted boilerplate:
-    every 3rd doc gains a constant header line, every 4th a constant
-    footer, every 5th repeats its body line — so corpus-duplicated
-    lines (headers/footers), within-doc repeats, and clean docs all
-    occur. concat_ws skips NULL parts in both engines."""
-    d = _t(spark, sf_dir, "documents")
-    key = F.col("doc_id")
-    return d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.when(key % 3 == 0, F.lit("=== boilerplate header ===")),
-            F.col("text"),
-            F.when(key % 5 == 0, F.col("text")),
-            F.when(key % 4 == 0, F.lit("-- generated footer --")),
-        ).alias("text"),
-    )
-
-
-def q_line_dedup(spark, sf_dir):
-    """C4-style corpus-level line dedup (keep the globally first
-    occurrence of any line occurring >= 2 times) over the planted
-    boilerplate corpus: one md5-keyed count+min-position aggregation,
-    one join back, per-doc ordered rejoin. Oracle: window count + first
-    rank over the identical line stream."""
-    from threat_intelligence_knowledge_graph_spark.operators.line_dedup import (
-        dedup_lines,
-    )
-
-    return dedup_lines(_line_dedup_corpus(spark, sf_dir), min_count=2)
-
-
-def q_transcript_outcomes(spark, sf_dir):
-    """Per-conversation terminal-state triage labels over planted
-    failures: every 11th conv gets a 3-turn stutter (→ looping when
-    long enough), every 7th conv's tool turns become tracebacks
-    (→ tool_failure unless looping wins precedence), conversations
-    naturally ending on a user turn → abandoned, rest completed."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        conversation_outcomes,
-    )
-
-    tr = _synth_transcripts(spark, sf_dir)
-    key = F.col("conv_id").cast("long")
-    planted = tr.withColumn(
-        "text",
-        F.when(
-            (key % 11 == 0) & F.col("turn_idx").between(3, 5),
-            F.lit("retrying tool call"),
-        )
-        .when(
-            (key % 7 == 0) & (F.col("role") == "tool"),
-            F.lit("Traceback: tool exploded"),
-        )
-        .otherwise(F.col("text")),
-    )
-    return conversation_outcomes(planted, min_run=3)
-
-
 def q_graph_assortativity(spark, sf_dir):
     """Degree assortativity over the planted 3-clique+pendant gadgets:
     identical disjoint gadgets make the coefficient analytic and
@@ -2529,46 +1602,6 @@ def q_graph_assortativity(spark, sf_dir):
     )
 
     return degree_assortativity(_triangle_gadget_edges(spark, sf_dir))
-
-
-def _gopher_corpus(spark, sf_dir):
-    """Documents with one planted failure per Gopher rule (first
-    matching plant wins): %7 3-word shorts, %11 hash-prefixed, %13
-    digit-only words, %17 no-stopword prose, %19 one-char words, %3
-    bullet-heavy, %5 ellipsis-terminated."""
-    d = _t(spark, sf_dir, "documents")
-    k = F.col("doc_id")
-    return d.select(
-        "doc_id",
-        F.when(k % 7 == 0, F.lit("tiny doc only"))
-        .when(k % 11 == 0, F.concat(F.lit("#### ## "), F.col("text")))
-        .when(k % 13 == 0, F.repeat(F.lit("111 "), 60))
-        .when(k % 17 == 0, F.repeat(F.lit("zap "), 60))
-        .when(k % 19 == 0, F.repeat(F.lit("a "), 60))
-        .when(k % 3 == 0, F.concat(F.lit("- a\n- b\n- c\n"), F.col("text")))
-        .when(k % 5 == 0, F.concat(F.col("text"), F.lit("...")))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-
-
-def q_gopher_rules(spark, sf_dir):
-    """Gopher quality rules (Rae et al. 2021) verdict frame over the
-    rule-planted corpus: fixed precedence word_count → mean_word_len →
-    symbol_ratio → bullet_lines → ellipsis_lines → alpha_words →
-    stopwords; exact int/int ratios, round-6 reported columns.
-    Thresholds tuned to the corpus (min_words=10, bullet 0.5,
-    min_stopwords=1) so every rule bites."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        gopher_rules,
-    )
-
-    return gopher_rules(
-        _gopher_corpus(spark, sf_dir),
-        min_words=10,
-        max_bullet_frac=0.5,
-        min_stopwords=1,
-    )
 
 
 def q_stix_objects(spark, sf_dir):
@@ -2659,176 +1692,6 @@ def q_watchlist_summary(spark, sf_dir):
     )
 
 
-def _mmr_vectors(spark, sf_dir):
-    """(vec_id, embedding): dim-8 Pythagorean-direction vectors
-    s·[x_d, y_d, 0…] with (x_d, y_d) ∈ {(1,0), (4,3), (3,4), (0,1)} by
-    key%4 and integer scale s = key%3+1, one vector per 199th orderkey.
-    Norms are perfect squares (5s or s), so every query and pairwise
-    cosine is ONE correctly-rounded division of exact integers —
-    bit-identical in any engine and under either cosine formula
-    (dot/(na·nb) ≡ dot/sqrt(sa·sb) when all operands are exact)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 199 == 0)
-    k = F.col("o_orderkey")
-    s = (k % 3 + 1).cast("double")
-    d = k % 4
-    x = (
-        F.when(d == 0, 1.0).when(d == 1, 4.0).when(d == 2, 3.0).otherwise(0.0)
-    )
-    y = (
-        F.when(d == 0, 0.0).when(d == 1, 3.0).when(d == 2, 4.0).otherwise(1.0)
-    )
-    return o.select(
-        k.alias("vec_id"),
-        F.array(s * x, s * y, *[F.lit(0.0)] * 6).alias("embedding"),
-    )
-
-
-def q_similarity_mmr(spark, sf_dir):
-    """MMR diversity re-ranking (lam=0.3, k=4) over the Pythagorean
-    direction corpus: the greedy trace is exact-arithmetic (query
-    cosines 1.0/0.8/0.6/0.0, pairwise 0.96/0.8/0.6), so redundant
-    same-direction picks lose to fresh directions deterministically.
-    Oracle: the pool CTE + four unrolled argmax steps, each scoring
-    lam·cos − (1−lam)·max-cos-to-selected with identical literals."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        mmr_rerank,
-    )
-
-    return mmr_rerank(
-        _mmr_vectors(spark, sf_dir), _QVEC8, k=4, lam=0.3, pool=50
-    ).select(
-        "rank",
-        "vec_id",
-        F.round("cosine", 6).alias("cosine"),
-        F.round("mmr_score", 6).alias("mmr_score"),
-    )
-
-
-def q_corpus_fertility(spark, sf_dir):
-    """Per-source tokenizer-fertility diagnostic over documents: exact
-    bigint char/BPE-token sums, two round-6 divisions."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        corpus_fertility,
-    )
-
-    return corpus_fertility(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_family_sizes(spark, sf_dir):
-    """Exact-duplicate family-size histogram over documents with
-    planted replay families (every 7th doc replayed twice → size-3
-    families, every 13th once → size-2, %91 docs → size-4): md5
-    content classes → size → histogram, two cascaded integer
-    aggregates, only hashes shuffle."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        family_size_histogram,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    k = F.col("doc_id")
-    corpus = (
-        d.unionByName(d.filter(k % 7 == 0))
-        .unionByName(d.filter(k % 7 == 0))
-        .unionByName(d.filter(k % 13 == 0))
-    )
-    return family_size_histogram(corpus)
-
-
-def _conv_dedup_corpus(spark, sf_dir):
-    """Synthetic transcripts + planted duplicate families: every 13th
-    conversation replayed byte-identically under a fresh key (_dup),
-    every 17th replayed with turn 1 edited (_near — a retry loop).
-    Unrelated conversations share no turn text (it embeds the conv
-    key), so the dedup families are analytically exact."""
-    tr = _synth_transcripts(spark, sf_dir)
-    key = F.col("conv_id").cast("long")
-    dups = tr.filter(key % 13 == 0).withColumn(
-        "conv_id", F.concat(F.col("conv_id"), F.lit("_dup"))
-    )
-    near = (
-        tr.filter(key % 17 == 0)
-        .withColumn(
-            "text",
-            F.when(
-                F.col("turn_idx") == 1,
-                F.concat(F.lit("RETRY "), F.col("text")),
-            ).otherwise(F.col("text")),
-        )
-        .withColumn("conv_id", F.concat(F.col("conv_id"), F.lit("_near")))
-    )
-    return tr.unionByName(dups).unionByName(near)
-
-
-def q_conv_dedup_exact(spark, sf_dir):
-    """Conversation-level exact dedup: order-preserving role␟text
-    fingerprint + min-id canonical assignment. The planted _dup
-    replays must collapse onto their originals; _near copies (one
-    edited turn) must NOT."""
-    from threat_intelligence_knowledge_graph_spark.operators.conv_dedup import (
-        conversation_dedup_exact,
-    )
-
-    return conversation_dedup_exact(_conv_dedup_corpus(spark, sf_dir))
-
-
-def q_conv_near_dup(spark, sf_dir):
-    """Conversation near-dup pairs by turn-set Jaccard ≥ 0.6 via the
-    exact inverted-index join: _dup replays pair at 1.0, _near retries
-    at (n−1)/(n+1) — detected for n ≥ 4, correctly below threshold for
-    shorter conversations."""
-    from threat_intelligence_knowledge_graph_spark.operators.conv_dedup import (
-        conversation_near_dup,
-    )
-
-    return conversation_near_dup(_conv_dedup_corpus(spark, sf_dir), 0.6)
-
-
-def q_sft_pairs(spark, sf_dir):
-    """SFT training-pair mining: every user turn immediately followed
-    by an assistant turn (turn_idx order) over the synthetic
-    transcripts — the downstream surface a transcript corpus feeds.
-    One conv_id exchange; lead() windows share the sort."""
-    from threat_intelligence_knowledge_graph_spark.operators.sft import (
-        sft_pairs,
-    )
-
-    return sft_pairs(_synth_transcripts(spark, sf_dir))
-
-
-def q_validate_traces(spark, sf_dir):
-    """Per-conversation structural validation (role grammar, dense
-    turn indexing, non-empty text) with the AND-fold is_valid flag —
-    the quarantine gate before SFT-pair mining. The irregular synthetic
-    role pattern exercises every check both ways."""
-    from threat_intelligence_knowledge_graph_spark.operators.sft import (
-        validate_traces,
-    )
-
-    return validate_traces(_synth_transcripts(spark, sf_dir))
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (cluster-then-dedup): the embeddings table augmented
-    with an exact copy of every 7th row (vec_id + 100000 — each copy
-    pairs with its original at cosine exactly 1.0 and, having identical
-    quantized components, lands in the same k-means cluster), then
-    integer-exact k-means (k=4, 2 rounds) and per-pair greedy min-id
-    blocking at rounded cosine ≥ 0.95 within each cluster. The oracle
-    recomputes the identical algorithm (unrolled Lloyd CTEs + EXISTS
-    blocking), so output equality is exact, not analytic."""
-    from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-        semantic_dedup,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dups = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    return semantic_dedup(
-        emb.unionByName(dups), k=4, iterations=2, scale=1024, threshold=0.95
-    )
-
-
 def q_hll_distinct_users(spark, sf_dir):
     """HyperLogLog sketch (p=6, 64 registers) over events.user_id:
     fixed-size distinct-count state that merges by registerwise max —
@@ -2844,24 +1707,6 @@ def q_hll_distinct_users(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events").select("user_id")
     return hll_estimate(hll_build(ev, "user_id", p=6), p=6)
-
-
-def q_embedding_decontaminate(spark, sf_dir):
-    """Embedding-space benchmark decontamination (the n-gram check's
-    paraphrase-catching sibling): every 83rd embedding plays the eval
-    set, BROADCAST against one corpus scan; each corpus row reports its
-    nearest eval item by rounded cosine (eval-id tiebreak) and whether
-    it crosses 0.99 — the planted eval rows flag themselves (cos 1.0),
-    everything else reports its measured neighbor."""
-    from threat_intelligence_knowledge_graph_spark.operators.decontaminate import (
-        embedding_decontaminate,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    evals = emb.filter(F.col("vec_id") % 83 == 0).select(
-        F.col("vec_id").alias("eval_id"), "embedding"
-    )
-    return embedding_decontaminate(emb, evals, threshold=0.99)
 
 
 def q_cypher_optional_match(spark, sf_dir):
@@ -2914,22 +1759,6 @@ def q_events_anomaly(spark, sf_dir):
     )
 
     return zscore_outliers(_t(spark, sf_dir, "events"), k=20)
-
-
-def q_similarity_sq_topk(spark, sf_dir):
-    """int8 scalar-quantization ANN (FAISS SQ8 analog): integer-dot
-    candidate scoring over clamp(floor(x·127/s + 0.5)) vectors (s =
-    corpus max |component| — an order-free max, engine-exact), top-40
-    candidates by (int score DESC, id), exact cosine rerank to top-10.
-    Every step is exactly-rounded IEEE or integer arithmetic, so the
-    candidate set AND the final ranking match the oracle exactly."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        sq_topk,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return sq_topk(emb, qvec, k=10, rerank_factor=4)
 
 
 def _louvain_barbell_edges(spark, sf_dir):
@@ -3034,46 +1863,6 @@ def q_dedup_exact_docs(spark, sf_dir):
     )
 
 
-def q_dedup_bow(spark, sf_dir):
-    """Order-insensitive bag-of-words dedup: families whose sorted
-    token multisets are identical (catches word-reordered spins that
-    byte-exact dedup misses); md5 fingerprint, min-id survivor. The
-    base corpus has no reorderings (dedup_bow would be vacuously
-    empty), so every 20th doc gets a deterministic token-REVERSED twin
-    planted at doc_id + 10^12 — far above any real doc_id at every
-    shipped SF (the offset must exceed max(doc_id), or twin ids would
-    collide with real docs and corrupt keep_id) — same bag, different
-    byte string — and each planted pair must come back as one family
-    with the original id surviving."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        bow_duplicates,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = d.filter(F.col("doc_id") % 20 == 0).select(
-        (F.col("doc_id") + F.lit(1_000_000_000_000)).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.reverse(
-                F.expr("regexp_extract_all(lower(text), '[a-z0-9]{2,}', 0)")
-            ),
-        ).alias("text"),
-    )
-    return bow_duplicates(d.unionByName(twins))
-
-
-def q_jaccard_prefix_join(spark, sf_dir):
-    """Exact all-pairs token-set Jaccard >= 0.9 via the AllPairs/PPJoin
-    prefix filter (rarest-token join keys + length filter). The oracle
-    is an INDEPENDENT brute-force all-pairs join — the prefix filter's
-    no-false-negative theorem is what makes the two methods agree."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        prefix_filter_pairs,
-    )
-
-    return prefix_filter_pairs(_t(spark, sf_dir, "documents"), tau=0.9)
-
-
 def q_events_json_props(spark, sf_dir):
     """Semi-structured path extraction: parse the events.props JSON
     column in-plan (Catalyst GetJsonObject — no Python, no UDF) and
@@ -3099,31 +1888,6 @@ def q_events_json_props(spark, sf_dir):
     )
 
 
-def q_search_ndcg(spark, sf_dir):
-    """NDCG@10 of the BM25 ranking for the pinned {merge, stream,
-    vector} query against graded relevance rel(d) = number of distinct
-    query terms present in d (0..3) — the ranking-quality member of
-    the evaluation family; both sums bounded by k, no global sort."""
-    from threat_intelligence_knowledge_graph_spark.operators.retrieval import (
-        ndcg_eval,
-    )
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        bm25_search,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    terms = ["merge", "stream", "vector"]
-    ranking = bm25_search(d, terms, k=10)
-    toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]{2,}', 0)")
-    rel = d.select(
-        "doc_id",
-        sum(
-            F.array_contains(toks, t).cast("int") for t in terms
-        ).alias("rel"),
-    )
-    return ndcg_eval(ranking, rel, k=10)
-
-
 def q_events_benford(spark, sf_dir):
     """Benford first-significant-digit chi-square per event type — the
     volume-tamper screen; exact fixed-point digit extraction (no float
@@ -3146,32 +1910,6 @@ def q_curriculum_order(spark, sf_dir):
     return curriculum_order(_t(spark, sf_dir, "documents"))
 
 
-def q_text_token_counts(spark, sf_dir):
-    return token_counts(_t(spark, sf_dir, "documents"))
-
-
-def q_text_quality_score(spark, sf_dir):
-    return quality_score(_t(spark, sf_dir, "documents"))
-
-
-def q_text_language_id(spark, sf_dir):
-    return language_id(_t(spark, sf_dir, "documents"))
-
-
-def q_text_fingerprints(spark, sf_dir):
-    return fingerprints(_t(spark, sf_dir, "documents")).select(
-        "doc_id", F.concat_ws(",", "fingerprint").alias("fp")
-    )
-
-
-def q_text_tfidf_top_terms(spark, sf_dir):
-    """Top-5 characteristic terms per document by smoothed TF-IDF.
-    Score rounded to 6 decimals BEFORE ranking; ranking key
-    (tfidf DESC, df ASC, term ASC) is fully deterministic — see
-    operators/text_quality.py::tfidf_top_terms."""
-    return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=5)
-
-
 def q_events_type_cooccurrence(spark, sf_dir):
     """Behavioral co-occurrence edges from the event log: event types
     fired by the same user within the same hour, weight = #shared
@@ -3185,21 +1923,6 @@ def q_events_type_cooccurrence(spark, sf_dir):
         "user_id", F.date_trunc("hour", "ts").alias("hr"), "event_type"
     )
     return cooccurrence_edges(e, "event_type", ["user_id", "hr"])
-
-
-def q_similarity_topk(spark, sf_dir):
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        with_cosine,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return (
-        with_cosine(emb, qvec)
-        .select("vec_id", F.round("cosine", 3).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(10)
-    )
 
 
 def q_set_ops_nations(spark, sf_dir):
@@ -3263,45 +1986,6 @@ def q_events_percentiles(spark, sf_dir):
         F.round(F.min("value"), 4).alias("vmin"),
         F.round(F.max("value"), 4).alias("vmax"),
     )
-
-
-def q_similarity_batch_topk(spark, sf_dir):
-    """ANN JOIN: exact cosine top-5 over the corpus for every query
-    vector (every 97th embedding) in one plan — broadcast probe set,
-    per-query window rank on the ROUNDED cosine so top-k membership is
-    engine-portable."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        batch_topk,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return batch_topk(emb, queries, k=5)
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Contrastive-training hard negatives: for each labeled (query,
-    positive) pair (query = every 97th embedding, positive = the next
-    vec_id), the top-3 highest-cosine corpus vectors excluding both
-    pair members — broadcast probe set, one corpus scan, per-pair
-    window rank on the rounded cosine."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        hard_negatives,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = (
-        emb.filter(F.col("vec_id") % 97 == 0)
-        .select(F.col("vec_id").alias("query_id"))
-        .join(
-            emb.select((F.col("vec_id") - 1).alias("query_id"),
-                       F.col("vec_id").alias("pos_id")),
-            "query_id",
-        )
-    )
-    return hard_negatives(emb, pairs, k=3)
 
 
 def q_events_extremes(spark, sf_dir):
@@ -3426,168 +2110,18 @@ def q_interval_join_events(spark, sf_dir):
     )
 
 
-# --- dedup / ANN entries over PLANTED corpora -------------------------------
-# The sf tables carry random text/vectors, where approximate operators'
-# outputs aren't SQL-predictable. These entries plant deterministic
+# --- LSH entry over a PLANTED corpus ----------------------------------------
+# The sf tables carry random text, where an approximate operator's
+# output isn't SQL-predictable. This entry plants deterministic
 # near-duplicates (derived from o_orderkey on BOTH sides) chosen so the
 # approximate operator provably returns the exact answer:
-# - identical shingle sets / identical directions ⇒ identical LSH
-#   signatures in every band ⇒ candidacy is guaranteed, not probabilistic;
-# - all other cosines/jaccards sit far below the threshold ⇒ exact
+# - identical shingle sets ⇒ identical LSH signatures in every band ⇒
+#   candidacy is guaranteed, not probabilistic;
+# - all other jaccards sit far below the threshold ⇒ exact
 #   verification removes any chance collisions.
-# The DuckDB oracle then computes the expected set independently (full
-# brute-force pair join / exact top-k), making each entry an
-# "approximate == exact on this corpus" equivalence check.
-
-def _planted_near_dup_docs(spark, sf_dir, every: int | None = None):
-    """Two docs per orderkey: cyclic 4-word texts repeated 5× and 7×.
-
-    Same word cycle ⇒ identical word-3-shingle sets ⇒ jaccard exactly 1.0
-    and guaranteed LSH candidacy. For o_orderkey % 3 == 0 the second doc
-    swaps the 4th word, dropping jaccard to 1/7 — a below-threshold
-    family the verifier must exclude. ``every`` keeps only orderkeys
-    divisible by it (smaller corpora for O(n²) oracles)."""
-    o = _t(spark, sf_dir, "orders")
-    if every is not None:
-        o = o.filter(F.col("o_orderkey") % every == 0)
-    pairs = o.select(
-        F.col("o_orderkey").alias("k"),
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("j"),
-    )
-    ks = F.col("k").cast("string")
-    w = lambda p: F.concat(F.lit(p), ks)  # noqa: E731
-    last = F.when(
-        (F.col("j") == 1) & (F.col("k") % 3 == 0), w("we")
-    ).otherwise(w("wd"))
-    base = F.concat_ws(" ", w("wa"), w("wb"), w("wc"), last)
-    text = F.array_join(F.array_repeat(base, (F.lit(5) + F.col("j") * 2).cast("int")), " ")
-    return pairs.select(
-        (F.col("k") * 2 + F.col("j")).alias("doc_id"), text.alias("text")
-    )
-
-
-def q_minhash_near_dup_docs(spark, sf_dir):
-    docs = _planted_near_dup_docs(spark, sf_dir)
-    return minhash_near_duplicates(docs, jaccard_threshold=0.8).select(
-        "a", "b", F.round("jaccard", 4).alias("jaccard")
-    )
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    """LSH-prefiltered EXACT n-gram Jaccard on the planted corpus.
-    Identical word cycles share their full 4-shingle set (jaccard 1.0,
-    guaranteed LSH candidacy via identical signatures); the swapped
-    families intersect in exactly 1 of 7 shingles (1/7 < 0.5 excluded) —
-    so the expected pair set is analytic."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = _planted_near_dup_docs(spark, sf_dir)
-    return ngram_jaccard_pairs(docs, threshold=0.5).select(
-        "a", "b", F.round("jaccard", 4).alias("jaccard")
-    )
-
-
-def _planted_containment_docs(spark, sf_dir):
-    """Two docs per orderkey: A = 6 k-suffixed words (4 distinct
-    3-shingles), B = A's 6 words + 6 fresh x-words (10 shingles, all 4
-    of A's among them) → C(A→B) = 4/4 = 1.0 while Jaccard is only
-    4/10 — the asymmetric case. For o_orderkey % 3 == 0, B's copy of
-    A's 4th word is swapped, leaving ONE shared shingle (< min_shared,
-    and containment 1/4) — an analytically-excluded family. Vocab is
-    k-suffixed, so no cross-gadget candidates exist."""
-    o = _t(spark, sf_dir, "orders")
-    pairs = o.select(
-        F.col("o_orderkey").alias("k"),
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("j"),
-    )
-    ks = F.col("k").cast("string")
-    w = lambda p: F.concat(F.lit(p), ks)  # noqa: E731
-    a4 = F.when((F.col("j") == 1) & (F.col("k") % 3 == 0), w("we")).otherwise(
-        w("wd")
-    )
-    prefix = F.concat_ws(" ", w("wa"), w("wb"), w("wc"), a4, w("wf"), w("wg"))
-    suffix = F.concat_ws(" ", w("xa"), w("xb"), w("xc"), w("xd"), w("xe"), w("xf"))
-    text = F.when(F.col("j") == 0, prefix).otherwise(
-        F.concat_ws(" ", prefix, suffix)
-    )
-    return pairs.select(
-        (F.col("k") * 2 + F.col("j")).alias("doc_id"), text.alias("text")
-    )
-
-
-def q_source_overlap(spark, sf_dir):
-    """Cross-source exact-duplicate matrix over documents ∪ a planted
-    'mirror' source that re-publishes every 7th doc verbatim: md5
-    content identity, scan-side per-source distinct, ONE hash-keyed
-    self-join, exact-integer shares (round-6)."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        source_overlap,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    mirror = (
-        d.filter(F.col("doc_id") % 7 == 0)
-        .select(F.lit("zz_mirror").alias("source"), "text")
-    )
-    return source_overlap(d.select("source", "text").unionByName(mirror))
-
-
-def q_select_sources(spark, sf_dir):
-    """Greedy set cover over documents ∪ a planted aggregator source
-    (every 3rd doc from all sources — the biggest distinct set, so it
-    wins round 1) ∪ a planted every-7th mirror: 4 rounds, exact-integer
-    gains, (n DESC, source ASC) picks. Oracle: the greedy REPLAYED as
-    4 unrolled CTE rounds."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        select_sources_greedy,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    agg = d.filter(F.col("doc_id") % 3 == 0).select(
-        F.lit("zz_union").alias("source"), "text"
-    )
-    mirror = d.filter(F.col("doc_id") % 7 == 0).select(
-        F.lit("zz_mirror").alias("source"), "text"
-    )
-    docs = d.select("source", "text").unionByName(agg).unionByName(mirror)
-    return select_sources_greedy(docs, k=4)
-
-
-def q_ngram_containment(spark, sf_dir):
-    """Asymmetric n-gram containment over the planted quote-inclusion
-    corpus: every small doc sits verbatim inside its big sibling
-    (C(A→B) exactly 1.0, Jaccard only 0.4 — the pair symmetric dedup
-    misses), the k%3==0 family shares one shingle only (excluded
-    analytically by min_shared and threshold)."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        containment_pairs,
-    )
-
-    docs = _planted_containment_docs(spark, sf_dir)
-    pairs, _dropped = containment_pairs(docs, threshold=0.8)
-    return pairs
-
-
-def q_minhash_incremental(spark, sf_dir):
-    """Incremental near-dup: even doc_ids are the existing corpus (only
-    their persisted band-key index is reused — never re-shingled), odd
-    doc_ids are the ingest batch. On the planted corpus every near-dup
-    pair straddles old/new, so the incremental result must equal the
-    full self-join entry's pair set (same oracle SQL)."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        minhash_band_index,
-        minhash_incremental_near_duplicates,
-    )
-
-    docs = _planted_near_dup_docs(spark, sf_dir)
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    pairs, _new_idx, _dropped = minhash_incremental_near_duplicates(
-        old, minhash_band_index(old), new, jaccard_threshold=0.8
-    )
-    return pairs.select("a", "b", F.round("jaccard", 4).alias("jaccard"))
+# The DuckDB oracle then computes the expected set independently,
+# making the entry an "approximate == exact on this corpus"
+# equivalence check.
 
 
 def q_canonical_map(spark, sf_dir):
@@ -3596,8 +2130,7 @@ def q_canonical_map(spark, sf_dir):
     blocking over normalized surfaces → Jaccard verify → connected
     components → (node_id, canonical_id) for every non-canonical alias.
 
-    Planted so the LSH outcome is ANALYTIC (the minhash_near_dup_docs
-    soundness technique): every 7th orderkey seeds a family of 2-3
+    Planted so the LSH outcome is ANALYTIC: every 7th orderkey seeds a family of 2-3
     CASE-variant ids ('GRP-…-X' / 'Grp-…-x' / 'grp-…-x') whose
     lowercased surfaces are IDENTICAL — identical shingle sets ⇒
     identical signatures ⇒ certain candidacy in every band ⇒ Jaccard
@@ -3642,160 +2175,6 @@ def q_canonical_map(spark, sf_dir):
     )
 
 
-def q_minhash_dedup_survivors(spark, sf_dir):
-    """End-to-end near-dup dedup: exact pre-pass → LSH pairs → connected
-    components → min-id survivor per cluster. On the planted corpus the
-    expected keep-set is analytic: drop doc 2k+1 exactly when k%3 != 0
-    (jaccard-1.0 families merge; the 1/7 families survive whole)."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        minhash_dedup,
-    )
-
-    docs = _planted_near_dup_docs(spark, sf_dir)
-    return minhash_dedup(docs, jaccard_threshold=0.8).select("doc_id")
-
-
-def q_dedup_keep_best(spark, sf_dir):
-    """Score-aware near-dup survivor selection on the planted corpus
-    with score = (doc_id·7) mod 13: each jaccard-1.0 family {2k, 2k+1}
-    keeps its argmax-score member (tie min id), the 1/7 families and
-    all singletons survive whole — the expected keep-set is a CASE
-    expression, analytic per orderkey."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        dedup_keep_best,
-    )
-
-    docs = _planted_near_dup_docs(spark, sf_dir).withColumn(
-        "score", (F.col("doc_id") * 7 % 13).cast("int")
-    )
-    return dedup_keep_best(docs, "score", jaccard_threshold=0.8).select(
-        "doc_id", "score"
-    )
-
-
-def q_simhash_near_dups(spark, sf_dir):
-    """SimHash near-dup PAIRS on a planted sub-corpus. Sound to oracle
-    exactly: signatures are SQL-reproducible (md5 token hash) and the
-    pigeonhole banding (max_hamming+1 bands) is deterministically
-    COMPLETE — every pair within the distance budget must share a full
-    band — so the operator's output equals the O(n²) brute-force SQL."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        simhash_near_duplicates,
-    )
-
-    docs = _planted_near_dup_docs(spark, sf_dir, every=97)
-    return simhash_near_duplicates(docs, max_hamming=3).select(
-        "a", "b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-def _planted_vectors(spark, sf_dir):
-    """(vec_id, embedding): dim-8 vectors s·[1, t, 0…] with t = (key%50)/10
-    and integer scale s ∈ {1,2,3}. The t=0 vectors are exact positive
-    multiples of the query [1,0,…] — cosine exactly 1.0, same hyperplane
-    signature and same IVF assignment as the query — so the approximate
-    top-k provably equals the exact top-k."""
-    o = _t(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    s = (k % 3 + 1).cast("double")
-    t = (k % 50).cast("double") / F.lit(10.0)
-    vec = F.array(s, s * t, *[F.lit(0.0)] * 6)
-    return o.select(k.alias("vec_id"), vec.alias("embedding"))
-
-
-_PLANTED_VECTORS_SQL = """
-    SELECT o_orderkey AS vec_id,
-           [cast(o_orderkey % 3 + 1 AS double),
-            cast(o_orderkey % 3 + 1 AS double) * (cast(o_orderkey % 50 AS double) / 10.0),
-            0.0, 0.0, 0.0, 0.0, 0.0, 0.0] AS emb
-    FROM orders
-"""
-
-_QVEC8 = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
-
-
-def q_similarity_lsh_topk(spark, sf_dir):
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import lsh_topk
-
-    emb = _planted_vectors(spark, sf_dir)
-    return lsh_topk(emb, _QVEC8, k=10).select(
-        "vec_id", F.round("cosine", 3).alias("cosine")
-    )
-
-
-def q_similarity_ivf_topk(spark, sf_dir):
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        assign_centroids,
-        ivf_topk,
-        sample_centroids,
-    )
-
-    emb = _planted_vectors(spark, sf_dir)
-    cents = sample_centroids(emb, 16)
-    assigns = assign_centroids(emb, cents)
-    return ivf_topk(emb, _QVEC8, cents, assigns, k=10).select(
-        "vec_id", F.round("cosine", 3).alias("cosine")
-    )
-
-
-def q_embedding_near_dups(spark, sf_dir):
-    """Planted dim-64 basis-direction vectors, two scales per orderkey
-    multiple of 199: same-direction pairs have cosine exactly 1.0 (and
-    identical signatures in every LSH band ⇒ guaranteed candidacy);
-    cross-direction cosine is exactly 0. The oracle brute-forces all
-    pairs, so LSH output must equal the exact pair set."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 199 == 0)
-    rows = o.select(
-        F.col("o_orderkey").alias("k"),
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("j"),
-    )
-    idx = ((F.col("k") / 199).cast("long") % 64).cast("int")
-    scale = (F.col("j") + 1).cast("double")
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.when(i == idx, scale).otherwise(F.lit(0.0)),
-    )
-    emb = rows.select(
-        (F.col("k") * 2 + F.col("j")).alias("vec_id"), vec.alias("embedding")
-    )
-    return embedding_near_duplicates(emb, threshold=0.9, dim=64).select(
-        "a", "b", F.round("cosine", 3).alias("cosine")
-    )
-
-
-def q_embedding_dedup_survivors(spark, sf_dir):
-    """Embedding near-dup dedup end-to-end (banded LSH pairs → connected
-    components → min-id survivor). On the planted basis vectors every
-    same-direction family collapses to its min id — analytic keep-set."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        embedding_dedup,
-    )
-
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 199 == 0)
-    rows = o.select(
-        F.col("o_orderkey").alias("k"),
-        F.explode(F.array(F.lit(0), F.lit(1))).alias("j"),
-    )
-    idx = ((F.col("k") / 199).cast("long") % 64).cast("int")
-    scale = (F.col("j") + 1).cast("double")
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.when(i == idx, scale).otherwise(F.lit(0.0)),
-    )
-    emb = rows.select(
-        (F.col("k") * 2 + F.col("j")).alias("vec_id"), vec.alias("embedding")
-    )
-    return embedding_dedup(emb, threshold=0.9, dim=64).select("vec_id")
-
-
-def q_simhash_signatures(spark, sf_dir):
-    return simhash_signatures_df(_t(spark, sf_dir, "documents"))
-
-
 def q_cms_join_size(spark, sf_dir):
     """Count-min inner-product join-cardinality estimate (the AMS/CM
     §4.2 estimator): |orders ⋈ customer| on custkey from two
@@ -3816,19 +2195,6 @@ def q_cms_join_size(spark, sf_dir):
     sa = cms_build(o, "k", depth=3, width=512, salt="cmsj")
     sb = cms_build(c, "k", depth=3, width=512, salt="cmsj")
     return cms_join_size(sa, sb, depth=3)
-
-
-def q_quality_gate(spark, sf_dir):
-    """Auto-calibrated per-source quality cut: keep documents at or
-    above their own source's nearest-rank p25 quality (a fixed global
-    threshold would gut whole heterogeneous sources). Threshold rows
-    are the same physical picks on both engines (quality, id) order —
-    the exact_percentiles discipline."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        quality_gate,
-    )
-
-    return quality_gate(_t(spark, sf_dir, "documents"), q=0.25)
 
 
 def q_events_mad_outliers(spark, sf_dir):
@@ -3875,19 +2241,6 @@ def q_graph_conductance(spark, sf_dir):
     return conductance(e, asg)
 
 
-def q_corpus_kl(spark, sf_dir):
-    """Domain-shift monitor: KL(src0-docs ‖ all-docs) between add-1-
-    smoothed unigram distributions over the shared vocabulary — every
-    ln argument a ratio of exact-integer products (the dsir
-    discipline), round-6 after the global sum."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        unigram_kl,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return unigram_kl(docs.filter(F.col("source") == "src0"), docs)
-
-
 def q_events_retention(spark, sf_dir):
     """Cohort retention (indicator-lifetime triage: of entities first
     seen in bucket W, how many were active k buckets on) — daily
@@ -3924,7 +2277,7 @@ def q_events_recency_decay(spark, sf_dir):
     0.5^(age_days/3) anchored at the newest event in the frame (data-
     derived — no wall clock), so twice-today outranks 40-times-last-
     year. Epoch-integer age math; the pow sum rounds to 6 after the
-    per-key agg (the dsir discipline)."""
+    per-key agg."""
     from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
         recency_weighted_counts,
     )
@@ -3951,39 +2304,6 @@ def q_events_hist_quantiles(spark, sf_dir):
         _t(spark, sf_dir, "events"), "value", lo=0.0, hi=200.0, n_buckets=64
     )
     return hist_quantiles(sk, [0.5, 0.95], lo=0.0, hi=200.0, n_buckets=64)
-
-
-def q_sft_pairs_context(spark, sf_dir):
-    """Multi-turn SFT assembly: each mined (prompt, response) pair
-    carries the conversation history before it, trimmed to the maximal
-    contiguous MOST-RECENT suffix fitting 120 formatted chars (a window
-    that skipped a middle turn would fabricate a dialogue). The
-    synthetic convs (up to 8 turns, ~40-char lines) exercise full,
-    partial, and empty contexts; the oracle recomputes the identical
-    join + DESC cumsum + ordered string_agg."""
-    from threat_intelligence_knowledge_graph_spark.operators.sft import (
-        sft_pairs_with_context,
-    )
-
-    return sft_pairs_with_context(
-        _synth_transcripts(spark, sf_dir), max_context_chars=120
-    )
-
-
-def q_transcript_sessionize(spark, sf_dir):
-    """Gap-splitting long conversations into sessions (training context
-    windows must not leak across multi-hour gaps; incidents split for
-    triage): cumulative count of >40 s inter-turn gaps per conv — the
-    synthetic grid's 24..56 s gaps make both outcomes common. ONE
-    conv_id exchange shared by the lag window and the running sum;
-    epoch-integer gap math."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        sessionize_conversations,
-    )
-
-    return sessionize_conversations(
-        _synth_transcripts(spark, sf_dir), gap_seconds=40
-    ).select("conv_id", "turn_idx", "session_idx", "session_id")
 
 
 def q_url_normalize(spark, sf_dir):
@@ -4108,33 +2428,12 @@ def q_sample_temperature(spark, sf_dir):
     return temperature_mixture(o, "o_orderkey", "o_orderstatus", alpha=0.5)
 
 
-def q_similarity_pq_topk(spark, sf_dir):
-    """Product-quantization ANN (FAISS IndexPQ/ADC analog, Jégou et al.
-    2011) built integer-exact: 64 dims → 4 subspaces × 4 centroids via
-    the deterministic integer-grid k-means, ADC lookup table from the
-    identically-quantized query (vec_id 0), per-vector code-sum
-    distance, (adist ASC, id) top-40 candidates, exact-cosine rerank to
-    top-10. Codes, LUT, candidate set, and ranking all match the
-    oracle bit-for-bit."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        pq_topk,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return pq_topk(
-        emb, qvec, k=10, m=4, k_sub=4, iterations=2, scale=1024,
-        rerank_factor=4,
-    )
-
-
 def q_graph_node2vec(spark, sf_dir):
     """Deterministic node2vec walks (Grover & Leskovec 2016) with
     strong second-order bias (p=4 discourages returns, q=0.25 pushes
     outward) over the symmetrized chain+region graph of
     q_graph_random_walks. The weighted draw is an exponential race on
-    hash-seeded clocks rounded BEFORE the compare (the dsir_resample
-    discipline), so the oracle unrolls the identical md5 arithmetic,
+    hash-seeded clocks rounded BEFORE the compare, so the oracle unrolls the identical md5 arithmetic,
     the identical prev/dist-1/dist-2 CASE, and the identical
     (clock, candidate) total order per step."""
     from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
@@ -4154,8 +2453,8 @@ def q_events_cooccur_npmi(spark, sf_dir):
     """NPMI collocation scoring (Bouma 2009) of event types over
     (user, hour) contexts: the edge-confidence signal that separates
     'both items are everywhere' (npmi ≈ 0) from 'these travel together'
-    (npmi → 1). Contexts use epoch-integer hour buckets (the
-    transcript_stats timezone-portable discipline); pairs with fewer
+    (npmi → 1). Contexts use epoch-integer hour buckets (timezone-portable);
+    pairs with fewer
     than 2 shared contexts are pruned before the ln math. Oracle
     recomputes the identical integer counts and rounded npmi."""
     from threat_intelligence_knowledge_graph_spark.operators.collocation import (
@@ -4171,37 +2470,6 @@ def q_events_cooccur_npmi(spark, sf_dir):
         "event_type",
     )
     return cooccur_npmi(e, "ctx", "event_type", min_pair_count=2)
-
-
-def q_kg_negative_samples(spark, sf_dir):
-    """TransE-style filtered negative sampling (Bordes et al. 2013) over
-    a planted LOCATED_IN/PART_OF triple set built from customer/supplier/
-    nation: k=2 corruptions per positive, head-vs-tail side and the
-    replacement-entity index both md5-derived (DuckDB md5_number_upper
-    twin) from subj|pred|obj|sample_idx, replacement picked through a
-    dense row_number entity index, degenerate draws dropped, and true
-    triples anti-joined out (the filtered setting). The oracle recomputes
-    the identical draws, index, and filters in SQL."""
-    from threat_intelligence_knowledge_graph_spark.operators.kg_train import (
-        negative_samples,
-    )
-
-    sup = _t(spark, sf_dir, "supplier").select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("subj"),
-        F.lit("LOCATED_IN").alias("pred"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("obj"),
-    )
-    cus = _t(spark, sf_dir, "customer").select(
-        F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("subj"),
-        F.lit("LOCATED_IN").alias("pred"),
-        F.concat(F.lit("n"), F.col("c_nationkey").cast("string")).alias("obj"),
-    )
-    nat = _t(spark, sf_dir, "nation").select(
-        F.concat(F.lit("n"), F.col("n_nationkey").cast("string")).alias("subj"),
-        F.lit("PART_OF").alias("pred"),
-        F.concat(F.lit("r"), F.col("n_regionkey").cast("string")).alias("obj"),
-    )
-    return negative_samples(sup.union(cus).union(nat), k=2)
 
 
 def q_graph_lcc(spark, sf_dir):
@@ -4266,66 +2534,6 @@ def q_events_cusum(spark, sf_dir):
     )
 
     return cusum_level_shift(_t(spark, sf_dir, "events"), h_factor=3)
-
-
-def q_text_bm25_search(spark, sf_dir):
-    """Okapi BM25 top-20 retrieval for the pinned query
-    {merge, stream, vector}: per-(doc, term) float chains with the
-    identical expression shape on both engines, per-doc sum rounded to
-    6 BEFORE the (score DESC, doc_id ASC) rank — TakeOrderedAndProject,
-    never a global sort."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        bm25_search,
-    )
-
-    return bm25_search(
-        _t(spark, sf_dir, "documents"), ["merge", "stream", "vector"], k=20
-    )
-
-
-def q_text_blocklist(spark, sf_dir):
-    """C4-style bad-word gate (exact lowercase token match against the
-    pinned {dup, slow, error} list, whole-token so no Scunthorpe
-    substring trap): integer hit counts, one round-6 division, strict->
-    flag at 6% — quarantine-don't-drop (every doc returned with its
-    flag). Scan-local codegen'd projection, zero shuffle."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        blocklist_filter,
-    )
-
-    return blocklist_filter(
-        _t(spark, sf_dir, "documents"), ["dup", "slow", "error"], max_ratio=0.06
-    )
-
-
-def q_search_rrf(spark, sf_dir):
-    """Hybrid retrieval by Reciprocal Rank Fusion (Cormack et al.,
-    SIGIR'09) of two independent BM25 rankers (lexical queries
-    {merge, stream, vector} and {slow, error}): score = Σ 1/(60+rank),
-    round-6 before the fused (score DESC, id ASC) rank — a score-free
-    combiner, so differently-scaled rankers compose without
-    calibration."""
-    from threat_intelligence_knowledge_graph_spark.operators.retrieval import rrf_fuse
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        bm25_search,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    r1 = bm25_search(docs, ["merge", "stream", "vector"], k=20)
-    r2 = bm25_search(docs, ["slow", "error"], k=20)
-    return rrf_fuse([r1, r2], k=60, top=20)
-
-
-def q_text_ttr(spark, sf_dir):
-    """Lexical diversity (type-token ratio) per document — the
-    shuffled-repeat spam signal the consecutive-run repetition ratio
-    misses. Integer token/type counts, one round-6 division, scan-local
-    projection."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        type_token_ratio,
-    )
-
-    return type_token_ratio(_t(spark, sf_dir, "documents"))
 
 
 def q_events_burstiness(spark, sf_dir):
@@ -4439,7 +2647,7 @@ def q_events_entropy(spark, sf_dir):
     """Shannon entropy (nats) of each user's event-type distribution —
     scripted automation / beacons sit at H ≈ 0, organic behavior near
     ln k. H = ln n − (Σ c·ln c)/n so every ln argument is an exact
-    integer count; round-6 after the sum (corpus_kl discipline)."""
+    integer count; round-6 after the sum."""
     from threat_intelligence_knowledge_graph_spark.operators.stats import (
         event_entropy,
     )
@@ -4495,368 +2703,6 @@ def q_events_markov(spark, sf_dir):
     )
 
     return markov_transitions(_t(spark, sf_dir, "events"))
-
-
-def q_corpus_top_ngrams(spark, sf_dir):
-    """Corpus-wide top-20 word bigrams (boilerplate/template-phrase
-    discovery): scan-side explode into one map-side-combining count,
-    fully deterministic (n DESC, ngram ASC) rank assigned after the
-    TakeOrderedAndProject cut."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        top_ngrams,
-    )
-
-    return top_ngrams(_t(spark, sf_dir, "documents"), n=2, k=20)
-
-
-def q_vocab_prune(spark, sf_dir):
-    """df-band vocabulary selection (sklearn min_df/max_df contract):
-    exact integer distinct-doc counts, floor(ratio·N) upper bound —
-    hapax noise dropped below, stopword-like ubiquity above."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        vocab_prune,
-    )
-
-    return vocab_prune(
-        _t(spark, sf_dir, "documents"), min_df=30, max_df_ratio=0.77
-    )
-
-
-def q_vocab_growth(spark, sf_dir):
-    """Per-source Heaps'-law diagnostic: tokens, distinct types, round-6
-    ratio — a source whose types stop growing with tokens is
-    boilerplate-heavy and wants dedup before mixing."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        vocab_growth,
-    )
-
-    return vocab_growth(_t(spark, sf_dir, "documents"))
-
-
-def q_bpe_train(spark, sf_dir):
-    """Distributed BPE tokenizer training: 6 merge iterations over the
-    DISTINCT word vocabulary (Heaps'-law small vs the corpus), each a
-    pair-count agg + 1-row argmax collect + one codegen'd replace
-    projection; deterministic (cnt DESC, left ASC, right ASC) argmax."""
-    from threat_intelligence_knowledge_graph_spark.operators.bpe import bpe_train
-
-    return bpe_train(_t(spark, sf_dir, "documents"), k=6)
-
-
-def q_bpe_token_counts(spark, sf_dir):
-    """Per-doc token stats under the corpus-trained 6-merge BPE:
-    char-level vs post-merge counts + round-6 compression ratio; the
-    merge loop touches only the distinct-word vocab, per-doc work is a
-    word-count explode joined back on the word key."""
-    from threat_intelligence_knowledge_graph_spark.operators.bpe import (
-        bpe_token_counts,
-    )
-
-    return bpe_token_counts(_t(spark, sf_dir, "documents"), k=6)
-
-
-def _eval_planted_triples(spark, sf_dir):
-    """Planted predicted/gold triple pair for the evaluation entries:
-    gold is one triple per orderkey (pred cycles through the three KG
-    relation names on k%3); predicted drops every k%5==0 triple (pure
-    FN) and corrupts the object of every surviving k%7==0 one (an FP
-    plus its FN). Both sides are pure Catalyst projections of the same
-    scan, so the oracle rebuilds them verbatim."""
-    k = F.col("o_orderkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey")
-    pred_name = (
-        F.when(k % 3 == 0, "RESOLVES_TO")
-        .when(k % 3 == 1, "COMMUNICATES_WITH")
-        .otherwise("CONTAINS")
-    )
-    gold = o.select(
-        F.concat(F.lit("E"), k).alias("subj"),
-        pred_name.alias("pred"),
-        F.concat(F.lit("T"), k).alias("obj"),
-    )
-    predicted = o.filter(k % 5 != 0).select(
-        F.concat(F.lit("E"), k).alias("subj"),
-        pred_name.alias("pred"),
-        F.when(k % 7 == 0, F.concat(F.lit("X"), k))
-        .otherwise(F.concat(F.lit("T"), k))
-        .alias("obj"),
-    )
-    return predicted, gold
-
-
-def q_eval_triple_pr(spark, sf_dir):
-    """Corpus-level triple P/R/F1 (operators/evaluation.py::eval_triples)
-    — the north-rule acceptance metric (triple set match P/R >= 0.95 vs
-    the reference extractor) as a first-class distributed computation:
-    set-distinct both sides, ONE broadcastable left-outer join on the
-    composite key, one count-agg; every count exact integer, each ratio
-    a single two-integer double division (bit-stable cross-engine). The
-    reference's own harness records counts only
-    (evaluation/model_evaluation.py:129-138) and its README concedes
-    counts != quality (README.md:119) — this operator closes that gap."""
-    from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-        eval_triples,
-    )
-
-    predicted, gold = _eval_planted_triples(spark, sf_dir)
-    return eval_triples(predicted, gold, broadcast_gold=True)
-
-
-def q_eval_triple_pr_by_pred(spark, sf_dir):
-    """Per-predicate P/R/F1 breakdown
-    (operators/evaluation.py::eval_triples_by_pred): a regression in a
-    single relation rule stays visible even when the corpus aggregate
-    clears the bar. Three dimension-sized per-predicate frames
-    full-outer-joined on pred (rows = |predicate vocabulary|)."""
-    from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-        eval_triples_by_pred,
-    )
-
-    predicted, gold = _eval_planted_triples(spark, sf_dir)
-    return eval_triples_by_pred(predicted, gold).orderBy("pred")
-
-
-def q_eval_cluster_pairwise(spark, sf_dir):
-    """Pairwise clustering P/R/F1 for entity canonicalization
-    (operators/evaluation.py::eval_clusters_pairwise): gold groups
-    orderkeys in runs of 8 (floor(k/8)); predicted uses coarser runs of
-    16 but splits every k%5==0 item into a singleton — so both merge
-    and split errors are exercised. Computed via contingency cells
-    (three keyed count-aggs, C(n,2) in exact bigints via shiftright) —
-    no pair set ever materializes, which is what makes the metric
-    computable under a hot mega-cluster at 100 TB."""
-    from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-        eval_clusters_pairwise,
-    )
-
-    k = F.col("o_orderkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey")
-    gold = o.select(
-        F.concat(F.lit("I"), k).alias("item"),
-        F.concat(F.lit("g"), F.floor(k / 8)).alias("cluster_id"),
-    )
-    predicted = o.select(
-        F.concat(F.lit("I"), k).alias("item"),
-        F.when(k % 5 == 0, F.concat(F.lit("s"), k))
-        .otherwise(F.concat(F.lit("p"), F.floor(k / 16)))
-        .alias("cluster_id"),
-    )
-    return eval_clusters_pairwise(predicted, gold)
-
-
-def _synth_pref_transcripts(spark, sf_dir):
-    """Preference-mining transcript corpus: strict user/assistant
-    alternation (odd turn = user), PROMPTS SHARED ACROSS CONVERSATIONS
-    (keyed by o_orderkey % 200, so each prompt collects candidates
-    from many conversations with different terminal outcomes), and
-    responses of varying length (repeat('x', okey % 9) suffix) so the
-    longest-completed-response selection is non-trivial. Planted
-    failures (precedence mirrors the oracle exactly): every 7th conv's
-    LAST turn becomes a tool traceback (tool_failure), every 11th
-    conv's turns 2..4 stutter 'retrying tool call' (looping when ≥3
-    such turns survive the tool plant), odd-length convs end on a user
-    turn (abandoned)."""
-    o = _t(spark, sf_dir, "orders")
-    okey = F.col("o_orderkey")
-    n = okey % 5 + 2
-    rows = o.select(
-        okey,
-        n.alias("_n"),
-        F.explode(F.sequence(F.lit(1).cast("long"), n)).alias("turn_idx"),
-    )
-    i = F.col("turn_idx")
-    k = okey % 200
-    step = F.floor((i + 1) / 2)
-    is_tool_plant = (okey % 7 == 0) & (i == F.col("_n"))
-    role = (
-        F.when(is_tool_plant, F.lit("tool"))
-        .when(i % 2 == 1, F.lit("user"))
-        .otherwise(F.lit("assistant"))
-    )
-    text = (
-        F.when(is_tool_plant, F.lit("Traceback: tool exploded"))
-        .when(
-            (okey % 11 == 0) & i.between(2, 4), F.lit("retrying tool call")
-        )
-        .when(
-            i % 2 == 1,
-            F.concat(
-                F.lit("prompt "), k.cast("string"),
-                F.lit(" step "), step.cast("string"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("answer p"), k.cast("string"),
-                F.lit(" s"), step.cast("string"),
-                F.lit(" "),
-                F.repeat(F.lit("x"), (okey % 9).cast("int")),
-            )
-        )
-    )
-    ts_sec = F.lit(1600000000) + okey * 1000 + i * 40
-    return rows.select(
-        okey.cast("string").alias("conv_id"),
-        i.cast("int").alias("turn_idx"),
-        role.alias("role"),
-        text.alias("text"),
-        F.when(role == "tool", F.lit("python")).alias("tool"),
-        F.timestamp_seconds(ts_sec).alias("ts"),
-    )
-
-
-_SYNTH_PREF_TRANSCRIPTS_SQL = """
-          SELECT cast(o_orderkey AS varchar) AS conv_id,
-                 cast(i AS int) AS turn_idx,
-                 CASE WHEN o_orderkey % 7 = 0
-                           AND i = (o_orderkey % 5) + 2 THEN 'tool'
-                      WHEN i % 2 = 1 THEN 'user'
-                      ELSE 'assistant' END AS role,
-                 CASE WHEN o_orderkey % 7 = 0
-                           AND i = (o_orderkey % 5) + 2
-                        THEN 'Traceback: tool exploded'
-                      WHEN o_orderkey % 11 = 0 AND i BETWEEN 2 AND 4
-                        THEN 'retrying tool call'
-                      WHEN i % 2 = 1
-                        THEN 'prompt ' || cast(o_orderkey % 200 AS varchar)
-                             || ' step ' || cast((i + 1) // 2 AS varchar)
-                      ELSE 'answer p' || cast(o_orderkey % 200 AS varchar)
-                           || ' s' || cast((i + 1) // 2 AS varchar)
-                           || ' '
-                           || repeat('x', cast(o_orderkey % 9 AS int))
-                 END AS text
-          FROM orders,
-               UNNEST(generate_series(1, (o_orderkey % 5) + 2)) AS t(i)
-"""
-
-# Shared oracle scaffolding over the preference corpus: the sft
-# adjacency pairs CTE and the conversation_outcomes CTE chain (loop
-# runs / last turn / last-tool-error, fixed precedence) — composed by
-# the dpo_pairs and best_of_n_pairs oracles below.
-_PREF_PAIRS_OUTCOMES_SQL = f"""
-            WITH tr AS ({_SYNTH_PREF_TRANSCRIPTS_SQL}),
-            p AS (
-              SELECT conv_id, turn_idx AS prompt_turn_idx, role,
-                     text AS prompt,
-                     lead(role) OVER w AS next_role,
-                     lead(text) OVER w AS response
-              FROM tr
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            ),
-            pairs AS (
-              SELECT conv_id, prompt_turn_idx, prompt, response
-              FROM p
-              WHERE role = 'user' AND next_role = 'assistant'
-                AND length(coalesce(prompt, '')) >= 1
-                AND length(coalesce(response, '')) >= 1
-            ),
-            f AS (
-              SELECT conv_id, turn_idx,
-                     CASE WHEN row_number() OVER w > 1
-                               AND lag(text) OVER w
-                                   IS NOT DISTINCT FROM text
-                          THEN 0 ELSE 1 END AS brk
-              FROM tr
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            ),
-            runs AS (
-              SELECT conv_id, turn_idx,
-                     sum(brk) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS run
-              FROM f
-            ),
-            lp AS (
-              SELECT conv_id, max(pos) >= 3 AS is_looping FROM (
-                SELECT conv_id,
-                       row_number() OVER (PARTITION BY conv_id, run
-                                          ORDER BY turn_idx) AS pos
-                FROM runs
-              ) GROUP BY conv_id
-            ),
-            last AS (
-              SELECT conv_id, arg_max(role, turn_idx) AS last_role
-              FROM tr GROUP BY conv_id
-            ),
-            te AS (
-              SELECT conv_id,
-                     coalesce(regexp_matches(
-                       arg_max(text, turn_idx),
-                       'error|exception|traceback|failed', 'i'),
-                       FALSE) AS terr
-              FROM tr WHERE role = 'tool' GROUP BY conv_id
-            ),
-            oc AS (
-              SELECT last.conv_id,
-                     CASE WHEN lp.is_looping THEN 'looping'
-                          WHEN coalesce(te.terr, FALSE)
-                            THEN 'tool_failure'
-                          WHEN last_role = 'user' THEN 'abandoned'
-                          ELSE 'completed' END AS outcome
-              FROM last
-              JOIN lp USING (conv_id)
-              LEFT JOIN te USING (conv_id)
-            ),
-            lab AS (
-              SELECT pairs.*, oc.outcome
-              FROM pairs JOIN oc USING (conv_id)
-            )
-"""
-
-
-def q_dpo_pairs(spark, sf_dir):
-    """DPO preference pairs over the shared-prompt preference corpus:
-    per prompt, the longest completed-conversation response (chosen)
-    vs the worst-outcome failing response (rejected, severity looping
-    > tool_failure > abandoned), both deterministically tie-broken;
-    inner join drops prompts lacking either side."""
-    from threat_intelligence_knowledge_graph_spark.operators.preference import (
-        dpo_pairs,
-    )
-
-    return dpo_pairs(_synth_pref_transcripts(spark, sf_dir))
-
-
-def q_best_of_n_pairs(spark, sf_dir):
-    """Best-of-n rejection sampling over the preference corpus's SFT
-    pairs, scored by response length: per prompt keep the single
-    highest-scoring response (ties → lowest conv_id, turn) plus the
-    candidate-group size."""
-    from threat_intelligence_knowledge_graph_spark.operators.preference import (
-        best_of_n,
-    )
-    from threat_intelligence_knowledge_graph_spark.operators.sft import (
-        sft_pairs,
-    )
-
-    return best_of_n(
-        sft_pairs(_synth_pref_transcripts(spark, sf_dir)),
-        "n_response_chars",
-    )
-
-
-def q_dedup_paragraphs(spark, sf_dir):
-    """Paragraph-level boilerplate removal (CCNet/Dolma granularity —
-    the dedup document-level passes cannot express): every doc carries
-    a planted COOKIE footer (boilerplate in ALL docs), every third doc
-    a SUBSCRIBE banner, plus its own body paragraph; the frequency rule
-    removes exactly the planted paragraphs (and any body shared by the
-    corpus's exact-dup families) while preserving paragraph order."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        paragraph_dedup,
-    )
-
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.concat_ws(
-            "\n",
-            F.col("text"),
-            F.lit("COOKIE NOTICE accept all"),
-            F.when(
-                F.col("doc_id") % 3 == 0, F.lit("SUBSCRIBE to our newsletter")
-            ),
-        ).alias("text"),
-    )
-    return paragraph_dedup(d, min_docs=2)
 
 
 def q_er_sorted_neighborhood(spark, sf_dir):
@@ -5028,59 +2874,6 @@ def q_kg_corroboration(spark, sf_dir):
         ).alias("source"),
     )
     return triple_corroboration(obs, base_conf=0.7)
-
-
-_RANK_EVAL_QUERIES = {
-    "q_msv": ["merge", "stream", "vector"],
-    "q_ms": ["merge", "stream"],
-}
-
-
-def q_search_rank_eval(spark, sf_dir):
-    """Per-query MRR/MAP@10 of BM25 rankings for the two pinned term
-    sets against binary relevance rel(q, d) = "d contains >= 2 distinct
-    terms of q" — the multi-query members of the retrieval-evaluation
-    family (search_ndcg grades one graded ranking). AP terms are
-    lcm-scaled exact integers; rr/ap each ONE round-6 division."""
-    from threat_intelligence_knowledge_graph_spark.operators.retrieval import (
-        rank_eval,
-    )
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        bm25_search,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]{2,}', 0)")
-    rankings = None
-    qrels = None
-    for qid, terms in _RANK_EVAL_QUERIES.items():
-        r = bm25_search(d, terms, k=10).select(
-            F.lit(qid).alias("query_id"), "doc_id", "rk"
-        )
-        q = (
-            d.select(
-                "doc_id",
-                sum(
-                    F.array_contains(toks, t).cast("int") for t in terms
-                ).alias("_nt"),
-            )
-            .filter(F.col("_nt") >= 2)
-            .select(F.lit(qid).alias("query_id"), "doc_id")
-        )
-        rankings = r if rankings is None else rankings.unionAll(r)
-        qrels = q if qrels is None else qrels.unionAll(q)
-    return rank_eval(rankings, qrels, k=10)
-
-
-def q_text_readability(spark, sf_dir):
-    """Flesch reading-ease per document with the deterministic
-    vowel-run syllable heuristic — exact integer counts, two
-    correctly-rounded divisions, round-6; scan-local projection."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        readability,
-    )
-
-    return readability(_t(spark, sf_dir, "documents"))
 
 
 def q_sample_weighted(spark, sf_dir):
@@ -5257,46 +3050,6 @@ def q_events_value_pct(spark, sf_dir):
     )
 
 
-def q_similarity_mutual_best(spark, sf_dir):
-    """Reciprocal best match over the every-7th-embedding subset: the
-    batch_topk candidate lists (k=5, rounded-cosine rank) filtered to
-    pairs where each side is the other's top non-self candidate —
-    the high-precision ER pairing rule."""
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        batch_topk,
-        mutual_best,
-    )
-
-    sub = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 7 == 0)
-    scores = batch_topk(
-        sub,
-        sub.select(F.col("vec_id").alias("query_id"), "embedding"),
-        k=5,
-    )
-    return mutual_best(scores)
-
-
-def q_eval_calibration(spark, sf_dir):
-    """Reliability diagram + per-bin Brier of a SYNTHETIC calibrated
-    scorer (p = md5_a/1e6, y = [md5_b < md5_a] — P(y=1|p) = p by
-    construction, so the diagram is diagonal): fixed-point millionths,
-    exact integer bin/sum arithmetic, one round-6 division per ratio."""
-    from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-        calibration_table,
-    )
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        _md5_bucket,
-    )
-
-    d = _t(spark, sf_dir, "documents").select(
-        (_md5_bucket("doc_id", "cal_p").cast("double") / F.lit(1e6)).alias("p"),
-        (_md5_bucket("doc_id", "cal_y") < _md5_bucket("doc_id", "cal_p"))
-        .cast("int")
-        .alias("y"),
-    )
-    return calibration_table(d, "p", "y")
-
-
 def q_graph_degree_hist(spark, sf_dir):
     """Degree distribution over the planted gadgets — analytic:
     {1: G (pendants), 2: 2G (clique corners), 3: G (hubs)}."""
@@ -5317,48 +3070,6 @@ def q_graph_hill_tail(spark, sf_dir):
     )
 
     return hill_tail(_triangle_gadget_edges(spark, sf_dir), d_min=2)
-
-
-def _auc_scored(spark, sf_dir):
-    """Synthetic scored/labeled frame for the ranking-metric entries:
-    score p = (md5_a % 1000)/1000 (thousandths — deliberate heavy
-    ties so the mid-rank tie convention is exercised), label y = 1
-    with probability p via an independent md5 draw (yb < p·1e6), so
-    the scorer is informative (AUC well above ½) but imperfect."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        _md5_bucket,
-    )
-
-    th = _md5_bucket("doc_id", "auc_s", 1000)
-    return _t(spark, sf_dir, "documents").select(
-        (th.cast("double") / F.lit(1000.0)).alias("p"),
-        (_md5_bucket("doc_id", "auc_y") < th * F.lit(1000))
-        .cast("int")
-        .alias("y"),
-    )
-
-
-def q_eval_roc_auc(spark, sf_dir):
-    """Exact tie-aware ROC-AUC (Mann-Whitney rank-sum identity) of the
-    synthetic calibrated scorer — integer rank arithmetic over
-    distinct-score groups, ONE round-6 division. Oracle: the identical
-    cumulative-count window chain in SQL."""
-    from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-        roc_auc,
-    )
-
-    return roc_auc(_auc_scored(spark, sf_dir), "p", "y")
-
-
-def q_eval_pr_curve(spark, sf_dir):
-    """Precision/recall/F1 operating-point table at 10 equal-width
-    thresholds over the synthetic scorer — exact integer TP/FP/FN from
-    descending bucket cumulation, one round-6 division per ratio."""
-    from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-        pr_curve,
-    )
-
-    return pr_curve(_auc_scored(spark, sf_dir), "p", "y", n_thresholds=10)
 
 
 def q_events_ewma_hourly(spark, sf_dir):
@@ -5427,41 +3138,6 @@ def q_events_nearest_click(spark, sf_dir):
     )
 
 
-def q_dedup_soft_weights(spark, sf_dir):
-    """SlimPajama-style soft-dedup sampling weights (1/family_size per
-    md5 content class) over the planted replay corpus — every family's
-    total mass is exactly 1; weight is the only division (round-6)."""
-    from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-        soft_dedup_weights,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    k = F.col("doc_id")
-    corpus = (
-        d.unionByName(d.filter(k % 7 == 0))
-        .unionByName(d.filter(k % 7 == 0))
-        .unionByName(d.filter(k % 13 == 0))
-    )
-    return soft_dedup_weights(corpus)
-
-
-def q_text_textrank(spark, sf_dir):
-    """Corpus-level TextRank keywords over every 5th document: word
-    co-occurrence graph (scan-local adjacent-pair generation) +
-    3-step weighted PageRank, rank rounded to 9 BEFORE the top-20
-    (rank DESC, term ASC) cut. Oracle: the identical unrolled
-    weighted-PageRank arithmetic over a generate_series pair CTE —
-    out-strengths are sums of INTEGER-valued doubles (exact in any
-    order), so only the ~1e-17 contribution-sum noise differs,
-    absorbed by round-9."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        textrank_keywords,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    return textrank_keywords(d, iterations=3, damping=0.85, k=20)
-
-
 def q_events_best_lag(spark, sf_dir):
     """Best-lag cross-correlation (±3 h) between event-type hourly
     series — the relay/lead-lag read lag-0 correlation can't make;
@@ -5506,58 +3182,6 @@ def q_events_dp_counts(spark, sf_dir):
     return dp_noisy_counts(ev, ["event_type", "user_id"], epsilon=0.5)
 
 
-def q_transcript_refusals(spark, sf_dir):
-    """Per-conversation assistant-refusal profile over the synthetic
-    transcripts with PLANTED refusals (assistant turns where
-    (conv + turn) % 5 == 0 get an 'I cannot help…' suffix): literal
-    lowercase-contains matching (no regex seam), exact counts, one
-    round-6 division."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        refusal_rate,
-    )
-
-    tr = _synth_transcripts(spark, sf_dir)
-    planted = tr.withColumn(
-        "text",
-        F.when(
-            (F.col("role") == "assistant")
-            & ((F.col("conv_id").cast("long") + F.col("turn_idx")) % 5 == 0),
-            F.concat(
-                F.col("text"), F.lit(" I cannot help with that request.")
-            ),
-        ).otherwise(F.col("text")),
-    )
-    return refusal_rate(planted)
-
-
-def q_sample_cluster_balanced(spark, sf_dir):
-    """Diversity-balanced embedding sample: ≤ 8 rows per integer-grid
-    k-means cluster by deterministic md5-priority draw — the
-    embedding-space analog of mixture water-filling; assignment and
-    draw are both bit-identical cross-engine (integer Lloyd + exact
-    decimal md5 priority)."""
-    from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-        cluster_balanced_sample,
-    )
-
-    return cluster_balanced_sample(
-        _t(spark, sf_dir, "embeddings"), k=4, iterations=2, per_cluster=8
-    )
-
-
-def q_text_vocab_richness(spark, sf_dir):
-    """Vocabulary-richness card (Chao1 + Good-Turing coverage) over
-    every 5th document: exact integer term counts / hapax / dis
-    legomena, bias-corrected Chao1 (f2+1 denominator — defined even
-    when f2=0), one round-6 division per estimate."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        vocab_richness,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    return vocab_richness(d)
-
-
 _DRIFT_COLUMNS = ("user_id", "event_type", "value", "props")
 
 
@@ -5577,19 +3201,6 @@ def q_events_profile_drift(spark, sf_dir):
         ev.filter(F.col("event_id") % 2 == 1),
         list(_DRIFT_COLUMNS),
     )
-
-
-def q_text_stylometry(spark, sf_dir):
-    """Burrows' Delta between document sources over the corpus's top-30
-    terms: millionth-fixed-point relative frequencies make the
-    cross-source moments exact integers, each z one division over one
-    IEEE sqrt, zero-variance terms excluded by an INTEGER test, mean
-    rounds to 6 after the sum."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        stylometry_delta,
-    )
-
-    return stylometry_delta(_t(spark, sf_dir, "documents"), m=30)
 
 
 def q_events_robust_trend(spark, sf_dir):
@@ -5657,42 +3268,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_hourly": q_events_hourly,
         "events_percentiles": q_events_percentiles,
         "events_extremes": q_events_extremes,
-        "similarity_batch_topk": q_similarity_batch_topk,
-        "hard_negatives": q_hard_negatives,
         "latest_event_per_user": q_latest_event_per_user,
         "asof_join_events_orders": q_asof_join_events_orders,
         "interval_join_events": q_interval_join_events,
         "dedup_exact_docs": q_dedup_exact_docs,
         "html_to_text": q_html_to_text,
-        "multimodal_decode": q_multimodal_decode,
         "skew_hot_entities": q_skew_hot_entities,
-        "pack_documents": q_pack_documents,
         "train_val_split": q_train_val_split,
-        "text_token_counts": q_text_token_counts,
-        "text_tfidf_top_terms": q_text_tfidf_top_terms,
-        "text_quality_score": q_text_quality_score,
-        "text_language_id": q_text_language_id,
-        "text_fingerprints": q_text_fingerprints,
-        "similarity_topk": q_similarity_topk,
-        "minhash_near_dup_docs": q_minhash_near_dup_docs,
-        "ngram_jaccard": q_ngram_jaccard,
-        "ngram_containment": q_ngram_containment,
-        "select_sources": q_select_sources,
-        "source_overlap": q_source_overlap,
-        "minhash_incremental": q_minhash_incremental,
-        "minhash_dedup_survivors": q_minhash_dedup_survivors,
-        "dedup_keep_best": q_dedup_keep_best,
         "canonical_map": q_canonical_map,
-        "eval_triple_pr": q_eval_triple_pr,
-        "eval_triple_pr_by_pred": q_eval_triple_pr_by_pred,
-        "eval_cluster_pairwise": q_eval_cluster_pairwise,
-        "simhash_near_dups": q_simhash_near_dups,
-        "simhash_signatures": q_simhash_signatures,
-        "similarity_lsh_topk": q_similarity_lsh_topk,
-        "similarity_ivf_topk": q_similarity_ivf_topk,
-        "embedding_near_dups": q_embedding_near_dups,
-        "embedding_dedup_survivors": q_embedding_dedup_survivors,
-        "ngram_decontaminate": q_ngram_decontaminate,
         "sample_stratified": q_sample_stratified,
         "graph_pagerank": q_graph_pagerank,
         "graph_pagerank_weighted": q_graph_pagerank_weighted,
@@ -5710,29 +3293,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_single_linkage": q_graph_single_linkage,
         "graph_betweenness": q_graph_betweenness,
         "table_checks": q_table_checks,
-        "curate_corpus": q_curate_corpus,
-        "curate_increment": q_curate_increment,
         "graph_bfs_distances": q_graph_bfs_distances,
         "graph_anf": q_graph_anf,
         "graph_label_propagation": q_graph_label_propagation,
-        "text_scrub_pii": q_text_scrub_pii,
-        "text_repetition_ratio": q_text_repetition_ratio,
         "sample_mixture": q_sample_mixture,
         "split_oversized_docs": q_split_oversized_docs,
         "graph_connected_components": q_graph_connected_components,
         "graph_triangle_count": q_graph_triangle_count,
         "graph_node_similarity": q_graph_node_similarity,
         "graph_link_prediction": q_graph_link_prediction,
-        "text_unigram_logprob": q_text_unigram_logprob,
-        "text_bigram_logprob": q_text_bigram_logprob,
-        "source_datasheet": q_source_datasheet,
-        "dedup_bow": q_dedup_bow,
         "curriculum_order": q_curriculum_order,
-        "jaccard_prefix_join": q_jaccard_prefix_join,
         "events_benford": q_events_benford,
-        "search_ndcg": q_search_ndcg,
-        "search_rank_eval": q_search_rank_eval,
-        "text_readability": q_text_readability,
         "sample_weighted": q_sample_weighted,
         "events_seasonality": q_events_seasonality,
         "graph_transitivity": q_graph_transitivity,
@@ -5745,73 +3316,43 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_user_overlap": q_hll_user_overlap,
         "events_survival": q_events_survival,
         "events_value_pct": q_events_value_pct,
-        "similarity_mutual_best": q_similarity_mutual_best,
-        "eval_calibration": q_eval_calibration,
         "graph_degree_hist": q_graph_degree_hist,
         "graph_hill_tail": q_graph_hill_tail,
         "events_json_props": q_events_json_props,
-        "dsir_weights": q_dsir_weights,
-        "dsir_resample": q_dsir_resample,
         "cms_user_counts": q_cms_user_counts,
         "domain_registrable": q_domain_registrable,
         "bloom_prefilter": q_bloom_prefilter,
-        "feature_hash": q_feature_hash,
-        "quality_model_score": q_quality_model_score,
         "ip_cidr_enrich": q_ip_cidr_enrich,
         "graph_scc": q_graph_scc,
         "graph_random_walks": q_graph_random_walks,
         "graph_walk_pmi": q_graph_walk_pmi,
         "graph_hits": q_graph_hits,
         "graph_katz": q_graph_katz,
-        "span_dup_stats": q_span_dup_stats,
-        "span_scrub": q_span_scrub,
         "kmv_distinct_users": q_kmv_distinct_users,
         "hll_distinct_users": q_hll_distinct_users,
         "events_percentiles_exact": q_events_percentiles_exact,
-        "embeddings_kmeans": q_embeddings_kmeans,
-        "semantic_dedup": q_semantic_dedup,
-        "transcript_stats": q_transcript_stats,
-        "transcript_pii_audit": q_transcript_pii_audit,
-        "transcript_latency": q_transcript_latency,
-        "sft_pairs": q_sft_pairs,
-        "conv_dedup_exact": q_conv_dedup_exact,
-        "conv_near_dup": q_conv_near_dup,
-        "validate_traces": q_validate_traces,
-        "transcript_role_transitions": q_transcript_role_transitions,
-        "embedding_decontaminate": q_embedding_decontaminate,
         "cypher_optional_match": q_cypher_optional_match,
         "cypher_var_length": q_cypher_var_length,
         "events_anomaly": q_events_anomaly,
-        "similarity_sq_topk": q_similarity_sq_topk,
         "graph_louvain": q_graph_louvain,
         "graph_louvain_weighted": q_graph_louvain_weighted,
         "graph_modularity": q_graph_modularity,
-        "kg_negative_samples": q_kg_negative_samples,
         "events_cooccur_npmi": q_events_cooccur_npmi,
         "graph_node2vec": q_graph_node2vec,
-        "similarity_pq_topk": q_similarity_pq_topk,
         "sample_temperature": q_sample_temperature,
         "events_zorder_key": q_events_zorder,
         "graph_eigenvector": q_graph_eigenvector,
         "graph_cc_increment": q_graph_cc_increment,
         "url_normalize": q_url_normalize,
-        "transcript_sessionize": q_transcript_sessionize,
-        "sft_pairs_context": q_sft_pairs_context,
         "events_hist_quantiles": q_events_hist_quantiles,
         "events_recency_decay": q_events_recency_decay,
         "events_funnel": q_events_funnel,
         "events_retention": q_events_retention,
-        "corpus_kl": q_corpus_kl,
         "graph_conductance": q_graph_conductance,
         "events_mad_outliers": q_events_mad_outliers,
-        "quality_gate": q_quality_gate,
         "cms_join_size": q_cms_join_size,
         "graph_lcc": q_graph_lcc,
         "events_cusum": q_events_cusum,
-        "text_bm25_search": q_text_bm25_search,
-        "text_blocklist": q_text_blocklist,
-        "search_rrf": q_search_rrf,
-        "text_ttr": q_text_ttr,
         "events_burstiness": q_events_burstiness,
         "events_dormancy": q_events_dormancy,
         "events_entropy": q_events_entropy,
@@ -5825,191 +3366,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_top_sequences": q_events_top_sequences,
         "graph_reciprocity": q_graph_reciprocity,
         "events_markov": q_events_markov,
-        "corpus_top_ngrams": q_corpus_top_ngrams,
-        "vocab_prune": q_vocab_prune,
-        "vocab_growth": q_vocab_growth,
-        "bpe_train": q_bpe_train,
-        "bpe_token_counts": q_bpe_token_counts,
-        "transcript_tool_profile": q_transcript_tool_profile,
-        "transcript_loops": q_transcript_loops,
-        "curate_transcripts": q_curate_transcripts,
-        "curate_transcripts_increment": q_curate_transcripts_increment,
-        "line_dedup": q_line_dedup,
-        "transcript_outcomes": q_transcript_outcomes,
-        "dpo_pairs": q_dpo_pairs,
-        "best_of_n_pairs": q_best_of_n_pairs,
         "graph_assortativity": q_graph_assortativity,
-        "similarity_mmr": q_similarity_mmr,
-        "corpus_fertility": q_corpus_fertility,
-        "dedup_family_sizes": q_dedup_family_sizes,
-        "gopher_rules": q_gopher_rules,
         "stix_objects": q_stix_objects,
         "stix_relationships": q_stix_relationships,
         "watchlist_alerts": q_watchlist_alerts,
         "watchlist_summary": q_watchlist_summary,
-        "transcript_context_growth": q_transcript_context_growth,
-        "transcript_tool_errors": q_transcript_tool_errors,
-        "transcript_tool_chains": q_transcript_tool_chains,
-        "dedup_paragraphs": q_dedup_paragraphs,
         "er_sorted_neighborhood": q_er_sorted_neighborhood,
         "kg_schema_audit": q_kg_schema_audit,
         "kg_scd2_intervals": q_kg_scd2_intervals,
         "er_verified_matches": q_er_verified_matches,
         "kg_temporal_two_hop": q_kg_temporal_two_hop,
         "kg_corroboration": q_kg_corroboration,
-        "eval_roc_auc": q_eval_roc_auc,
-        "eval_pr_curve": q_eval_pr_curve,
         "events_ewma_hourly": q_events_ewma_hourly,
         "events_simpson": q_events_simpson,
         "events_nearest_click": q_events_nearest_click,
-        "dedup_soft_weights": q_dedup_soft_weights,
-        "text_textrank": q_text_textrank,
         "events_best_lag": q_events_best_lag,
         "events_seasonal_surge": q_events_seasonal_surge,
         "events_dp_counts": q_events_dp_counts,
-        "transcript_refusals": q_transcript_refusals,
-        "sample_cluster_balanced": q_sample_cluster_balanced,
-        "text_vocab_richness": q_text_vocab_richness,
         "events_profile_drift": q_events_profile_drift,
-        "text_stylometry": q_text_stylometry,
         "events_robust_trend": q_events_robust_trend,
         "events_ks_drift": q_events_ks_drift,
     }
-
-
-def _bpe_vocab_chain_sql(k: int) -> str:
-    """The unrolled BPE merge recurrence as a WITH-clause body (no
-    leading WITH): v0 is the delimiter-wrapped word vocabulary, each
-    step i computes pair counts p{i}, the deterministic argmax b{i}
-    (cnt DESC, left ASC, right ASC), and the rewritten vocab v{i} via
-    the engine's native left-to-right all-occurrence replace — the
-    per-token double-U+001F wrapping makes adjacent matches disjoint,
-    so replace() IS the greedy BPE merge (operators/bpe.py docstring).
-    Shared by the bpe_train and bpe_token_counts oracles."""
-    sep = "\x1f"
-    parts = [
-        f"""
-            v0 AS (
-              SELECT word, cast(count(*) AS bigint) AS freq,
-                     regexp_replace(word, '(.)', '{sep}\\1{sep}', 'g') AS s
-              FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+'))
-                      AS word FROM documents)
-              GROUP BY word
-            )"""
-    ]
-    for i in range(1, k + 1):
-        parts.append(
-            f"""
-            p{i} AS (
-              SELECT tok[i] AS l, tok[i + 1] AS r,
-                     cast(sum(freq) AS bigint) AS cnt
-              FROM (SELECT freq,
-                           string_split(trim(s, '{sep}'), '{sep}{sep}') AS tok
-                    FROM v{i - 1}),
-                   unnest(range(1, len(tok))) AS u(i)
-              GROUP BY 1, 2
-            ),
-            b{i} AS (SELECT l, r, cnt FROM p{i}
-                     ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-            v{i} AS (
-              SELECT v.word, v.freq,
-                     replace(v.s, '{sep}' || b.l || '{sep}{sep}' || b.r || '{sep}',
-                                  '{sep}' || b.l || b.r || '{sep}') AS s
-              FROM v{i - 1} v CROSS JOIN b{i} b
-            )"""
-        )
-    return ",".join(parts)
-
-
-def _bpe_train_oracle_sql(k: int) -> str:
-    """Merge-rule table oracle (see q_bpe_train)."""
-    union = " UNION ALL ".join(
-        f"SELECT {i} AS step, l, r, cnt FROM b{i}" for i in range(1, k + 1)
-    )
-    return f"""
-        WITH {_bpe_vocab_chain_sql(k)}
-        SELECT cast(step AS int) AS step, l AS left_sym, r AS right_sym, cnt
-        FROM ({union}) ORDER BY step
-    """
-
-
-def _bpe_token_counts_oracle_sql(k: int) -> str:
-    """Per-doc tokenization oracle over the trained vocab
-    (see q_bpe_token_counts); INNER join drops wordless docs."""
-    sep = "\x1f"
-    return f"""
-        WITH {_bpe_vocab_chain_sql(k)},
-        per_word AS (
-          SELECT word,
-                 cast(len(string_split(trim(s, '{sep}'), '{sep}{sep}'))
-                   AS bigint) AS n_tok,
-                 cast(length(word) AS bigint) AS n_chr
-          FROM v{k}
-        ),
-        dw AS (
-          SELECT doc_id, word, cast(count(*) AS bigint) AS n
-          FROM (SELECT doc_id,
-                       unnest(regexp_extract_all(lower(text), '[a-z]+'))
-                         AS word FROM documents)
-          GROUP BY 1, 2
-        )
-        SELECT dw.doc_id,
-               cast(sum(dw.n * pw.n_chr) AS bigint) AS n_chars,
-               cast(sum(dw.n * pw.n_tok) AS bigint) AS n_tokens,
-               round(sum(dw.n * pw.n_tok) / sum(dw.n * pw.n_chr), 6)
-                 AS compression
-        FROM dw JOIN per_word pw USING (word)
-        GROUP BY dw.doc_id
-    """
-
-
-def _bm25_oracle_sql(terms: list[str], k: int = 20) -> str:
-    """Okapi BM25 top-k oracle (see q_text_bm25_search): the same float
-    expression shape as operators/text_quality.py::bm25_search, round-6
-    before the (score DESC, doc_id ASC) rank. Returned as a standalone
-    query so rank-fusion oracles can nest it as a derived table."""
-    terms_sql = ", ".join(f"'{t}'" for t in sorted(set(terms)))
-    return f"""
-            WITH b2 AS (
-              SELECT doc_id,
-                     cast(len(regexp_extract_all(lower(text), '[a-z0-9]{{2,}}'))
-                       AS bigint) AS dl,
-                     regexp_extract_all(lower(text), '[a-z0-9]{{2,}}') AS toks
-              FROM documents
-            ),
-            consts AS (
-              SELECT cast(count(*) AS bigint) AS n,
-                     cast(sum(dl) AS bigint) AS tdl
-              FROM b2
-            ),
-            tf AS (
-              SELECT doc_id, dl, term, cast(count(*) AS bigint) AS tf
-              FROM (
-                SELECT doc_id, dl,
-                       unnest(list_filter(toks,
-                         t -> list_contains([{terms_sql}], t)))
-                         AS term
-                FROM b2
-              ) GROUP BY 1, 2, 3
-            ),
-            dfr AS (SELECT term, cast(count(*) AS bigint) AS df FROM tf GROUP BY term),
-            contrib AS (
-              SELECT tf.doc_id,
-                     ln(1.0 + (n - df + 0.5) / (df + 0.5))
-                       * (tf * 2.2)
-                       / (tf + 1.2 * (0.25 + 0.75 * (dl * n) / tdl)) AS c
-              FROM tf JOIN dfr USING (term) CROSS JOIN consts
-            ),
-            scored AS (
-              SELECT doc_id, round(sum(c), 6) AS score
-              FROM contrib GROUP BY doc_id
-            )
-            SELECT doc_id, score, cast(rk AS int) AS rk FROM (
-              SELECT *, row_number() OVER (
-                ORDER BY score DESC, doc_id ASC
-              ) AS rk FROM scored
-            ) WHERE rk <= {k}
-    """
 
 
 def _lpa_oracle_sql(iterations: int) -> str:
@@ -6049,32 +3426,6 @@ def _lpa_oracle_sql(iterations: int) -> str:
         """
     )
     return "".join(parts)
-
-
-# Shared head for the span-dedup oracles: positional 6-gram md5s over
-# the engine-portable tokenization, corpus-duplicated (occ >= 2) gram
-# occurrences as (doc_id, pos). Mirrors operators/span_dedup.py exactly
-# (1-based positions, within-doc repeats count).
-_SPAN_PG_SQL = r"""
-            WITH base AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS t
-              FROM documents
-            ),
-            b2 AS (SELECT doc_id, t, len(t) AS n_tokens FROM base),
-            pos AS (
-              SELECT doc_id, t,
-                     unnest(generate_series(1, cast(n_tokens AS int) - 5)) AS pos
-              FROM b2
-            ),
-            pg AS (
-              SELECT doc_id, pos,
-                     md5(array_to_string(t[pos:pos+5], ' ')) AS g
-              FROM pos
-            ),
-            occ AS (SELECT g FROM pg GROUP BY g HAVING count(*) >= 2),
-            dup AS (SELECT pg.doc_id, pg.pos FROM pg JOIN occ USING (g))
-"""
 
 
 def _katz_oracle_sql(
@@ -6485,75 +3836,6 @@ def _node2vec_cte_sql(
               SELECT walk_id, start_id, 0 AS step, node FROM w
 {union}
             )"""
-
-
-def _dsir_weights_sql(dim: int = 512) -> str:
-    """WITH-clause prefix ending in relation ``w(doc_id, n_feats,
-    log_weight)`` — the DSIR smoothed log-likelihood-ratio weights over
-    hashed unigram+bigram features (target = src0 docs, raw = all
-    docs). Caller appends its own final SELECT. Mirrors
-    ``operators/dsir.py``: same md5 'dsir:' bucketing, every ln on an
-    exact integer, round-6 after the per-doc sum."""
-    return f"""
-            WITH rtoks AS (
-              SELECT doc_id,
-                     regexp_extract_all(lower(text), '[a-z0-9]{{2,}}') AS l
-              FROM documents
-            ),
-            rfeat AS (
-              SELECT doc_id, unnest(l) AS feat FROM rtoks
-              UNION ALL
-              SELECT doc_id, l[i] || ' ' || l[i+1] AS feat FROM (
-                SELECT doc_id, l,
-                       unnest(generate_series(1, len(l) - 1)) AS i
-                FROM rtoks
-              )
-            ),
-            tfeat AS (
-              SELECT feat FROM rfeat
-              JOIN documents USING (doc_id) WHERE source = 'src0'
-            ),
-            tf AS (
-              SELECT doc_id,
-                     cast(md5_number_upper('dsir:' || feat) % {dim}
-                          AS bigint) AS bucket,
-                     count(*) AS n
-              FROM rfeat GROUP BY 1, 2
-            ),
-            p AS (
-              SELECT cast(md5_number_upper('dsir:' || feat) % {dim}
-                          AS bigint) AS bucket,
-                     count(*) AS ct_p
-              FROM tfeat GROUP BY 1
-            ),
-            q AS (SELECT bucket, sum(n) AS ct_q FROM tf GROUP BY 1),
-            pt AS (SELECT coalesce(sum(ct_p), 0) AS p_total FROM p),
-            qt AS (SELECT coalesce(sum(ct_q), 0) AS q_total FROM q),
-            w AS (
-              SELECT tf.doc_id,
-                     cast(sum(tf.n) AS bigint) AS n_feats,
-                     round(sum(tf.n * (ln(coalesce(p.ct_p, 0) + 1.0)
-                                       - ln(q.ct_q + 1.0)))
-                           + sum(tf.n) * any_value(ln(qt.q_total + {dim})
-                                                   - ln(pt.p_total + {dim})),
-                           6) AS log_weight
-              FROM tf LEFT JOIN p USING (bucket) JOIN q USING (bucket)
-              CROSS JOIN pt CROSS JOIN qt
-              GROUP BY tf.doc_id
-            )"""
-
-
-def _pii_oracle_sql() -> str:
-    """regexp_replace chain generated from the operator's PII_PATTERNS
-    (same strings, same order) — RE2-safe by construction."""
-    from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-        PII_PATTERNS,
-    )
-
-    expr = "text"
-    for pat, repl in PII_PATTERNS:
-        expr = f"regexp_replace({expr}, '{pat}', '{repl}', 'g')"
-    return f"SELECT doc_id, {expr} AS text FROM documents"
 
 
 def _kcore_oracle_sql(k: int, iterations: int) -> str:
@@ -7167,66 +4449,6 @@ def _anf_oracle_sql(hops: int = 2, m: int = 16) -> str:
     """
 
 
-def _kmeans_assign_ctes(
-    k: int = 4, iterations: int = 2, scale: int = 1024, src: str = "embeddings",
-    suffix: str = "",
-) -> str:
-    """CTE chain (no leading WITH) ending at ``assign{iterations}``:
-    unrolled Lloyd rounds mirroring operators/clustering.py::
-    kmeans_assign — every step integer arithmetic (quantized points,
-    integer distance sums, floored centroid means), so assignment is
-    bit-identical; emptied clusters carry the previous centroid.
-    ``src`` must expose (vec_id, embedding). ``suffix`` namespaces every
-    CTE so several chains can coexist in one query (the PQ oracle runs
-    one chain per subspace)."""
-    sx = suffix
-    parts = [f"""
-        pts{sx} AS (
-          SELECT vec_id AS id, d,
-                 CAST(floor(CAST(embedding[d] AS DOUBLE) * {scale} + 0.5)
-                   AS BIGINT) AS q
-          FROM {src}, UNNEST(generate_series(1, len(embedding))) AS t(d)
-          WHERE embedding IS NOT NULL
-        ),
-        seeds{sx} AS (
-          SELECT id, row_number() OVER (ORDER BY id) - 1 AS cluster
-          FROM (SELECT DISTINCT id FROM pts{sx} ORDER BY id LIMIT {k})
-        ),
-        cent0{sx} AS (
-          SELECT cluster, d, q AS cq FROM seeds{sx} JOIN pts{sx} USING (id)
-        )"""]
-    for i in range(1, iterations + 1):
-        prev = f"cent{i - 1}{sx}"
-        parts.append(f""",
-        dist{i}{sx} AS (
-          SELECT id, cluster, sum((q - cq) * (q - cq)) AS dist
-          FROM pts{sx} JOIN {prev} USING (d)
-          GROUP BY id, cluster
-        ),
-        assign{i}{sx} AS (
-          SELECT id, cluster FROM (
-            SELECT id, cluster,
-                   row_number() OVER (PARTITION BY id
-                                      ORDER BY dist ASC, cluster ASC) AS rn
-            FROM dist{i}{sx}
-          ) WHERE rn = 1
-        ),
-        newc{i}{sx} AS (
-          SELECT cluster, d,
-                 CAST(floor(CAST(sum(q) AS DOUBLE) / CAST(count(*) AS DOUBLE))
-                   AS BIGINT) AS cq
-          FROM assign{i}{sx} JOIN pts{sx} USING (id)
-          GROUP BY cluster, d
-        ),
-        cent{i}{sx} AS (
-          SELECT * FROM newc{i}{sx}
-          UNION ALL
-          SELECT p.* FROM {prev} p
-          WHERE p.cluster NOT IN (SELECT DISTINCT cluster FROM newc{i}{sx})
-        )""")
-    return "".join(parts)
-
-
 def _morton_sql(exprs: list, bits: int = 16) -> str:
     """Unrolled Morton interleave of SQL integer expressions — the
     operators/layout.py::morton_key bit arithmetic verbatim (clamp to
@@ -7238,135 +4460,6 @@ def _morton_sql(exprs: list, bits: int = 16) -> str:
         for i in range(bits):
             terms.append(f"((({v} >> {i}) & 1) << {i * n + j})")
     return " | ".join(terms)
-
-
-def _pq_oracle_sql(
-    m: int = 4,
-    k_sub: int = 4,
-    iterations: int = 2,
-    scale: int = 1024,
-    k: int = 10,
-    rf: int = 4,
-    dim: int = 64,
-) -> str:
-    """Mirror of operators/similarity.py::pq_topk: one kmeans CTE chain
-    per subspace (suffix-namespaced), integer ADC lookup table from the
-    identically-quantized query (vec_id 0), per-vector code-sum
-    distance, (adist ASC, id) candidate cut, exact-cosine rerank — the
-    sq_topk oracle tail."""
-    dsub = dim // m
-    subs = []
-    chains = []
-    luts = []
-    codes = []
-    for s in range(m):
-        lo, hi = s * dsub + 1, (s + 1) * dsub
-        subs.append(f"""
-        sub{s} AS (
-          SELECT vec_id, embedding[{lo}:{hi}] AS embedding FROM nzsrc
-        )""")
-        chains.append(
-            _kmeans_assign_ctes(
-                k_sub, iterations, scale, src=f"sub{s}", suffix=f"_s{s}"
-            )
-        )
-        # centroid d is subspace-local 1-based; global = s·dsub + d
-        luts.append(f"""
-            SELECT {s} AS sub, c.cluster,
-                   sum((q.qd - c.cq) * (q.qd - c.cq)) AS ad
-            FROM cent{iterations - 1}_s{s} c
-            JOIN q ON q.d = c.d + {s * dsub}
-            GROUP BY c.cluster""")
-        codes.append(
-            f"SELECT {s} AS sub, id, cluster FROM assign{iterations}_s{s}"
-        )
-    return f"""
-        WITH p AS (
-          SELECT vec_id, cast(embedding AS double[]) AS v FROM embeddings
-        ),
-        nz AS (
-          SELECT vec_id, v FROM p
-          WHERE sqrt(list_sum(list_transform(v, x -> x * x))) > 0
-        ),
-        nzsrc AS (SELECT vec_id, v AS embedding FROM nz),
-        {",".join(subs)},
-        {",".join(chains)},
-        q AS (
-          SELECT d,
-                 CAST(floor(CAST(embedding[d] AS DOUBLE) * {scale} + 0.5)
-                   AS BIGINT) AS qd
-          FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(d)
-          WHERE vec_id = 0
-        ),
-        lut AS ({" UNION ALL ".join(luts)}),
-        codes AS ({" UNION ALL ".join(codes)}),
-        adist AS (
-          SELECT codes.id AS vec_id, sum(lut.ad) AS adist
-          FROM codes JOIN lut
-            ON codes.sub = lut.sub AND codes.cluster = lut.cluster
-          GROUP BY codes.id
-        ),
-        cand AS (
-          SELECT a.vec_id, nz.v
-          FROM adist a JOIN nz ON a.vec_id = nz.vec_id
-          ORDER BY a.adist ASC, a.vec_id ASC LIMIT {k * rf}
-        )
-        SELECT vec_id,
-               round(list_cosine_similarity(
-                 v, (SELECT cast(embedding AS double[]) FROM embeddings
-                     WHERE vec_id = 0)), 3) AS cosine
-        FROM cand
-        ORDER BY cosine DESC, vec_id
-        LIMIT {k}
-    """
-
-
-def _kmeans_oracle_sql(k: int = 4, iterations: int = 2, scale: int = 1024) -> str:
-    return f"""
-        WITH {_kmeans_assign_ctes(k, iterations, scale)}
-        SELECT id AS vec_id, CAST(cluster AS BIGINT) AS cluster
-        FROM assign{iterations}
-    """
-
-
-_SEMDEDUP_AUG_SQL = """
-          SELECT vec_id, embedding FROM embeddings
-          UNION ALL
-          SELECT vec_id + 100000 AS vec_id, embedding
-          FROM embeddings WHERE vec_id % 7 = 0
-"""
-
-
-def _semantic_dedup_oracle_sql(
-    k: int = 4, iterations: int = 2, scale: int = 1024, threshold: float = 0.95
-) -> str:
-    """Mirror of operators/clustering.py::semantic_dedup over the
-    duplicate-augmented embeddings table: the unrolled integer-exact
-    k-means assignment (same CTE chain as the kmeans oracle) followed
-    by the per-pair greedy min-id blocking predicate — a row is
-    dropped iff a smaller-id cluster-mate has rounded cosine >=
-    threshold; zero-norm rows are never paired."""
-    return f"""
-        WITH aug AS ({_SEMDEDUP_AUG_SQL}),
-        {_kmeans_assign_ctes(k, iterations, scale, src="aug")},
-        vecs AS (
-          SELECT a.id, a.cluster, cast(e.embedding AS double[]) AS v,
-                 list_dot_product(cast(e.embedding AS double[]),
-                                  cast(e.embedding AS double[])) > 0
-                   AS scorable
-          FROM assign{iterations} a JOIN aug e ON a.id = e.vec_id
-        ),
-        blocked AS (
-          SELECT DISTINCT y.id AS b
-          FROM vecs x JOIN vecs y
-            ON x.cluster = y.cluster AND x.id < y.id
-          WHERE x.scorable AND y.scorable
-            AND round(list_cosine_similarity(x.v, y.v), 3) >= {threshold}
-        )
-        SELECT v.id AS vec_id, CAST(v.cluster AS BIGINT) AS cluster,
-               (b.b IS NULL) AS kept
-        FROM vecs v LEFT JOIN blocked b ON v.id = b.b
-    """
 
 
 def _schema_audit_oracle_sql() -> str:
@@ -7429,84 +4522,6 @@ def _schema_audit_oracle_sql() -> str:
     """
 
 
-def _textrank_oracle_sql(
-    iterations: int = 3, damping: float = 0.85, k: int = 20
-) -> str:
-    """Unrolled weighted-PageRank recurrence over the word
-    co-occurrence graph of every 5th document (see q_text_textrank).
-    Same per-iteration arithmetic as _pagerank_oracle_sql's weighted
-    path (contributions rank·w, teleport (1.0-d)/n, dangling kept
-    generic though it is exactly 0 here — every node of an undirected
-    graph has out-edges); the head builds edges from adjacent-token
-    pairs via generate_series over the token array, the tail rounds to
-    9 BEFORE the (rank DESC, term ASC) top-k cut."""
-    d = repr(damping)
-    parts = [
-        """
-        WITH tok0 AS (
-          SELECT regexp_extract_all(lower(text), '[a-z0-9]{2,}') AS ts
-          FROM documents WHERE doc_id % 5 = 0
-        ),
-        pr0 AS (
-          SELECT least(ts[i], ts[i + 1]) AS a,
-                 greatest(ts[i], ts[i + 1]) AS b
-          FROM tok0, UNNEST(generate_series(1, len(ts) - 1)) AS u(i)
-          WHERE ts[i] <> ts[i + 1]
-        ),
-        p AS (SELECT a, b, count(*) AS wt FROM pr0 GROUP BY a, b),
-        e AS (
-          SELECT a AS src, b AS dst, cast(wt AS double) AS ew FROM p
-          UNION ALL
-          SELECT b, a, cast(wt AS double) FROM p
-        ),
-        nodes AS (SELECT src AS id FROM e UNION SELECT dst AS id FROM e),
-        cnt AS (SELECT cast(count(*) AS double) AS n FROM nodes),
-        outdeg AS (SELECT src, sum(ew) AS out_w FROM e GROUP BY src),
-        w AS (
-          SELECT e.src, e.dst, e.ew / outdeg.out_w AS w
-          FROM e JOIN outdeg USING (src)
-        ),
-        it0 AS (SELECT id, (SELECT 1.0 / n FROM cnt) AS rank FROM nodes)
-        """
-    ]
-    for i in range(1, iterations + 1):
-        parts.append(
-            f""",
-        dang{i} AS (
-          SELECT coalesce(sum(r.rank), 0.0) AS dm
-          FROM it{i - 1} r LEFT JOIN outdeg o ON r.id = o.src
-          WHERE o.src IS NULL
-        ),
-        contrib{i} AS (
-          SELECT w.dst AS id, sum(r.rank * w.w) AS c
-          FROM w JOIN it{i - 1} r ON w.src = r.id
-          GROUP BY w.dst
-        ),
-        it{i} AS (
-          SELECT nd.id,
-                 (1.0 - {d}) / cnt.n
-                   + {d} * (coalesce(c.c, 0.0) + dang{i}.dm / cnt.n) AS rank
-          FROM nodes nd
-          CROSS JOIN cnt
-          CROSS JOIN dang{i}
-          LEFT JOIN contrib{i} c ON c.id = nd.id
-        )
-            """
-        )
-    parts.append(
-        f"""
-        SELECT term, rank, cast(rk AS int) AS rk FROM (
-          SELECT id AS term, round(rank, 9) AS rank,
-                 row_number() OVER (
-                   ORDER BY round(rank, 9) DESC, id ASC
-                 ) AS rk
-          FROM it{iterations}
-        ) WHERE rk <= {k}
-        """
-    )
-    return "".join(parts)
-
-
 def _profile_drift_oracle_sql() -> str:
     """Per-column profile UNION generated from the same _DRIFT_COLUMNS
     tuple the Spark entry profiles (single source of truth); identical
@@ -7545,156 +4560,7 @@ def _profile_drift_oracle_sql() -> str:
     """
 
 
-def _refusal_oracle_sql() -> str:
-    """Refusal-rate oracle: planted suffix + OR-of-lowercase-contains
-    generated from the operator's own REFUSAL_PATTERNS (single source
-    of truth; apostrophes SQL-escaped), one keyed aggregate."""
-    from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-        REFUSAL_PATTERNS,
-    )
-
-    cond = " OR ".join(
-        "contains(lower(text), '{}')".format(p.replace("'", "''"))
-        for p in REFUSAL_PATTERNS
-    )
-    return f"""
-        WITH base AS ({_SYNTH_TRANSCRIPTS_SQL}),
-        planted AS (
-          SELECT conv_id, role,
-                 CASE WHEN role = 'assistant'
-                       AND (cast(conv_id AS bigint) + turn_idx) % 5 = 0
-                      THEN text || ' I cannot help with that request.'
-                      ELSE text END AS text
-          FROM base
-        ),
-        a AS (
-          SELECT conv_id,
-                 CASE WHEN {cond} THEN 1 ELSE 0 END AS r
-          FROM planted WHERE role = 'assistant' AND text IS NOT NULL
-        )
-        SELECT conv_id,
-               cast(count(*) AS bigint) AS n_assistant,
-               cast(sum(r) AS bigint) AS n_refusals,
-               round(cast(sum(r) AS double) / cast(count(*) AS double), 6)
-                 AS refusal_rate
-        FROM a GROUP BY conv_id
-    """
-
-
 def oracle_sql() -> dict[str, str]:
-    en = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
-    es = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["es"])
-    de = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["de"])
-
-    # Per-query BM25 CTE blocks for search_rank_eval (the search_ndcg
-    # ranking chain, parametrized over the two pinned term sets; rel =
-    # doc contains >= 2 distinct query terms).
-    def _bm25_blocks(qid: str, terms: list[str]) -> str:
-        tl = ", ".join(f"'{t}'" for t in terms)
-        conds = " + ".join(
-            f"CASE WHEN list_contains(toks, '{t}') THEN 1 ELSE 0 END"
-            for t in terms
-        )
-        return f"""
-            tf_{qid} AS (
-              SELECT doc_id, dl, term, cast(count(*) AS bigint) AS tf
-              FROM (
-                SELECT doc_id, dl,
-                       unnest(list_filter(toks,
-                         t -> list_contains([{tl}], t))) AS term
-                FROM b2
-              ) GROUP BY 1, 2, 3
-            ),
-            dfr_{qid} AS (SELECT term, cast(count(*) AS bigint) AS df
-                          FROM tf_{qid} GROUP BY term),
-            scored_{qid} AS (
-              SELECT doc_id, round(sum(
-                       ln(1.0 + (n - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-                       / (tf + 1.2 * (0.25 + 0.75 * (dl * n) / tdl))), 6)
-                       AS score
-              FROM tf_{qid} JOIN dfr_{qid} USING (term) CROSS JOIN consts
-              GROUP BY doc_id
-            ),
-            ranked_{qid} AS (
-              SELECT doc_id, rk FROM (
-                SELECT doc_id, row_number() OVER (
-                  ORDER BY score DESC, doc_id ASC
-                ) AS rk FROM scored_{qid}
-              ) WHERE rk <= 10
-            ),
-            rel_{qid} AS (
-              SELECT doc_id FROM b2 WHERE ({conds}) >= 2
-            )"""
-
-    _rank_eval_sql = (
-        """
-            WITH b2 AS (
-              SELECT doc_id,
-                     cast(len(regexp_extract_all(lower(text), '[a-z0-9]{2,}'))
-                       AS bigint) AS dl,
-                     regexp_extract_all(lower(text), '[a-z0-9]{2,}') AS toks
-              FROM documents
-            ),
-            consts AS (
-              SELECT cast(count(*) AS bigint) AS n,
-                     cast(sum(dl) AS bigint) AS tdl
-              FROM b2
-            ),"""
-        + ",".join(
-            _bm25_blocks(qid, terms)
-            for qid, terms in _RANK_EVAL_QUERIES.items()
-        )
-        + """,
-            rankings AS (
-              SELECT 'q_msv' AS query_id, doc_id, rk FROM ranked_q_msv
-              UNION ALL
-              SELECT 'q_ms', doc_id, rk FROM ranked_q_ms
-            ),
-            qrels AS (
-              SELECT 'q_msv' AS query_id, doc_id FROM rel_q_msv
-              UNION ALL
-              SELECT 'q_ms', doc_id FROM rel_q_ms
-            ),
-            nrel AS (SELECT query_id, cast(count(*) AS bigint) AS n_rel
-                     FROM qrels GROUP BY 1),
-            j AS (
-              SELECT r.query_id, r.rk AS pos,
-                     CASE WHEN q.doc_id IS NOT NULL THEN 1 END AS is_rel
-              FROM rankings r
-              LEFT JOIN qrels q
-                ON r.query_id = q.query_id AND r.doc_id = q.doc_id
-            ),
-            h AS (
-              SELECT *, sum(coalesce(is_rel, 0)) OVER (
-                PARTITION BY query_id ORDER BY pos
-              ) AS hits
-              FROM j
-            ),
-            per_q AS (
-              SELECT query_id,
-                     cast(count(*) AS bigint) AS n_ranked,
-                     cast(min(CASE WHEN is_rel IS NOT NULL THEN pos END)
-                       AS bigint) AS first_rel_rank,
-                     cast(sum(CASE WHEN is_rel IS NOT NULL
-                                   THEN hits * (2520 // pos)
-                                   ELSE 0 END) AS bigint) AS ap_num
-              FROM h GROUP BY 1
-            )
-            SELECT p.query_id, p.n_ranked,
-                   coalesce(n.n_rel, 0) AS n_rel,
-                   p.first_rel_rank,
-                   CASE WHEN p.first_rel_rank IS NOT NULL
-                        THEN round(1.0 / p.first_rel_rank, 6)
-                        WHEN coalesce(n.n_rel, 0) > 0 THEN 0.0
-                   END AS rr,
-                   CASE WHEN coalesce(n.n_rel, 0) > 0
-                        THEN round(cast(p.ap_num AS double)
-                                   / cast(2520 * least(n.n_rel, 10)
-                                          AS double), 6)
-                   END AS ap
-            FROM per_q p LEFT JOIN nrel n USING (query_id)
-        """
-    )
     return {
         "kg_chunks": """
             WITH d AS (
@@ -7776,117 +4642,6 @@ def oracle_sql() -> dict[str, str]:
         # function-call JSON, with every 3rd payload truncated → repaired).
         "kg_llm_mock_triples": _KERNEL_TRIPLES_SQL,
         "kg_nodes_from_kernel": _KERNEL_NODES_SQL,
-        # Gopher rules over the rule-planted corpus: identical signal
-        # arithmetic (whitespace-split words, non-ws char totals,
-        # replace-based symbol counts, line filters, distinct-stopword
-        # membership) and the same precedence CASE (see q_gopher_rules
-        # / operators/text_quality.py::gopher_rules).
-        "gopher_rules": r"""
-            WITH c AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 0 THEN 'tiny doc only'
-                          WHEN doc_id % 11 = 0 THEN '#### ## ' || text
-                          WHEN doc_id % 13 = 0 THEN repeat('111 ', 60)
-                          WHEN doc_id % 17 = 0 THEN repeat('zap ', 60)
-                          WHEN doc_id % 19 = 0 THEN repeat('a ', 60)
-                          WHEN doc_id % 3 = 0
-                            THEN '- a' || chr(10) || '- b' || chr(10)
-                                 || '- c' || chr(10) || text
-                          WHEN doc_id % 5 = 0 THEN text || '...'
-                          ELSE text END AS text
-              FROM documents
-            ),
-            sig AS (
-              SELECT doc_id,
-                     CASE WHEN length(trim(lower(coalesce(text, '')))) = 0
-                          THEN 0
-                          ELSE len(regexp_split_to_array(
-                                 trim(lower(coalesce(text, ''))), '\s+'))
-                     END AS n_words,
-                     length(regexp_replace(lower(coalesce(text, '')),
-                                           '\s+', '', 'g')) AS chars,
-                     (length(lower(coalesce(text, '')))
-                      - length(replace(lower(coalesce(text, '')), '#', '')))
-                     + (length(lower(coalesce(text, '')))
-                        - length(replace(lower(coalesce(text, '')),
-                                         '...', ''))) / 3 AS symbols,
-                     len(string_split(lower(coalesce(text, '')), chr(10)))
-                       AS n_lines,
-                     len(list_filter(
-                           string_split(lower(coalesce(text, '')), chr(10)),
-                           x -> starts_with(x, '- ')
-                                OR starts_with(x, '* '))) AS n_bullets,
-                     len(list_filter(
-                           string_split(lower(coalesce(text, '')), chr(10)),
-                           x -> ends_with(x, '...'))) AS n_ell,
-                     len(list_filter(
-                           regexp_split_to_array(
-                             trim(lower(coalesce(text, ''))), '\s+'),
-                           w -> regexp_matches(w, '[a-z]'))) AS n_alpha,
-                     (CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'the')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'be')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'to')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'of')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'and')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'that')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'have')
-                        THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(regexp_split_to_array(
-                        trim(lower(coalesce(text, ''))), '\s+'), 'with')
-                        THEN 1 ELSE 0 END) AS n_stop
-              FROM c
-            ),
-            r AS (
-              SELECT doc_id,
-                     cast(n_words AS bigint) AS n_words,
-                     CASE WHEN n_words > 0
-                          THEN chars / n_words END AS mean_len,
-                     CASE WHEN n_words > 0
-                          THEN symbols / n_words END AS sym,
-                     n_bullets / n_lines AS bullet,
-                     n_ell / n_lines AS ell,
-                     CASE WHEN n_words > 0
-                          THEN n_alpha / n_words END AS alpha,
-                     cast(n_stop AS bigint) AS n_stopwords
-              FROM sig
-            )
-            SELECT doc_id, n_words,
-                   round(mean_len, 6) AS mean_word_len,
-                   round(sym, 6) AS symbol_ratio,
-                   round(bullet, 6) AS bullet_frac,
-                   round(ell, 6) AS ellipsis_frac,
-                   round(alpha, 6) AS alpha_frac,
-                   n_stopwords,
-                   reason,
-                   reason IS NULL AS passed
-            FROM (
-              SELECT *,
-                     CASE WHEN n_words < 10 OR n_words > 100000
-                          THEN 'word_count'
-                          WHEN mean_len < 3.0 OR mean_len > 10.0
-                          THEN 'mean_word_len'
-                          WHEN sym > 0.1 THEN 'symbol_ratio'
-                          WHEN bullet > 0.5 THEN 'bullet_lines'
-                          WHEN ell > 0.3 THEN 'ellipsis_lines'
-                          WHEN alpha < 0.8 THEN 'alpha_words'
-                          WHEN n_stopwords < 1 THEN 'stopwords'
-                     END AS reason
-              FROM r
-            )
-        """,
         # STIX 2.1 exports: the analytic node/edge sets projected
         # through the SAME label→type CASE and md5-uuid formatting the
         # operator computes (see q_stix_objects / q_stix_relationships
@@ -8110,62 +4865,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n
             FROM events GROUP BY 1, 2
         """,
-        # Contrastive hard negatives: labeled pairs (every 97th id,
-        # next id as positive), cross-scored corpus minus the pair
-        # members, per-pair rounded-cosine rank (see q_hard_negatives).
-        "hard_negatives": """
-            WITH pr AS (
-              SELECT e1.vec_id AS query_id, e2.vec_id AS pos_id,
-                     e1.embedding AS qv
-              FROM embeddings e1
-              JOIN embeddings e2 ON e2.vec_id = e1.vec_id + 1
-              WHERE e1.vec_id % 97 = 0
-                AND sqrt(list_dot_product(cast(e1.embedding AS double[]),
-                                          cast(e1.embedding AS double[]))) > 0
-            ),
-            sc AS (
-              SELECT pr.query_id, pr.pos_id, e.vec_id AS neg_id,
-                     round(list_cosine_similarity(
-                       cast(e.embedding AS double[]),
-                       cast(pr.qv AS double[])), 3) AS neg_cosine
-              FROM embeddings e CROSS JOIN pr
-              WHERE sqrt(list_dot_product(cast(e.embedding AS double[]),
-                                          cast(e.embedding AS double[]))) > 0
-                AND e.vec_id <> pr.query_id AND e.vec_id <> pr.pos_id
-            )
-            SELECT query_id, pos_id, neg_id, neg_cosine,
-                   cast(rn AS int) AS neg_rank
-            FROM (
-              SELECT *, row_number() OVER (
-                       PARTITION BY query_id, pos_id
-                       ORDER BY neg_cosine DESC, neg_id ASC) AS rn
-              FROM sc
-            ) WHERE rn <= 3
-        """,
-        "similarity_batch_topk": """
-            SELECT query_id, vec_id, cosine
-            FROM (
-              SELECT query_id, vec_id, cosine,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine DESC, vec_id ASC) AS rn
-              FROM (
-                SELECT q.query_id, e.vec_id,
-                       round(list_cosine_similarity(
-                         cast(e.embedding AS double[]),
-                         cast(q.qv AS double[])), 3) AS cosine
-                FROM (SELECT * FROM embeddings
-                      WHERE sqrt(list_dot_product(cast(embedding AS double[]),
-                                                  cast(embedding AS double[]))) > 0) e
-                CROSS JOIN (
-                  SELECT vec_id AS query_id, embedding AS qv
-                  FROM embeddings WHERE vec_id % 97 = 0
-                    AND sqrt(list_dot_product(cast(embedding AS double[]),
-                                              cast(embedding AS double[]))) > 0
-                ) q
-              )
-            )
-            WHERE rn <= 5
-        """,
         "events_extremes": """
             WITH ranked AS (
               SELECT event_id, event_type, value,
@@ -8224,55 +4923,6 @@ def oracle_sql() -> dict[str, str]:
               FROM ips JOIN cidrs ON ipn >= start AND ipn < start + sz
             )
             SELECT ip_id, ip, cidr, label FROM m WHERE rn = 1
-        """,
-        "feature_hash": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_extract_all(lower(text), '[a-z0-9]{2,}')) AS term
-              FROM documents
-            ),
-            hashed AS (
-              SELECT doc_id,
-                     cast(md5_number_upper('fh:' || term) % 1024 AS bigint) AS idx,
-                     cast(md5_number_upper('fhs:' || term) % 2 AS bigint) * 2 - 1 AS sign
-              FROM toks
-            )
-            SELECT doc_id, idx, cast(sum(sign) AS bigint) AS weight
-            FROM hashed GROUP BY 1, 2 HAVING sum(sign) <> 0
-        """,
-        "quality_model_score": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_extract_all(lower(text), '[a-z0-9]{2,}')) AS term
-              FROM documents
-            ),
-            hashed AS (
-              SELECT doc_id,
-                     cast(md5_number_upper('fh:' || term) % 1024 AS bigint) AS idx,
-                     cast(md5_number_upper('fhs:' || term) % 2 AS bigint) * 2 - 1 AS sign
-              FROM toks
-            ),
-            feats AS (
-              SELECT doc_id, idx, cast(sum(sign) AS bigint) AS weight
-              FROM hashed GROUP BY 1, 2 HAVING sum(sign) <> 0
-            ),
-            model AS (
-              SELECT i AS idx,
-                     (cast(md5_number_upper('qw:' || i) % 2001 AS bigint) - 1000)
-                       / 1000.0 AS w
-              FROM range(1024) t(i)
-            ),
-            dots AS (
-              SELECT f.doc_id, sum(f.weight * m.w) AS dot
-              FROM feats f JOIN model m USING (idx) GROUP BY 1
-            ),
-            scored AS (
-              SELECT d.doc_id,
-                     round(1.0 / (1.0 + exp(-(coalesce(dot, 0) + 0.0))), 6)
-                       AS score
-              FROM documents d LEFT JOIN dots USING (doc_id)
-            )
-            SELECT doc_id, score, score >= 0.5 AS keep FROM scored
         """,
         "bloom_prefilter": """
             WITH members AS (
@@ -8351,22 +5001,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT est.user_id, cms_count, exact_count
             FROM est JOIN exact USING (user_id)
         """,
-        "text_unigram_logprob": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_extract_all(lower(text), '[a-z0-9]{2,}')) AS term
-              FROM documents
-            ),
-            tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-            cts AS (SELECT term, sum(tf) AS ct FROM tf GROUP BY 1),
-            tot AS (SELECT sum(tf) AS total FROM tf)
-            SELECT tf.doc_id,
-                   cast(sum(tf.tf) AS bigint) AS n_tokens,
-                   round(sum(tf.tf * ln(cts.ct / tot.total)) / sum(tf.tf), 6)
-                     AS avg_logprob
-            FROM tf JOIN cts USING (term) CROSS JOIN tot
-            GROUP BY tf.doc_id
-        """,
         "events_json_props": """
             WITH x AS (
               SELECT event_type,
@@ -8385,106 +5019,6 @@ def oracle_sql() -> dict[str, str]:
                    cast(count(DISTINCT k) AS bigint) AS n_distinct_k
             FROM x
             GROUP BY event_type
-        """,
-        "search_ndcg": """
-            WITH b2 AS (
-              SELECT doc_id,
-                     cast(len(regexp_extract_all(lower(text), '[a-z0-9]{2,}'))
-                       AS bigint) AS dl,
-                     regexp_extract_all(lower(text), '[a-z0-9]{2,}') AS toks
-              FROM documents
-            ),
-            consts AS (
-              SELECT cast(count(*) AS bigint) AS n,
-                     cast(sum(dl) AS bigint) AS tdl
-              FROM b2
-            ),
-            tf AS (
-              SELECT doc_id, dl, term, cast(count(*) AS bigint) AS tf
-              FROM (
-                SELECT doc_id, dl,
-                       unnest(list_filter(toks,
-                         t -> list_contains(['merge', 'stream', 'vector'], t)))
-                         AS term
-                FROM b2
-              ) GROUP BY 1, 2, 3
-            ),
-            dfr AS (SELECT term, cast(count(*) AS bigint) AS df
-                    FROM tf GROUP BY term),
-            contrib AS (
-              SELECT tf.doc_id,
-                     ln(1.0 + (n - df + 0.5) / (df + 0.5))
-                       * (tf * 2.2)
-                       / (tf + 1.2 * (0.25 + 0.75 * (dl * n) / tdl)) AS c
-              FROM tf JOIN dfr USING (term) CROSS JOIN consts
-            ),
-            scored AS (
-              SELECT doc_id, round(sum(c), 6) AS score
-              FROM contrib GROUP BY doc_id
-            ),
-            ranked AS (
-              SELECT doc_id, rk FROM (
-                SELECT doc_id, row_number() OVER (
-                  ORDER BY score DESC, doc_id ASC
-                ) AS rk FROM scored
-              ) WHERE rk <= 10
-            ),
-            rel AS (
-              SELECT doc_id,
-                     (CASE WHEN list_contains(toks, 'merge')
-                           THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(toks, 'stream')
-                             THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(toks, 'vector')
-                             THEN 1 ELSE 0 END) AS rel
-              FROM b2
-            ),
-            dcg AS (
-              SELECT coalesce(sum((pow(2.0, coalesce(rel.rel, 0)) - 1.0)
-                       / log2(cast(rk AS double) + 1.0)), 0.0) AS d
-              FROM ranked LEFT JOIN rel USING (doc_id)
-            ),
-            ideal AS (
-              SELECT rel, row_number() OVER (
-                ORDER BY rel DESC, doc_id ASC
-              ) AS pos
-              FROM rel WHERE rel > 0
-            ),
-            idcg AS (
-              SELECT coalesce(sum((pow(2.0, rel) - 1.0)
-                       / log2(cast(pos AS double) + 1.0)), 0.0) AS i
-              FROM ideal WHERE pos <= 10
-            )
-            SELECT cast(10 AS int) AS k,
-                   round(d, 6) AS dcg,
-                   round(i, 6) AS idcg,
-                   CASE WHEN i > 0 THEN round(d / i, 6) END AS ndcg
-            FROM dcg CROSS JOIN idcg
-        """,
-        "search_rank_eval": _rank_eval_sql,
-        # Flesch reading-ease: vowel-run syllables, [a-z]+ words,
-        # [.!?]+ sentence runs floored at 1; exact integer counts,
-        # round-6 linear combination (see q_text_readability).
-        "text_readability": """
-            WITH c AS (
-              SELECT doc_id,
-                     cast(len(regexp_extract_all(lower(text), '[a-z]+'))
-                       AS bigint) AS n_words,
-                     cast(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-                       AS bigint) AS n_sentences,
-                     cast(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-                       AS bigint) AS n_syllables
-              FROM documents
-            )
-            SELECT doc_id, n_words, n_sentences, n_syllables,
-                   CASE WHEN n_words > 0 THEN
-                     round(206.835
-                           - 1.015 * (cast(n_words AS double)
-                                      / cast(n_sentences AS double))
-                           - 84.6 * (cast(n_syllables AS double)
-                                     / cast(n_words AS double)), 6)
-                   END AS flesch
-            FROM c
         """,
         # Efraimidis-Spirakis weighted sample: md5-bucket u, priority
         # -ln(u)/w round-6, (priority, doc_id) top-50 cut (see
@@ -8711,72 +5245,6 @@ def oracle_sql() -> dict[str, str]:
                    ), 6) AS pct
             FROM events WHERE value IS NOT NULL
         """,
-        # Reciprocal best match: the batch_topk candidate chain on the
-        # %7 subset, self pairs dropped, per-side top-1, reversed-pair
-        # equi-join (see q_similarity_mutual_best).
-        "similarity_mutual_best": """
-            WITH sub AS (
-              SELECT vec_id, embedding FROM embeddings
-              WHERE vec_id % 7 = 0
-                AND sqrt(list_dot_product(cast(embedding AS double[]),
-                                          cast(embedding AS double[]))) > 0
-            ),
-            scored AS (
-              SELECT q.vec_id AS query_id, e.vec_id,
-                     round(list_cosine_similarity(
-                       cast(e.embedding AS double[]),
-                       cast(q.embedding AS double[])), 3) AS cosine
-              FROM sub e CROSS JOIN sub q
-            ),
-            topk AS (
-              SELECT query_id, vec_id, cosine FROM (
-                SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id ASC) AS rn
-                FROM scored
-              ) WHERE rn <= 5
-            ),
-            best AS (
-              SELECT query_id, vec_id, cosine FROM (
-                SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id ASC) AS rn
-                FROM topk WHERE query_id <> vec_id
-              ) WHERE rn = 1
-            )
-            SELECT b1.query_id, b1.vec_id, b1.cosine
-            FROM best b1 JOIN best b2
-              ON b1.query_id = b2.vec_id AND b1.vec_id = b2.query_id
-            WHERE b1.query_id < b1.vec_id
-        """,
-        # Calibration over the synthetic calibrated scorer: identical
-        # fixed-point bin/Brier chain (see q_eval_calibration).
-        "eval_calibration": """
-            WITH s AS (
-              SELECT md5_number_upper('cal_p:' || cast(doc_id AS varchar))
-                       % 1000000 AS ba,
-                     md5_number_upper('cal_y:' || cast(doc_id AS varchar))
-                       % 1000000 AS bb
-              FROM documents
-            ),
-            r AS (
-              SELECT cast(round((cast(ba AS double) / 1000000.0) * 1000000)
-                       AS bigint) AS m,
-                     CASE WHEN bb < ba THEN 1 ELSE 0 END AS y
-              FROM s
-            ),
-            b AS (
-              SELECT least(m // 100000, 9) AS bin, m, y,
-                     (m - y * 1000000) AS e
-              FROM r
-            )
-            SELECT cast(bin AS int) AS bin,
-                   cast(count(*) AS bigint) AS n,
-                   round(sum(m) / (count(*) * 1e6), 6) AS mean_pred,
-                   round(cast(sum(y) AS double)
-                         / cast(count(*) AS double), 6) AS frac_pos,
-                   round(cast(sum(e * e) AS double)
-                         / (cast(count(*) AS double) * 1e12), 6) AS brier
-            FROM b GROUP BY bin
-        """,
         # Degree histogram over the gadgets is analytic (see
         # q_graph_degree_hist).
         "graph_degree_hist": """
@@ -8825,61 +5293,6 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(cc_over_p) / sum(c) - sum(c), 6) AS chi2
             FROM terms GROUP BY 1
         """,
-        "jaccard_prefix_join": """
-            -- independent brute-force oracle: ALL pairs sharing any
-            -- token, exact integer threshold 10*inter >= 9*union.
-            -- The Spark side runs the prefix-filter algorithm; the
-            -- no-false-negative theorem makes the outputs identical.
-            WITH toks AS (
-              SELECT DISTINCT doc_id,
-                     unnest(regexp_extract_all(lower(text),
-                                               '[a-z0-9]{2,}')) AS term
-              FROM documents
-            ),
-            sz AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY 1),
-            inter AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     count(*) AS n_inter
-              FROM toks a
-              JOIN toks b ON a.term = b.term AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            )
-            SELECT id_a, id_b,
-                   cast(n_inter AS bigint) AS n_inter,
-                   cast(sa.n + sb.n - n_inter AS bigint) AS n_union,
-                   round(n_inter / (sa.n + sb.n - n_inter), 6) AS jaccard
-            FROM inter
-            JOIN sz sa ON sa.doc_id = id_a
-            JOIN sz sb ON sb.doc_id = id_b
-            WHERE 10 * n_inter >= 9 * (sa.n + sb.n - n_inter)
-        """,
-        "dedup_bow": """
-            WITH twins AS (
-              SELECT doc_id + 1000000000000 AS doc_id,
-                     array_to_string(
-                       list_reverse(regexp_extract_all(lower(text),
-                                                       '[a-z0-9]{2,}')),
-                       ' ') AS text
-              FROM documents WHERE doc_id % 20 = 0
-            ),
-            all_docs AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL SELECT doc_id, text FROM twins
-            ),
-            h AS (
-              SELECT doc_id,
-                     md5(array_to_string(
-                           list_sort(regexp_extract_all(lower(text),
-                                                        '[a-z0-9]{2,}')),
-                           ' ')) AS bow_hash,
-                     len(regexp_extract_all(lower(text),
-                                            '[a-z0-9]{2,}')) AS nt
-              FROM all_docs
-            )
-            SELECT bow_hash, count(*) AS n_copies, min(doc_id) AS keep_id
-            FROM h WHERE nt > 0
-            GROUP BY 1 HAVING count(*) > 1
-        """,
         "curriculum_order": """
             WITH sc AS (
               SELECT doc_id AS key,
@@ -8922,75 +5335,6 @@ def oracle_sql() -> dict[str, str]:
                                 THEN 1 ELSE 0 END)
                      AS integer) AS bucket
             FROM sc CROSS JOIN b
-        """,
-        "text_bigram_logprob": """
-            WITH tk AS (
-              SELECT doc_id,
-                     regexp_extract_all(lower(text), '[a-z0-9]{2,}') AS toks
-              FROM documents
-            ),
-            bg AS (
-              SELECT doc_id,
-                     unnest(list_transform(range(2, len(toks) + 1),
-                            i -> toks[i - 1] || ' ' || toks[i])) AS bg
-              FROM tk WHERE len(toks) >= 2
-            ),
-            tf AS (SELECT doc_id, bg, count(*) AS tf FROM bg GROUP BY 1, 2),
-            cts AS (SELECT bg, sum(tf) AS ct FROM tf GROUP BY 1),
-            ctx AS (
-              SELECT split_part(bg, ' ', 1) AS w1, sum(ct) AS ctx
-              FROM cts GROUP BY 1
-            )
-            SELECT tf.doc_id,
-                   cast(sum(tf.tf) AS bigint) AS n_bigrams,
-                   round(sum(tf.tf * ln(cts.ct / ctx.ctx)) / sum(tf.tf), 6)
-                     AS avg_logprob2
-            FROM tf
-            JOIN cts USING (bg)
-            JOIN ctx ON split_part(tf.bg, ' ', 1) = ctx.w1
-            GROUP BY tf.doc_id
-        """,
-        "source_datasheet": """
-            WITH base AS (
-              SELECT source,
-                     cast(count(*) AS bigint) AS n_docs,
-                     cast(count(DISTINCT md5(text)) AS bigint)
-                       AS n_distinct_texts,
-                     cast(count(DISTINCT lang) AS bigint) AS n_langs
-              FROM documents GROUP BY 1
-            ),
-            vb AS (
-              SELECT source, cast(count(DISTINCT t) AS bigint) AS vocab_size
-              FROM (
-                SELECT source,
-                       unnest(regexp_extract_all(lower(text),
-                                                 '[a-z0-9]{2,}')) AS t
-                FROM documents
-              )
-              GROUP BY 1
-            )
-            SELECT base.source, base.n_docs, base.n_distinct_texts,
-                   round(1.0 - base.n_distinct_texts / base.n_docs, 6)
-                     AS dup_rate,
-                   base.n_langs,
-                   coalesce(vb.vocab_size, 0) AS vocab_size
-            FROM base LEFT JOIN vb USING (source)
-        """,
-        "dsir_weights": _dsir_weights_sql(512)
-        + """
-            SELECT doc_id, n_feats, log_weight FROM w
-        """,
-        "dsir_resample": _dsir_weights_sql(512)
-        + """
-            SELECT doc_id, n_feats, log_weight,
-                   round(log_weight
-                         - ln(-ln((md5_number_upper('gumbel:'
-                                     || cast(doc_id AS varchar)) % 1000000
-                                   + 0.5) / 1000000.0)),
-                         6) AS gumbel_key
-            FROM w
-            ORDER BY gumbel_key DESC, doc_id
-            LIMIT 100
         """,
         "graph_scc": """
             WITH RECURSIVE ks AS (
@@ -9048,50 +5392,6 @@ def oracle_sql() -> dict[str, str]:
         "graph_louvain": _louvain_oracle_sql(4),
         "graph_louvain_weighted": _louvain_oracle_sql(4, weighted=True),
         "graph_modularity": _modularity_oracle_sql(4),
-        "similarity_sq_topk": """
-            WITH p AS (
-              SELECT vec_id, cast(embedding AS double[]) AS v FROM embeddings
-            ),
-            nz AS (
-              SELECT vec_id, v FROM p
-              WHERE sqrt(list_sum(list_transform(v, x -> x * x))) > 0
-            ),
-            s AS (
-              SELECT max(list_max(list_transform(v, x -> abs(x)))) AS s
-              FROM nz
-            ),
-            rr AS (SELECT cast(127.0 AS double) / s AS r FROM s),
-            q AS (
-              SELECT cast(embedding AS double[]) AS qv
-              FROM embeddings WHERE vec_id = 0
-            ),
-            qq AS (
-              SELECT list_transform(
-                       qv,
-                       x -> greatest(-127.0, least(127.0,
-                              floor(x * rr.r + 0.5)))) AS qq
-              FROM q CROSS JOIN rr
-            ),
-            scored AS (
-              SELECT vec_id, v,
-                     list_inner_product(
-                       list_transform(
-                         v,
-                         x -> greatest(-127.0, least(127.0,
-                                floor(x * rr.r + 0.5)))),
-                       qq.qq) AS aq
-              FROM nz CROSS JOIN rr CROSS JOIN qq
-            ),
-            cand AS (
-              SELECT vec_id, v FROM scored ORDER BY aq DESC, vec_id LIMIT 40
-            )
-            SELECT vec_id,
-                   round(list_cosine_similarity(v, (SELECT qv FROM q)), 3)
-                     AS cosine
-            FROM cand
-            ORDER BY cosine DESC, vec_id
-            LIMIT 10
-        """,
         "events_anomaly": """
             WITH s AS (
               SELECT event_type, avg(value) AS mu,
@@ -9144,695 +5444,6 @@ def oracle_sql() -> dict[str, str]:
                             THEN v END) AS p99
             FROM r GROUP BY event_type
         """,
-        "embeddings_kmeans": _kmeans_oracle_sql(),
-        "semantic_dedup": _semantic_dedup_oracle_sql(),
-        "transcript_stats": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            g AS (
-              SELECT conv_id, turn_idx, role, tool,
-                     length(text) AS chars, epoch,
-                     epoch - lag(epoch) OVER (PARTITION BY conv_id
-                                              ORDER BY turn_idx) AS gap
-              FROM tr
-            )
-            SELECT conv_id,
-                   count(*) AS n_turns,
-                   count(*) FILTER (WHERE role = 'user') AS n_user,
-                   count(*) FILTER (WHERE role = 'assistant') AS n_assistant,
-                   count(*) FILTER (WHERE role = 'tool') AS n_tool,
-                   count(DISTINCT tool) AS n_distinct_tools,
-                   cast(sum(chars) AS bigint) AS total_chars,
-                   max(epoch) - min(epoch) AS duration_s,
-                   round(avg(gap), 3) AS mean_gap_s,
-                   arg_max(role, turn_idx) AS final_role
-            FROM g GROUP BY conv_id
-        """,
-        "conv_dedup_exact": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            corpus AS (
-              SELECT conv_id, turn_idx, role, text FROM tr
-              UNION ALL
-              SELECT conv_id || '_dup', turn_idx, role, text
-              FROM tr WHERE cast(conv_id AS bigint) % 13 = 0
-              UNION ALL
-              SELECT conv_id || '_near', turn_idx, role,
-                     CASE WHEN turn_idx = 1 THEN 'RETRY ' || text
-                          ELSE text END
-              FROM tr WHERE cast(conv_id AS bigint) % 17 = 0
-            ),
-            fp AS (
-              SELECT conv_id, count(*) AS n_turns,
-                     md5(string_agg(coalesce(role, '') || chr(31)
-                                    || coalesce(text, ''),
-                                    chr(30) ORDER BY turn_idx))
-                       AS fingerprint
-              FROM corpus GROUP BY conv_id
-            ),
-            canon AS (
-              SELECT fingerprint, min(conv_id) AS canonical_conv_id
-              FROM fp GROUP BY 1
-            )
-            SELECT conv_id, n_turns, fingerprint, canonical_conv_id,
-                   conv_id <> canonical_conv_id AS is_dup
-            FROM fp JOIN canon USING (fingerprint)
-        """,
-        "conv_near_dup": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            corpus AS (
-              SELECT conv_id, turn_idx, role, text FROM tr
-              UNION ALL
-              SELECT conv_id || '_dup', turn_idx, role, text
-              FROM tr WHERE cast(conv_id AS bigint) % 13 = 0
-              UNION ALL
-              SELECT conv_id || '_near', turn_idx, role,
-                     CASE WHEN turn_idx = 1 THEN 'RETRY ' || text
-                          ELSE text END
-              FROM tr WHERE cast(conv_id AS bigint) % 17 = 0
-            ),
-            th AS (
-              SELECT DISTINCT conv_id,
-                     md5(coalesce(role, '') || chr(31)
-                         || coalesce(text, '')) AS th
-              FROM corpus
-            ),
-            sz AS (SELECT conv_id, count(*) AS n FROM th GROUP BY 1),
-            co AS (
-              SELECT a.conv_id AS conv_a, b.conv_id AS conv_b,
-                     count(*) AS n_common
-              FROM th a JOIN th b ON a.th = b.th AND a.conv_id < b.conv_id
-              GROUP BY 1, 2
-            )
-            SELECT conv_a, conv_b, n_common, sa.n AS n_a, sb.n AS n_b,
-                   round(cast(n_common AS double)
-                         / (sa.n + sb.n - n_common), 6) AS jaccard
-            FROM co JOIN sz sa ON sa.conv_id = co.conv_a
-                    JOIN sz sb ON sb.conv_id = co.conv_b
-            WHERE cast(n_common AS double) / (sa.n + sb.n - n_common) >= 0.6
-        """,
-        "sft_pairs": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            g AS (
-              SELECT conv_id, turn_idx AS prompt_turn_idx, role,
-                     text AS prompt,
-                     lead(role) OVER w AS next_role,
-                     lead(text) OVER w AS response
-              FROM tr
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            )
-            SELECT conv_id, prompt_turn_idx, prompt, response,
-                   coalesce(length(prompt), 0) AS n_prompt_chars,
-                   coalesce(length(response), 0) AS n_response_chars
-            FROM g
-            WHERE role = 'user' AND next_role = 'assistant'
-              AND coalesce(length(prompt), 0) >= 1
-              AND coalesce(length(response), 0) >= 1
-        """,
-        "validate_traces": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            g AS (
-              SELECT conv_id, turn_idx, role, text,
-                     lag(role) OVER (PARTITION BY conv_id
-                                     ORDER BY turn_idx) AS prev_role
-              FROM tr
-            ),
-            checks AS (
-              SELECT conv_id,
-                     count(*) AS n_turns,
-                     arg_min(role, turn_idx) = 'user' AS starts_with_user,
-                     arg_max(role, turn_idx) = 'assistant'
-                       AS ends_with_assistant,
-                     count(*) FILTER (WHERE role = prev_role) = 0
-                       AS no_repeated_role,
-                     count(*) FILTER (WHERE role = 'tool'
-                                        AND (prev_role IS NULL
-                                             OR prev_role <> 'assistant'))
-                       = 0 AS tool_after_assistant,
-                     (min(turn_idx) = 1 AND max(turn_idx) = count(*)
-                      AND count(DISTINCT turn_idx) = count(*))
-                       AS dense_turn_idx,
-                     count(*) FILTER (WHERE text IS NULL
-                                        OR length(text) = 0) = 0
-                       AS no_empty_text
-              FROM g GROUP BY conv_id
-            )
-            SELECT conv_id, n_turns, starts_with_user, ends_with_assistant,
-                   no_repeated_role, tool_after_assistant, dense_turn_idx,
-                   no_empty_text,
-                   (starts_with_user AND ends_with_assistant
-                    AND no_repeated_role AND tool_after_assistant
-                    AND dense_turn_idx AND no_empty_text) AS is_valid
-            FROM checks
-        """,
-        # Role-handoff latency: epoch-integer gaps over the turn order,
-        # integer sums/max, one round-6 mean (see q_transcript_latency).
-        "transcript_latency": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            t AS (
-              SELECT lag(role) OVER w AS from_role,
-                     role AS to_role,
-                     epoch - lag(epoch) OVER w AS gap
-              FROM tr
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            )
-            SELECT from_role, to_role,
-                   cast(count(*) AS bigint) AS n,
-                   round(sum(gap) / count(*), 6) AS mean_s,
-                   cast(max(gap) AS bigint) AS max_s
-            FROM t WHERE from_role IS NOT NULL AND gap IS NOT NULL
-            GROUP BY from_role, to_role
-        """,
-        # Per-tool profile over the shared synthetic-transcripts CTE:
-        # lead-window stall gaps, NULL-safe mean (see
-        # q_transcript_tool_profile).
-        "transcript_tool_profile": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            t AS (
-              SELECT role, tool, conv_id,
-                     lead(epoch) OVER (PARTITION BY conv_id
-                                       ORDER BY turn_idx) - epoch AS gap
-              FROM tr
-            )
-            SELECT tool,
-                   cast(count(*) AS bigint) AS n_calls,
-                   cast(count(DISTINCT conv_id) AS bigint) AS n_convs,
-                   cast(count(gap) AS bigint) AS n_gaps,
-                   CASE WHEN count(gap) > 0
-                        THEN round(sum(gap) / count(gap), 6) END
-                     AS mean_next_gap_s,
-                   cast(max(gap) AS bigint) AS max_next_gap_s
-            FROM t WHERE role = 'tool' AND tool IS NOT NULL
-            GROUP BY tool
-        """,
-        # Composed transcript curation over the planted corpus: each
-        # stage's CTE is the already-oracled operator chain, the CASE
-        # is the fixed rejection precedence (see q_curate_transcripts
-        # / _curate_transcripts_corpus).
-        "curate_transcripts": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            base AS (
-              SELECT conv_id, turn_idx, role,
-                     CASE WHEN cast(conv_id AS bigint) % 19 = 0
-                               AND turn_idx = 2 THEN ''
-                          WHEN cast(conv_id AS bigint) % 11 = 0
-                               AND turn_idx BETWEEN 3 AND 5
-                          THEN 'retrying tool call'
-                          ELSE text END AS text
-              FROM tr
-            ),
-            corpus AS (
-              SELECT conv_id, turn_idx, role, text FROM base
-              UNION ALL
-              SELECT conv_id || '_dup', turn_idx, role, text
-              FROM base WHERE cast(conv_id AS bigint) % 13 = 0
-            ),
-            struct_ AS (
-              SELECT conv_id,
-                     cast(count(*) AS bigint) AS n_turns,
-                     cast(sum(coalesce(length(text), 0)) AS bigint)
-                       AS total_chars,
-                     (min(turn_idx) = 1 AND max(turn_idx) = count(*)
-                      AND count(DISTINCT turn_idx) = count(*)
-                      AND count(*) FILTER (WHERE text IS NULL
-                                             OR length(text) = 0) = 0)
-                       AS ok
-              FROM corpus GROUP BY conv_id
-            ),
-            brk AS (
-              SELECT conv_id, turn_idx,
-                     CASE WHEN row_number() OVER w > 1
-                               AND lag(text) OVER w
-                                   IS NOT DISTINCT FROM text
-                          THEN 0 ELSE 1 END AS brk
-              FROM corpus
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            ),
-            runs AS (
-              SELECT conv_id, turn_idx,
-                     sum(brk) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS run
-              FROM brk
-            ),
-            lp AS (
-              SELECT conv_id, max(pos) >= 3 AS is_looping FROM (
-                SELECT conv_id,
-                       row_number() OVER (PARTITION BY conv_id, run
-                                          ORDER BY turn_idx) AS pos
-                FROM runs
-              ) GROUP BY conv_id
-            ),
-            reaching AS (
-              SELECT s.conv_id FROM struct_ s JOIN lp USING (conv_id)
-              WHERE s.ok AND NOT lp.is_looping
-            ),
-            fp AS (
-              SELECT conv_id,
-                     md5(string_agg(coalesce(role, '') || chr(31)
-                                    || coalesce(text, ''),
-                                    chr(30) ORDER BY turn_idx))
-                       AS fingerprint
-              FROM corpus
-              WHERE conv_id IN (SELECT conv_id FROM reaching)
-              GROUP BY conv_id
-            ),
-            canon AS (
-              SELECT fingerprint, min(conv_id) AS canonical_conv_id
-              FROM fp GROUP BY 1
-            ),
-            dd AS (
-              SELECT conv_id, conv_id <> canonical_conv_id AS is_dup
-              FROM fp JOIN canon USING (fingerprint)
-            )
-            SELECT conv_id, n_turns, total_chars, reason,
-                   reason IS NULL AS accepted
-            FROM (
-              SELECT s.conv_id, s.n_turns, s.total_chars,
-                     CASE WHEN NOT s.ok THEN 'invalid'
-                          WHEN lp.is_looping THEN 'looping'
-                          WHEN dd.is_dup THEN 'exact_dup'
-                          WHEN s.total_chars > 200 THEN 'over_budget'
-                          END AS reason
-              FROM struct_ s
-              JOIN lp USING (conv_id)
-              LEFT JOIN dd USING (conv_id)
-            )
-        """,
-        # Incremental transcript curation replayed in SQL: both
-        # batches' verdict pipelines share the per-(batch, conv_id)
-        # stage CTEs; batch 2's known-fingerprint set is exactly what
-        # the increment persists — batch 1's dedup-REACHING distinct
-        # fingerprints (over_budget included, invalid/looping not; see
-        # curate_transcripts_increment docstring) — and within-batch
-        # dedup is the min-conv_id canonical (see
-        # q_curate_transcripts_increment).
-        "curate_transcripts_increment": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            b1 AS (
-              SELECT conv_id, turn_idx, role,
-                     CASE WHEN cast(conv_id AS bigint) % 19 = 0
-                               AND turn_idx = 2 THEN ''
-                          WHEN cast(conv_id AS bigint) % 11 = 0
-                               AND turn_idx BETWEEN 3 AND 5
-                          THEN 'retrying tool call'
-                          ELSE text END AS text
-              FROM tr
-            ),
-            corpus AS (
-              SELECT cast(1 AS int) AS batch, conv_id, turn_idx, role,
-                     text
-              FROM b1
-              UNION ALL
-              SELECT 2, 'z' || conv_id || 'r', turn_idx, role, text
-              FROM b1 WHERE cast(conv_id AS bigint) % 13 = 0
-              UNION ALL
-              SELECT 2, 'z' || conv_id || 'r2', turn_idx, role, text
-              FROM b1 WHERE cast(conv_id AS bigint) % 26 = 0
-              UNION ALL
-              SELECT 2, f.conv_id, cast(t.i AS int),
-                     CASE WHEN t.i = 1 THEN 'user'
-                          ELSE 'assistant' END,
-                     'fresh ' || f.conv_id || ' '
-                       || cast(t.i AS varchar)
-              FROM (SELECT DISTINCT 'z' || conv_id || 'f' AS conv_id
-                    FROM b1 WHERE cast(conv_id AS bigint) % 7 = 0) f,
-                   UNNEST([1, 2]) AS t(i)
-            ),
-            struct_ AS (
-              SELECT batch, conv_id,
-                     cast(sum(coalesce(length(text), 0)) AS bigint)
-                       AS total_chars,
-                     (min(turn_idx) = 1 AND max(turn_idx) = count(*)
-                      AND count(DISTINCT turn_idx) = count(*)
-                      AND count(*) FILTER (WHERE text IS NULL
-                                             OR length(text) = 0) = 0)
-                       AS ok
-              FROM corpus GROUP BY batch, conv_id
-            ),
-            brk AS (
-              SELECT batch, conv_id, turn_idx,
-                     CASE WHEN row_number() OVER w > 1
-                               AND lag(text) OVER w
-                                   IS NOT DISTINCT FROM text
-                          THEN 0 ELSE 1 END AS brk
-              FROM corpus
-              WINDOW w AS (PARTITION BY batch, conv_id ORDER BY turn_idx)
-            ),
-            runs AS (
-              SELECT batch, conv_id, turn_idx,
-                     sum(brk) OVER (PARTITION BY batch, conv_id
-                                    ORDER BY turn_idx) AS run
-              FROM brk
-            ),
-            lp AS (
-              SELECT batch, conv_id, max(pos) >= 3 AS is_looping FROM (
-                SELECT batch, conv_id,
-                       row_number() OVER (PARTITION BY batch, conv_id,
-                                          run ORDER BY turn_idx) AS pos
-                FROM runs
-              ) GROUP BY batch, conv_id
-            ),
-            reaching AS (
-              SELECT s.batch, s.conv_id
-              FROM struct_ s JOIN lp USING (batch, conv_id)
-              WHERE s.ok AND NOT lp.is_looping
-            ),
-            fp AS (
-              SELECT c.batch, c.conv_id,
-                     md5(string_agg(coalesce(c.role, '') || chr(31)
-                                    || coalesce(c.text, ''),
-                                    chr(30) ORDER BY c.turn_idx))
-                       AS fingerprint
-              FROM corpus c JOIN reaching USING (batch, conv_id)
-              GROUP BY c.batch, c.conv_id
-            ),
-            known AS (
-              SELECT DISTINCT fingerprint FROM fp WHERE batch = 1
-            ),
-            canon AS (
-              SELECT batch, fingerprint, min(conv_id) AS canon
-              FROM fp GROUP BY 1, 2
-            ),
-            dd AS (
-              SELECT f.batch, f.conv_id,
-                     (f.conv_id <> c.canon
-                      OR (f.batch = 2 AND f.fingerprint IN
-                            (SELECT fingerprint FROM known)))
-                       AS is_dup
-              FROM fp f JOIN canon c USING (batch, fingerprint)
-            )
-            SELECT batch, conv_id,
-                   coalesce(reason, 'accepted') AS status
-            FROM (
-              SELECT s.batch, s.conv_id,
-                     CASE WHEN NOT s.ok THEN 'invalid'
-                          WHEN lp.is_looping THEN 'looping'
-                          WHEN dd.is_dup THEN 'exact_dup'
-                          WHEN s.total_chars > 200 THEN 'over_budget'
-                          END AS reason
-              FROM struct_ s
-              JOIN lp USING (batch, conv_id)
-              LEFT JOIN dd USING (batch, conv_id)
-            )
-        """,
-        # MMR diversity re-ranking: pool CTE (exact cosine top-50) +
-        # four unrolled greedy argmax steps; every score is
-        # 0.3·cos − (1.0 − 0.3)·max-cos-to-selected with the SAME
-        # literals the operator computes, and every cosine on the
-        # Pythagorean corpus is one correctly-rounded division of
-        # exact integers (see q_similarity_mmr / _mmr_vectors).
-        "similarity_mmr": """
-            WITH v AS (
-              SELECT o_orderkey AS vec_id,
-                     [cast(o_orderkey % 3 + 1 AS double)
-                        * (CASE o_orderkey % 4 WHEN 0 THEN 1.0
-                                WHEN 1 THEN 4.0 WHEN 2 THEN 3.0
-                                ELSE 0.0 END),
-                      cast(o_orderkey % 3 + 1 AS double)
-                        * (CASE o_orderkey % 4 WHEN 0 THEN 0.0
-                                WHEN 1 THEN 3.0 WHEN 2 THEN 4.0
-                                ELSE 1.0 END),
-                      0.0, 0.0, 0.0, 0.0, 0.0, 0.0] AS emb
-              FROM orders WHERE o_orderkey % 199 = 0
-            ),
-            pool AS (
-              SELECT vec_id, emb,
-                     list_cosine_similarity(emb,
-                       [1.0,0.0,0.0,0.0,0.0,0.0,0.0,0.0]) AS cos
-              FROM v
-              ORDER BY cos DESC, vec_id LIMIT 50
-            ),
-            s1 AS (SELECT vec_id, cos, 0.3 * cos AS score FROM pool
-                   ORDER BY 0.3 * cos DESC, vec_id LIMIT 1),
-            m2 AS (
-              SELECT p.vec_id, p.cos,
-                     0.3 * p.cos - (1.0 - 0.3)
-                       * max(list_cosine_similarity(p.emb, s.emb))
-                       AS score
-              FROM pool p, pool s
-              WHERE s.vec_id IN (SELECT vec_id FROM s1)
-                AND p.vec_id NOT IN (SELECT vec_id FROM s1)
-              GROUP BY p.vec_id, p.cos
-            ),
-            s2 AS (SELECT vec_id, cos, score FROM m2
-                   ORDER BY score DESC, vec_id LIMIT 1),
-            m3 AS (
-              SELECT p.vec_id, p.cos,
-                     0.3 * p.cos - (1.0 - 0.3)
-                       * max(list_cosine_similarity(p.emb, s.emb))
-                       AS score
-              FROM pool p, pool s
-              WHERE s.vec_id IN (SELECT vec_id FROM s1
-                                 UNION ALL SELECT vec_id FROM s2)
-                AND p.vec_id NOT IN (SELECT vec_id FROM s1
-                                     UNION ALL SELECT vec_id FROM s2)
-              GROUP BY p.vec_id, p.cos
-            ),
-            s3 AS (SELECT vec_id, cos, score FROM m3
-                   ORDER BY score DESC, vec_id LIMIT 1),
-            m4 AS (
-              SELECT p.vec_id, p.cos,
-                     0.3 * p.cos - (1.0 - 0.3)
-                       * max(list_cosine_similarity(p.emb, s.emb))
-                       AS score
-              FROM pool p, pool s
-              WHERE s.vec_id IN (SELECT vec_id FROM s1
-                                 UNION ALL SELECT vec_id FROM s2
-                                 UNION ALL SELECT vec_id FROM s3)
-                AND p.vec_id NOT IN (SELECT vec_id FROM s1
-                                     UNION ALL SELECT vec_id FROM s2
-                                     UNION ALL SELECT vec_id FROM s3)
-              GROUP BY p.vec_id, p.cos
-            ),
-            s4 AS (SELECT vec_id, cos, score FROM m4
-                   ORDER BY score DESC, vec_id LIMIT 1)
-            SELECT cast(1 AS int) AS rank, vec_id,
-                   round(cos, 6) AS cosine, round(score, 6) AS mmr_score
-            FROM s1
-            UNION ALL SELECT 2, vec_id, round(cos, 6), round(score, 6)
-            FROM s2
-            UNION ALL SELECT 3, vec_id, round(cos, 6), round(score, 6)
-            FROM s3
-            UNION ALL SELECT 4, vec_id, round(cos, 6), round(score, 6)
-            FROM s4
-        """,
-        # Per-source tokenizer fertility: exact bigint sums of chars and
-        # BPE-regex tokens, two round-6 divisions (see
-        # q_corpus_fertility).
-        "corpus_fertility": rf"""
-            SELECT source AS "group",
-                   cast(count(*) AS bigint) AS n_docs,
-                   cast(sum(coalesce(length(text), 0)) AS bigint)
-                     AS total_chars,
-                   cast(sum(len(regexp_extract_all(
-                     text, '{BPE_TOKEN_REGEX}'))) AS bigint)
-                     AS total_tokens,
-                   CASE WHEN sum(len(regexp_extract_all(
-                              text, '{BPE_TOKEN_REGEX}'))) > 0
-                        THEN round(sum(coalesce(length(text), 0))
-                                   / sum(len(regexp_extract_all(
-                                       text, '{BPE_TOKEN_REGEX}'))), 6)
-                   END AS chars_per_token,
-                   CASE WHEN count(*) > 0
-                        THEN round(sum(len(regexp_extract_all(
-                               text, '{BPE_TOKEN_REGEX}')))
-                             / count(*), 6)
-                   END AS tokens_per_doc
-            FROM documents GROUP BY source
-        """,
-        # Exact-dup family-size histogram over the replay-planted
-        # corpus: md5 content classes → family sizes → histogram,
-        # integer-only (see q_dedup_family_sizes).
-        "dedup_family_sizes": """
-            WITH corpus AS (
-              SELECT text FROM documents
-              UNION ALL SELECT text FROM documents WHERE doc_id % 7 = 0
-              UNION ALL SELECT text FROM documents WHERE doc_id % 7 = 0
-              UNION ALL SELECT text FROM documents WHERE doc_id % 13 = 0
-            ),
-            fam AS (
-              SELECT md5(coalesce(text, '')) AS h,
-                     cast(count(*) AS bigint) AS family_size
-              FROM corpus GROUP BY 1
-            )
-            SELECT family_size,
-                   cast(count(*) AS bigint) AS n_families,
-                   cast(family_size * count(*) AS bigint) AS n_docs
-            FROM fam GROUP BY family_size
-        """,
-        # C4-style line dedup over the planted boilerplate corpus:
-        # window count + first-occurrence rank over the identical line
-        # stream (Spark groups by md5(line) — same equality classes),
-        # string_agg rejoin in line order (see q_line_dedup).
-        "line_dedup": """
-            WITH d AS (
-              SELECT doc_id,
-                     concat_ws(chr(10),
-                       CASE WHEN doc_id % 3 = 0
-                            THEN '=== boilerplate header ===' END,
-                       text,
-                       CASE WHEN doc_id % 5 = 0 THEN text END,
-                       CASE WHEN doc_id % 4 = 0
-                            THEN '-- generated footer --' END) AS text
-              FROM documents
-            ),
-            lines AS (
-              SELECT doc_id, i - 1 AS line_idx, parts[i] AS line
-              FROM (SELECT doc_id,
-                           string_split(coalesce(text, ''), chr(10))
-                             AS parts
-                    FROM d),
-                   UNNEST(generate_series(1, len(parts))) AS t(i)
-            ),
-            flagged AS (
-              SELECT doc_id, line_idx, line,
-                     count(*) OVER (PARTITION BY line) AS cnt,
-                     row_number() OVER (PARTITION BY line
-                                        ORDER BY doc_id, line_idx) AS rn
-              FROM lines
-            )
-            SELECT d.doc_id,
-                   coalesce(k.text, '') AS text,
-                   f.n_lines, f.n_removed
-            FROM d
-            JOIN (SELECT doc_id,
-                         cast(count(*) AS bigint) AS n_lines,
-                         cast(count(*) FILTER (WHERE cnt >= 2 AND rn > 1)
-                              AS bigint) AS n_removed
-                  FROM flagged GROUP BY doc_id) f USING (doc_id)
-            LEFT JOIN (SELECT doc_id,
-                              string_agg(line, chr(10)
-                                         ORDER BY line_idx) AS text
-                       FROM flagged
-                       WHERE cnt < 2 OR rn = 1
-                       GROUP BY doc_id) k USING (doc_id)
-        """,
-        # Terminal-state triage over the failure-planted transcripts:
-        # the loop CTE is transcript_loops' (min_run=3), last-turn and
-        # last-tool-turn signals via arg_max, fixed precedence CASE
-        # (see q_transcript_outcomes).
-        "transcript_outcomes": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            c AS (
-              SELECT conv_id, turn_idx, role,
-                     CASE WHEN cast(conv_id AS bigint) % 11 = 0
-                               AND turn_idx BETWEEN 3 AND 5
-                          THEN 'retrying tool call'
-                          WHEN cast(conv_id AS bigint) % 7 = 0
-                               AND role = 'tool'
-                          THEN 'Traceback: tool exploded'
-                          ELSE text END AS text
-              FROM tr
-            ),
-            f AS (
-              SELECT conv_id, turn_idx,
-                     CASE WHEN row_number() OVER w > 1
-                               AND lag(text) OVER w
-                                   IS NOT DISTINCT FROM text
-                          THEN 0 ELSE 1 END AS brk
-              FROM c
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            ),
-            runs AS (
-              SELECT conv_id, turn_idx,
-                     sum(brk) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS run
-              FROM f
-            ),
-            lp AS (
-              SELECT conv_id, max(pos) >= 3 AS is_looping FROM (
-                SELECT conv_id,
-                       row_number() OVER (PARTITION BY conv_id, run
-                                          ORDER BY turn_idx) AS pos
-                FROM runs
-              ) GROUP BY conv_id
-            ),
-            last AS (
-              SELECT conv_id, cast(count(*) AS bigint) AS n_turns,
-                     arg_max(role, turn_idx) AS last_role
-              FROM c GROUP BY conv_id
-            ),
-            te AS (
-              SELECT conv_id,
-                     coalesce(regexp_matches(
-                       arg_max(text, turn_idx),
-                       'error|exception|traceback|failed', 'i'),
-                       FALSE) AS terr
-              FROM c WHERE role = 'tool' GROUP BY conv_id
-            )
-            SELECT conv_id, n_turns, last_role,
-                   CASE WHEN lp.is_looping THEN 'looping'
-                        WHEN coalesce(te.terr, FALSE) THEN 'tool_failure'
-                        WHEN last_role = 'user' THEN 'abandoned'
-                        ELSE 'completed' END AS outcome
-            FROM last
-            JOIN lp USING (conv_id)
-            LEFT JOIN te USING (conv_id)
-        """,
-        # DPO preference pairs over the shared-prompt preference
-        # corpus: sft adjacency pairs + transcript_outcomes CTE chain,
-        # per-prompt rank windows (length DESC for chosen, severity
-        # ASC for rejected, identical tie-breaks), inner join keeps
-        # prompts with both sides (see q_dpo_pairs).
-        "dpo_pairs": f"""
-            {_PREF_PAIRS_OUTCOMES_SQL},
-            ch AS (
-              SELECT prompt, response AS chosen,
-                     conv_id AS chosen_conv_id,
-                     prompt_turn_idx AS chosen_turn_idx,
-                     row_number() OVER (
-                       PARTITION BY prompt
-                       ORDER BY length(response) DESC,
-                                conv_id ASC, prompt_turn_idx ASC
-                     ) AS rn,
-                     cast(count(*) OVER (PARTITION BY prompt) AS bigint)
-                       AS n_chosen
-              FROM lab WHERE outcome = 'completed'
-            ),
-            rj AS (
-              SELECT prompt, response AS rejected,
-                     conv_id AS rejected_conv_id,
-                     prompt_turn_idx AS rejected_turn_idx,
-                     outcome AS rejected_outcome,
-                     row_number() OVER (
-                       PARTITION BY prompt
-                       ORDER BY CASE outcome
-                                  WHEN 'looping' THEN 0
-                                  WHEN 'tool_failure' THEN 1
-                                  ELSE 2 END ASC,
-                                conv_id ASC, prompt_turn_idx ASC
-                     ) AS rn,
-                     cast(count(*) OVER (PARTITION BY prompt) AS bigint)
-                       AS n_rejected
-              FROM lab WHERE outcome <> 'completed'
-            )
-            SELECT prompt, chosen, rejected, chosen_conv_id,
-                   chosen_turn_idx, rejected_conv_id, rejected_turn_idx,
-                   rejected_outcome, n_chosen, n_rejected
-            FROM ch JOIN rj USING (prompt)
-            WHERE ch.rn = 1 AND rj.rn = 1
-        """,
-        # Best-of-n rejection sampling over the same corpus's SFT
-        # pairs, scored by response length: per-prompt rank window
-        # (score DESC, conv/turn ASC), rn=1 winner + group size
-        # (see q_best_of_n_pairs).
-        "best_of_n_pairs": f"""
-            {_PREF_PAIRS_OUTCOMES_SQL},
-            ranked AS (
-              SELECT prompt, response,
-                     cast(length(response) AS int) AS n_response_chars,
-                     conv_id, prompt_turn_idx,
-                     row_number() OVER (
-                       PARTITION BY prompt
-                       ORDER BY length(response) DESC,
-                                conv_id ASC, prompt_turn_idx ASC
-                     ) AS rn,
-                     cast(count(*) OVER (PARTITION BY prompt) AS bigint)
-                       AS n_candidates
-              FROM pairs
-            )
-            SELECT prompt, response, n_response_chars, conv_id,
-                   prompt_turn_idx, n_candidates
-            FROM ranked WHERE rn = 1
-        """,
         # Newman degree assortativity over the 3-clique+pendant gadget
         # union: exact bigint sums over edge-endpoint degrees, the
         # 4M²-scaled integer numerator/denominator, ONE round-6
@@ -9871,172 +5482,6 @@ def oracle_sql() -> dict[str, str]:
                      AS assortativity
             FROM s
         """,
-        # Stuck-agent detection over the loop-planted corpus: NULL-safe
-        # lag-flag run ids, run lengths, min_run=3 (see
-        # q_transcript_loops / _triage_loop_corpus).
-        "transcript_loops": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            c AS (
-              SELECT conv_id, turn_idx,
-                     CASE WHEN cast(conv_id AS bigint) % 11 = 0
-                               AND turn_idx BETWEEN 3 AND 5
-                          THEN 'retrying tool call'
-                          WHEN cast(conv_id AS bigint) % 23 = 0
-                               AND turn_idx BETWEEN 2 AND 3
-                          THEN 'echo'
-                          ELSE text END AS text
-              FROM tr
-            ),
-            f AS (
-              SELECT conv_id, turn_idx,
-                     CASE WHEN row_number() OVER w > 1
-                               AND lag(text) OVER w
-                                   IS NOT DISTINCT FROM text
-                          THEN 0 ELSE 1 END AS brk
-              FROM c
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            ),
-            r AS (
-              SELECT conv_id, brk,
-                     sum(brk) OVER (PARTITION BY conv_id
-                                    ORDER BY turn_idx) AS run
-              FROM f
-            ),
-            runs AS (
-              SELECT conv_id, run, count(*) AS len
-              FROM r GROUP BY conv_id, run
-            ),
-            per_turn AS (
-              SELECT conv_id,
-                     cast(count(*) AS bigint) AS n_turns,
-                     cast(sum(1 - brk) AS bigint) AS n_stuttered_turns
-              FROM r GROUP BY conv_id
-            ),
-            per_conv AS (
-              SELECT conv_id, cast(max(len) AS bigint) AS max_stutter_run
-              FROM runs GROUP BY conv_id
-            )
-            SELECT t.conv_id, n_turns, max_stutter_run, n_stuttered_turns,
-                   max_stutter_run >= 3 AS is_looping
-            FROM per_turn t JOIN per_conv p USING (conv_id)
-        """,
-        # Context-budget profile at 150 chars: inclusive running char
-        # sums, first-over turn, round-6 over-budget share (see
-        # q_transcript_context_growth).
-        "transcript_context_growth": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            c AS (
-              SELECT conv_id, turn_idx,
-                     coalesce(length(text), 0) AS chars,
-                     sum(coalesce(length(text), 0))
-                       OVER (PARTITION BY conv_id ORDER BY turn_idx)
-                       AS cum
-              FROM tr
-            )
-            SELECT conv_id,
-                   cast(count(*) AS bigint) AS n_turns,
-                   cast(sum(chars) AS bigint) AS total_chars,
-                   min(CASE WHEN cum > 150 THEN turn_idx END)
-                     AS first_over_idx,
-                   cast(count(*) FILTER (WHERE cum > 150) AS bigint)
-                     AS n_turns_over,
-                   round(count(*) FILTER (WHERE cum > 150)
-                         / count(*), 6) AS frac_over
-            FROM c GROUP BY conv_id
-        """,
-        # Per-tool failure profile over the error-planted corpus:
-        # case-insensitive regex, round-6 rate, conversation blast
-        # radius (see q_transcript_tool_errors / _triage_error_corpus).
-        "transcript_tool_errors": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            c AS (
-              SELECT conv_id, role, tool,
-                     text || CASE WHEN role = 'tool'
-                                   AND (cast(conv_id AS bigint) + turn_idx)
-                                       % 5 = 0
-                                  THEN ' ERROR: tool failed'
-                                  ELSE '' END AS text
-              FROM tr
-            ),
-            calls AS (
-              SELECT tool, conv_id,
-                     coalesce(regexp_matches(
-                       text, 'error|exception|traceback|failed', 'i'),
-                       FALSE) AS err
-              FROM c WHERE role = 'tool' AND tool IS NOT NULL
-            )
-            SELECT tool,
-                   cast(count(*) AS bigint) AS n_calls,
-                   cast(count(*) FILTER (WHERE err) AS bigint) AS n_errors,
-                   round(count(*) FILTER (WHERE err) / count(*), 6)
-                     AS error_rate,
-                   cast(count(DISTINCT conv_id) AS bigint) AS n_convs,
-                   cast(count(DISTINCT CASE WHEN err THEN conv_id END)
-                        AS bigint) AS n_convs_with_error
-            FROM calls GROUP BY tool
-        """,
-        # Tool-workflow bigrams: lag over the tool-turn subset only
-        # (WHERE applies before the window in both engines), transition
-        # counts + conversation reach (see q_transcript_tool_chains).
-        "transcript_tool_chains": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            calls AS (
-              SELECT conv_id, tool AS to_tool,
-                     lag(tool) OVER (PARTITION BY conv_id
-                                     ORDER BY turn_idx) AS from_tool
-              FROM tr WHERE role = 'tool' AND tool IS NOT NULL
-            )
-            SELECT from_tool, to_tool,
-                   cast(count(*) AS bigint) AS n,
-                   cast(count(DISTINCT conv_id) AS bigint) AS n_convs
-            FROM calls WHERE from_tool IS NOT NULL
-            GROUP BY from_tool, to_tool
-        """,
-        "transcript_role_transitions": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            t AS (
-              SELECT lag(role) OVER (PARTITION BY conv_id
-                                     ORDER BY turn_idx) AS from_role,
-                     role AS to_role
-              FROM tr
-            )
-            SELECT from_role, to_role, count(*) AS n
-            FROM t WHERE from_role IS NOT NULL
-            GROUP BY from_role, to_role
-        """,
-        "embedding_decontaminate": """
-            WITH probes AS (
-              SELECT vec_id AS eid, cast(embedding AS double[]) AS ev
-              FROM embeddings
-              WHERE vec_id % 83 = 0 AND embedding IS NOT NULL
-                AND list_dot_product(cast(embedding AS double[]),
-                                     cast(embedding AS double[])) > 0
-            ),
-            base AS (
-              SELECT vec_id, cast(embedding AS double[]) AS cv,
-                     (embedding IS NOT NULL AND
-                      list_dot_product(cast(embedding AS double[]),
-                                       cast(embedding AS double[])) > 0)
-                       AS scorable
-              FROM embeddings
-            ),
-            scored AS (
-              SELECT vec_id, eid,
-                     round(list_cosine_similarity(cv, ev), 3) AS cos
-              FROM base, probes WHERE scorable
-            ),
-            nearest AS (
-              SELECT vec_id, eid, cos FROM (
-                SELECT vec_id, eid, cos,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cos DESC, eid ASC) AS rn
-                FROM scored
-              ) WHERE rn = 1
-            )
-            SELECT b.vec_id, n.eid AS eval_id, n.cos AS cosine,
-                   coalesce(n.cos >= 0.99, FALSE) AS contaminated
-            FROM base b LEFT JOIN nearest n USING (vec_id)
-        """,
         "cypher_var_length": """
             WITH k AS (
               SELECT CAST(o_orderkey AS VARCHAR) AS k
@@ -10062,41 +5507,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 'b' || k || '.evil.net' AS domain,
                    CAST(NULL AS VARCHAR) AS ip
             FROM k
-        """,
-        "span_dup_stats": _SPAN_PG_SQL + """,
-            covx AS (
-              SELECT doc_id, unnest(generate_series(pos, pos + 5)) AS tp
-              FROM dup
-            ),
-            cov AS (
-              SELECT doc_id, count(DISTINCT tp) AS dup_tokens
-              FROM covx GROUP BY doc_id
-            ),
-            nd AS (SELECT doc_id, count(*) AS n_dup_grams FROM dup GROUP BY doc_id)
-            SELECT b2.doc_id, n_tokens,
-                   greatest(n_tokens - 5, 0) AS n_grams,
-                   coalesce(nd.n_dup_grams, 0) AS n_dup_grams,
-                   coalesce(cov.dup_tokens, 0) AS dup_tokens,
-                   round(cast(coalesce(cov.dup_tokens, 0) AS double) / n_tokens,
-                         6) AS dup_ratio
-            FROM b2 LEFT JOIN nd USING (doc_id) LEFT JOIN cov USING (doc_id)
-        """,
-        "span_scrub": _SPAN_PG_SQL + """,
-            covl AS (
-              SELECT doc_id, list(DISTINCT tp) AS cov
-              FROM (SELECT doc_id, unnest(generate_series(pos, pos + 5)) AS tp
-                    FROM dup)
-              GROUP BY doc_id
-            )
-            SELECT b.doc_id,
-                   -- array_to_string of an EMPTY list is NULL in DuckDB
-                   -- (Spark array_join gives ''): coalesce to match.
-                   coalesce(array_to_string(
-                     [b.t[i] FOR i IN generate_series(1, cast(len(b.t) AS int))
-                      IF NOT list_contains(
-                           coalesce(covl.cov, CAST([] AS BIGINT[])), i)],
-                     ' '), '') AS clean_text
-            FROM base b LEFT JOIN covl USING (doc_id)
         """,
         "asof_join_events_orders": """
             WITH cand AS (
@@ -10134,29 +5544,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY w.window_id
         """,
         "html_to_text": _html_to_text_oracle_sql(),
-        "multimodal_decode": """
-            SELECT o_orderkey AS asset_id,
-                   (['image','audio','video'])[cast(o_orderkey % 3 AS int) + 1] AS kind,
-                   cast(8 + o_orderkey % 56 AS int) AS width,
-                   cast(8 + (o_orderkey * 7) % 56 AS int) AS height,
-                   cast(CASE WHEN o_orderkey % 3 = 2 THEN 1 + o_orderkey % 29
-                             ELSE 1 END AS int) AS n_frames
-            FROM orders
-        """,
-        "pack_documents": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     cast(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS bigint) AS n_tokens,
-                     cast(doc_id % 4 AS bigint) AS shard
-              FROM documents
-            )
-            SELECT shard, doc_id, n_tokens,
-                   cast(floor(coalesce(sum(n_tokens) OVER (
-                     PARTITION BY shard
-                     ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) / 500) AS bigint) AS pack_id
-            FROM t
-        """,
         "train_val_split": """
             SELECT doc_id,
                    CASE WHEN md5_number_upper('split:' || cast(doc_id AS varchar))
@@ -10178,376 +5565,6 @@ def oracle_sql() -> dict[str, str]:
                    min(doc_id) AS keep_id
             FROM documents GROUP BY md5(text)
         """,
-        "text_token_counts": rf"""
-            SELECT doc_id,
-                   cast(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS int) AS ws_tokens,
-                   cast(len(regexp_extract_all(text, '{BPE_TOKEN_REGEX}')) AS int) AS bpe_tokens
-            FROM documents
-        """,
-        # tfidf: score rounded to 6 BEFORE ranking; rank key is
-        # (tfidf DESC, df ASC, term ASC) — fully deterministic, so both
-        # engines pick identical rows even among (tf, df) ties (see
-        # operators/text_quality.py::tfidf_top_terms).
-        "text_tfidf_top_terms": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_extract_all(lower(text), '[a-z0-9]{2,}')) AS term
-              FROM documents
-            ),
-            tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-            dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-            n AS (SELECT count(*) AS n FROM documents),
-            scored AS (
-              SELECT tf.doc_id, tf.term, tf.tf, dfr.df,
-                     round(tf.tf * ln((n.n + 1.0) / (dfr.df + 1.0)), 6) AS tfidf
-              FROM tf JOIN dfr USING (term) CROSS JOIN n
-            )
-            SELECT doc_id, term, tf, df, tfidf, cast(rk AS int) AS rk FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY doc_id
-                ORDER BY tfidf DESC, df ASC, term ASC
-              ) AS rk
-              FROM scored
-            ) WHERE rk <= 5
-        """,
-        "text_quality_score": rf"""
-            WITH m AS (
-              SELECT doc_id,
-                     length(text) AS n_chars,
-                     len(regexp_split_to_array(trim(lower(text)), '\s+')) AS n_tokens,
-                     length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
-                     length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS n_upper,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{en}], x))) AS hits
-              FROM documents
-            )
-            SELECT doc_id,
-                   round(
-                     least(n_tokens / 64.0, 1.0) * 0.3
-                     + least((hits * 1.0 / n_tokens) * 4.0, 1.0) * 0.4
-                     + (1.0 - least((n_punct * 1.0 / n_chars) * 10.0, 1.0)) * 0.2
-                     + (1.0 - least((n_upper * 1.0 / n_chars) * 5.0, 1.0)) * 0.1,
-                   6) AS quality
-            FROM m
-        """,
-        "text_language_id": rf"""
-            WITH h AS (
-              SELECT doc_id,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{en}], x))) AS hits_en,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{es}], x))) AS hits_es,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{de}], x))) AS hits_de
-              FROM documents
-            )
-            SELECT doc_id,
-                   CASE WHEN hits_es > hits_en AND hits_es >= hits_de THEN 'es'
-                        WHEN hits_de > hits_en AND hits_de > hits_es THEN 'de'
-                        ELSE 'en' END AS lang_pred
-            FROM h
-        """,
-        "text_fingerprints": """
-            SELECT doc_id,
-                   array_to_string(
-                     list_slice(list_sort(list(DISTINCT md5(substring(lower(text), cast(i AS int), 8)))), 1, 5),
-                     ',') AS fp
-            FROM (
-              SELECT doc_id, text,
-                     unnest(range(1, greatest(length(text) - 7, 1) + 1)) AS i
-              FROM documents
-            )
-            GROUP BY doc_id
-        """,
-        "similarity_topk": """
-            WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-            SELECT vec_id,
-                   round(list_cosine_similarity(
-                     cast(embedding AS double[]), cast((SELECT qv FROM q) AS double[])), 3) AS cosine
-            FROM embeddings
-            ORDER BY cosine DESC, vec_id
-            LIMIT 10
-        """,
-        # Planted corpus (see _planted_near_dup_docs): expected pairs are
-        # exactly the same-word-cycle families — jaccard 1.0 for
-        # o_orderkey % 3 <> 0; the % 3 = 0 families share only 1 of 7
-        # shingles (1/7 < 0.8) and must be excluded by the verifier.
-        "minhash_near_dup_docs": """
-            SELECT 2 * o_orderkey AS a,
-                   2 * o_orderkey + 1 AS b,
-                   cast(1.0 AS double) AS jaccard
-            FROM orders
-            WHERE o_orderkey % 3 <> 0
-        """,
-        # Exact n-gram Jaccard: identical cycles → jaccard exactly 1.0;
-        # swapped families → 1/7 < 0.5, excluded by the exact verifier.
-        # Greedy set cover replayed: 4 unrolled rounds, each pick the
-        # (gain DESC, source ASC) argmax over the uncovered incidence
-        # (see q_select_sources).
-        "select_sources": """
-            WITH docs AS (
-              SELECT source, text FROM documents
-              UNION ALL
-              SELECT 'zz_union', text FROM documents WHERE doc_id % 3 = 0
-              UNION ALL
-              SELECT 'zz_mirror', text FROM documents WHERE doc_id % 7 = 0
-            ),
-            sh AS (SELECT DISTINCT source AS s, md5(text) AS h FROM docs),
-            p1 AS (
-              SELECT s, cast(count(*) AS bigint) AS n FROM sh
-              GROUP BY s ORDER BY n DESC, s LIMIT 1
-            ),
-            u1 AS (
-              SELECT * FROM sh WHERE h NOT IN
-                (SELECT h FROM sh WHERE s = (SELECT s FROM p1))
-            ),
-            p2 AS (
-              SELECT s, cast(count(*) AS bigint) AS n FROM u1
-              GROUP BY s ORDER BY n DESC, s LIMIT 1
-            ),
-            u2 AS (
-              SELECT * FROM u1 WHERE h NOT IN
-                (SELECT h FROM u1 WHERE s = (SELECT s FROM p2))
-            ),
-            p3 AS (
-              SELECT s, cast(count(*) AS bigint) AS n FROM u2
-              GROUP BY s ORDER BY n DESC, s LIMIT 1
-            ),
-            u3 AS (
-              SELECT * FROM u2 WHERE h NOT IN
-                (SELECT h FROM u2 WHERE s = (SELECT s FROM p3))
-            ),
-            p4 AS (
-              SELECT s, cast(count(*) AS bigint) AS n FROM u3
-              GROUP BY s ORDER BY n DESC, s LIMIT 1
-            )
-            SELECT cast(1 AS int) AS rank, s AS source, n AS n_new,
-                   n AS n_covered FROM p1
-            UNION ALL
-            SELECT 2, s, n, (SELECT n FROM p1) + n FROM p2
-            UNION ALL
-            SELECT 3, s, n,
-                   (SELECT n FROM p1) + (SELECT n FROM p2) + n FROM p3
-            UNION ALL
-            SELECT 4, s, n,
-                   (SELECT n FROM p1) + (SELECT n FROM p2)
-                   + (SELECT n FROM p3) + n FROM p4
-        """,
-        # Source overlap: identical mirror construction + md5 identity +
-        # hash-keyed self-join (see q_source_overlap).
-        "source_overlap": """
-            WITH docs AS (
-              SELECT source, text FROM documents
-              UNION ALL
-              SELECT 'zz_mirror' AS source, text FROM documents
-              WHERE doc_id % 7 = 0
-            ),
-            sh AS (SELECT DISTINCT source AS s, md5(text) AS h FROM docs),
-            sz AS (SELECT s, cast(count(*) AS bigint) AS n FROM sh GROUP BY s),
-            com AS (
-              SELECT a.s AS src_a, b.s AS src_b,
-                     cast(count(*) AS bigint) AS n_common
-              FROM sh a JOIN sh b ON a.h = b.h AND a.s < b.s
-              GROUP BY 1, 2
-            )
-            SELECT com.src_a, com.src_b, com.n_common,
-                   round(com.n_common / za.n, 6) AS share_a,
-                   round(com.n_common / zb.n, 6) AS share_b
-            FROM com
-            JOIN sz za ON za.s = com.src_a
-            JOIN sz zb ON zb.s = com.src_b
-        """,
-        # Keep-best survivors: clusters are the analytic jaccard-1.0
-        # families {2k, 2k+1} (k%3 != 0); survivor = argmax((id*7)%13,
-        # tie min id) (see q_dedup_keep_best).
-        "dedup_keep_best": """
-            WITH fam AS (
-              SELECT o_orderkey AS k,
-                     2 * o_orderkey AS a, 2 * o_orderkey + 1 AS b,
-                     (2 * o_orderkey * 7) % 13 AS sa,
-                     ((2 * o_orderkey + 1) * 7) % 13 AS sb
-              FROM orders
-            )
-            SELECT doc_id, cast(score AS int) AS score FROM (
-              -- merged families keep the argmax-score member
-              SELECT CASE WHEN sb > sa THEN b ELSE a END AS doc_id,
-                     CASE WHEN sb > sa THEN sb ELSE sa END AS score
-              FROM fam WHERE k % 3 <> 0
-              UNION ALL
-              -- below-threshold families survive whole
-              SELECT a, sa FROM fam WHERE k % 3 = 0
-              UNION ALL
-              SELECT b, sb FROM fam WHERE k % 3 = 0
-            )
-        """,
-        # Containment: analytic planted corpus — every non-k%3 small doc
-        # sits verbatim in its big sibling: inter 4, C(A→B) 4/4 = 1.0,
-        # C(B→A) 4/10 = 0.4 (see q_ngram_containment).
-        "ngram_containment": """
-            SELECT 2 * o_orderkey AS a,
-                   2 * o_orderkey + 1 AS b,
-                   cast(4 AS bigint) AS inter,
-                   cast(1.0 AS double) AS c_a_in_b,
-                   cast(0.4 AS double) AS c_b_in_a
-            FROM orders
-            WHERE o_orderkey % 3 <> 0
-        """,
-        "ngram_jaccard": """
-            SELECT 2 * o_orderkey AS a,
-                   2 * o_orderkey + 1 AS b,
-                   cast(1.0 AS double) AS jaccard
-            FROM orders
-            WHERE o_orderkey % 3 <> 0
-        """,
-        # Incremental (index-reusing) path over the same planted corpus:
-        # every true pair straddles the even/odd = old/new split, so the
-        # expected pair set is identical to the full self-join above.
-        "minhash_incremental": """
-            SELECT 2 * o_orderkey AS a,
-                   2 * o_orderkey + 1 AS b,
-                   cast(1.0 AS double) AS jaccard
-            FROM orders
-            WHERE o_orderkey % 3 <> 0
-        """,
-        # Survivors after exact-pass + LSH + connected components: in a
-        # jaccard-1.0 family the min id (2k) survives and 2k+1 drops;
-        # 1/7 families are below threshold and survive whole.
-        # The evaluation entries rebuild the planted predicted/gold
-        # sides verbatim (see _eval_planted_triples), then compute the
-        # metric independently with plain joins — every count BIGINT,
-        # every ratio one two-integer double division, f1 the same
-        # left-associated 2.0*p*r/(p+r) expression Spark evaluates.
-        "eval_triple_pr": """
-            WITH ks AS (SELECT o_orderkey AS k FROM orders),
-            g AS (
-              SELECT 'E' || k AS subj,
-                     CASE k % 3 WHEN 0 THEN 'RESOLVES_TO'
-                                WHEN 1 THEN 'COMMUNICATES_WITH'
-                                ELSE 'CONTAINS' END AS pred,
-                     'T' || k AS obj
-              FROM ks
-            ),
-            p AS (
-              SELECT 'E' || k AS subj,
-                     CASE k % 3 WHEN 0 THEN 'RESOLVES_TO'
-                                WHEN 1 THEN 'COMMUNICATES_WITH'
-                                ELSE 'CONTAINS' END AS pred,
-                     CASE WHEN k % 7 = 0 THEN 'X' || k
-                          ELSE 'T' || k END AS obj
-              FROM ks WHERE k % 5 <> 0
-            ),
-            c AS (
-              SELECT (SELECT count(*) FROM p) AS n_predicted,
-                     (SELECT count(*) FROM g) AS n_gold,
-                     (SELECT count(*) FROM p
-                      JOIN g USING (subj, pred, obj)) AS tp
-            ),
-            r AS (
-              SELECT n_predicted, n_gold, tp,
-                     n_predicted - tp AS fp, n_gold - tp AS fn,
-                     CASE WHEN n_predicted <> 0 THEN
-                       CAST(tp AS DOUBLE) / CAST(n_predicted AS DOUBLE)
-                     END AS precision,
-                     CASE WHEN n_gold <> 0 THEN
-                       CAST(tp AS DOUBLE) / CAST(n_gold AS DOUBLE)
-                     END AS recall
-              FROM c
-            )
-            SELECT n_predicted, n_gold, tp, fp, fn, precision, recall,
-                   CASE WHEN precision + recall <> 0 THEN
-                     2.0 * precision * recall / (precision + recall)
-                   END AS f1
-            FROM r
-        """,
-        "eval_triple_pr_by_pred": """
-            WITH ks AS (SELECT o_orderkey AS k FROM orders),
-            g AS (
-              SELECT 'E' || k AS subj,
-                     CASE k % 3 WHEN 0 THEN 'RESOLVES_TO'
-                                WHEN 1 THEN 'COMMUNICATES_WITH'
-                                ELSE 'CONTAINS' END AS pred,
-                     'T' || k AS obj
-              FROM ks
-            ),
-            p AS (
-              SELECT 'E' || k AS subj,
-                     CASE k % 3 WHEN 0 THEN 'RESOLVES_TO'
-                                WHEN 1 THEN 'COMMUNICATES_WITH'
-                                ELSE 'CONTAINS' END AS pred,
-                     CASE WHEN k % 7 = 0 THEN 'X' || k
-                          ELSE 'T' || k END AS obj
-              FROM ks WHERE k % 5 <> 0
-            ),
-            np AS (SELECT pred, count(*) AS n_predicted FROM p GROUP BY pred),
-            ng AS (SELECT pred, count(*) AS n_gold FROM g GROUP BY pred),
-            tp AS (
-              SELECT pred, count(*) AS tp
-              FROM p JOIN g USING (subj, pred, obj) GROUP BY pred
-            ),
-            r AS (
-              SELECT pred,
-                     coalesce(n_predicted, 0) AS n_predicted,
-                     coalesce(n_gold, 0) AS n_gold,
-                     coalesce(tp, 0) AS tp
-              FROM np FULL OUTER JOIN ng USING (pred)
-                      FULL OUTER JOIN tp USING (pred)
-            ),
-            r2 AS (
-              SELECT pred, n_predicted, n_gold, tp,
-                     CASE WHEN n_predicted <> 0 THEN
-                       CAST(tp AS DOUBLE) / CAST(n_predicted AS DOUBLE)
-                     END AS precision,
-                     CASE WHEN n_gold <> 0 THEN
-                       CAST(tp AS DOUBLE) / CAST(n_gold AS DOUBLE)
-                     END AS recall
-              FROM r
-            )
-            SELECT pred, n_predicted, n_gold, tp, precision, recall,
-                   CASE WHEN precision + recall <> 0 THEN
-                     2.0 * precision * recall / (precision + recall)
-                   END AS f1
-            FROM r2 ORDER BY pred
-        """,
-        "eval_cluster_pairwise": """
-            WITH ks AS (SELECT o_orderkey AS k FROM orders),
-            a AS (
-              SELECT 'I' || k AS item,
-                     CASE WHEN k % 5 = 0 THEN 's' || k
-                          ELSE 'p' || CAST(k // 16 AS BIGINT) END AS pc,
-                     'g' || CAST(k // 8 AS BIGINT) AS gc
-              FROM ks
-            ),
-            cells AS (SELECT pc, gc, count(*) AS n FROM a GROUP BY pc, gc),
-            tot AS (
-              SELECT CAST(sum(n) AS BIGINT) AS n_items,
-                     CAST(sum(n * (n - 1) // 2) AS BIGINT) AS tp_pairs
-              FROM cells
-            ),
-            pp AS (
-              SELECT CAST(sum(np * (np - 1) // 2) AS BIGINT) AS pred_pairs
-              FROM (SELECT sum(n) AS np FROM cells GROUP BY pc)
-            ),
-            gp AS (
-              SELECT CAST(sum(ng * (ng - 1) // 2) AS BIGINT) AS gold_pairs
-              FROM (SELECT sum(n) AS ng FROM cells GROUP BY gc)
-            ),
-            r AS (
-              SELECT n_items, pred_pairs, gold_pairs, tp_pairs,
-                     CASE WHEN pred_pairs <> 0 THEN
-                       CAST(tp_pairs AS DOUBLE) / CAST(pred_pairs AS DOUBLE)
-                     END AS precision,
-                     CASE WHEN gold_pairs <> 0 THEN
-                       CAST(tp_pairs AS DOUBLE) / CAST(gold_pairs AS DOUBLE)
-                     END AS recall
-              FROM tot, pp, gp
-            )
-            SELECT n_items, pred_pairs, gold_pairs, tp_pairs,
-                   precision, recall,
-                   CASE WHEN precision + recall <> 0 THEN
-                     2.0 * precision * recall / (precision + recall)
-                   END AS f1
-            FROM r
-        """,
         "canonical_map": """
             WITH ks AS (
               SELECT md5(cast(o_orderkey AS varchar)) AS k8,
@@ -10565,172 +5582,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE v.node_id <> m.canon
             ORDER BY v.node_id
         """,
-        "minhash_dedup_survivors": """
-            SELECT 2 * o_orderkey + j.j AS doc_id
-            FROM orders, (SELECT unnest([0, 1]) AS j) j
-            WHERE NOT (j.j = 1 AND o_orderkey % 3 <> 0)
-        """,
-        # Brute-force simhash pair join over the planted sub-corpus:
-        # rebuild each doc's token multiset analytically (reps × 4-word
-        # cycle), recompute the 64-bit signature with the shared md5
-        # token hash, and emit every pair with hamming <= 3 — the
-        # pigeonhole-banded operator is complete for that budget, so the
-        # outputs must be identical.
-        "simhash_near_dups": """
-            WITH d AS (
-              SELECT 2 * o_orderkey + j.j AS doc_id,
-                     o_orderkey AS k, j.j AS j
-              FROM orders, (SELECT unnest([0, 1]) AS j) j
-              WHERE o_orderkey % 97 = 0
-            ), toks AS (
-              SELECT d.doc_id, t.tok
-              FROM d
-              CROSS JOIN (SELECT unnest(range(0, 7)) AS rep) r
-              CROSS JOIN LATERAL (
-                SELECT unnest([
-                  'wa' || cast(d.k AS varchar),
-                  'wb' || cast(d.k AS varchar),
-                  'wc' || cast(d.k AS varchar),
-                  CASE WHEN d.j = 1 AND d.k % 3 = 0
-                       THEN 'we' || cast(d.k AS varchar)
-                       ELSE 'wd' || cast(d.k AS varchar) END
-                ]) AS tok
-              ) t
-              WHERE r.rep < 5 + 2 * d.j
-            ), bal AS (
-              SELECT doc_id, b.bit AS bit,
-                     sum(CASE WHEN (md5_number_upper(tok) >> b.bit) & 1 = 1
-                              THEN 1 ELSE -1 END) AS balance
-              FROM toks, (SELECT unnest(range(0, 64)) AS bit) b
-              GROUP BY doc_id, b.bit
-            ), sig AS (
-              SELECT doc_id,
-                     cast(sum(CASE WHEN balance > 0 THEN
-                       CASE WHEN bit = 63 THEN -9223372036854775808
-                            ELSE (cast(1 AS bigint) << cast(bit AS int)) END
-                       ELSE 0 END) AS bigint) AS s
-              FROM bal GROUP BY doc_id
-            )
-            SELECT x.doc_id AS a, y.doc_id AS b,
-                   cast(bit_count(xor(x.s, y.s)) AS int) AS hamming
-            FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-            WHERE bit_count(xor(x.s, y.s)) <= 3
-        """,
-        # Independent simhash recomputation: md5_number_upper(token) is
-        # bit-identical to the kernel's md5-derived 64-bit token hash
-        # (first 8 digest bytes, little-endian); two's-complement signed
-        # reconstruction via the -2^63 term for bit 63.
-        "simhash_signatures": r"""
-            WITH toks AS (
-              SELECT d.doc_id, t.tok
-              FROM documents d,
-                   unnest(regexp_split_to_array(lower(d.text), '\s+')) AS t(tok)
-              WHERE t.tok <> ''
-            ), bal AS (
-              SELECT doc_id, j.j AS j,
-                     sum(CASE WHEN (md5_number_upper(tok) >> j.j) & 1 = 1
-                              THEN 1 ELSE -1 END) AS balance
-              FROM toks, (SELECT unnest(range(0, 64)) AS j) j
-              GROUP BY doc_id, j.j
-            ), sig AS (
-              SELECT doc_id,
-                     cast(sum(CASE WHEN balance > 0 THEN
-                       CASE WHEN j = 63 THEN -9223372036854775808
-                            ELSE (cast(1 AS bigint) << cast(j AS int)) END
-                       ELSE 0 END) AS bigint) AS simhash
-              FROM bal GROUP BY doc_id
-            )
-            SELECT d.doc_id, coalesce(s.simhash, 0) AS simhash
-            FROM documents d LEFT JOIN sig s ON d.doc_id = s.doc_id
-        """,
-        # Planted vectors (see _planted_vectors): the oracle brute-forces
-        # the exact top-k; the construction guarantees the approximate
-        # searches return the same set (t=0 vectors are exact positive
-        # multiples of the query).
-        "similarity_lsh_topk": f"""
-            WITH v AS ({_PLANTED_VECTORS_SQL})
-            SELECT vec_id,
-                   round(list_cosine_similarity(emb,
-                     [1.0,0.0,0.0,0.0,0.0,0.0,0.0,0.0]), 3) AS cosine
-            FROM v
-            ORDER BY list_cosine_similarity(emb,
-                     [1.0,0.0,0.0,0.0,0.0,0.0,0.0,0.0]) DESC, vec_id
-            LIMIT 10
-        """,
-        "similarity_ivf_topk": f"""
-            WITH v AS ({_PLANTED_VECTORS_SQL})
-            SELECT vec_id,
-                   round(list_cosine_similarity(emb,
-                     [1.0,0.0,0.0,0.0,0.0,0.0,0.0,0.0]), 3) AS cosine
-            FROM v
-            ORDER BY list_cosine_similarity(emb,
-                     [1.0,0.0,0.0,0.0,0.0,0.0,0.0,0.0]) DESC, vec_id
-            LIMIT 10
-        """,
-        # Exact brute-force pair join over the planted basis vectors;
-        # the banded-LSH operator must reproduce it exactly (cosines are
-        # exactly 1.0 within a direction, exactly 0.0 across).
-        # Clusters are exactly the same-direction families (all pairwise
-        # cosine 1.0) → survivor = min vec_id per direction class.
-        "embedding_dedup_survivors": """
-            WITH v AS (
-              SELECT 2 * o_orderkey + j.j AS vec_id,
-                     (o_orderkey // 199) % 64 AS dir
-              FROM orders, (SELECT unnest([0, 1]) AS j) j
-              WHERE o_orderkey % 199 = 0
-            )
-            SELECT min(vec_id) AS vec_id FROM v GROUP BY dir
-        """,
-        "embedding_near_dups": """
-            WITH v AS (
-              SELECT 2 * o_orderkey + j.j AS vec_id,
-                     list_transform(range(0, 64), i ->
-                       CASE WHEN i = (o_orderkey // 199) % 64
-                            THEN cast(j.j + 1 AS double) ELSE 0.0 END) AS emb
-              FROM orders, (SELECT unnest([0, 1]) AS j) j
-              WHERE o_orderkey % 199 = 0
-            )
-            SELECT va.vec_id AS a, vb.vec_id AS b,
-                   round(list_cosine_similarity(va.emb, vb.emb), 3) AS cosine
-            FROM v va JOIN v vb ON va.vec_id < vb.vec_id
-            WHERE list_cosine_similarity(va.emb, vb.emb) >= 0.9
-        """,
-        "ngram_decontaminate": r"""
-            WITH dtok AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents
-            ),
-            ev AS (
-              SELECT doc_id AS eval_id,
-                     regexp_split_to_array(
-                       trim(lower(array_to_string(toks[1:12], ' '))), '\s+'
-                     ) AS toks
-              FROM dtok WHERE doc_id % 25 = 0
-            ),
-            didx AS (
-              SELECT doc_id, toks,
-                     unnest(generate_series(1, len(toks) - 2)) AS i
-              FROM dtok
-            ),
-            dg AS (
-              SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS gram
-              FROM didx
-            ),
-            eidx AS (
-              SELECT eval_id, toks,
-                     unnest(generate_series(1, len(toks) - 2)) AS i
-              FROM ev
-            ),
-            eg AS (
-              SELECT DISTINCT eval_id, array_to_string(toks[i:i+2], ' ') AS gram
-              FROM eidx
-            )
-            SELECT dg.doc_id, eg.eval_id,
-                   cast(count(DISTINCT dg.gram) AS bigint) AS shared_ngrams
-            FROM dg JOIN eg USING (gram)
-            GROUP BY dg.doc_id, eg.eval_id
-        """,
         "sample_stratified": """
             SELECT o_orderkey, o_orderstatus
             FROM orders
@@ -10740,119 +5591,6 @@ def oracle_sql() -> dict[str, str]:
                                        WHEN 'F' THEN 50000
                                        WHEN 'P' THEN 500000
                                        ELSE 0 END
-        """,
-        # Composed curation pipeline over the planted corpus (see
-        # q_curate_corpus): each stage filter is SQL; the near-dedup
-        # stage uses the ANALYTIC survivor set (jaccard-1.0 same-cycle
-        # families, min id kept) that minhash_near_dup_docs proves the
-        # operator computes.
-        "curate_increment": """
-            WITH ks AS (
-              SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 7 = 0
-            )
-            SELECT 1 AS batch, cast(k * 10 AS bigint) AS doc_id,
-                   CASE WHEN k % 5 = 0 THEN 'contaminated'
-                        ELSE 'accepted' END AS status
-            FROM ks
-            UNION ALL
-            SELECT 2, cast(k * 10 + (SELECT 10 * max(k) + 10 FROM ks) AS bigint),
-                   CASE k % 4 WHEN 0 THEN 'exact_dup'
-                              WHEN 1 THEN 'near_dup'
-                              WHEN 2 THEN 'accepted'
-                              ELSE 'language' END
-            FROM ks
-        """,
-        "curate_corpus": rf"""
-            WITH pdocs AS (
-              SELECT cast(2 * o_orderkey + j.j AS bigint) AS doc_id,
-                     trim(repeat(
-                       'wa' || cast(o_orderkey AS varchar)
-                       || ' wb' || cast(o_orderkey AS varchar)
-                       || ' wc' || cast(o_orderkey AS varchar) || ' '
-                       || (CASE WHEN j.j = 1 AND o_orderkey % 3 = 0
-                                THEN 'we' ELSE 'wd' END)
-                       || cast(o_orderkey AS varchar) || ' ',
-                       CASE WHEN j.j = 0 THEN 5 ELSE 7 END)) AS text
-              FROM orders CROSS JOIN (SELECT unnest([0, 1]) AS j) j
-              WHERE o_orderkey % 7 = 0
-            ),
-            corpus AS (
-              SELECT * FROM pdocs
-              UNION ALL
-              SELECT cast(doc_id AS bigint), text FROM (VALUES
-                (-301, 'A. B. C.'),
-                (-302, 'el la de que y un los se no por el la de que y un los se no por'),
-                (-201, 'the and of to in it is was for on the and of to in it is was for on'),
-                (-200, 'the and of to in it is was for on the and of to in it is was for on')
-              ) AS extras(doc_id, text)
-            ),
-            feat AS (
-              SELECT doc_id, text,
-                     length(text) AS n_chars,
-                     len(regexp_split_to_array(trim(lower(text)), '\s+')) AS n_toks,
-                     length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
-                     length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS n_upper,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{en}], x))) AS hits_en,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{es}], x))) AS hits_es,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{de}], x))) AS hits_de
-              FROM corpus
-            ),
-            scored AS (
-              -- round(…, 6) BEFORE the threshold filter: the operator's
-              -- quality_score returns the rounded value and
-              -- curate_documents filters on THAT, so the oracle must
-              -- compare the same quantity (review finding r4)
-              SELECT doc_id, text, n_toks,
-                     round(least(n_toks / 64.0, 1.0) * 0.3
-                       + least((hits_en * 1.0 / n_toks) * 4.0, 1.0) * 0.4
-                       + (1.0 - least((n_punct * 1.0 / n_chars) * 10.0, 1.0)) * 0.2
-                       + (1.0 - least((n_upper * 1.0 / n_chars) * 5.0, 1.0)) * 0.1,
-                     6) AS quality,
-                     CASE WHEN hits_es > hits_en AND hits_es >= hits_de THEN 'es'
-                          WHEN hits_de > hits_en AND hits_de > hits_es THEN 'de'
-                          ELSE 'en' END AS lang_pred
-              FROM feat
-            ),
-            filtered AS (
-              SELECT * FROM scored WHERE quality >= 0.3 AND lang_pred = 'en'
-            ),
-            exact AS (
-              SELECT * FROM filtered
-              QUALIFY doc_id = min(doc_id) OVER (PARTITION BY md5(text))
-            ),
-            neardup AS (
-              -- analytic minhash survivors: j=1 of a same-cycle family
-              -- (k % 3 <> 0) is the non-min member of a jaccard-1.0
-              -- cluster; nothing else has a >= 0.8 partner
-              SELECT * FROM exact
-              WHERE NOT (doc_id >= 0 AND doc_id % 2 = 1
-                         AND ((doc_id - 1) // 2) % 3 <> 0)
-            ),
-            decon AS (
-              -- contaminated = the j=0 source docs of the k % 5 = 0
-              -- eval items (their 8-grams all contain 'wd<k>', absent
-              -- from every other survivor)
-              SELECT * FROM neardup
-              WHERE NOT (doc_id >= 0 AND doc_id % 10 = 0)
-            ),
-            split_tok AS (
-              SELECT doc_id, quality, lang_pred,
-                     cast(n_toks AS bigint) AS n_tokens,
-                     CASE WHEN md5_number_upper('split:' || cast(doc_id AS varchar))
-                               % 1000000 < 900000
-                          THEN 'train' ELSE 'val' END AS split
-              FROM decon
-            )
-            SELECT doc_id, round(quality, 6) AS quality, lang_pred, split,
-                   n_tokens,
-                   cast(floor(coalesce(sum(n_tokens) OVER (
-                     PARTITION BY split ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) / 64) AS bigint) AS pack_id
-            FROM split_tok
         """,
         # Water level T = min(count_s / share_s) and per-source
         # thresholds recomputed in the identical double expression
@@ -10900,24 +5638,6 @@ def oracle_sql() -> dict[str, str]:
                      array_to_string(toks[(i * 40 + 1):(i * 40 + 40)], ' '),
                      '\s+')) AS bigint) AS n_tokens
             FROM p
-        """,
-        # Same PII_PATTERNS strings, applied in the same order, under
-        # RE2 — the chain is generated from the operator's own pattern
-        # list so the two sides cannot drift.
-        "text_scrub_pii": _pii_oracle_sql(),
-        "text_repetition_ratio": """
-            WITH sh AS (
-              SELECT doc_id, substring(lower(text), cast(i AS int), 8) AS s
-              FROM (
-                SELECT doc_id, text,
-                       unnest(range(1, greatest(length(text) - 7, 1) + 1)) AS i
-                FROM documents
-              )
-            )
-            SELECT doc_id,
-                   round(1.0 - cast(count(DISTINCT s) AS double) / count(*), 6)
-                     AS rep_ratio
-            FROM sh GROUP BY doc_id
         """,
         "graph_label_propagation": _lpa_oracle_sql(iterations=4),
         "graph_anf": _anf_oracle_sql(hops=2, m=16),
@@ -11181,7 +5901,6 @@ def oracle_sql() -> dict[str, str]:
                    cast(100 * (a.i % 2) + a.i + 10 AS double) AS weight
             FROM idx a JOIN idx b ON b.i = a.i + 1
         """,
-        "transcript_pii_audit": _pii_audit_oracle_sql(),
         # Closed-form single-linkage clusters at threshold 109 on the
         # planted graph: pairs {2k, 2k+1} while even-edge weights
         # (i + 10) stay ≤ 109, singletons beyond; cluster labels are
@@ -11217,65 +5936,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL SELECT 'in_set(o_orderstatus)', c2, c2 = 0 FROM a
             UNION ALL SELECT 'in_range(o_totalprice)', c3, c3 = 0 FROM a
             UNION ALL SELECT 'matches(o_orderpriority)', c4, c4 = 0 FROM a
-        """,
-        # Filtered TransE negative sampling: identical md5 side/index
-        # draws, dense row_number entity index, degenerate-draw filter,
-        # and true-triple anti-join (see q_kg_negative_samples).
-        "kg_negative_samples": """
-            WITH tri AS (
-              SELECT 's' || cast(s_suppkey AS varchar) AS subj,
-                     'LOCATED_IN' AS pred,
-                     'n' || cast(s_nationkey AS varchar) AS obj
-              FROM supplier
-              UNION ALL
-              SELECT 'c' || cast(c_custkey AS varchar), 'LOCATED_IN',
-                     'n' || cast(c_nationkey AS varchar)
-              FROM customer
-              UNION ALL
-              SELECT 'n' || cast(n_nationkey AS varchar), 'PART_OF',
-                     'r' || cast(n_regionkey AS varchar)
-              FROM nation
-            ),
-            true_t AS (SELECT DISTINCT subj, pred, obj FROM tri),
-            ents AS (
-              SELECT id, row_number() OVER (ORDER BY id) - 1 AS eidx
-              FROM (SELECT subj AS id FROM true_t
-                    UNION SELECT obj FROM true_t)
-            ),
-            ne AS (SELECT count(*) AS n FROM ents),
-            ex AS (
-              SELECT subj, pred, obj, cast(i AS integer) AS sample_idx,
-                     subj || '|' || pred || '|' || obj || '|'
-                       || cast(i AS varchar) AS key
-              FROM true_t CROSS JOIN (SELECT unnest(range(2)) AS i)
-            ),
-            drawn AS (
-              SELECT ex.*,
-                     cast(md5_number_upper('negside:' || key) % 2
-                          AS integer) AS side,
-                     cast(md5_number_upper('neg:' || key) % ne.n
-                          AS bigint) AS didx
-              FROM ex CROSS JOIN ne
-            ),
-            neg AS (
-              SELECT CASE WHEN side = 0 THEN e.id ELSE d.subj END AS subj,
-                     d.pred,
-                     CASE WHEN side = 1 THEN e.id ELSE d.obj END AS obj,
-                     CASE WHEN side = 0 THEN 'head' ELSE 'tail' END
-                       AS corrupted,
-                     d.sample_idx,
-                     d.subj AS pos_subj, d.obj AS pos_obj
-              FROM drawn d JOIN ents e ON d.didx = e.eidx
-              WHERE (side = 0 AND e.id <> d.subj)
-                 OR (side = 1 AND e.id <> d.obj)
-            )
-            SELECT n.subj, n.pred, n.obj, n.corrupted, n.sample_idx,
-                   n.pos_subj, n.pos_obj
-            FROM neg n
-            WHERE NOT EXISTS (
-              SELECT 1 FROM true_t t
-              WHERE t.subj = n.subj AND t.pred = n.pred AND t.obj = n.obj
-            )
         """,
         # NPMI collocation over (user, hour) contexts — identical integer
         # counts, identical exact-double quotients into ln, round(6)
@@ -11314,9 +5974,6 @@ def oracle_sql() -> dict[str, str]:
         + """
             SELECT walk_id, start_id, step, node FROM walks
         """,
-        "similarity_pq_topk": _pq_oracle_sql(
-            m=4, k_sub=4, iterations=2, scale=1024, k=10, rf=4, dim=64
-        ),
         # Temperature mixture: identical sqrt weights, water level, and
         # pinned threshold evaluation order (1e6 · w · T / n) — see
         # q_sample_temperature / operators.packing.temperature_mixture.
@@ -11371,43 +6028,6 @@ def oracle_sql() -> dict[str, str]:
               GROUP BY ca.row
             )
             SELECT cast(min(dot) AS bigint) AS est_join_size FROM per_row
-        """,
-        # Percentile-calibrated quality gate: the quality_score chain +
-        # identical nearest-rank threshold picks (see q_quality_gate).
-        "quality_gate": rf"""
-            WITH m AS (
-              SELECT doc_id, source,
-                     length(text) AS n_chars,
-                     len(regexp_split_to_array(trim(lower(text)), '\s+')) AS n_tokens,
-                     length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
-                     length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS n_upper,
-                     len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> list_contains([{en}], x))) AS hits
-              FROM documents
-            ),
-            sc AS (
-              SELECT doc_id, source AS "group",
-                     round(
-                       least(n_tokens / 64.0, 1.0) * 0.3
-                       + least((hits * 1.0 / n_tokens) * 4.0, 1.0) * 0.4
-                       + (1.0 - least((n_punct * 1.0 / n_chars) * 10.0, 1.0)) * 0.2
-                       + (1.0 - least((n_upper * 1.0 / n_chars) * 5.0, 1.0)) * 0.1,
-                     6) AS quality
-              FROM m
-            ),
-            r AS (
-              SELECT *, row_number() OVER (PARTITION BY "group"
-                          ORDER BY quality, doc_id) AS rn,
-                        count(*) OVER (PARTITION BY "group") AS n
-              FROM sc
-            ),
-            thr AS (
-              SELECT "group", quality AS threshold FROM r
-              WHERE rn = cast(ceil(cast(0.25 AS double) * n) AS bigint)
-            )
-            SELECT sc.doc_id, sc."group", sc.quality, thr.threshold
-            FROM sc JOIN thr ON sc."group" = thr."group"
-            WHERE sc.quality >= thr.threshold
         """,
         # Robust MAD outliers: identical nearest-rank medians (same
         # physical rows via (value, id) order) and the rounded modified
@@ -11511,41 +6131,6 @@ def oracle_sql() -> dict[str, str]:
             FROM mem LEFT JOIN per_c ON mem.community = per_c.community
             CROSS JOIN m2
         """,
-        # Unigram KL: identical counts, smoothing, integer-product ln
-        # arguments, round-6 after the sum (see q_corpus_kl).
-        "corpus_kl": """
-            WITH ta_ AS (
-              SELECT unnest(regexp_extract_all(lower(text),
-                       '[a-z0-9]{2,}')) AS term
-              FROM documents WHERE source = 'src0'
-            ),
-            tb_ AS (
-              SELECT unnest(regexp_extract_all(lower(text),
-                       '[a-z0-9]{2,}')) AS term
-              FROM documents
-            ),
-            ca AS (SELECT term, cast(count(*) AS bigint) AS ca
-                   FROM ta_ GROUP BY term),
-            cb AS (SELECT term, cast(count(*) AS bigint) AS cb
-                   FROM tb_ GROUP BY term),
-            m AS (
-              SELECT coalesce(ca.term, cb.term) AS term,
-                     coalesce(ca.ca, 0) AS ca, coalesce(cb.cb, 0) AS cb
-              FROM ca FULL OUTER JOIN cb ON ca.term = cb.term
-            ),
-            s AS (SELECT cast(count(*) AS bigint) AS v,
-                         cast(sum(ca) AS bigint) AS ta,
-                         cast(sum(cb) AS bigint) AS tb
-                  FROM m)
-            SELECT s.v AS vocab_size, s.ta AS total_a, s.tb AS total_b,
-                   round(sum(
-                     ((m.ca + 1) / cast(s.ta + s.v AS double))
-                     * ln(((m.ca + 1) * (s.tb + s.v))
-                          / cast((m.cb + 1) * (s.ta + s.v) AS double))
-                   ), 6) AS kl_divergence
-            FROM m CROSS JOIN s
-            GROUP BY 1, 2, 3
-        """,
         # Cohort retention: identical epoch-day bucketing and keyed
         # min/join/distinct-count (see q_events_retention).
         "events_retention": """
@@ -11639,77 +6224,6 @@ def oracle_sql() -> dict[str, str]:
                      row_number() OVER (ORDER BY bucket) AS rn
               FROM c WHERE cum >= ceil(cast(0.95 AS double) * total)
             ) WHERE rn = 1
-        """,
-        # Context-window assembly over the shared synthetic-transcripts
-        # CTE: identical pair mining, range left join, DESC cumsum
-        # budget cut, and ordered string_agg (NULL lines skipped —
-        # matching collect_list's NULL skip).
-        "sft_pairs_context": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            g AS (
-              SELECT conv_id, turn_idx, role, text,
-                     lead(role) OVER w AS nrole,
-                     lead(text) OVER w AS nresp
-              FROM tr
-              WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-            ),
-            pairs AS (
-              SELECT conv_id, turn_idx AS prompt_turn_idx, text AS prompt,
-                     nresp AS response,
-                     length(text) AS n_prompt_chars,
-                     length(nresp) AS n_response_chars
-              FROM g WHERE role = 'user' AND nrole = 'assistant'
-            ),
-            j AS (
-              SELECT p.*, h.turn_idx AS ht,
-                     h.role || ': ' || h.text AS line
-              FROM pairs p LEFT JOIN tr h
-                ON h.conv_id = p.conv_id
-               AND h.turn_idx < p.prompt_turn_idx
-            ),
-            c AS (
-              SELECT *,
-                     sum(length(line) + 1) OVER (
-                       PARTITION BY conv_id, prompt_turn_idx
-                       ORDER BY ht DESC ROWS UNBOUNDED PRECEDING) AS csum
-              FROM j
-            ),
-            ctx AS (
-              SELECT conv_id, prompt_turn_idx, prompt, response,
-                     n_prompt_chars, n_response_chars,
-                     coalesce(string_agg(
-                       CASE WHEN ht IS NOT NULL AND csum <= 120
-                            THEN line END,
-                       chr(10) ORDER BY ht), '') AS context
-              FROM c GROUP BY 1, 2, 3, 4, 5, 6
-            )
-            SELECT conv_id, prompt_turn_idx, context, prompt, response,
-                   length(context) AS n_context_chars,
-                   n_prompt_chars, n_response_chars
-            FROM ctx
-        """,
-        # Gap-splitting over the shared synthetic-transcripts CTE: the
-        # identical lag + running-sum arithmetic on epoch integers.
-        "transcript_sessionize": f"""
-            WITH tr AS ({_SYNTH_TRANSCRIPTS_SQL}),
-            g AS (
-              SELECT conv_id, turn_idx,
-                     epoch - lag(epoch) OVER (PARTITION BY conv_id
-                                              ORDER BY turn_idx) AS gap
-              FROM tr
-            ),
-            s AS (
-              SELECT conv_id, turn_idx,
-                     sum(CASE WHEN coalesce(gap, 0) > 40 THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY conv_id ORDER BY turn_idx
-                             ROWS UNBOUNDED PRECEDING) AS session_idx
-              FROM g
-            )
-            SELECT conv_id, turn_idx,
-                   cast(session_idx AS bigint) AS session_idx,
-                   conv_id || '#' || cast(session_idx AS varchar)
-                     AS session_id
-            FROM s
         """,
         # URL canonicalization — the url_normalize_expr chain mirrored
         # verbatim; DuckDB's empty-list array_to_string is NULL where
@@ -11863,47 +6377,6 @@ def oracle_sql() -> dict[str, str]:
                    cast(cs - least(0, mincs) AS bigint) AS cusum_scaled,
                    (cs - least(0, mincs)) > 3 * total AS alarm
             FROM m
-        """,
-        # BM25: identical float expression shape per (doc, term),
-        # round-6 after the per-doc sum, (score DESC, id ASC) rank
-        # (see q_text_bm25_search).
-        "text_bm25_search": _bm25_oracle_sql(["merge", "stream", "vector"]),
-        # RRF fusion of two BM25 rankers: 1/(60+rank) contributions,
-        # round-6 after the per-doc sum, fused (score DESC, id ASC)
-        # rank (see q_search_rrf). Each ranker nests the shared BM25
-        # oracle as a derived table.
-        "search_rrf": f"""
-            WITH u AS (
-              SELECT doc_id, 1.0 / (60 + rk) AS c
-              FROM ({_bm25_oracle_sql(["merge", "stream", "vector"])})
-              UNION ALL
-              SELECT doc_id, 1.0 / (60 + rk) AS c
-              FROM ({_bm25_oracle_sql(["slow", "error"])})
-            ),
-            fused AS (
-              SELECT doc_id, round(sum(c), 6) AS score
-              FROM u GROUP BY doc_id
-            )
-            SELECT doc_id, score, cast(rk AS int) AS rk FROM (
-              SELECT *, row_number() OVER (
-                ORDER BY score DESC, doc_id ASC
-              ) AS rk FROM fused
-            ) WHERE rk <= 20
-        """,
-        # Type-token ratio: same [a-z0-9]{{2,}} token class as the
-        # TF-IDF/BM25 family, one round-6 division (see q_text_ttr).
-        "text_ttr": """
-            SELECT doc_id,
-                   cast(len(regexp_extract_all(lower(text), '[a-z0-9]{2,}'))
-                     AS int) AS n_tokens,
-                   cast(len(list_distinct(
-                     regexp_extract_all(lower(text), '[a-z0-9]{2,}')))
-                     AS int) AS n_types,
-                   round(len(list_distinct(
-                       regexp_extract_all(lower(text), '[a-z0-9]{2,}')))
-                     / len(regexp_extract_all(lower(text), '[a-z0-9]{2,}')),
-                     6) AS ttr
-            FROM documents
         """,
         # Fano burstiness: exact-integer numerator/denominator, one
         # identical division per group (see q_events_burstiness).
@@ -12234,126 +6707,6 @@ def oracle_sql() -> dict[str, str]:
                    round(c.n / m.total, 6) AS prob
             FROM c JOIN m USING (src_state)
         """,
-        # Top bigrams: same token class, (n DESC, ngram ASC) rank
-        # (see q_corpus_top_ngrams).
-        "corpus_top_ngrams": """
-            WITH toks AS (
-              SELECT regexp_extract_all(lower(text), '[a-z0-9]{2,}') AS t
-              FROM documents
-            ),
-            g AS (
-              SELECT unnest(
-                CASE WHEN len(t) >= 2
-                  THEN list_transform(generate_series(1, len(t) - 1),
-                                      i -> t[i] || ' ' || t[i + 1])
-                  ELSE [] END) AS ngram
-              FROM toks
-            ),
-            c AS (SELECT ngram, cast(count(*) AS bigint) AS n FROM g GROUP BY 1)
-            SELECT ngram, n, cast(rk AS int) AS rk FROM (
-              SELECT *, row_number() OVER (ORDER BY n DESC, ngram ASC) AS rk
-              FROM c
-            ) WHERE rk <= 20
-        """,
-        # df-band vocabulary: per-doc distinct terms, exact df counts,
-        # floor(ratio*N) bound (see q_vocab_prune).
-        "vocab_prune": """
-            WITH per_doc AS (
-              SELECT doc_id,
-                     unnest(list_distinct(
-                       regexp_extract_all(lower(text), '[a-z0-9]{2,}')))
-                       AS term
-              FROM documents
-            ),
-            dfreq AS (
-              SELECT term, cast(count(*) AS bigint) AS df
-              FROM per_doc GROUP BY term
-            ),
-            n AS (SELECT cast(count(*) AS bigint) AS n FROM documents)
-            SELECT term, df
-            FROM dfreq CROSS JOIN n
-            WHERE df >= 30 AND df <= floor(0.77 * n)
-        """,
-        # Heaps'-law growth: per-source token sums + distinct types,
-        # one round-6 division (see q_vocab_growth).
-        "vocab_growth": """
-            WITH base AS (
-              SELECT source AS grp,
-                     regexp_extract_all(lower(text), '[a-z0-9]{2,}') AS toks
-              FROM documents
-            ),
-            sums AS (
-              SELECT grp, cast(sum(len(toks)) AS bigint) AS n_tokens
-              FROM base GROUP BY grp
-            ),
-            types AS (
-              SELECT grp, cast(count(*) AS bigint) AS n_types FROM (
-                SELECT DISTINCT grp, unnest(toks) AS term FROM base
-              ) GROUP BY grp
-            )
-            SELECT sums.grp AS source, sums.n_tokens, types.n_types,
-                   round(types.n_types / sums.n_tokens, 6)
-                     AS type_token_ratio
-            FROM sums JOIN types USING (grp)
-        """,
-        # Blocklist gate: exact whole-token hits over the same \\s+
-        # split, round-6 ratio, strict > flag (see q_text_blocklist).
-        "text_blocklist": r"""
-            WITH h AS (
-              SELECT doc_id,
-                     cast(len(list_filter(
-                       regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> list_contains(['dup', 'error', 'slow'], x)
-                     )) AS int) AS bad_hits,
-                     len(regexp_split_to_array(trim(lower(text)), '\s+'))
-                       AS n_tokens
-              FROM documents
-            )
-            SELECT doc_id, bad_hits,
-                   round(bad_hits / n_tokens, 6) AS bad_ratio,
-                   round(bad_hits / n_tokens, 6) > 0.06 AS blocked
-            FROM h
-        """,
-        # BPE merge training / application: unrolled 6-step recurrence
-        # (see q_bpe_train / q_bpe_token_counts / operators/bpe.py).
-        "bpe_train": _bpe_train_oracle_sql(6),
-        "bpe_token_counts": _bpe_token_counts_oracle_sql(6),
-        "dedup_paragraphs": """
-            WITH d AS (
-              SELECT cast(doc_id AS bigint) AS doc_id,
-                     concat_ws(chr(10), text, 'COOKIE NOTICE accept all',
-                       CASE WHEN doc_id % 3 = 0
-                            THEN 'SUBSCRIBE to our newsletter' END) AS text
-              FROM documents
-            ),
-            p AS (
-              SELECT doc_id,
-                     unnest(string_split(text, chr(10))) AS para,
-                     generate_subscripts(string_split(text, chr(10)), 1)
-                       AS pos
-              FROM d
-            ),
-            boiler AS (
-              SELECT para FROM p GROUP BY para
-              HAVING count(DISTINCT doc_id) >= 2
-            ),
-            kept AS (SELECT p.* FROM p ANTI JOIN boiler USING (para)),
-            tot AS (
-              SELECT doc_id, count(*) AS n_paragraphs FROM p GROUP BY 1
-            ),
-            reb AS (
-              SELECT doc_id,
-                     string_agg(para, chr(10) ORDER BY pos) AS text,
-                     count(*) AS n_kept
-              FROM kept GROUP BY 1
-            )
-            SELECT t.doc_id,
-                   coalesce(r.text, '') AS text,
-                   cast(t.n_paragraphs AS bigint) AS n_paragraphs,
-                   cast(t.n_paragraphs - coalesce(r.n_kept, 0) AS bigint)
-                     AS n_removed
-            FROM tot t LEFT JOIN reb r USING (doc_id)
-        """,
         "er_sorted_neighborhood": """
             -- literal Hernandez-Stolfo window over the global order;
             -- the Spark side reaches the same ranks via sampled-
@@ -12464,97 +6817,6 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem
             GROUP BY 1, 2, 3
         """,
-        # Exact tie-aware ROC-AUC: identical synthetic scorer, the same
-        # distinct-score-group cumulative-count rank identity
-        # (2·avg-rank of a tied group = 2·cnt_lt + n + 1), exact
-        # integers until ONE round-6 division (see q_eval_roc_auc).
-        "eval_roc_auc": """
-            WITH s AS (
-              SELECT md5_number_upper('auc_s:' || cast(doc_id AS varchar))
-                       % 1000 AS th,
-                     md5_number_upper('auc_y:' || cast(doc_id AS varchar))
-                       % 1000000 AS yb
-              FROM documents
-            ),
-            r AS (
-              SELECT cast(round((cast(th AS double) / 1000.0) * 1000000)
-                       AS bigint) AS m,
-                     CASE WHEN yb < th * 1000 THEN 1 ELSE 0 END AS y
-              FROM s
-            ),
-            g AS (SELECT m, count(*) AS n, sum(y) AS np FROM r GROUP BY m),
-            c AS (
-              SELECT m, n, np,
-                     sum(n) OVER (ORDER BY m ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) - n AS lt
-              FROM g
-            ),
-            t AS (
-              SELECT sum(np * (2 * lt + n + 1)) AS s2,
-                     sum(np) AS n_pos, sum(n) - sum(np) AS n_neg
-              FROM c
-            )
-            SELECT cast(n_pos AS bigint) AS n_pos,
-                   cast(n_neg AS bigint) AS n_neg,
-                   round(cast(s2 - n_pos * (n_pos + 1) AS double)
-                         / cast(2 * n_pos * n_neg AS double), 6) AS auc
-            FROM t
-        """,
-        # PR operating-point table: identical bucket floor + descending
-        # cumulation, exact TP/FP/FN integers (see q_eval_pr_curve).
-        "eval_pr_curve": """
-            WITH s AS (
-              SELECT md5_number_upper('auc_s:' || cast(doc_id AS varchar))
-                       % 1000 AS th,
-                     md5_number_upper('auc_y:' || cast(doc_id AS varchar))
-                       % 1000000 AS yb
-              FROM documents
-            ),
-            r AS (
-              SELECT cast(round((cast(th AS double) / 1000.0) * 1000000)
-                       AS bigint) AS m,
-                     CASE WHEN yb < th * 1000 THEN 1 ELSE 0 END AS y
-              FROM s
-            ),
-            b AS (
-              SELECT least((m * 10) // 1000000, 9) AS bucket, y FROM r
-            ),
-            agg0 AS (
-              SELECT bucket, count(*) AS n, sum(y) AS np
-              FROM b GROUP BY bucket
-            ),
-            per AS (
-              -- dense threshold spine, mirroring the operator
-              SELECT s.bucket, coalesce(a.n, 0) AS n,
-                     coalesce(a.np, 0) AS np
-              FROM (SELECT unnest(generate_series(0, 9)) AS bucket) s
-              LEFT JOIN agg0 a USING (bucket)
-            ),
-            c AS (
-              SELECT bucket,
-                     sum(np) OVER wd AS tp,
-                     sum(n) OVER wd - sum(np) OVER wd AS fp,
-                     sum(np) OVER () - sum(np) OVER wd AS fn
-              FROM per
-              WINDOW wd AS (ORDER BY bucket DESC ROWS BETWEEN UNBOUNDED
-                            PRECEDING AND CURRENT ROW)
-            )
-            SELECT round(cast(bucket AS double) / 10.0, 6) AS threshold,
-                   cast(tp AS bigint) AS tp,
-                   cast(fp AS bigint) AS fp,
-                   cast(fn AS bigint) AS fn,
-                   CASE WHEN tp + fp <> 0 THEN
-                     round(cast(tp AS double) / cast(tp + fp AS double), 6)
-                   END AS precision,
-                   CASE WHEN tp + fn <> 0 THEN
-                     round(cast(tp AS double) / cast(tp + fn AS double), 6)
-                   END AS recall,
-                   CASE WHEN 2 * tp + fp + fn <> 0 THEN
-                     round(cast(2 * tp AS double)
-                           / cast(2 * tp + fp + fn AS double), 6)
-                   END AS f1
-            FROM c
-        """,
         # Dyadic EWMA: integer hourly counts over powers of two are
         # exactly representable, so the UNROUNDED ewma column hashes
         # identically; row-based lags over present buckets only
@@ -12647,31 +6909,6 @@ def oracle_sql() -> dict[str, str]:
             FROM a LEFT JOIN (SELECT event_id, be FROM m WHERE rn = 1) m
               USING (event_id)
         """,
-        # Soft-dedup weights: identical md5 content classes over the
-        # replay-planted corpus; weight = ONE round-6 division
-        # (see q_dedup_soft_weights).
-        "dedup_soft_weights": """
-            WITH corpus AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL SELECT doc_id, text FROM documents
-                WHERE doc_id % 7 = 0
-              UNION ALL SELECT doc_id, text FROM documents
-                WHERE doc_id % 7 = 0
-              UNION ALL SELECT doc_id, text FROM documents
-                WHERE doc_id % 13 = 0
-            )
-            SELECT doc_id,
-                   cast(count(*) OVER (
-                     PARTITION BY md5(coalesce(text, ''))
-                   ) AS bigint) AS family_size,
-                   round(cast(1 AS double) / cast(count(*) OVER (
-                     PARTITION BY md5(coalesce(text, ''))
-                   ) AS double), 6) AS weight
-            FROM corpus
-        """,
-        "text_textrank": _textrank_oracle_sql(
-            iterations=3, damping=0.85, k=20
-        ),
         # Best-lag cross-correlation: identical dense-range moment
         # algebra; the shifted co-activity join is written the other
         # way around (cb.bucket = ca.bucket + lag) as an independence
@@ -12773,66 +7010,7 @@ def oracle_sql() -> dict[str, str]:
             JOIN base ON base.g = c.g AND base.how = c.how
             CROSS JOIN nw
         """,
-        # Seeded-Laplace DP counts: identical md5 inverse-CDF noise
-        # chain; sign(±1) multiplications are exact so operand order
-        # is immaterial, and the one ln's ULP is absorbed by the
-        # post-add round-6 (see q_events_dp_counts).
-        # Assistant-refusal profile over the planted transcripts: the
-        # OR-of-contains predicate is GENERATED from the same
-        # REFUSAL_PATTERNS tuple the operator scans (single source of
-        # truth), literal substrings — no regex dialect seam
-        # (see q_transcript_refusals).
-        "transcript_refusals": _refusal_oracle_sql(),
         "events_profile_drift": _profile_drift_oracle_sql(),
-        # Burrows' Delta: identical fixed-point z chain; the
-        # zero-variance exclusion is an exact integer comparison on
-        # both engines (see q_text_stylometry).
-        "text_stylometry": """
-            WITH toks AS (
-              SELECT source AS src,
-                     unnest(regexp_extract_all(lower(text),
-                       '[a-z0-9]{2,}')) AS term
-              FROM documents WHERE source IS NOT NULL
-            ),
-            counts AS (
-              SELECT src, term, count(*) AS c FROM toks GROUP BY 1, 2
-            ),
-            totals AS (SELECT src, sum(c) AS n FROM counts GROUP BY 1),
-            top AS (
-              SELECT term FROM (
-                SELECT term, row_number() OVER (
-                  ORDER BY sum(c) DESC, term ASC
-                ) AS rk
-                FROM counts GROUP BY term
-              ) WHERE rk <= 30
-            ),
-            grid AS (
-              SELECT t.src, tp.term,
-                     cast(round(cast(coalesce(c.c, 0) * 1000000 AS double)
-                                / cast(t.n AS double)) AS bigint) AS f
-              FROM totals t
-              CROSS JOIN top tp
-              LEFT JOIN counts c ON c.src = t.src AND c.term = tp.term
-            ),
-            mom AS (
-              SELECT term, count(*) AS s, sum(f) AS sf,
-                     sum(f * f) AS sf2
-              FROM grid GROUP BY term
-            ),
-            z AS (
-              SELECT g.src, g.term,
-                     cast(m.s * g.f - m.sf AS double)
-                       / sqrt(cast(m.s * m.sf2 - m.sf * m.sf AS double))
-                       AS z
-              FROM grid g JOIN mom m USING (term)
-              WHERE m.s * m.sf2 - m.sf * m.sf > 0
-            )
-            SELECT a.src AS a, b.src AS b,
-                   cast(count(*) AS bigint) AS n_terms,
-                   round(sum(abs(a.z - b.z)) / count(*), 6) AS delta
-            FROM z a JOIN z b ON a.term = b.term AND a.src < b.src
-            GROUP BY 1, 2
-        """,
         # Mann-Kendall + Theil-Sen: identical integer S / ×18 variance
         # / nearest-rank slope pick (see q_events_robust_trend).
         "events_robust_trend": """
@@ -12920,54 +7098,6 @@ def oracle_sql() -> dict[str, str]:
                          / cast(na * nb AS double), 6) AS ks_d
             FROM cum WHERE na > 0 AND nb > 0
             ORDER BY abs(ca * nb - cb * na) DESC, v ASC LIMIT 1
-        """,
-        # Cluster-balanced sampling: the shared unrolled-Lloyd CTE
-        # chain + an md5-priority window draw per cluster
-        # (see q_sample_cluster_balanced).
-        "sample_cluster_balanced": f"""
-            WITH {_kmeans_assign_ctes(4, 2, 1024)}
-            SELECT vec_id, cast(cluster AS bigint) AS cluster,
-                   cast(rk AS int) AS draw_rank
-            FROM (
-              SELECT id AS vec_id, cluster,
-                     row_number() OVER (
-                       PARTITION BY cluster
-                       ORDER BY md5_number_upper(
-                         'cbal:' || cast(id AS varchar)
-                       ), id
-                     ) AS rk
-              FROM assign2
-            ) WHERE rk <= 8
-        """,
-        # Vocabulary richness: identical token CTE + two cascaded
-        # integer aggregates; bias-corrected Chao1 and Good-Turing
-        # coverage are each one round-6 division
-        # (see q_text_vocab_richness).
-        "text_vocab_richness": """
-            WITH toks AS (
-              SELECT unnest(regexp_extract_all(lower(text),
-                       '[a-z0-9]{2,}')) AS term
-              FROM documents WHERE doc_id % 5 = 0
-            ),
-            tf AS (SELECT term, count(*) AS c FROM toks GROUP BY term),
-            agg AS (
-              SELECT count(*) AS s_obs, sum(c) AS n,
-                     sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS f1,
-                     sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS f2
-              FROM tf
-            )
-            SELECT cast(s_obs AS bigint) AS s_obs,
-                   cast(n AS bigint) AS n_tokens,
-                   cast(f1 AS bigint) AS f1,
-                   cast(f2 AS bigint) AS f2,
-                   CASE WHEN n > 0 THEN
-                     round(s_obs + cast(f1 * (f1 - 1) AS double)
-                           / cast(2 * (f2 + 1) AS double), 6)
-                   END AS chao1,
-                   CASE WHEN n > 0 THEN
-                     round(1.0 - cast(f1 AS double) / cast(n AS double), 6)
-                   END AS coverage
-            FROM agg
         """,
         "events_dp_counts": """
             WITH c AS (

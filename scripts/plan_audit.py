@@ -142,11 +142,6 @@ def main(sf_dir: str) -> int:
         ["HashAggregate"],
         must_not=["SortAggregate"],
     )
-    check(
-        "topk_no_global_sort",
-        em.q_similarity_topk(spark, sf_dir),
-        ["TakeOrderedAndProject"],
-    )
     from threat_intelligence_knowledge_graph_spark.operators.chunker import (
         chunk_documents,
     )
@@ -200,31 +195,7 @@ def main(sf_dir: str) -> int:
         failures.append(("fused_single_exchange", n_exchanges))
         print(f"FAIL fused_single_exchange: exchanges={n_exchanges}")
 
-    # single-scan banded near-dup: after execution AQE must reuse the
-    # signature exchange for the self-join (one signature computation).
-    from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    nd = embedding_near_duplicates(emb, threshold=0.99, dim=int(emb.select(F.size("embedding")).first()[0]))
-    nd.collect()
-    executed = nd._jdf.queryExecution().executedPlan().toString()
-    if "ReusedExchange" in executed:
-        print("PASS neardup_reused_exchange")
-    else:
-        failures.append(("neardup_reused_exchange", "no ReusedExchange"))
-        print("FAIL neardup_reused_exchange: signature self-join not reused")
-
     # round 3 shapes -------------------------------------------------------
-    # Decontamination: the eval-gram side must broadcast (the corpus gram
-    # stream is never shuffled on the gram key).
-    check(
-        "decontaminate_broadcast_eval",
-        em.q_ngram_decontaminate(spark, sf_dir),
-        ["BroadcastHashJoin"],
-        must_not=["SortMergeJoin"],
-    )
     # Stratified sampling: a pure scan+filter — no exchange, no Python.
     check(
         "stratified_sample_no_shuffle",
@@ -291,14 +262,6 @@ def main(sf_dir: str) -> int:
         ["Join", "partial_min"],
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
     )
-    check(
-        # PII scrub is one projection over the scan: no shuffle, no
-        # Python, and column pruning reaches the reader.
-        "scrub_pii_single_projection",
-        em.q_text_scrub_pii(spark, sf_dir),
-        ["Project"],
-        must_not=["Exchange", "EvalPython"],
-    )
     # round 5 shapes -------------------------------------------------------
     # rcATT store normalization must use the Catalyst py_title/node_id
     # twins, never a per-row Python UDF (the r4 verdict nit).
@@ -329,18 +292,6 @@ def main(sf_dir: str) -> int:
         em.q_events_type_cooccurrence(spark, sf_dir),
         ["Join"],
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    )
-    check(
-        # tfidf: the only nested-loop join allowed is the ONE-ROW
-        # broadcast of N; the tf⋈df join must be keyed, the per-doc
-        # window must not collapse to SinglePartition (the 1-row count
-        # agg is the single legitimate SinglePartition, asserted by
-        # count).
-        "tfidf_window_partitioned",
-        em.q_text_tfidf_top_terms(spark, sf_dir),
-        ["Window"],
-        must_not=["CartesianProduct", "EvalPython"],
-        max_counts={"SinglePartition": 1},
     )
     check(
         # as-of join is the union-merge plan: exactly ONE key exchange,
@@ -378,120 +329,17 @@ def main(sf_dir: str) -> int:
         must_not=["SortMergeJoin", "CartesianProduct", "EvalPython"],
     )
     check(
-        # int8-SQ ANN: candidate scan ends in TakeOrderedAndProject
-        # (per-partition top-k) — a global Sort for the candidate cut
-        # would defeat the whole point; no Python in the scoring path.
-        "sq_topk_take_ordered",
-        em.q_similarity_sq_topk(spark, sf_dir),
-        ["TakeOrderedAndProject"],
-        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    )
-    check(
-        # span dedup: the duplicated-gram set joins back by its md5
-        # hash — keyed equi-joins only, no Python; the gram-count
-        # shuffle is the one irreducible exchange.
-        "span_dedup_keyed_joins_only",
-        em.q_span_dup_stats(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    )
-    check(
-        # SemDeDup: the in-cluster pair stage must be a (cluster)-keyed
-        # equi-join — an all-pairs fallback (cartesian / nested-loop)
-        # would defeat the cluster-then-dedup point — and the whole op
-        # stays JVM-side (integer k-means + Catalyst cosine).
-        "semantic_dedup_cluster_keyed_pairs",
-        em.q_semantic_dedup(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    )
-    check(
-        # DSIR: both bucket histograms (≤dim rows) and the two 1-row
-        # totals must come back as broadcasts — a SortMergeJoin on
-        # `bucket` would shuffle the full per-doc feature aggregate;
-        # the whole scoring chain stays JVM-side.
-        "dsir_broadcast_histograms",
-        em.q_dsir_weights(spark, sf_dir),
-        ["BroadcastHashJoin"],
-        must_not=["SortMergeJoin", "CartesianProduct", "EvalPython"],
-    )
-    check(
-        # conversation near-dup: pair generation is an inverted-index
-        # equi-join on the turn-content hash — all-pairs fallbacks
-        # (cartesian / nested-loop) would be quadratic in conversations.
-        "conv_near_dup_keyed_joins_only",
-        em.q_conv_near_dup(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython"],
-    )
-    check(
         # NPMI collocation: pairs come from ONE group-keyed self-join;
         # marginals and the 1-row N come back as broadcasts. A cartesian
         # or a SortMergeJoin on `item` would defeat both bounds; the
         # whole chain stays JVM-side.
         # (the 1-row N crossJoin plans as a BroadcastNestedLoopJoin with a
-        # single-row inner side — the dsir-totals shape — so only true
+        # single-row inner side, so only true
         # cartesians are banned here.)
         "cooccur_npmi_keyed_join_broadcast_marginals",
         em.q_events_cooccur_npmi(spark, sf_dir),
         ["BroadcastHashJoin", "HashAggregate"],
         must_not=["CartesianProduct", "EvalPython"],
-    )
-    check(
-        # Negative sampling: the replacement joins BROADCAST through the
-        # dictionary index; the only shuffle is the (s, p, o) anti-join.
-        # Per-row Python or a nested-loop join would put the 10^12-row
-        # negative stream on the slow path.
-        "negative_samples_broadcast_dictionary",
-        em.q_kg_negative_samples(spark, sf_dir),
-        ["BroadcastHashJoin"],
-        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    )
-    # transcript sessionize: the lag window and the running gap-flag sum
-    # share ONE conv_id exchange; the whole chain stays JVM-side.
-    sz_plan = plan_of(em.q_transcript_sessionize(spark, sf_dir))
-    n_ex = len(_re.findall(r"^\(\d+\) Exchange", sz_plan, _re.MULTILINE))
-    if n_ex <= 1 and "EvalPython" not in sz_plan:
-        print("PASS transcript_sessionize_single_exchange")
-    else:
-        failures.append(("transcript_sessionize_single_exchange", f"exchanges={n_ex}"))
-        print(f"FAIL transcript_sessionize_single_exchange: exchanges={n_ex}")
-    # SFT pair mining: the lead() windows share ONE conv_id exchange.
-    sft_plan = plan_of(em.q_sft_pairs(spark, sf_dir))
-    n_ex = len(_re.findall(r"^\(\d+\) Exchange", sft_plan, _re.MULTILINE))
-    if n_ex <= 1 and "EvalPython" not in sft_plan:
-        print("PASS sft_pairs_single_exchange")
-    else:
-        failures.append(("sft_pairs_single_exchange", f"exchanges={n_ex}"))
-        print(f"FAIL sft_pairs_single_exchange: exchanges={n_ex}")
-    # transcript stats: the lag window and the per-conv agg share ONE
-    # conv_id hash exchange (window partition key == groupBy key) — a
-    # second exchange would double-shuffle the 10^12-turn input.
-    ts_plan = plan_of(em.q_transcript_stats(spark, sf_dir))
-    n_ex = len(_re.findall(r"^\(\d+\) Exchange", ts_plan, _re.MULTILINE))
-    if n_ex <= 1 and "EvalPython" not in ts_plan:
-        print("PASS transcript_stats_single_exchange")
-    else:
-        failures.append(("transcript_stats_single_exchange", f"exchanges={n_ex}"))
-        print(f"FAIL transcript_stats_single_exchange: exchanges={n_ex}")
-    check(
-        # BM25: top-k must be TakeOrderedAndProject (never a global
-        # sort of the scored corpus); df joins broadcast; the whole
-        # chain stays JVM-side. (The 1-row (N, Σdl) constants ride a
-        # BroadcastNestedLoopJoin by design — build side is one row.)
-        "bm25_take_ordered_broadcast_df",
-        em.q_text_bm25_search(spark, sf_dir),
-        ["TakeOrderedAndProject", "BroadcastHashJoin"],
-        must_not=["CartesianProduct", "EvalPython"],
-    )
-    check(
-        # Top n-grams: the Zipf head must collapse map-side (partial
-        # HashAggregate before the exchange) and the cut must be
-        # TakeOrderedAndProject.
-        "top_ngrams_take_ordered_partial_agg",
-        em.q_corpus_top_ngrams(spark, sf_dir),
-        ["TakeOrderedAndProject", "HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
     )
     check(
         # Markov transitions: marginals join BROADCAST (states² rows);
@@ -521,7 +369,7 @@ def main(sf_dir: str) -> int:
         must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
     )
     # Beacon regularity: the lag window and the (user, type) aggregate
-    # share ONE hash exchange — same discipline as transcript_stats.
+    # share ONE hash exchange.
     bc_plan = plan_of(em.q_events_beacons(spark, sf_dir))
     n_ex = len(_re.findall(r"^\(\d+\) Exchange", bc_plan, _re.MULTILINE))
     if n_ex <= 1 and "EvalPython" not in bc_plan:
@@ -564,16 +412,6 @@ def main(sf_dir: str) -> int:
         must_not=["CartesianProduct", "EvalPython"],
     )
     check(
-        # Containment: candidate generation and exact-intersection
-        # joins are keyed equi-joins (shingle / pair keys) — the
-        # all-pairs cartesian is exactly what the inverted-index cap
-        # exists to avoid; whole chain JVM-side.
-        "containment_keyed_joins",
-        em.q_ngram_containment(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
-    )
-    check(
         # Correlation: per-group moments join BROADCAST (dimension-
         # sized), the pair space comes from the bucket-keyed self-join
         # — never cartesian. (The 1-row bucket-universe constant rides
@@ -584,86 +422,6 @@ def main(sf_dir: str) -> int:
         must_not=["CartesianProduct", "EvalPython"],
     )
     check(
-        # Source overlap: the pair intersection is a hash-keyed
-        # self-join; dimension-sized size tables join BROADCAST;
-        # JVM-side throughout.
-        "source_overlap_hash_keyed",
-        em.q_source_overlap(spark, sf_dir),
-        ["BroadcastHashJoin", "HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
-    )
-    check(
-        # BPE tokenize: per-doc word counts join the trained vocab on
-        # the word hash key; JVM-side throughout (the delimiter-replace
-        # merge is a codegen'd projection, never Python); no cartesian.
-        "bpe_tokenize_hash_join_no_python",
-        em.q_bpe_token_counts(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
-    )
-    # Agent-trace triage family: loop detection must stay on ONE
-    # conv_id exchange (lag window, run-id cumsum, per-run position
-    # window, per-conv agg — the (conv, run) window key is a superset
-    # of conv_id so only a local re-sort is added) with no self-join;
-    # the whole family is JVM-side.
-    lp_plan = plan_of(em.q_transcript_loops(spark, sf_dir))
-    n_ex = len(_re.findall(r"^\(\d+\) Exchange", lp_plan, _re.MULTILINE))
-    if n_ex <= 1 and "EvalPython" not in lp_plan and "Join" not in lp_plan:
-        print("PASS transcript_loops_single_exchange_no_join")
-    else:
-        failures.append(
-            ("transcript_loops_single_exchange_no_join", f"exchanges={n_ex}")
-        )
-        print(f"FAIL transcript_loops_single_exchange_no_join: exchanges={n_ex}")
-    cg_plan = plan_of(em.q_transcript_context_growth(spark, sf_dir))
-    n_ex = len(_re.findall(r"^\(\d+\) Exchange", cg_plan, _re.MULTILINE))
-    if n_ex <= 1 and "EvalPython" not in cg_plan:
-        print("PASS transcript_context_growth_single_exchange")
-    else:
-        failures.append(
-            ("transcript_context_growth_single_exchange", f"exchanges={n_ex}")
-        )
-        print(
-            f"FAIL transcript_context_growth_single_exchange: exchanges={n_ex}"
-        )
-    check(
-        # Tool errors: scan-local regex filter + ONE map-side-combining
-        # aggregate (the 2nd exchange is the exact-distinct conv count's
-        # (tool, conv) pre-shuffle — inherent to exactness); tool chains:
-        # the family's conv_id lag window + the |tools|²-row transition
-        # aggregate. Both JVM-side, never cartesian.
-        "tool_errors_jvm_side",
-        em.q_transcript_tool_errors(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "SortMergeJoin"],
-    )
-    check(
-        "tool_chains_jvm_side",
-        em.q_transcript_tool_chains(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "SortMergeJoin"],
-    )
-    check(
-        # Line dedup: ONE md5-keyed count+min aggregation, keyed join
-        # back, per-doc ordered rejoin (sort_array inside the agg) —
-        # JVM-side, never cartesian, and NO full-corpus window (the
-        # first-occurrence pick is the min-struct aggregate, not a
-        # rank over every line).
-        "line_dedup_keyed_join_no_window",
-        em.q_line_dedup(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "Window"],
-    )
-    check(
-        # Outcomes: loop_detection's conv_id window family + max_by
-        # aggregates + conv_id-keyed verdict joins; JVM-side, never
-        # cartesian.
-        "transcript_outcomes_keyed_joins",
-        em.q_transcript_outcomes(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct"],
-    )
-    check(
         # Assortativity: keyed degree equi-joins + 1-row aggregates
         # (the 1-row×1-row combine broadcasts; a row-explosive
         # cartesian never appears).
@@ -671,108 +429,6 @@ def main(sf_dir: str) -> int:
         em.q_graph_assortativity(spark, sf_dir),
         ["HashAggregate"],
         must_not=["EvalPython", "CartesianProduct"],
-    )
-    check(
-        # Fertility: scan-local regex token count + ONE map-side-
-        # combining aggregate to <= |sources| rows; family histogram:
-        # two cascaded integer aggregates (hash keys only), no window,
-        # no join at all.
-        "corpus_fertility_single_agg",
-        em.q_corpus_fertility(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "Window", "Join"],
-    )
-    check(
-        "dedup_family_sizes_cascaded_aggs",
-        em.q_dedup_family_sizes(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "Window", "Join"],
-    )
-    check(
-        # Gopher rules: one codegen'd projection — split/regexp/length
-        # arithmetic on the row, no exchange at all.
-        "gopher_rules_scan_local",
-        em.q_gopher_rules(spark, sf_dir),
-        ["Project"],
-        must_not=["EvalPython", "CartesianProduct", "Window", "Join",
-                  "Exchange"],
-    )
-    check(
-        # Triple P/R: the composite-key join against the gold slice
-        # must honor the explicit broadcast hint (gold is labeled data,
-        # small by construction) — never a sort-merge of the corpus.
-        "eval_triple_pr_broadcast_gold",
-        em.q_eval_triple_pr(spark, sf_dir),
-        ["BroadcastHashJoin"],
-        must_not=["EvalPython", "CartesianProduct", "SortMergeJoin"],
-    )
-    check(
-        # Pairwise clustering P/R via contingency cells: keyed
-        # count-aggs only — the item table is never joined with itself,
-        # so a hot mega-cluster cannot explode the plan. (The three
-        # 1-row metric frames combine via broadcast nested loop, which
-        # is 1-row x 1-row — cheap; a CartesianProduct over row data
-        # must not appear.)
-        "eval_cluster_pairwise_no_pair_explosion",
-        em.q_eval_cluster_pairwise(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct"],
-    )
-    # Preference mining: the chosen/rejected rank windows and their
-    # group aggregates must SHARE the prompt exchange (window partition
-    # key == groupBy key — one shuffle per side, then the prompt-keyed
-    # join); everything JVM-side, never cartesian.
-    dpo_plan = plan_of(em.q_dpo_pairs(spark, sf_dir))
-    n_prompt_ex = len(
-        _re.findall(
-            r"^\(\d+\) Exchange hashpartitioning\(prompt", dpo_plan, _re.MULTILINE
-        )
-    )
-    if (
-        n_prompt_ex <= 3  # chosen side, rejected side, (AQE may reuse)
-        and "EvalPython" not in dpo_plan
-        and "CartesianProduct" not in dpo_plan
-    ):
-        print("PASS dpo_pairs_shared_prompt_exchange")
-    else:
-        failures.append(
-            ("dpo_pairs_shared_prompt_exchange", f"prompt_exchanges={n_prompt_ex}")
-        )
-        print(f"FAIL dpo_pairs_shared_prompt_exchange: prompt_exchanges={n_prompt_ex}")
-    bon_plan = plan_of(em.q_best_of_n_pairs(spark, sf_dir))
-    n_prompt_ex = len(
-        _re.findall(
-            r"^\(\d+\) Exchange hashpartitioning\(prompt", bon_plan, _re.MULTILINE
-        )
-    )
-    if (
-        n_prompt_ex <= 1
-        and "EvalPython" not in bon_plan
-        and "Join" not in bon_plan
-    ):
-        print("PASS best_of_n_single_prompt_exchange")
-    else:
-        failures.append(
-            ("best_of_n_single_prompt_exchange", f"prompt_exchanges={n_prompt_ex}")
-        )
-        print(f"FAIL best_of_n_single_prompt_exchange: prompt_exchanges={n_prompt_ex}")
-    # 60: bigram LM stays JVM-side — no Python eval, hash (not sort)
-    # aggregates throughout, and no cartesian anywhere in the two
-    # model joins.
-    check(
-        "bigram_logprob_jvm_only",
-        em.q_text_bigram_logprob(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "SortAggregate", "CartesianProduct"],
-    )
-    # 61: datasheet avoids the multi-distinct expand — three separate
-    # map-side-distinct aggregates, so no Expand node in the plan, and
-    # no Python eval.
-    check(
-        "source_datasheet_no_expand",
-        em.q_source_datasheet(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["Expand", "EvalPython", "CartesianProduct"],
     )
     # 62: curriculum assignment is a pure scan-local projection — the
     # boundary collect happens at build time; the returned frame must
@@ -783,38 +439,6 @@ def main(sf_dir: str) -> int:
         em.q_curriculum_order(spark, sf_dir),
         ["Scan parquet"],
         must_not=["Sort", "Exchange", "Join", "HashAggregate", "EvalPython"],
-    )
-    # 63: bag-of-words dedup = ONE 32-byte-key exchange (plus AQE
-    # union reads), fingerprint scan-local, no Python.
-    check(
-        "dedup_bow_single_hash_exchange",
-        em.q_dedup_bow(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "SortAggregate", "CartesianProduct"],
-        max_counts={"Exchange hashpartitioning": 1},
-    )
-    # 64: prefix-filter Jaccard join — keyed equi-joins only (the
-    # candidate join keys on prefix tokens, verification on ids); a
-    # naive all-pairs implementation would show CartesianProduct or
-    # BroadcastNestedLoopJoin here.
-    check(
-        "jaccard_prefix_join_no_cartesian",
-        em.q_jaccard_prefix_join(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=[
-            "CartesianProduct",
-            "BroadcastNestedLoopJoin",
-            "EvalPython",
-        ],
-    )
-    # 65: paragraph dedup — boilerplate set joins back by hash key as
-    # a LeftAnti (never a collect/broadcast-literal filter), reassembly
-    # is a keyed aggregate; no Python anywhere.
-    check(
-        "paragraph_dedup_anti_join",
-        em.q_dedup_paragraphs(spark, sf_dir),
-        ["LeftAnti", "HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"],
     )
     # 66: sorted-neighborhood pair generation is a keyed equi-join on
     # the rank block (never a cartesian/range join), rank windows are
@@ -877,14 +501,6 @@ def main(sf_dir: str) -> int:
         ["HashAggregate"],
         must_not=["EvalPython", "CartesianProduct", "SortAggregate"],
     )
-    # 72: readability is a pure scan-local codegen'd projection —
-    # three regexp counts, no exchange/join/agg/Python anywhere.
-    check(
-        "readability_scan_local",
-        em.q_text_readability(spark, sf_dir),
-        ["Scan parquet"],
-        must_not=["Exchange", "Join", "HashAggregate", "EvalPython", "Sort"],
-    )
     # 73: weighted sampling is priority projection + ONE
     # TakeOrderedAndProject (never a global sort/window over the
     # corpus); the rank window runs over the k surviving rows only, so
@@ -925,15 +541,6 @@ def main(sf_dir: str) -> int:
         em.q_graph_transitivity(spark, sf_dir),
         ["HashAggregate"],
         must_not=["CartesianProduct", "EvalPython", "SortAggregate"],
-    )
-    # 76: rank_eval — BM25 rankers bound the data (TakeOrdered), the
-    # hits window and per-query aggregate run over <= k rows per
-    # query, everything JVM-side.
-    check(
-        "rank_eval_jvm_only",
-        em.q_search_rank_eval(spark, sf_dir),
-        ["TakeOrderedAndProject", "Window"],
-        must_not=["CartesianProduct", "EvalPython"],
     )
     # 77: rich-club — the ordered window runs over the MERGED DEGREE
     # HISTOGRAM (dimension-sized), never the graph; joins are keyed.
@@ -1040,26 +647,6 @@ def main(sf_dir: str) -> int:
     else:
         failures.append(("value_pct_single_window_exchange", f"exchanges={n_ex}"))
         print(f"FAIL value_pct_single_window_exchange: exchanges={n_ex}")
-    # 89: reciprocal best match — candidate generation is the audited
-    # batch_topk broadcast score matrix; the mutuality check itself is
-    # windows + ONE keyed equi-join on the reversed pair, never a
-    # cartesian, all JVM-side.
-    check(
-        "mutual_best_keyed_mutuality",
-        em.q_similarity_mutual_best(spark, sf_dir),
-        ["Window"],
-        must_not=["CartesianProduct", "EvalPython"],
-    )
-    # 90: calibration table — scan-local fixed-pointing + ONE
-    # map-side-combining aggregate over <= n_bins groups; no join, no
-    # Python.
-    plan = plan_of(em.q_eval_calibration(spark, sf_dir))
-    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
-    if n_ex <= 1 and "EvalPython" not in plan and "Join" not in plan:
-        print("PASS calibration_single_aggregate")
-    else:
-        failures.append(("calibration_single_aggregate", f"exchanges={n_ex}"))
-        print(f"FAIL calibration_single_aggregate: exchanges={n_ex}")
     # 91: Hill tail — two histogram aggregates then a 1-row stat; all
     # hash aggregates, no Python, no cartesian.
     check(
@@ -1068,28 +655,6 @@ def main(sf_dir: str) -> int:
         ["HashAggregate"],
         must_not=["CartesianProduct", "EvalPython", "SortAggregate"],
     )
-    # 92: ROC-AUC — distinct-score aggregate, then the cumulative-rank
-    # window over the quantization-bounded group table, then one global
-    # agg; no join, no Python.
-    check(
-        "roc_auc_rank_window",
-        em.q_eval_roc_auc(spark, sf_dir),
-        ["HashAggregate", "Window"],
-        must_not=["CartesianProduct", "EvalPython", "Join"],
-    )
-    # 93: PR curve — ONE bucket aggregate joined onto the n-row dense
-    # threshold spine (a Range source, dimension-sized), then windows
-    # over exactly n_thresholds rows; no Python, no cartesian.
-    plan = plan_of(em.q_eval_pr_curve(spark, sf_dir))
-    if (
-        "EvalPython" not in plan
-        and "CartesianProduct" not in plan
-        and "Range" in plan
-    ):
-        print("PASS pr_curve_bucket_cumulation")
-    else:
-        failures.append(("pr_curve_bucket_cumulation", "shape"))
-        print("FAIL pr_curve_bucket_cumulation: shape")
     # 94: dyadic EWMA — one (group, bucket) count aggregate, then ONE
     # group-keyed window (all L lags share a single sort); no join, no
     # Python, no single-partition exchange.
@@ -1122,24 +687,6 @@ def main(sf_dir: str) -> int:
     else:
         failures.append(("nearest_join_union_merge", f"exchanges={n_ex}"))
         print(f"FAIL nearest_join_union_merge: exchanges={n_ex}")
-    # 97: soft-dedup weights — ONE md5-keyed window exchange (no
-    # groupBy+rejoin), text dropped before the shuffle, no Python.
-    plan = plan_of(em.q_dedup_soft_weights(spark, sf_dir))
-    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
-    if n_ex == 1 and "Join" not in plan and "EvalPython" not in plan:
-        print("PASS soft_dedup_single_window_exchange")
-    else:
-        failures.append(("soft_dedup_single_window_exchange", f"exchanges={n_ex}"))
-        print(f"FAIL soft_dedup_single_window_exchange: exchanges={n_ex}")
-    # 98: TextRank — scan-local pair generation (token arrays never
-    # shuffle), keyed joins for the rank loop, TakeOrderedAndProject
-    # for the top-k; no Python, no cartesian.
-    check(
-        "textrank_jvm_topk",
-        em.q_text_textrank(spark, sf_dir),
-        ["TakeOrderedAndProject"],
-        must_not=["CartesianProduct", "EvalPython"],
-    )
     # 99: best-lag correlation — bucket-keyed co-activity join with
     # bounded lag fan-out; the lag table and moments broadcast; no
     # cartesian between data-sized frames, no Python.
@@ -1166,30 +713,6 @@ def main(sf_dir: str) -> int:
         ["HashAggregate"],
         must_not=["CartesianProduct", "EvalPython", "Join", "Window"],
     )
-    # 102: refusal profile — scan-local contains projection + ONE
-    # keyed aggregate; no join, no window, no Python.
-    check(
-        "refusal_single_aggregate",
-        em.q_transcript_refusals(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "Join", "Window"],
-    )
-    # 103: cluster-balanced sample — the audited kmeans joins plus ONE
-    # cluster-keyed window; no Python, no cartesian.
-    check(
-        "cluster_balanced_window_draw",
-        em.q_sample_cluster_balanced(spark, sf_dir),
-        ["Window"],
-        must_not=["CartesianProduct", "EvalPython"],
-    )
-    # 104: vocab richness — two cascaded aggregates + a 1-row stat; no
-    # join, no window, no Python.
-    check(
-        "vocab_richness_cascaded_aggs",
-        em.q_text_vocab_richness(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "Join", "Window"],
-    )
     # 105: profile drift — one aggregate pass per batch (the
     # multi-distinct expand is schema-bounded) + a schema-sized join;
     # no window, no Python, no cartesian.
@@ -1198,15 +721,6 @@ def main(sf_dir: str) -> int:
         em.q_events_profile_drift(spark, sf_dir),
         ["HashAggregate"],
         must_not=["CartesianProduct", "EvalPython", "Window"],
-    )
-    # 106: stylometry — vocabulary-keyed counts, one ordered top-m cut,
-    # then S×m-grid joins; no Python. (The totals × top-m cross join is
-    # dimension × dimension — the one sanctioned cartesian shape.)
-    check(
-        "stylometry_grid_joins",
-        em.q_text_stylometry(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "SortAggregate"],
     )
     # 107: robust trend — group-keyed pair self-join (documented
     # quadratic fan-out in BUCKET count, not rows) + keyed aggs and

@@ -1,6 +1,14 @@
+import os
+
 import pytest
 
 from threat_intelligence_knowledge_graph_spark.session import build_session
+
+# build_session's 48g default heap lets the test driver grow past the RAM
+# of a 16 GB host until the kernel kills it mid-suite. 8g holds the
+# largest test broadcast (test_enrich's all-matches join, which fails
+# at 4g).
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
 
 
 @pytest.fixture(scope="session")

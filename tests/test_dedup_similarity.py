@@ -1,526 +1,7 @@
-"""Tests for dedup suite + similarity search over driver testdata."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-    exact_dedup,
-    exact_duplicates,
-    minhash_band_index,
-    minhash_dedup,
-    minhash_incremental_near_duplicates,
-    minhash_near_duplicates,
-    ngram_jaccard_pairs,
-    simhash_near_duplicates,
-    simhash_signatures_df,
-)
-from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-    assign_centroids,
-    brute_force_topk,
-    embedding_near_duplicates,
-    ivf_topk,
-    lsh_topk,
-    sample_centroids,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
-
-
-class TestExactDedup:
-    def test_synthetic_duplicates(self, spark):
-        df = spark.createDataFrame(
-            [(1, "same text"), (2, "same text"), (3, "other")], ["doc_id", "text"]
-        )
-        dups = exact_duplicates(df).collect()
-        assert len(dups) == 1 and dups[0].keep_id == 1 and dups[0].n_copies == 2
-        kept = {r.doc_id for r in exact_dedup(df).collect()}
-        assert kept == {1, 3}
-
-    def test_real_documents_roundtrip(self, docs):
-        n = docs.count()
-        deduped = exact_dedup(docs).count()
-        assert 0 < deduped <= n
-
-
-class TestBowDedup:
-    def test_reordering_collapses_byte_dup_does_not(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            bow_duplicates,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "alpha beta gamma"),
-                (2, "gamma alpha beta"),  # reordering of 1 → same bag
-                (3, "alpha beta"),  # subset, NOT a bag match
-                (4, "alpha beta gamma gamma"),  # multiset differs
-                (5, ""),  # zero tokens: excluded
-                (6, ""),  # even though 5 and 6 share the empty bag
-            ],
-            ["doc_id", "text"],
-        )
-        fams = {r.bow_hash: r for r in bow_duplicates(df).collect()}
-        assert len(fams) == 1
-        (fam,) = fams.values()
-        assert fam.n_copies == 2 and fam.keep_id == 1
-        # byte-exact dedup sees nothing here
-        assert exact_duplicates(df.filter("doc_id <= 4")).count() == 0
-
-    def test_case_and_punct_normalized(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            bow_duplicates,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "Hello, World!"), (2, "world... HELLO")],
-            ["doc_id", "text"],
-        )
-        fams = bow_duplicates(df).collect()
-        assert len(fams) == 1 and fams[0].n_copies == 2
-
-
-class TestPrefixFilterPairs:
-    def test_hand_case(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            prefix_filter_pairs,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "aa bb cc dd ee"),
-                (2, "aa bb cc dd ff"),  # J(1,2) = 4/6 = 0.667
-                (3, "aa bb cc dd ee xx yy zz ww vv"),  # J(1,3) = 5/10
-                (4, "aa bb cc dd ee"),  # J(1,4) = 1.0
-            ],
-            ["doc_id", "text"],
-        )
-        got = {
-            (r.id_a, r.id_b): r
-            for r in prefix_filter_pairs(df, tau=0.6).collect()
-        }
-        assert set(got) == {(1, 2), (1, 4), (2, 4)}
-        assert got[(1, 4)].jaccard == 1.0 and got[(1, 4)].n_inter == 5
-        assert got[(1, 2)].n_inter == 4 and got[(1, 2)].n_union == 6
-        # tau above 4/6 drops the (1,2)/(2,4) pairs
-        strict = {
-            (r.id_a, r.id_b)
-            for r in prefix_filter_pairs(df, tau=0.9).collect()
-        }
-        assert strict == {(1, 4)}
-
-    def test_repr_long_tau_no_overflow(self, spark):
-        """tau=2/3 has a 16-digit repr; Fraction(str(tau)) would give
-        den~5e15 and den*|set| overflows bigint under ANSI mode.
-        limit_denominator recovers 2/3 exactly — large token sets must
-        not crash and must return the right pair."""
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            prefix_filter_pairs,
-        )
-
-        rows = [
-            (1, " ".join(f"tk{i}" for i in range(800))),
-            (2, " ".join(f"tk{i}" for i in range(700))),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = prefix_filter_pairs(df, tau=2 / 3).collect()
-        assert [(r.id_a, r.id_b, r.n_inter, r.n_union) for r in got] == [
-            (1, 2, 700, 800)
-        ]
-
-    def test_matches_brute_force(self, spark):
-        """The no-false-negative theorem, empirically: the prefix-filter
-        output equals brute-force all-pairs Jaccard on a seeded random
-        corpus with planted near-dup families."""
-        import random
-
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            prefix_filter_pairs,
-        )
-
-        rng = random.Random(42)
-        vocab = [f"w{i:02d}" for i in range(60)]
-        docs = []
-        for i in range(40):
-            base = rng.sample(vocab, rng.randint(5, 15))
-            docs.append((i, " ".join(base)))
-            if i % 4 == 0:  # plant a near-dup: drop one token
-                docs.append((1000 + i, " ".join(base[:-1])))
-        df = spark.createDataFrame(docs, ["doc_id", "text"])
-        tau = 0.7
-        got = {
-            (r.id_a, r.id_b, r.n_inter, r.n_union)
-            for r in prefix_filter_pairs(df, tau=tau).collect()
-        }
-        # brute force in plain Python
-        sets = {i: set(t.lower().split()) for i, t in docs}
-        exp = set()
-        ids = sorted(sets)
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                a, b = ids[x], ids[y]
-                ni = len(sets[a] & sets[b])
-                nu = len(sets[a] | sets[b])
-                if nu and 10 * ni >= 7 * nu:
-                    exp.add((a, b, ni, nu))
-        assert got == exp and len(exp) > 0
-
-
-class TestMinhashDedup:
-    def test_near_dup_pair_found(self, spark):
-        base = "the quick brown fox jumps over the lazy dog again and again " * 5
-        near = base.replace("lazy", "sleepy", 1)
-        far = "completely different content about spark shuffles and joins " * 5
-        df = spark.createDataFrame(
-            [(1, base), (2, near), (3, far)], ["doc_id", "text"]
-        )
-        pairs = minhash_near_duplicates(df, jaccard_threshold=0.5).collect()
-        assert {(r.a, r.b) for r in pairs} == {(1, 2)}
-        kept = {r.doc_id for r in minhash_dedup(df, jaccard_threshold=0.5).collect()}
-        assert kept == {1, 3}
-
-
-class TestSimhash:
-    def test_signature_deterministic(self, spark):
-        df = spark.createDataFrame([(1, "hello world"), (2, "hello world")], ["doc_id", "text"])
-        sigs = {r.doc_id: r.simhash for r in simhash_signatures_df(df).collect()}
-        assert sigs[1] == sigs[2]
-
-    def test_single_token_signature_is_token_hash(self, spark):
-        """A one-token doc's per-bit balance is ±1 exactly, so the
-        signature must equal the token's md5-derived 64-bit hash —
-        regression for the uint64-underflow bug that set every bit."""
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            _token_hash_u64,
-        )
-
-        df = spark.createDataFrame([(1, "hello")], ["doc_id", "text"])
-        sig = simhash_signatures_df(df).first().simhash
-        expected = _token_hash_u64("hello")
-        if expected >= 1 << 63:
-            expected -= 1 << 64
-        assert sig == expected
-        assert sig != -1
-
-    def test_near_duplicates(self, spark):
-        words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " * 8).split()
-        a = " ".join(words)
-        b = " ".join(words[:-1] + ["changed"])
-        c = " ".join(f"tok{i}" for i in range(80))
-        df = spark.createDataFrame([(1, a), (2, b), (3, c)], ["doc_id", "text"])
-        pairs = simhash_near_duplicates(df, max_hamming=8).collect()
-        got = {(r.a, r.b) for r in pairs}
-        assert (1, 2) in got and (1, 3) not in got and (2, 3) not in got
-
-    def test_bucket_cap_engages_on_degenerate_corpus(self, spark):
-        """A mass of empty docs all hashes to signature 0 — one O(n²)
-        bucket per band. The cap must drop those buckets (reported, not
-        silent) while pairs in healthy buckets still come through."""
-        words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " * 8).split()
-        a = " ".join(words)
-        b = " ".join(words[:-1] + ["changed"])
-        rows = [(1, a), (2, b)] + [(100 + i, "") for i in range(50)]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        pairs, dropped = simhash_near_duplicates(
-            df, max_hamming=8, max_bucket_size=10, return_dropped=True
-        )
-        got = {(r.a, r.b) for r in pairs.collect()}
-        assert (1, 2) in got  # healthy bucket unaffected
-        assert not any(x >= 100 and y >= 100 for x, y in got)  # capped, no n² blowup
-        drops = dropped.collect()
-        assert drops and all(r.bucket_size >= 50 for r in drops)  # reported
-
-    def test_cap_default_does_not_bite_small_corpus(self, spark):
-        """Default cap is far above any band bucket a healthy corpus
-        produces — pairs identical with and without the cap path."""
-        words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " * 8).split()
-        a = " ".join(words)
-        b = " ".join(words[:-1] + ["changed"])
-        df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
-        _, dropped = simhash_near_duplicates(
-            df, max_hamming=8, return_dropped=True
-        )
-        assert dropped.count() == 0
-
-
-class TestNgramJaccard:
-    def test_threshold(self, spark):
-        a = "one two three four five six seven eight nine ten " * 4
-        b = a.replace("five", "5", 1)
-        df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
-        pairs = ngram_jaccard_pairs(df, threshold=0.3).collect()
-        assert len(pairs) == 1 and 0.3 <= pairs[0].jaccard < 1.0
-
-
-class TestSimilarity:
-    def test_brute_force_matches_numpy(self, spark, embeddings):
-        rows = embeddings.limit(200).collect()
-        mat = np.asarray([list(r.embedding) for r in rows])
-        ids = np.asarray([r.vec_id for r in rows])
-        q = list(mat[0])
-        sub = spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
-            ["vec_id", "embedding"],
-        )
-        got = [r.vec_id for r in brute_force_topk(sub, q, k=5).collect()]
-        sims = (mat @ mat[0]) / (
-            np.linalg.norm(mat, axis=1) * np.linalg.norm(mat[0])
-        )
-        order = np.lexsort((ids, -sims))
-        assert got == [int(ids[i]) for i in order[:5]]
-
-    def test_lsh_topk_contains_self(self, spark, embeddings):
-        q = list(embeddings.filter("vec_id = 0").first().embedding)
-        got = [r.vec_id for r in lsh_topk(embeddings, q, k=5, probes=3).collect()]
-        assert got and got[0] == 0  # exact self-match survives bucketing
-
-    def test_ivf_topk_contains_self(self, spark, embeddings):
-        sub = embeddings.limit(300).cache()
-        cents = sample_centroids(sub, 8)
-        assigns = assign_centroids(sub, cents).cache()
-        q = list(sub.filter("vec_id = 5").first().embedding)
-        got = [r.vec_id for r in ivf_topk(sub, q, cents, assigns, k=5, n_probe=3).collect()]
-        assert 5 in got
-
-    def test_embedding_near_duplicates_self_similarity(self, spark):
-        v = [float(x) for x in np.random.RandomState(1).randn(16)]
-        v2 = [x * 1.001 for x in v]
-        other = [float(x) for x in np.random.RandomState(9).randn(16)]
-        df = spark.createDataFrame(
-            [(1, v), (2, v2), (3, other)], ["vec_id", "embedding"]
-        )
-        pairs = embedding_near_duplicates(df, threshold=0.99, n_planes=4).collect()
-        assert {(r.a, r.b) for r in pairs} == {(1, 2)}
-
-    def test_embedding_bucket_cap_engages_and_reports(self, spark):
-        """Degenerate corpus: many identical-direction vectors land in one
-        (band, bucket) per band. The cap must (a) exclude those buckets
-        from the self-join and report them, (b) never admit a false pair,
-        and (c) keep pairs discoverable when the cap is loose."""
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            embedding_candidate_pairs,
-        )
-
-        base = [float(x) for x in np.random.RandomState(3).randn(16)]
-        n = 60
-        rows = [(i, [x * (1.0 + 0.0001 * i) for x in base]) for i in range(n)]
-        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-        # Tight cap: every band's single mega-bucket is dropped.
-        capped = embedding_near_duplicates(
-            df, threshold=0.99, n_planes=4, max_bucket_size=10
-        )
-        assert capped.count() == 0
-        # Dropped-bucket report is non-empty with the same tight cap.
-        banded = df.select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("band"), F.lit(0).alias("bucket"))
-                        for b in range(2)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("vec_id", "bb.band", "bb.bucket")
-        _pairs, dropped = embedding_candidate_pairs(banded, max_bucket_size=10)
-        report = dropped.collect()
-        assert report and all(r.bucket_size == n for r in report)
-
-        # Loose cap (default): all identical-direction pairs found.
-        loose = embedding_near_duplicates(df, threshold=0.99, n_planes=4)
-        assert loose.count() == n * (n - 1) // 2
-
-        # return_dropped surfaces the capped buckets (no silent caps).
-        pairs2, dropped2 = embedding_near_duplicates(
-            df, threshold=0.99, n_planes=4, max_bucket_size=10,
-            return_dropped=True,
-        )
-        assert pairs2.count() == 0
-        assert dropped2.count() > 0
-        assert all(r.bucket_size == n for r in dropped2.collect())
-
-    def test_minhash_return_dropped(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            minhash_near_duplicates,
-        )
-
-        text = "alpha beta gamma delta epsilon zeta"
-        df = spark.createDataFrame(
-            [(i, text) for i in range(20)], ["doc_id", "text"]
-        )
-        pairs, dropped = minhash_near_duplicates(
-            df, max_bucket_size=5, return_dropped=True
-        )
-        assert pairs.count() == 0
-        assert {r.bucket_size for r in dropped.collect()} == {20}
-
-
-def _family_docs(n_families: int, variants: int, start_id: int = 0):
-    """Near-dup families: variant v of family f rewrites the last token —
-    long shared prefix keeps intra-family Jaccard high, families disjoint."""
-    rows = []
-    i = start_id
-    for f in range(n_families):
-        base = [f"fam{f}tok{j}" for j in range(10)]
-        for v in range(variants):
-            toks = base[:-1] + [f"fam{f}end{v}"]
-            rows.append((i, " ".join(toks)))
-            i += 1
-    return rows
-
-
-class TestIncrementalMinhash:
-    KW = dict(jaccard_threshold=0.5, max_bucket_size=64)
-
-    def _pairsets(self, df):
-        return {(r.a, r.b, round(r.jaccard, 9)) for r in df.collect()}
-
-    def test_incremental_equals_full_restricted(self, spark):
-        """Batch path over (old ∪ new), restricted to pairs touching a
-        new id, must equal the incremental path that never re-shingles
-        the old corpus."""
-        rows = _family_docs(6, 4)
-        # interleave: every 3rd doc arrives in the new batch
-        old_rows = [r for r in rows if r[0] % 3 != 0]
-        new_rows = [r for r in rows if r[0] % 3 == 0]
-        old = spark.createDataFrame(old_rows, ["doc_id", "text"])
-        new = spark.createDataFrame(new_rows, ["doc_id", "text"])
-        all_docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-        full = minhash_near_duplicates(all_docs, **self.KW)
-        new_ids = {r[0] for r in new_rows}
-        want = {
-            p
-            for p in self._pairsets(full)
-            if p[0] in new_ids or p[1] in new_ids
-        }
-
-        inc, new_idx, dropped = minhash_incremental_near_duplicates(
-            old, minhash_band_index(old), new, **self.KW
-        )
-        assert self._pairsets(inc) == want and want  # non-vacuous
-        assert dropped.count() == 0
-        # index maintenance rows cover exactly the batch ids
-        assert {r.doc_id for r in new_idx.select("doc_id").distinct().collect()} == new_ids
-
-    def test_two_batches_with_index_append(self, spark):
-        rows = _family_docs(4, 3)
-        b0 = [r for r in rows if r[0] % 3 == 0]
-        b1 = [r for r in rows if r[0] % 3 == 1]
-        b2 = [r for r in rows if r[0] % 3 == 2]
-        df0 = spark.createDataFrame(b0, ["doc_id", "text"])
-        df1 = spark.createDataFrame(b1, ["doc_id", "text"])
-        df2 = spark.createDataFrame(b2, ["doc_id", "text"])
-
-        idx0 = minhash_band_index(df0)
-        p1, idx1_rows, _ = minhash_incremental_near_duplicates(
-            df0, idx0, df1, **self.KW
-        )
-        p2, _, _ = minhash_incremental_near_duplicates(
-            df0.union(df1), idx0.union(idx1_rows), df2, **self.KW
-        )
-        # every full-corpus pair is reported exactly once across batches
-        full = minhash_near_duplicates(
-            spark.createDataFrame(rows, ["doc_id", "text"]), **self.KW
-        )
-        ids1 = {r[0] for r in b1}
-        got = self._pairsets(p1) | self._pairsets(p2)
-        want = self._pairsets(full)
-        # pairs entirely within batch 0 are pre-existing (never reported
-        # by the incremental runs) — restrict to pairs touching b1/b2.
-        ids12 = ids1 | {r[0] for r in b2}
-        want = {p for p in want if p[0] in ids12 or p[1] in ids12}
-        assert got == want and want
-        # no double-reporting: a pair touching batch 2 can only appear in
-        # the batch-2 run (its id didn't exist during batch 1).
-        assert not (self._pairsets(p1) & self._pairsets(p2))
-
-    def test_id_type_drift_fails_fast(self, spark):
-        """A batch whose id type differs from the persisted index must
-        raise a clear TypeError at plan-build time (before any index
-        appends), not an opaque least()/greatest() AnalysisException —
-        and never silently coerce, which would flip the a/b orientation
-        and the min-id survivor choice vs batch mode."""
-        import pytest
-
-        rows = _family_docs(3, 3)
-        old = spark.createDataFrame(rows, ["doc_id", "text"])
-        drifted = spark.createDataFrame(
-            [(str(1000 + i), t) for i, t in rows], ["doc_id", "text"]
-        )
-        with pytest.raises(TypeError, match="type drift"):
-            minhash_incremental_near_duplicates(
-                old, minhash_band_index(old), drifted, **self.KW
-            )
-
-    def test_combined_bucket_cap_not_evadable_by_batching(self, spark):
-        # 40 identical docs: 25 old + 15 new. cap=30 would pass either
-        # side alone; the combined bucket (40) must be dropped+reported.
-        text = "same same same same same same"
-        old = spark.createDataFrame(
-            [(i, text) for i in range(25)], ["doc_id", "text"]
-        )
-        new = spark.createDataFrame(
-            [(100 + i, text) for i in range(15)], ["doc_id", "text"]
-        )
-        pairs, _, dropped = minhash_incremental_near_duplicates(
-            old, minhash_band_index(old), new,
-            jaccard_threshold=0.5, max_bucket_size=30,
-        )
-        assert pairs.count() == 0
-        sizes = {r.bucket_size for r in dropped.collect()}
-        assert sizes == {40}
-
-
-class TestDedupProperties:
-    def test_exact_dedup_idempotent(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "c")], ["doc_id", "text"]
-        )
-        once = exact_dedup(df)
-        twice = exact_dedup(once)
-        assert {r.doc_id for r in once.collect()} == {r.doc_id for r in twice.collect()}
-
-    def test_minhash_dedup_idempotent(self, spark):
-        base = "the quick brown fox jumps over the lazy dog again " * 4
-        df = spark.createDataFrame(
-            [(1, base), (2, base.replace("dog", "cat", 1)), (3, "unrelated words entirely " * 6)],
-            ["doc_id", "text"],
-        )
-        once = minhash_dedup(df, jaccard_threshold=0.5)
-        twice = minhash_dedup(once, jaccard_threshold=0.5)
-        assert {r.doc_id for r in once.collect()} == {r.doc_id for r in twice.collect()}
-
-    def test_dedup_never_invents_rows(self, spark, docs):
-        assert exact_dedup(docs).count() <= docs.count()
+"""MinHash/LSH band-key regression test (operators/minhash.py)."""
 
 
 class TestReviewRegressionsR2:
-    def test_simhash_max_hamming_zero(self, spark):
-        """max_hamming=0 means exact-signature duplicates; must not
-        overflow a 64-bit band mask (review finding r2)."""
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            simhash_near_duplicates,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "same text here"), (2, "same text here"), (3, "totally different words")],
-            ["doc_id", "text"],
-        )
-        got = {(r.a, r.b) for r in simhash_near_duplicates(df, max_hamming=0).collect()}
-        assert (1, 2) in got and all(3 not in p for p in got)
-
     def test_band_keys_more_bands_than_hashes(self, spark):
         """bands > num_hashes: seedless tail bands are skipped (the old
         narrow path produced no rows for them; a zero-arg hash threw)."""
@@ -541,210 +22,3 @@ class TestReviewRegressionsR2:
 
         pairs, _ = lsh_candidate_pairs(banded)
         assert {(r.a, r.b) for r in pairs.collect()} == {(1, 2)}
-
-    def test_embedding_dedup_survivors(self, spark):
-        """Near-identical vectors collapse to min id; distinct directions
-        survive whole (same survivor policy as minhash_dedup)."""
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            embedding_dedup,
-        )
-
-        v = [float(x) for x in np.random.RandomState(3).randn(16)]
-        rows = [
-            (1, v),
-            (2, [x * 2.0 for x in v]),           # exact multiple of 1
-            (3, [float(x) for x in np.random.RandomState(8).randn(16)]),
-        ]
-        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-        kept = {r.vec_id for r in embedding_dedup(df, threshold=0.99, dim=16).collect()}
-        assert kept == {1, 3}
-
-
-class TestBatchTopk:
-    def test_matches_per_query_brute_force(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            batch_topk,
-            brute_force_topk,
-        )
-
-        rows = [(i, [float(i % 7 + 1), float((i * 3) % 5), 1.0]) for i in range(40)]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        queries = emb.filter("vec_id % 10 = 0").select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        got = batch_topk(emb, queries, k=3)
-        by_q = {}
-        for r in got.collect():
-            by_q.setdefault(r.query_id, []).append((r.vec_id, r.cosine))
-        assert set(by_q) == {0, 10, 20, 30}
-        for qid, hits in by_q.items():
-            qv = rows[qid][1]
-            want = [
-                (r.vec_id, round(r.cosine, 3))
-                for r in brute_force_topk(emb, qv, k=3).collect()
-            ]
-            # same members; batch ranks on rounded cosine, so compare sets
-            assert {v for v, _ in hits} == {v for v, _ in want} or \
-                   [c for _, c in hits] == [c for _, c in want]
-            assert len(hits) == 3
-
-
-class TestSqTopk:
-    def _emb(self, spark, n=200, dim=16, seed=3):
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        mat = rng.standard_normal((n, dim)).astype("float32")
-        rows = [(i, [float(x) for x in mat[i]]) for i in range(n)]
-        return (
-            spark.createDataFrame(rows, ["vec_id", "embedding"]),
-            mat.astype("float64"),
-        )
-
-    def test_top1_matches_brute_force(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            brute_force_topk,
-            sq_topk,
-        )
-
-        emb, mat = self._emb(spark)
-        q = [float(x) for x in mat[7]]
-        exact = brute_force_topk(emb, q, k=1).collect()[0]
-        approx = sq_topk(emb, q, k=1).collect()[0]
-        assert approx.vec_id == exact.vec_id == 7
-
-    def test_recall_at_10(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            brute_force_topk,
-            sq_topk,
-        )
-
-        emb, mat = self._emb(spark)
-        q = [float(x) for x in mat[0]]
-        exact = {r.vec_id for r in brute_force_topk(emb, q, k=10).collect()}
-        approx = {r.vec_id for r in sq_topk(emb, q, k=10, rerank_factor=4).collect()}
-        # int8 quantization at 16 dims keeps most of the neighborhood;
-        # deterministic fixture, so this is a fixed property not a flake.
-        assert len(exact & approx) >= 7
-
-    def test_quantization_clamps_and_is_integer(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            quantize_embeddings,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [10.0, -10.0, 0.5, 0.0])], ["vec_id", "embedding"]
-        )
-        got = quantize_embeddings(df, scale=1.0).collect()[0]
-        assert got.qvec == [127, -127, 64, 0]
-
-    def test_zero_norm_vectors_excluded(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            sq_topk,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.5, 0.5])],
-            ["vec_id", "embedding"],
-        )
-        got = sq_topk(df, [1.0, 0.0], k=3).collect()
-        assert [r.vec_id for r in got] == [2, 3]
-
-    def test_rejects_bad_params(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            quantize_embeddings,
-            sq_topk,
-        )
-
-        df = spark.createDataFrame([(1, [1.0])], ["vec_id", "embedding"])
-        import pytest as _pytest
-        with _pytest.raises(ValueError):
-            sq_topk(df, [1.0], k=0)
-        with _pytest.raises(ValueError):
-            quantize_embeddings(df, scale=0.0)
-
-
-class TestPqTopk:
-    def _emb(self, spark, n=200, dim=16, seed=3):
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        mat = rng.standard_normal((n, dim)).astype("float32")
-        rows = [(i, [float(x) for x in mat[i]]) for i in range(n)]
-        return (
-            spark.createDataFrame(rows, ["vec_id", "embedding"]),
-            mat.astype("float64"),
-        )
-
-    def test_top1_matches_brute_force(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            brute_force_topk,
-            pq_topk,
-        )
-
-        emb, mat = self._emb(spark)
-        q = [float(x) for x in mat[7]]
-        exact = brute_force_topk(emb, q, k=1).collect()[0]
-        # the query IS a corpus row: its PQ code distance to itself is
-        # the per-subspace quantization residue, small enough that the
-        # candidate cut keeps it and the exact rerank ranks it first
-        approx = pq_topk(emb, q, k=1, m=4, k_sub=8, rerank_factor=8).collect()[0]
-        assert approx.vec_id == exact.vec_id == 7
-
-    def test_recall_against_brute_force(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            brute_force_topk,
-            pq_topk,
-        )
-
-        emb, mat = self._emb(spark)
-        q = [float(x) for x in mat[0]]
-        exact = {r.vec_id for r in brute_force_topk(emb, q, k=10).collect()}
-        approx = {
-            r.vec_id
-            for r in pq_topk(
-                emb, q, k=10, m=4, k_sub=8, rerank_factor=8
-            ).collect()
-        }
-        # 4 subspaces × 8 centroids is a coarse code; with rf=8 the
-        # rerank recovers most of the true neighborhood. Deterministic
-        # fixture → fixed property, not a flake.
-        assert len(exact & approx) >= 5
-
-    def test_rerun_deterministic(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            pq_topk,
-        )
-
-        emb, mat = self._emb(spark, n=80)
-        q = [float(x) for x in mat[3]]
-        a = [tuple(r) for r in pq_topk(emb, q, k=5).collect()]
-        b = [tuple(r) for r in pq_topk(emb, q, k=5).collect()]
-        assert a == b and len(a) == 5
-
-    def test_zero_norm_vectors_excluded(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            pq_topk,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.5, 0.5])],
-            ["vec_id", "embedding"],
-        )
-        got = pq_topk(df, [1.0, 0.0], k=3, m=1, k_sub=2).collect()
-        assert [r.vec_id for r in got] == [2, 3]
-
-    def test_validation(self, spark):
-        import pytest as _pytest
-
-        from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-            pq_topk,
-        )
-
-        df = spark.createDataFrame([(1, [1.0, 0.0])], ["vec_id", "embedding"])
-        with _pytest.raises(ValueError, match="multiple of m"):
-            pq_topk(df, [1.0, 0.0, 0.0], k=1, m=2)
-        with _pytest.raises(ValueError, match=">= 1"):
-            pq_topk(df, [1.0, 0.0], k=0)
-        with _pytest.raises(ValueError, match=">= 1"):
-            pq_topk(df, [1.0, 0.0], k=1, m=0)

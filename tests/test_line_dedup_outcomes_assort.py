@@ -1,141 +1,13 @@
-"""Round-5 close trio: C4-style line dedup, conversation outcomes,
-degree assortativity."""
+"""Degree assortativity (graph_algos)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
     degree_assortativity,
 )
-from threat_intelligence_knowledge_graph_spark.operators.line_dedup import (
-    dedup_lines,
-)
-from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-    conversation_outcomes,
-)
-
-
-class TestDedupLines:
-    def _docs(self, spark):
-        return spark.createDataFrame(
-            [
-                (1, "HEADER\nalpha one\nFOOTER"),
-                (2, "HEADER\nbeta two\nFOOTER"),
-                (3, "gamma three\ngamma three\nunique tail"),
-                (4, "HEADER"),
-                (5, ""),
-                (6, None),
-            ],
-            "doc_id int, text string",
-        )
-
-    def test_keep_first(self, spark):
-        got = {
-            r.doc_id: r
-            for r in dedup_lines(self._docs(spark), min_count=2).collect()
-        }
-        # doc 1 holds the first HEADER/FOOTER; doc 2 loses both; doc 3's
-        # within-doc repeat keeps its first occurrence; doc 4's HEADER
-        # is a later occurrence; '' lines (docs 5, 6) dedup corpus-wide
-        # with doc 5 first.
-        assert got[1].text == "HEADER\nalpha one\nFOOTER"
-        assert got[2].text == "beta two" and got[2].n_removed == 2
-        assert got[3].text == "gamma three\nunique tail"
-        assert got[4].text == "" and got[4].n_removed == 1
-        assert got[5].text == "" and got[5].n_removed == 0
-        assert got[6].text == "" and got[6].n_removed == 1
-        assert all(
-            got[d].n_lines == n for d, n in [(1, 3), (2, 3), (3, 3), (4, 1)]
-        )
-
-    def test_keep_none(self, spark):
-        got = {
-            r.doc_id: r
-            for r in dedup_lines(
-                self._docs(spark), min_count=2, keep="none"
-            ).collect()
-        }
-        assert got[1].text == "alpha one" and got[1].n_removed == 2
-        assert got[3].text == "unique tail" and got[3].n_removed == 2
-        assert got[4].text == "" and got[4].n_removed == 1
-
-    def test_min_count_threshold(self, spark):
-        # HEADER occurs 3x, FOOTER 2x: min_count=3 only bites HEADER.
-        got = {
-            r.doc_id: r
-            for r in dedup_lines(self._docs(spark), min_count=3).collect()
-        }
-        assert got[2].text == "beta two\nFOOTER" and got[2].n_removed == 1
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError):
-            dedup_lines(self._docs(spark), min_count=1)
-        with pytest.raises(ValueError):
-            dedup_lines(self._docs(spark), keep="last")
-
-
-class TestConversationOutcomes:
-    def _turns(self, spark):
-        rows = [
-            # c1: clean completed exchange (tool ok mid-way)
-            ("c1", 1, "user", "q", None),
-            ("c1", 2, "assistant", "use tool", None),
-            ("c1", 3, "tool", "ok result", "search"),
-            ("c1", 4, "assistant", "answer", None),
-            # c2: ends on a user turn -> abandoned
-            ("c2", 1, "user", "q", None),
-            ("c2", 2, "assistant", "a", None),
-            ("c2", 3, "user", "follow-up?", None),
-            # c3: last tool turn errors -> tool_failure
-            ("c3", 1, "user", "q", None),
-            ("c3", 2, "tool", "ok", "sql"),
-            ("c3", 3, "tool", "Traceback: boom", "sql"),
-            ("c3", 4, "assistant", "sorry", None),
-            # c4: 3-run loop beats its trailing tool error
-            ("c4", 1, "tool", "ERROR x", "sql"),
-            ("c4", 2, "assistant", "retry", None),
-            ("c4", 3, "assistant", "retry", None),
-            ("c4", 4, "assistant", "retry", None),
-            # c5: an EARLY tool error recovered by a later clean call
-            ("c5", 1, "tool", "error: transient", "search"),
-            ("c5", 2, "tool", "fine now", "search"),
-            ("c5", 3, "assistant", "done", None),
-        ]
-        return spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, role string, text string, tool string"
-        )
-
-    def test_precedence_and_labels(self, spark):
-        got = {
-            r.conv_id: (r.outcome, r.n_turns, r.last_role)
-            for r in conversation_outcomes(self._turns(spark)).collect()
-        }
-        assert got["c1"] == ("completed", 4, "assistant")
-        assert got["c2"] == ("abandoned", 3, "user")
-        assert got["c3"] == ("tool_failure", 4, "assistant")
-        assert got["c4"] == ("looping", 4, "assistant")
-        assert got["c5"] == ("completed", 3, "assistant")
-
-    def test_no_tool_turns_not_failure(self, spark):
-        df = spark.createDataFrame(
-            [("z", 1, "user", "error in my code", None),
-             ("z", 2, "assistant", "fix", None)],
-            "conv_id string, turn_idx int, role string, text string, tool string",
-        )
-        [r] = conversation_outcomes(df).collect()
-        assert r.outcome == "completed"  # user text never consulted
-
-    def test_null_last_tool_text(self, spark):
-        df = spark.createDataFrame(
-            [("z", 1, "tool", None, "sql"),
-             ("z", 2, "assistant", "done", None)],
-            "conv_id string, turn_idx int, role string, text string, tool string",
-        )
-        [r] = conversation_outcomes(df).collect()
-        assert r.outcome == "completed"  # NULL text -> not a failure
 
 
 class TestDegreeAssortativity:

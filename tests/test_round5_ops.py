@@ -1,5 +1,6 @@
 """Round-5 closing operators: local clustering coefficient, CUSUM
-level-shift, BM25 retrieval, blocklist gate — hand-computed fixtures."""
+level-shift, burstiness and the other event/graph analytics —
+hand-computed fixtures."""
 
 from __future__ import annotations
 
@@ -14,13 +15,7 @@ from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
 from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
     local_clustering_coefficient,
 )
-from threat_intelligence_knowledge_graph_spark.operators.retrieval import rrf_fuse
 from threat_intelligence_knowledge_graph_spark.operators.stats import burstiness_fano
-from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-    blocklist_filter,
-    bm25_search,
-    type_token_ratio,
-)
 
 
 class TestLocalClusteringCoefficient:
@@ -92,97 +87,6 @@ class TestCusumLevelShift:
         assert bvals == [0, 6, 12, 18]
 
 
-class TestBm25Search:
-    def test_exact_two_doc_scores(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "cat dog"), (2, "cat cat fish")], ["doc_id", "text"]
-        )
-        got = {r.doc_id: (r.score, r.rk) for r in bm25_search(docs, ["cat"], k=5).collect()}
-        idf = math.log(1.0 + (2 - 2 + 0.5) / (2 + 0.5))
-        s1 = round(idf * (1 * 2.2) / (1 + 1.2 * (0.25 + 0.75 * (2 * 2) / 5)), 6)
-        s2 = round(idf * (2 * 2.2) / (2 + 1.2 * (0.25 + 0.75 * (3 * 2) / 5)), 6)
-        assert got[1] == (s1, 2)
-        assert got[2] == (s2, 1)
-        assert s2 > s1  # higher tf wins despite longer doc
-
-    def test_non_matching_docs_absent_and_k_respected(self, spark):
-        docs = spark.createDataFrame(
-            [(i, "cat toy") for i in range(5)] + [(99, "zebra")],
-            ["doc_id", "text"],
-        )
-        got = bm25_search(docs, ["cat"], k=3).collect()
-        assert len(got) == 3
-        assert all(r.doc_id != 99 for r in got)
-        # Equal scores: doc_id ascending tiebreak.
-        assert [r.doc_id for r in got] == [0, 1, 2]
-
-    def test_empty_query_raises(self, spark):
-        docs = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
-        with pytest.raises(ValueError):
-            bm25_search(docs, [])
-
-
-class TestBlocklistFilter:
-    def test_hits_ratio_and_flag(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "bad bad ok ok"),          # 2/4 = 0.5 → blocked
-                (2, "ok ok ok ok ok ok ok ok ok bad"),  # 1/10 = 0.1 → not (strict >)
-                (3, "clean text only"),
-            ],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r for r in blocklist_filter(docs, ["bad"], max_ratio=0.1).collect()}
-        assert (got[1].bad_hits, got[1].bad_ratio, got[1].blocked) == (2, 0.5, True)
-        assert (got[2].bad_hits, got[2].bad_ratio, got[2].blocked) == (1, 0.1, False)
-        assert (got[3].bad_hits, got[3].blocked) == (0, False)
-
-    def test_whole_token_no_substring_trap(self, spark):
-        docs = spark.createDataFrame([(1, "scunthorpe is fine")], ["doc_id", "text"])
-        got = blocklist_filter(docs, ["thorpe", "horp"]).collect()[0]
-        assert got.bad_hits == 0 and not got.blocked
-
-
-class TestRrfFuse:
-    def _ranking(self, spark, pairs):
-        return spark.createDataFrame(pairs, ["doc_id", "rk"])
-
-    def test_exact_scores_and_overlap_boost(self, spark):
-        r1 = self._ranking(spark, [(1, 1), (2, 2), (3, 3)])
-        r2 = self._ranking(spark, [(3, 1), (4, 2)])
-        got = {r.doc_id: (r.score, r.rk) for r in rrf_fuse([r1, r2], k=60).collect()}
-        # doc 3 appears in both lists: 1/63 + 1/61 beats doc 1's 1/61.
-        assert got[3][0] == round(1 / 63 + 1 / 61, 6)
-        assert got[3][1] == 1
-        assert got[1] == (round(1 / 61, 6), 2)
-        assert got[2] == (round(1 / 62, 6), 3)
-        assert got[4] == (round(1 / 62, 6), 4)  # ties break by id
-
-    def test_top_cut_and_validation(self, spark):
-        r1 = self._ranking(spark, [(i, i + 1) for i in range(10)])
-        assert rrf_fuse([r1], top=4).count() == 4
-        with pytest.raises(ValueError):
-            rrf_fuse([])
-        with pytest.raises(ValueError):
-            rrf_fuse([r1], k=0)
-
-
-class TestTypeTokenRatio:
-    def test_exact_ratio(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "spam spam spam spam"), (2, "all four words differ")],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r for r in type_token_ratio(docs).collect()}
-        assert (got[1].n_tokens, got[1].n_types, got[1].ttr) == (4, 1, 0.25)
-        assert (got[2].n_tokens, got[2].n_types, got[2].ttr) == (4, 4, 1.0)
-
-    def test_case_folds_to_same_type(self, spark):
-        docs = spark.createDataFrame([(1, "Spark SPARK spark")], ["doc_id", "text"])
-        got = type_token_ratio(docs).collect()[0]
-        assert (got.n_tokens, got.n_types) == (3, 1)
-
-
 class TestBurstinessFano:
     def _ev(self, spark, counts, etype):
         base = datetime.datetime(2024, 1, 1)
@@ -206,7 +110,6 @@ class TestBurstinessFano:
 from threat_intelligence_knowledge_graph_spark.operators.stats import (
     markov_transitions,
 )
-from threat_intelligence_knowledge_graph_spark.operators.text_quality import top_ngrams
 
 
 class TestMarkovTransitions:
@@ -240,83 +143,6 @@ class TestMarkovTransitions:
         ev = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type"])
         got = markov_transitions(ev).collect()
         assert [(r.src_state, r.dst_state) for r in got] == [("x", "y")]
-
-
-class TestTopNgrams:
-    def test_bigram_counts_and_rank(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "the quick fox"), (2, "the quick dog"), (3, "so")],
-            ["doc_id", "text"],
-        )
-        got = [(r.ngram, r.n, r.rk) for r in top_ngrams(docs, n=2, k=10).collect()]
-        assert got[0] == ("the quick", 2, 1)
-        assert ("quick dog", 1) in [(g, c) for g, c, _ in got]
-        # the single-token doc contributes nothing
-        assert all(" " in g for g, _, _ in got)
-
-    def test_ties_break_lexicographically_and_k_cuts(self, spark):
-        docs = spark.createDataFrame([(1, "bb aa bb aa cc dd")], ["doc_id", "text"])
-        got = [(r.ngram, r.rk) for r in top_ngrams(docs, n=2, k=3).collect()]
-        # 'bb aa' ×2 leads; the count-1 ties rank lexicographically and
-        # k=3 cuts 'cc dd'.
-        assert got == [("bb aa", 1), ("aa bb", 2), ("aa cc", 3)]
-
-    def test_validation(self, spark):
-        docs = spark.createDataFrame([(1, "x y")], ["doc_id", "text"])
-        with pytest.raises(ValueError):
-            top_ngrams(docs, n=0)
-
-
-from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-    vocab_growth,
-    vocab_prune,
-)
-
-
-class TestVocabPrune:
-    def test_band_bites_both_sides(self, spark):
-        # 'common' in all 4 docs (df=4 > floor(0.5*4)=2), 'rare' in 1
-        # (< min_df=2), 'mid' in 2 — only 'mid' survives.
-        docs = spark.createDataFrame(
-            [
-                (1, "common rare mid"),
-                (2, "common mid"),
-                (3, "common"),
-                (4, "common"),
-            ],
-            ["doc_id", "text"],
-        )
-        got = {r.term: r.df for r in vocab_prune(docs, min_df=2, max_df_ratio=0.5).collect()}
-        assert got == {"mid": 2}
-
-    def test_df_is_distinct_doc_count(self, spark):
-        docs = spark.createDataFrame([(1, "dup dup dup"), (2, "dup")], ["doc_id", "text"])
-        got = vocab_prune(docs, min_df=1, max_df_ratio=1.0).collect()
-        assert [(r.term, r.df) for r in got] == [("dup", 2)]
-
-    def test_validation(self, spark):
-        docs = spark.createDataFrame([(1, "x y")], ["doc_id", "text"])
-        with pytest.raises(ValueError):
-            vocab_prune(docs, min_df=0)
-        with pytest.raises(ValueError):
-            vocab_prune(docs, max_df_ratio=0.0)
-
-
-class TestVocabGrowth:
-    def test_per_source_types_and_ratio(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "aa bb aa bb", "template"),
-                (2, "aa bb", "template"),
-                (3, "cc dd ee ff", "fresh"),
-            ],
-            ["doc_id", "text", "source"],
-        )
-        got = {r.source: r for r in vocab_growth(docs).collect()}
-        assert (got["template"].n_tokens, got["template"].n_types) == (6, 2)
-        assert got["template"].type_token_ratio == round(2 / 6, 6)
-        assert (got["fresh"].n_tokens, got["fresh"].n_types) == (4, 4)
-        assert got["fresh"].type_token_ratio == 1.0
 
 
 from threat_intelligence_knowledge_graph_spark.operators.stats import event_entropy
@@ -513,58 +339,6 @@ class TestReciprocity:
         empty = spark.createDataFrame([], "src int, dst int")
         (row,) = reciprocity(empty).collect()
         assert (row.n_directed, row.n_mutual, row.reciprocity) == (0, 0, None)
-
-
-from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-    containment_pairs,
-    ngram_jaccard_pairs,
-)
-
-
-class TestContainmentPairs:
-    def test_quote_inclusion_caught_where_jaccard_misses(self, spark):
-        small = "one two three four five six"
-        big = small + " p1 p2 p3 p4 p5 p6"
-        docs = spark.createDataFrame([(1, small), (2, big)], ["doc_id", "text"])
-        pairs, dropped = containment_pairs(docs, threshold=0.8)
-        (row,) = pairs.collect()
-        # A has 4 shingles, all inside B's 10: C(A->B)=1.0, C(B->A)=0.4.
-        assert (row.a, row.b, row.inter) == (1, 2, 4)
-        assert (row.c_a_in_b, row.c_b_in_a) == (1.0, 0.4)
-        assert dropped.count() == 0
-        # symmetric Jaccard at 0.5 misses the same pair (4/10 < 0.5)
-        assert ngram_jaccard_pairs(docs, threshold=0.5).count() == 0
-
-    def test_hot_shingle_cap_reports_but_inter_stays_exact(self, spark):
-        d1 = "c1 c2 c3 c4 c5 h1 h2 h3"
-        d2 = d1 + " d9"
-        boiler = [(i, f"y{i} z{i} h1 h2 h3") for i in range(3, 7)]
-        docs = spark.createDataFrame(
-            [(1, d1), (2, d2)] + boiler, ["doc_id", "text"]
-        )
-        pairs, dropped = containment_pairs(docs, threshold=0.8, max_postings=3)
-        (row,) = pairs.collect()
-        # candidacy via the 5 rare shared shingles; the dropped hot
-        # shingle h1h2h3 (df 6 > 3) still counts in the EXACT inter.
-        assert (row.a, row.b, row.inter) == (1, 2, 6)
-        assert (row.c_a_in_b, row.c_b_in_a) == (1.0, round(6 / 7, 6))
-        d = dropped.collect()
-        assert [(r.shingle, r.df) for r in d] == [("h1 h2 h3", 6)]
-
-    def test_min_shared_and_validation(self, spark):
-        # docs sharing exactly ONE shingle are never candidates
-        docs = spark.createDataFrame(
-            [(1, "a b c x1 y1"), (2, "a b c x2 y2")], ["doc_id", "text"]
-        )
-        pairs, _ = containment_pairs(docs, threshold=0.1, min_shared=2)
-        assert pairs.count() == 0
-        pairs1, _ = containment_pairs(docs, threshold=0.3, min_shared=1)
-        (row,) = pairs1.collect()
-        assert row.inter == 1 and row.c_a_in_b == round(1 / 3, 6)
-        with pytest.raises(ValueError):
-            containment_pairs(docs, threshold=0.0)
-        with pytest.raises(ValueError):
-            containment_pairs(docs, min_shared=0)
 
 
 from threat_intelligence_knowledge_graph_spark.operators.stats import (
@@ -835,98 +609,6 @@ class TestSetChurn:
             set_churn(ev2, bucket_seconds=-1)
 
 
-from threat_intelligence_knowledge_graph_spark.operators.dedup import source_overlap
-
-
-class TestSourceOverlap:
-    def test_mirror_shares_and_no_overlap_absent(self, spark):
-        docs = spark.createDataFrame(
-            [
-                ("A", "d1"), ("A", "d2"), ("A", "d3"), ("A", "d4"),
-                ("B", "d1"), ("B", "d2"),          # B: 100% inside A
-                ("C", "zz"),                        # C: disjoint
-                ("A", "d1"),                        # within-source dup collapses
-            ],
-            ["source", "text"],
-        )
-        got = {(r.src_a, r.src_b): r for r in source_overlap(docs).collect()}
-        assert set(got) == {("A", "B")}  # C emits no row
-        r = got[("A", "B")]
-        assert r.n_common == 2
-        assert r.share_a == 0.5      # 2 of A's 4 distinct docs
-        assert r.share_b == 1.0      # all of B is a mirror
-
-    def test_pair_order_pinned_by_source_name(self, spark):
-        docs = spark.createDataFrame(
-            [("zeta", "x"), ("alpha", "x")], ["source", "text"]
-        )
-        (r,) = source_overlap(docs).collect()
-        assert (r.src_a, r.src_b) == ("alpha", "zeta")
-
-
-from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-    dedup_keep_best,
-)
-
-
-class TestDedupKeepBest:
-    def test_best_copy_survives_exact_and_near_stages(self, spark):
-        # near-dup family: same 4-word cycle repeated 5x vs 7x
-        # (the planted-corpus construction: jaccard exactly 1.0)
-        cyc = "wa wb wc wd"
-        docs = spark.createDataFrame(
-            [
-                (1, " ".join([cyc] * 5), 3),   # near-dup of 2, worse score
-                (2, " ".join([cyc] * 7), 9),   # best of the cluster
-                (10, "same exact text here", 1),
-                (11, "same exact text here", 8),  # exact dup, better score
-                (20, "completely unrelated singleton doc", 0),
-            ],
-            ["doc_id", "text", "score"],
-        )
-        got = {r.doc_id for r in dedup_keep_best(docs, "score").collect()}
-        assert got == {2, 11, 20}
-
-    def test_score_tie_falls_back_to_min_id(self, spark):
-        docs = spark.createDataFrame(
-            [(5, "dup dup", 4), (3, "dup dup", 4)], ["doc_id", "text", "score"]
-        )
-        got = [r.doc_id for r in dedup_keep_best(docs, "score").collect()]
-        assert got == [3]
-
-
-from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-    select_sources_greedy,
-)
-
-
-class TestSelectSourcesGreedy:
-    def test_greedy_order_and_zero_gain_early_stop(self, spark):
-        docs = spark.createDataFrame(
-            [("A", t) for t in ("x1", "x2", "x3")]
-            + [("B", t) for t in ("x1", "x2", "x3", "x4")]
-            + [("C", "y1")]
-            + [("D", "x1")],
-            ["source", "text"],
-        )
-        got = select_sources_greedy(docs, k=4).collect()
-        # B covers everything A/D have plus x4; C adds y1; then every
-        # remaining source gains 0 -> early stop despite k=4
-        assert [(r.rank, r.source, r.n_new, r.n_covered) for r in got] == [
-            (1, "B", 4, 4),
-            (2, "C", 1, 5),
-        ]
-
-    def test_tie_breaks_by_source_name_and_validation(self, spark):
-        docs = spark.createDataFrame(
-            [("zeta", "a"), ("alpha", "b")], ["source", "text"]
-        )
-        got = select_sources_greedy(docs, k=2).collect()
-        assert [r.source for r in got] == ["alpha", "zeta"]
-        with pytest.raises(ValueError):
-            select_sources_greedy(docs, k=0)
-
-
 class TestPagerankDelta:
     def test_new_node_rises_from_zero(self, spark):
         from threat_intelligence_knowledge_graph_spark.operators.pagerank import (
@@ -1118,46 +800,3 @@ class TestResurrectedIndicators:
         top = resurrected_indicators(spark, ev, min_quiet_s=100.0, k=5).collect()
         assert [r.key for r in top] == ["deep_sleeper", "light_sleeper"]
         assert top[0].last_quiet_s == 5000.0
-
-
-class TestNdcgEval:
-    def test_hand_computed(self, spark):
-        import math
-
-        from threat_intelligence_knowledge_graph_spark.operators.retrieval import (
-            ndcg_eval,
-        )
-
-        # ranking: docs 10, 20, 30 at positions 1, 2, 3
-        ranking = spark.createDataFrame(
-            [(10, 1), (20, 2), (30, 3)], ["doc_id", "rk"]
-        )
-        # grades: 10→1, 20→3, 30→0 (absent = 0), 40→2 (relevant, unranked)
-        rel = spark.createDataFrame(
-            [(10, 1), (20, 3), (40, 2)], ["doc_id", "rel"]
-        )
-        row = ndcg_eval(ranking, rel, k=3).collect()[0]
-        dcg = (2**1 - 1) / math.log2(2) + (2**3 - 1) / math.log2(3) + 0.0
-        # ideal order by (rel desc, id asc): 20(3), 40(2), 10(1)
-        idcg = (
-            (2**3 - 1) / math.log2(2)
-            + (2**2 - 1) / math.log2(3)
-            + (2**1 - 1) / math.log2(4)
-        )
-        assert row.k == 3
-        assert abs(row.dcg - dcg) < 1e-6
-        assert abs(row.idcg - idcg) < 1e-6
-        assert row.ndcg == round(dcg / idcg, 6)
-
-    def test_perfect_and_empty(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.retrieval import (
-            ndcg_eval,
-        )
-
-        rel = spark.createDataFrame([(1, 2), (2, 1)], ["doc_id", "rel"])
-        perfect = spark.createDataFrame([(1, 1), (2, 2)], ["doc_id", "rk"])
-        assert ndcg_eval(perfect, rel, k=2).collect()[0].ndcg == 1.0
-        # no relevant docs at all → idcg 0 → ndcg NULL, not 0/0
-        none_rel = spark.createDataFrame([(9, 0)], ["doc_id", "rel"])
-        row = ndcg_eval(perfect, none_rel, k=2).collect()[0]
-        assert row.idcg == 0.0 and row.ndcg is None

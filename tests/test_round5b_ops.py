@@ -1,5 +1,6 @@
-"""Round-5 continuation operators: paragraph-level boilerplate dedup,
-sorted-neighborhood blocking, triple schema conformance audit."""
+"""Round-5 continuation operators: sorted-neighborhood blocking,
+triple schema conformance audit, SCD2 intervals, temporal two-hop,
+triple corroboration."""
 
 from __future__ import annotations
 
@@ -8,88 +9,10 @@ import pytest
 from threat_intelligence_knowledge_graph_spark.operators.canonicalize import (
     sorted_neighborhood_pairs,
 )
-from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-    paragraph_dedup,
-)
 from threat_intelligence_knowledge_graph_spark.operators.triples import (
     relation_signatures,
     validate_triple_schema,
 )
-
-
-class TestParagraphDedup:
-    def test_footer_removed_order_preserved(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "alpha\nFOOTER\nbeta"),
-                (2, "gamma\nFOOTER"),
-                (3, "delta"),
-            ],
-            "doc_id: long, text: string",
-        )
-        got = {
-            r.doc_id: (r.text, r.n_paragraphs, r.n_removed)
-            for r in paragraph_dedup(docs).collect()
-        }
-        assert got == {
-            1: ("alpha\nbeta", 3, 1),
-            2: ("gamma", 2, 1),
-            3: ("delta", 1, 0),
-        }
-
-    def test_all_boilerplate_doc_keeps_empty_row(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "FOOTER"), (2, "FOOTER"), (3, "keep\nFOOTER")],
-            "doc_id: long, text: string",
-        )
-        got = {r.doc_id: (r.text, r.n_removed) for r in paragraph_dedup(docs).collect()}
-        assert got[1] == ("", 1)
-        assert got[2] == ("", 1)
-        assert got[3] == ("keep", 1)
-
-    def test_min_docs_threshold(self, spark):
-        # FOOTER in only 2 docs: survives min_docs=3, dies at min_docs=2.
-        docs = spark.createDataFrame(
-            [(1, "a\nFOOTER"), (2, "b\nFOOTER"), (3, "c")],
-            "doc_id: long, text: string",
-        )
-        keep3 = {r.doc_id: r.text for r in paragraph_dedup(docs, min_docs=3).collect()}
-        assert keep3 == {1: "a\nFOOTER", 2: "b\nFOOTER", 3: "c"}
-        keep2 = {r.doc_id: r.text for r in paragraph_dedup(docs, min_docs=2).collect()}
-        assert keep2 == {1: "a", 2: "b", 3: "c"}
-
-    def test_repeat_within_one_doc_not_boilerplate(self, spark):
-        # countDistinct(doc_id): the same paragraph twice in ONE doc is
-        # repetition (repetition_ratio's business), not boilerplate.
-        docs = spark.createDataFrame(
-            [(1, "x\nx\ny"), (2, "z")], "doc_id: long, text: string"
-        )
-        got = {r.doc_id: r.text for r in paragraph_dedup(docs).collect()}
-        assert got[1] == "x\nx\ny"
-
-    def test_empty_paragraphs_follow_frequency_rule(self, spark):
-        # '' (from the double separator) appears in docs 1 and 2 → removed;
-        # rebuilt text is the surviving subsequence, not a normalization.
-        docs = spark.createDataFrame(
-            [(1, "a\n\nb"), (2, "c\n\nd"), (3, "e")],
-            "doc_id: long, text: string",
-        )
-        got = {r.doc_id: (r.text, r.n_paragraphs, r.n_removed) for r in paragraph_dedup(docs).collect()}
-        assert got[1] == ("a\nb", 3, 1)
-        assert got[2] == ("c\nd", 3, 1)
-        assert got[3] == ("e", 1, 0)
-
-    def test_null_text_is_one_empty_paragraph(self, spark):
-        docs = spark.createDataFrame(
-            [(1, None), (2, "a")], "doc_id: long, text: string"
-        )
-        got = {r.doc_id: (r.text, r.n_paragraphs, r.n_removed) for r in paragraph_dedup(docs).collect()}
-        assert got[1] == ("", 1, 0)
-
-    def test_min_docs_validation(self, spark):
-        docs = spark.createDataFrame([(1, "a")], "doc_id: long, text: string")
-        with pytest.raises(ValueError):
-            paragraph_dedup(docs, min_docs=1)
 
 
 def _brute_snm(rows, window):

@@ -1,6 +1,6 @@
-"""Round-5 continuation operators, batch C: MRR/MAP rank evaluation,
-Flesch readability, A-ES weighted sampling, hour-of-day seasonality,
-global transitivity."""
+"""Round-5 continuation operators, batch C: A-ES weighted sampling,
+hour-of-day seasonality, global transitivity and the other event/graph
+analytics."""
 
 from __future__ import annotations
 
@@ -14,110 +14,9 @@ from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
 from threat_intelligence_knowledge_graph_spark.operators.packing import (
     weighted_sample,
 )
-from threat_intelligence_knowledge_graph_spark.operators.retrieval import (
-    rank_eval,
-)
 from threat_intelligence_knowledge_graph_spark.operators.stats import (
     hourly_seasonality,
 )
-from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-    readability,
-)
-
-
-class TestRankEval:
-    def _frames(self, spark):
-        rankings = spark.createDataFrame(
-            [
-                ("qa", "d1", 1), ("qa", "d2", 2), ("qa", "d3", 3),
-                ("qb", "d1", 1), ("qb", "d2", 2),
-                ("qc", "x", 1),
-                ("qd", "d1", 1), ("qd", "d2", 2),
-            ],
-            "query_id: string, doc_id: string, rk: int",
-        )
-        qrels = spark.createDataFrame(
-            [("qa", "d2"), ("qa", "d9"), ("qc", "x"), ("qd", "d9")],
-            "query_id: string, doc_id: string",
-        )
-        return rankings, qrels
-
-    def test_hand_computed(self, spark):
-        rankings, qrels = self._frames(spark)
-        got = {r.query_id: r.asDict() for r in rank_eval(rankings, qrels, k=10).collect()}
-        # qa: first hit at 2, rr = 0.5; AP = (1/2) / min(2, 10) = 0.25
-        assert got["qa"]["first_rel_rank"] == 2
-        assert got["qa"]["rr"] == 0.5
-        assert got["qa"]["ap"] == 0.25
-        assert got["qa"]["n_rel"] == 2
-        # qb: no qrels at all -> undefined, NULL
-        assert got["qb"]["rr"] is None and got["qb"]["ap"] is None
-        assert got["qb"]["n_rel"] == 0
-        # qc: perfect single hit -> rr = ap = 1
-        assert got["qc"]["rr"] == 1.0 and got["qc"]["ap"] == 1.0
-        # qd: has a relevant doc but the ranking missed it -> zeros
-        assert got["qd"]["first_rel_rank"] is None
-        assert got["qd"]["rr"] == 0.0 and got["qd"]["ap"] == 0.0
-
-    def test_two_hits_ap(self, spark):
-        rankings = spark.createDataFrame(
-            [("q", "a", 1), ("q", "b", 2), ("q", "c", 3), ("q", "d", 4)],
-            "query_id: string, doc_id: string, rk: int",
-        )
-        qrels = spark.createDataFrame(
-            [("q", "a"), ("q", "c")], "query_id: string, doc_id: string"
-        )
-        row = rank_eval(rankings, qrels, k=10).collect()[0]
-        # hits at 1 (1/1) and 3 (2/3): AP = (1 + 2/3)/2 = 5/6
-        assert row.ap == round(5 / 6, 6)
-        assert row.rr == 1.0
-
-    def test_k_cutoff(self, spark):
-        rankings = spark.createDataFrame(
-            [("q", "a", 1), ("q", "b", 2), ("q", "c", 3)],
-            "query_id: string, doc_id: string, rk: int",
-        )
-        qrels = spark.createDataFrame([("q", "c")], "query_id: string, doc_id: string")
-        row = rank_eval(rankings, qrels, k=2).collect()[0]
-        assert row.rr == 0.0 and row.ap == 0.0 and row.n_ranked == 2
-
-    def test_validation(self, spark):
-        rankings, qrels = self._frames(spark)
-        with pytest.raises(ValueError):
-            rank_eval(rankings, qrels, k=0)
-        with pytest.raises(ValueError):
-            rank_eval(rankings, qrels, k=21)
-
-
-class TestReadability:
-    def test_hand_computed(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "The cat sat."), (2, ""), (3, "no punctuation here")],
-            "doc_id: long, text: string",
-        )
-        got = {r.doc_id: r.asDict() for r in readability(docs).collect()}
-        # 3 words, 3 vowel runs, 1 sentence:
-        # 206.835 - 1.015*3 - 84.6*1 = 119.19
-        assert got[1]["n_words"] == 3
-        assert got[1]["n_syllables"] == 3
-        assert got[1]["n_sentences"] == 1
-        assert got[1]["flesch"] == round(206.835 - 1.015 * 3 - 84.6, 6)
-        # empty doc: no words, NULL score (sentence floor still 1)
-        assert got[2]["n_words"] == 0 and got[2]["flesch"] is None
-        # punctuation-free doc gets the sentence floor, not 0
-        assert got[3]["n_sentences"] == 1 and got[3]["flesch"] is not None
-
-    def test_vowel_runs_not_letters(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "queueing strength!")], "doc_id: long, text: string"
-        )
-        row = readability(docs).collect()[0]
-        # "queueing" -> ueuei as runs: 'ueuei' is one maximal run? No:
-        # q-u-e-u-e-i-n-g => "ueue i"? all of u,e,u,e,i are contiguous
-        # vowels -> ONE run; "strength" -> 'e' -> one run. Total 2.
-        assert row.n_syllables == 2
-        assert row.n_words == 2
-        assert row.n_sentences == 1
 
 
 class TestWeightedSample:
@@ -609,75 +508,10 @@ class TestAnalyzeEventsCliRound5c:
             )
 
 
-from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-    calibration_table,
-)
 from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
     degree_histogram,
     hill_tail,
 )
-from threat_intelligence_knowledge_graph_spark.operators.similarity import (
-    mutual_best,
-)
-
-
-class TestMutualBest:
-    def test_mutual_pairs_only(self, spark):
-        # a<->b mutual best; c's best is a but a's best is b -> no pair
-        scores = spark.createDataFrame(
-            [
-                ("a", "b", 0.9), ("a", "c", 0.5),
-                ("b", "a", 0.9), ("b", "c", 0.4),
-                ("c", "a", 0.8), ("c", "b", 0.2),
-            ],
-            "query_id: string, vec_id: string, cosine: double",
-        )
-        got = [(r.query_id, r.vec_id, r.cosine) for r in mutual_best(scores).collect()]
-        assert got == [("a", "b", 0.9)]
-
-    def test_self_pairs_ignored_and_tiebreak(self, spark):
-        scores = spark.createDataFrame(
-            [
-                ("a", "a", 1.0), ("a", "b", 0.7), ("a", "c", 0.7),
-                ("b", "b", 1.0), ("b", "a", 0.7),
-                ("c", "a", 0.9),
-            ],
-            "query_id: string, vec_id: string, cosine: double",
-        )
-        # a's best among ties (b, c) -> b by id tie-break; b's best is a
-        got = [(r.query_id, r.vec_id) for r in mutual_best(scores).collect()]
-        assert got == [("a", "b")]
-
-
-class TestCalibrationTable:
-    def test_hand_computed_bins(self, spark):
-        rows = [(0.05, 0), (0.05, 0), (0.95, 1), (0.95, 0), (1.0, 1)]
-        df = spark.createDataFrame(rows, "p: double, y: int")
-        got = {r.bin: r.asDict() for r in calibration_table(df, "p", "y").collect()}
-        assert set(got) == {0, 9}
-        assert got[0]["n"] == 2 and got[0]["frac_pos"] == 0.0
-        assert got[0]["mean_pred"] == 0.05
-        # brier bin 0: (0.05-0)^2 = 0.0025
-        assert got[0]["brier"] == 0.0025
-        # top bin: p=1.0 folds in; n=3, frac_pos=2/3
-        assert got[9]["n"] == 3
-        assert got[9]["frac_pos"] == round(2 / 3, 6)
-        # brier bin 9: ((0.95-1)^2 + (0.95-0)^2 + (1-1)^2)/3 = 0.300833...
-        assert got[9]["brier"] == round((0.0025 + 0.9025 + 0.0) / 3, 6)
-
-    def test_boundary_bucketing_exact(self, spark):
-        # p = 0.3 must land in bin 3 (floor(0.3*10) on doubles says 2)
-        df = spark.createDataFrame([(0.3, 1)], "p: double, y: int")
-        assert calibration_table(df, "p", "y").collect()[0].bin == 3
-
-    def test_nulls_excluded_and_validation(self, spark):
-        df = spark.createDataFrame(
-            [(0.5, 1), (None, 1), (0.5, None)], "p: double, y: int"
-        )
-        got = calibration_table(df, "p", "y").collect()
-        assert len(got) == 1 and got[0].n == 1
-        with pytest.raises(ValueError):
-            calibration_table(df, "p", "y", n_bins=1)
 
 
 class TestDegreeHistogramHill:

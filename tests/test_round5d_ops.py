@@ -1,6 +1,5 @@
-"""Round-5 continuation operators, batch D: exact ROC-AUC, PR
-operating-point table, dyadic EWMA surge detection, Simpson
-concentration."""
+"""Round-5 continuation operators, batch D: dyadic EWMA surge
+detection, Simpson concentration and the other event analytics."""
 
 from __future__ import annotations
 
@@ -9,98 +8,7 @@ import datetime
 import pytest
 
 from threat_intelligence_knowledge_graph_spark.operators.anomaly import ewma_surge
-from threat_intelligence_knowledge_graph_spark.operators.evaluation import (
-    pr_curve,
-    roc_auc,
-)
 from threat_intelligence_knowledge_graph_spark.operators.stats import simpson_index
-
-
-def _scored(spark):
-    return spark.createDataFrame(
-        [(0.1, 0), (0.2, 0), (0.2, 1), (0.4, 1)],
-        "p: double, y: int",
-    )
-
-
-class TestRocAuc:
-    def test_hand_computed_with_ties(self, spark):
-        # pairs: (0.2+,0.1-)=1, (0.2+,0.2-)=.5, (0.4+,0.1-)=1,
-        # (0.4+,0.2-)=1 -> 3.5/4 = 0.875
-        row = roc_auc(_scored(spark), "p", "y").collect()[0]
-        assert (row.n_pos, row.n_neg) == (2, 2)
-        assert row.auc == 0.875
-
-    def test_perfect_and_random(self, spark):
-        perfect = spark.createDataFrame(
-            [(0.1, 0), (0.9, 1)], "p: double, y: int"
-        )
-        assert roc_auc(perfect, "p", "y").collect()[0].auc == 1.0
-        tied = spark.createDataFrame(
-            [(0.5, 0), (0.5, 1), (0.5, 0), (0.5, 1)], "p: double, y: int"
-        )
-        assert roc_auc(tied, "p", "y").collect()[0].auc == 0.5
-
-    def test_single_class_null(self, spark):
-        pos_only = spark.createDataFrame(
-            [(0.3, 1), (0.7, 1)], "p: double, y: int"
-        )
-        row = roc_auc(pos_only, "p", "y").collect()[0]
-        assert row.n_neg == 0 and row.auc is None
-
-    def test_null_rows_excluded(self, spark):
-        d = spark.createDataFrame(
-            [(0.1, 0), (0.2, 0), (0.2, 1), (0.4, 1), (None, 1), (0.9, None)],
-            "p: double, y: int",
-        )
-        row = roc_auc(d, "p", "y").collect()[0]
-        assert (row.n_pos, row.n_neg, row.auc) == (2, 2, 0.875)
-
-
-class TestPrCurve:
-    def test_hand_computed_dense(self, spark):
-        rows = {
-            r.threshold: r.asDict()
-            for r in pr_curve(_scored(spark), "p", "y", n_thresholds=10).collect()
-        }
-        # dense spine: EVERY threshold emits a row
-        assert set(rows) == {round(i / 10, 1) for i in range(10)}
-        assert rows[0.4]["tp"] == 1 and rows[0.4]["fp"] == 0
-        assert rows[0.4]["fn"] == 1
-        assert rows[0.4]["precision"] == 1.0 and rows[0.4]["recall"] == 0.5
-        assert rows[0.4]["f1"] == 0.666667
-        assert rows[0.2]["tp"] == 2 and rows[0.2]["fp"] == 1
-        assert rows[0.2]["precision"] == 0.666667 and rows[0.2]["recall"] == 1.0
-        assert rows[0.2]["f1"] == 0.8
-        assert rows[0.1]["precision"] == 0.5 and rows[0.1]["f1"] == 0.666667
-        # empty buckets carry the cumulations of the next populated one
-        assert rows[0.3]["tp"] == 1 and rows[0.3]["fp"] == 0
-        # above every score: nothing predicted positive -> precision
-        # undefined (NULL), recall a true 0
-        assert rows[0.9]["tp"] == 0 and rows[0.9]["fp"] == 0
-        assert rows[0.9]["precision"] is None and rows[0.9]["recall"] == 0.0
-
-    def test_top_bucket_folds_score_one(self, spark):
-        d = spark.createDataFrame([(1.0, 1), (0.95, 0)], "p: double, y: int")
-        rows = {r.threshold: r for r in pr_curve(d, "p", "y", n_thresholds=10).collect()}
-        # both rows land in the 0.9 bucket; lower thresholds cumulate
-        assert len(rows) == 10
-        assert rows[0.9].tp == 1 and rows[0.9].fp == 1
-        assert rows[0.0].tp == 1 and rows[0.0].fp == 1
-
-    def test_non_divisor_thresholds_exact_boundary(self, spark):
-        # n=3 does not divide 1e6: 0.666666 must NOT clear t=2/3,
-        # 0.666667 must (the (m*n) div 1e6 identity)
-        d = spark.createDataFrame(
-            [(0.666666, 1), (0.666667, 1)], "p: double, y: int"
-        )
-        rows = {r.threshold: r for r in pr_curve(d, "p", "y", n_thresholds=3).collect()}
-        assert rows[0.666667].tp == 1  # only the clearing row
-        assert rows[0.333333].tp == 2
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError):
-            pr_curve(_scored(spark), "p", "y", n_thresholds=1)
 
 
 def _ts(hour: int, sec: int = 0) -> datetime.datetime:
@@ -227,78 +135,6 @@ class TestNearestJoin:
 
         with _pt.raises(ValueError):
             self._run(spark, [(1, 100)], [(1, 100)], tol=0)
-
-
-class TestSoftDedupWeights:
-    def test_family_mass_is_one(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.dedup import (
-            soft_dedup_weights,
-        )
-
-        d = spark.createDataFrame(
-            [(1, "a"), (2, "a"), (3, "a"), (4, "b"), (5, None), (6, None)],
-            "doc_id: long, text: string",
-        )
-        got = {r.doc_id: (r.family_size, r.weight) for r in
-               soft_dedup_weights(d).collect()}
-        assert got[1] == (3, 0.333333) and got[2] == (3, 0.333333)
-        assert got[4] == (1, 1.0)
-        # NULL text is one family (coalesced to '')
-        assert got[5] == (2, 0.5) and got[6] == (2, 0.5)
-
-
-class TestTextrankKeywords:
-    def _docs(self, spark):
-        return spark.createDataFrame(
-            [
-                (1, "alpha beta alpha"),   # alpha-beta edge, weight 2
-                (2, "beta gamma"),         # beta-gamma edge, weight 1
-                (3, "solo solo"),          # self-pair only -> no edge
-                (4, ""),                   # empty doc
-                (5, None),                 # NULL doc
-            ],
-            "doc_id: long, text: string",
-        )
-
-    def test_hand_replayed_recurrence(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            textrank_keywords,
-        )
-
-        got = {
-            r.term: (r.rank, r.rk)
-            for r in textrank_keywords(self._docs(spark), k=10).collect()
-        }
-        # graph: alpha-(2)-beta-(1)-gamma; solo/empty/NULL contribute
-        # no nodes. Replay the exact recurrence in Python floats.
-        d, n = 0.85, 3
-        w = {
-            ("alpha", "beta"): 1.0,
-            ("beta", "alpha"): 2.0 / 3.0,
-            ("beta", "gamma"): 1.0 / 3.0,
-            ("gamma", "beta"): 1.0,
-        }
-        r = {t: 1.0 / n for t in ("alpha", "beta", "gamma")}
-        for _ in range(3):
-            c = {t: 0.0 for t in r}
-            for (u, v), wt in w.items():
-                c[v] += r[u] * wt
-            r = {t: (1.0 - d) / n + d * (c[t] + 0.0 / n) for t in r}
-        assert set(got) == {"alpha", "beta", "gamma"}
-        for t in r:
-            assert got[t][0] == pytest.approx(round(r[t], 9), abs=1e-9)
-        # beta is the hub; rk follows (rank DESC, term ASC)
-        assert got["beta"][1] == 1
-        assert got["beta"][0] > got["alpha"][0] > got["gamma"][0]
-
-    def test_top_k_cut_and_rank_order(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            textrank_keywords,
-        )
-
-        rows = textrank_keywords(self._docs(spark), k=2).collect()
-        assert [r.rk for r in rows] == [1, 2]
-        assert rows[0].term == "beta"
 
 
 class TestBestLagCorrelation:
@@ -488,143 +324,6 @@ class TestDpNoisyCounts:
             dp_noisy_counts(self._ev(spark), [])
 
 
-class TestRefusalRate:
-    def test_hand_computed(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-            refusal_rate,
-        )
-
-        turns = spark.createDataFrame(
-            [
-                ("c1", "assistant", "Sure, here is the answer."),
-                ("c1", "assistant", "I cannot help with that."),
-                ("c1", "assistant", "I'M SORRY, BUT no."),  # case-folded
-                ("c1", "user", "I cannot believe it"),       # not assistant
-                ("c2", "assistant", "Done."),
-                ("c3", "user", "hi"),                        # no assistant
-                ("c4", "assistant", None),                   # NULL text
-            ],
-            "conv_id: string, role: string, text: string",
-        )
-        got = {r.conv_id: r.asDict() for r in refusal_rate(turns).collect()}
-        assert got["c1"]["n_assistant"] == 3
-        assert got["c1"]["n_refusals"] == 2
-        assert got["c1"]["refusal_rate"] == 0.666667
-        assert got["c2"]["n_refusals"] == 0 and got["c2"]["refusal_rate"] == 0.0
-        # no assistant turns / NULL-only -> no row, never a NULL rate
-        assert "c3" not in got and "c4" not in got
-
-    def test_patterns_are_substrings_not_regex(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.transcript_stats import (
-            REFUSAL_PATTERNS,
-            refusal_rate,
-        )
-
-        # every pinned pattern detects itself embedded mid-sentence
-        turns = spark.createDataFrame(
-            [(f"c{i}", "assistant", f"well, {p}do X")
-             for i, p in enumerate(REFUSAL_PATTERNS)],
-            "conv_id: string, role: string, text: string",
-        )
-        rows = refusal_rate(turns).collect()
-        assert all(r.refusal_rate == 1.0 for r in rows)
-        assert len(rows) == len(REFUSAL_PATTERNS)
-
-
-class TestClusterBalancedSample:
-    def _emb(self, spark):
-        # two well-separated 1-d modes: 12 points near 0, 3 near 10
-        rows = [(i, [0.0 + i * 0.001]) for i in range(12)]
-        rows += [(100 + i, [10.0 + i * 0.001]) for i in range(3)]
-        return spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-
-    def test_quota_and_exhaustion(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-            cluster_balanced_sample,
-        )
-
-        got = cluster_balanced_sample(
-            self._emb(spark), k=2, per_cluster=5
-        ).collect()
-        by_cluster = {}
-        for r in got:
-            by_cluster.setdefault(r.cluster, []).append(r)
-        sizes = sorted(len(v) for v in by_cluster.values())
-        # dense mode capped at 5, sparse mode exhausted at 3
-        assert sizes == [3, 5]
-        for rows in by_cluster.values():
-            assert sorted(r.draw_rank for r in rows) == list(
-                range(1, len(rows) + 1)
-            )
-
-    def test_deterministic_and_salt_redraws(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-            cluster_balanced_sample,
-        )
-
-        a = {
-            (r.vec_id, r.cluster, r.draw_rank)
-            for r in cluster_balanced_sample(
-                self._emb(spark), k=2, per_cluster=5
-            ).collect()
-        }
-        b = {
-            (r.vec_id, r.cluster, r.draw_rank)
-            for r in cluster_balanced_sample(
-                self._emb(spark), k=2, per_cluster=5
-            ).collect()
-        }
-        assert a == b
-        c = {
-            (r.vec_id, r.cluster, r.draw_rank)
-            for r in cluster_balanced_sample(
-                self._emb(spark), k=2, per_cluster=5, salt="other"
-            ).collect()
-        }
-        assert a != c  # different salt, different members/order
-        with pytest.raises(ValueError):
-            cluster_balanced_sample(self._emb(spark), per_cluster=0)
-
-
-class TestVocabRichness:
-    def test_hand_computed(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            vocab_richness,
-        )
-
-        # terms: aa x3, bb x2, cc x1, dd x1  ->  s_obs=4, n=7, f1=2, f2=1
-        d = spark.createDataFrame(
-            [(1, "aa aa bb cc"), (2, "aa bb dd")],
-            "doc_id: long, text: string",
-        )
-        row = vocab_richness(d).collect()[0]
-        assert (row.s_obs, row.n_tokens, row.f1, row.f2) == (4, 7, 2, 1)
-        # chao1 = 4 + 2*1/(2*2) = 4.5 ; coverage = 1 - 2/7
-        assert row.chao1 == 4.5
-        assert row.coverage == 0.714286
-
-    def test_no_hapax_coverage_one(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            vocab_richness,
-        )
-
-        d = spark.createDataFrame(
-            [(1, "aa aa bb bb")], "doc_id: long, text: string"
-        )
-        row = vocab_richness(d).collect()[0]
-        # f1 = 0: chao1 collapses to s_obs, coverage to 1.0
-        assert row.f1 == 0 and row.chao1 == 2.0 and row.coverage == 1.0
-
-    def test_empty_corpus_null_estimates(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            vocab_richness,
-        )
-
-        d = spark.createDataFrame([(1, "!!!")], "doc_id: long, text: string")
-        row = vocab_richness(d).collect()[0]
-        assert row.s_obs == 0 and row.chao1 is None and row.coverage is None
-
-
 class TestProfileDrift:
     def test_hand_computed(self, spark):
         from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
@@ -667,72 +366,6 @@ class TestProfileDrift:
         a = spark.createDataFrame([("x",)], "t: string")
         with pytest.raises(ValueError):
             profile_drift(a, a, [])
-
-
-class TestStylometryDelta:
-    def test_hand_replayed(self, spark):
-        import math
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            stylometry_delta,
-        )
-
-        d = spark.createDataFrame(
-            [(1, "aa aa bb", "A"), (2, "aa bb bb", "B"), (3, "aa bb", "C")],
-            "doc_id: long, text: string, source: string",
-        )
-        got = {
-            (r.a, r.b): r for r in stylometry_delta(d, m=2).collect()
-        }
-        # replay the fixed-point chain in Python
-        f = {}
-        for s, toks in {"A": "aa aa bb", "B": "aa bb bb", "C": "aa bb"}.items():
-            ts = toks.split()
-            for t in ("aa", "bb"):
-                f[(s, t)] = round(ts.count(t) * 1_000_000 / len(ts))
-        z = {}
-        for t in ("aa", "bb"):
-            vals = [f[(s, t)] for s in "ABC"]
-            sf, sf2, S = sum(vals), sum(v * v for v in vals), 3
-            rad = S * sf2 - sf * sf
-            for s in "ABC":
-                z[(s, t)] = (S * f[(s, t)] - sf) / math.sqrt(rad)
-        exp = {}
-        for a, b in [("A", "B"), ("A", "C"), ("B", "C")]:
-            exp[(a, b)] = round(
-                sum(abs(z[(a, t)] - z[(b, t)]) for t in ("aa", "bb")) / 2, 6
-            )
-        assert set(got) == set(exp)
-        for k in exp:
-            assert got[k].n_terms == 2
-            assert got[k].delta == pytest.approx(exp[k], abs=1e-6)
-        # A and B are mirror images around C: symmetric distances
-        assert got[("A", "C")].delta == got[("B", "C")].delta
-        assert got[("A", "B")].delta > got[("A", "C")].delta
-
-    def test_identical_sources_zero_variance_excluded(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            stylometry_delta,
-        )
-
-        d = spark.createDataFrame(
-            [(1, "aa bb cc", "A"), (2, "aa bb cc", "B")],
-            "doc_id: long, text: string, source: string",
-        )
-        # every term has an identical profile -> all variances are
-        # EXACTLY zero (integer test) -> no scorable terms, no rows
-        assert stylometry_delta(d, m=3).collect() == []
-
-    def test_validation(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            stylometry_delta,
-        )
-
-        d = spark.createDataFrame(
-            [(1, "aa", "A")], "doc_id: long, text: string, source: string"
-        )
-        with pytest.raises(ValueError):
-            stylometry_delta(d, m=0)
 
 
 class TestRobustTrend:

@@ -1,14 +1,9 @@
-"""Exact percentiles and integer-exact k-means."""
+"""Exact percentiles, funnels and retention cohorts."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from threat_intelligence_knowledge_graph_spark.operators.stats import (
     exact_percentiles,
-)
-from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-    cluster_sizes,
-    kmeans_assign,
 )
 
 
@@ -57,99 +52,6 @@ class TestExactPercentiles:
             exact_percentiles(df, "v", "g", "id", qs=(1.5,))
 
 
-def _planted(spark):
-    """Two tight 3-D blobs far apart + ids such that one seed lands in
-    each blob is NOT given (k=2 smallest ids are both in blob A): the
-    update step must still pull a centroid to blob B by iteration 2."""
-    a = [(i, [1.0 + 0.01 * i, 1.0, 1.0]) for i in range(4)]       # ids 0-3
-    b = [(10 + i, [-5.0, -5.0 - 0.01 * i, -5.0]) for i in range(4)]  # ids 10-13
-    return spark.createDataFrame(a + b, ["vec_id", "embedding"])
-
-
-class TestKmeansAssign:
-    def test_separated_blobs_split_cleanly(self, spark):
-        out = kmeans_assign(
-            _planted(spark), k=2, iterations=2, scale=1024
-        ).collect()
-        by_cluster = {}
-        for r in out:
-            by_cluster.setdefault(r.cluster, set()).add(r.vec_id)
-        assert len(out) == 8
-        # the two blobs end up in different clusters
-        blobs = sorted(by_cluster.values(), key=min)
-        assert blobs[0] == {0, 1, 2, 3} and blobs[1] == {10, 11, 12, 13}
-
-    def test_matches_python_reference_bit_for_bit(self, spark):
-        import math
-
-        df = _planted(spark)
-        rows = sorted(
-            ((r.vec_id, list(r.embedding)) for r in df.collect()),
-            key=lambda t: t[0],
-        )
-        scale, k, iters = 1024, 2, 2
-        pts = {
-            vid: [math.floor(float(x) * scale + 0.5) for x in vec]
-            for vid, vec in rows
-        }
-        seeds = sorted(pts)[:k]
-        cents = {j: list(pts[vid]) for j, vid in enumerate(seeds)}
-        assign = {}
-        for _ in range(iters):
-            for vid, q in pts.items():
-                best = min(
-                    (sum((a - b) ** 2 for a, b in zip(q, c)), j)
-                    for j, c in cents.items()
-                )
-                assign[vid] = best[1]
-            new = {}
-            for j in cents:
-                members = [pts[v] for v, c in assign.items() if c == j]
-                if members:
-                    new[j] = [
-                        math.floor(sum(col) / len(members))
-                        for col in zip(*members)
-                    ]
-                else:
-                    new[j] = cents[j]
-            cents = new
-        got = {
-            r.vec_id: r.cluster
-            for r in kmeans_assign(df, k=k, iterations=iters).collect()
-        }
-        assert got == assign
-
-    def test_deterministic_across_partitionings(self, spark):
-        df = _planted(spark)
-        a = {r.vec_id: r.cluster for r in kmeans_assign(df, k=2).collect()}
-        b = {
-            r.vec_id: r.cluster
-            for r in kmeans_assign(df.repartition(7), k=2).collect()
-        }
-        assert a == b
-
-    def test_k1_puts_everything_in_cluster_zero(self, spark):
-        sizes = cluster_sizes(kmeans_assign(_planted(spark), k=1)).collect()
-        assert [(r.cluster, r.n_members) for r in sizes] == [(0, 8)]
-
-    def test_null_vectors_dropped(self, spark):
-        df = spark.createDataFrame(
-            [(0, [1.0, 1.0]), (1, None), (2, [2.0, 2.0])],
-            "vec_id long, embedding array<double>",
-        )
-        out = kmeans_assign(df, k=2)
-        assert {r.vec_id for r in out.collect()} == {0, 2}
-
-    def test_rejects_bad_args(self, spark):
-        df = _planted(spark)
-        with pytest.raises(ValueError):
-            kmeans_assign(df, k=0)
-        with pytest.raises(ValueError):
-            kmeans_assign(df, iterations=0)
-        with pytest.raises(ValueError):
-            kmeans_assign(df, scale=0)
-
-
 class TestReviewRegressions:
     def test_percentile_rank_is_exact_rational_not_float(self, spark):
         # 0.07*100 = 7.000000000000001 in IEEE doubles; a float ceil
@@ -158,94 +60,6 @@ class TestReviewRegressions:
         df = spark.createDataFrame(rows, ["g", "v", "id"])
         r = exact_percentiles(df, "v", "g", "id", qs=(0.07,)).collect()[0]
         assert r.p7 == 7.0
-
-    def test_kmeans_empty_vector_neither_seeds_nor_outputs(self, spark):
-        # id 0 is an EMPTY (non-NULL) vector: it must not take a seed
-        # slot — ids 1 and 2 seed instead — and it has no assignment.
-        df = spark.createDataFrame(
-            [(0, []), (1, [0.0, 0.0]), (2, [10.0, 10.0]), (3, [10.0, 9.0])],
-            "vec_id long, embedding array<double>",
-        )
-        got = {
-            r.vec_id: r.cluster
-            for r in kmeans_assign(df, k=2, iterations=2).collect()
-        }
-        assert set(got) == {1, 2, 3}
-        assert got[1] != got[2] and got[3] == got[2]
-
-
-class TestSemanticDedup:
-    def _run(self, spark, rows, **kw):
-        from threat_intelligence_knowledge_graph_spark.operators.clustering import (
-            semantic_dedup,
-        )
-
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-        return semantic_dedup(df, **kw)
-
-    def test_exact_copy_dropped_min_id_kept(self, spark):
-        # two well-separated directions, each with an exact copy:
-        # copies share the original's quantized grid point, so they
-        # cluster together and the higher id is blocked at cosine 1.0.
-        rows = [
-            (1, [1.0, 0.0]), (2, [1.0, 0.0]),
-            (3, [0.0, 1.0]), (4, [0.0, 1.0]),
-        ]
-        out = {r.vec_id: r.kept for r in self._run(
-            spark, rows, k=2, iterations=2, threshold=0.95
-        ).collect()}
-        assert out == {1: True, 2: False, 3: True, 4: False}
-
-    def test_greedy_blockers_include_dropped_rows(self, spark):
-        # chain: 1~2 and 2~3 clear the threshold, 1~3 does not.
-        # Greedy min-id blocking drops BOTH 2 (blocked by 1) and 3
-        # (blocked by the already-dropped 2) — the documented per-pair
-        # policy, distinct from connected-components' same answer here
-        # but asserted to pin the "dropped rows still block" semantics.
-        import math
-
-        a = [1.0, 0.0]
-        b = [math.cos(0.2), math.sin(0.2)]   # cos(1,2) ~ 0.980
-        c = [math.cos(0.4), math.sin(0.4)]   # cos(2,3) ~ 0.980, cos(1,3) ~ 0.921
-        out = {r.vec_id: r.kept for r in self._run(
-            spark, [(1, a), (2, b), (3, c)], k=1, iterations=1,
-            threshold=0.95,
-        ).collect()}
-        assert out == {1: True, 2: False, 3: False}
-
-    def test_zero_norm_rows_clustered_but_never_paired(self, spark):
-        rows = [(1, [0.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0])]
-        out = self._run(spark, rows, k=1, iterations=1).collect()
-        assert all(r.kept for r in out) and len(out) == 3
-
-    def test_cluster_cap_reports_dropped_never_silently_pairs(self, spark):
-        rows = [(i, [1.0, 0.0]) for i in range(1, 5)]
-        res, dropped = self._run(
-            spark, rows, k=1, iterations=1, max_cluster_size=2,
-            return_dropped=True,
-        )
-        assert all(r.kept for r in res.collect())
-        d = dropped.collect()
-        assert len(d) == 1 and d[0].n_members == 4
-
-    def test_cross_cluster_pairs_never_compared(self, spark):
-        # identical vectors forced into separate clusters stay kept —
-        # the documented SemDeDup recall boundary (pairs are in-cluster
-        # only). k=2 with seeds 1,2 on opposite axes puts 3 (copy of 1)
-        # with 1; 4 (copy of 2) with 2; but 1's copy at id 3 is blocked
-        # while nothing crosses clusters.
-        rows = [
-            (1, [1.0, 0.0]), (2, [0.0, 1.0]),
-            (3, [1.0, 0.0]), (4, [0.0, 1.0]),
-        ]
-        out = {r.vec_id: (r.cluster, r.kept) for r in self._run(
-            spark, rows, k=2, iterations=2, threshold=0.95
-        ).collect()}
-        assert out[1][0] == out[3][0] and out[2][0] == out[4][0]
-        assert out[1][0] != out[2][0]
-        assert [out[i][1] for i in (1, 2, 3, 4)] == [True, True, False, False]
 
 
 class TestFunnel:

@@ -1,263 +1,4 @@
-"""Tests for text-analysis + multimodal plumbing operators."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from threat_intelligence_knowledge_graph_spark.operators.multimodal import (
-    decode_assets,
-    frame_sample,
-    resize_plan,
-    synth_assets,
-)
-from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-    fingerprints,
-    language_id,
-    quality_metrics,
-    quality_score,
-    token_counts,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-class TestTokenCounts:
-    def test_known_counts(self, spark):
-        df = spark.createDataFrame([(1, "Hello, world! 42 times")], ["doc_id", "text"])
-        r = token_counts(df).first()
-        assert r.ws_tokens == 4
-        # BPE-ish: Hello , world ! 42 times
-        assert r.bpe_tokens == 6
-
-    def test_real_docs_nonzero(self, docs):
-        assert token_counts(docs).filter("ws_tokens <= 0").count() == 0
-
-
-class TestQuality:
-    def test_metrics_ranges(self, docs):
-        m = quality_metrics(docs)
-        bad = m.filter(
-            (F.col("punct_ratio") < 0) | (F.col("punct_ratio") > 1)
-            | (F.col("stopword_ratio") < 0) | (F.col("stopword_ratio") > 1)
-        )
-        assert bad.count() == 0
-
-    def test_prose_beats_salad(self, spark):
-        prose = (
-            "The analysis shows that the actor used a new tool and it was "
-            "effective for the campaign in this region."
-        )
-        salad = "x9 !!! ### $$$ %%% ^^^ &&& *** ((( ))) @@@ ~~~"
-        df = spark.createDataFrame([(1, prose), (2, salad)], ["doc_id", "text"])
-        got = {r.doc_id: r.quality for r in quality_score(df).collect()}
-        assert got[1] > got[2]
-
-
-class TestLanguageId:
-    def test_obvious_cases(self, spark):
-        df = spark.createDataFrame(
-            [
-                (1, "the cat and the dog are in the house with a ball"),
-                (2, "el gato y la casa de los amigos en una calle"),
-                (3, "der hund und die katze sind in den garten mit ein ball"),
-            ],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r.lang_pred for r in language_id(df).collect()}
-        assert got == {1: "en", 2: "es", 3: "de"}
-
-
-class TestFingerprint:
-    def test_deterministic_and_length(self, spark):
-        df = spark.createDataFrame(
-            [(1, "fingerprint this exact text"), (2, "fingerprint this exact text")],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: tuple(r.fingerprint) for r in fingerprints(df).collect()}
-        assert got[1] == got[2] and len(got[1]) == 5
-
-    def test_different_texts_differ(self, spark):
-        df = spark.createDataFrame(
-            [(1, "first document body"), (2, "second document body entirely")],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: tuple(r.fingerprint) for r in fingerprints(df).collect()}
-        assert got[1] != got[2]
-
-
-class TestMultimodal:
-    def test_synth_and_decode_roundtrip(self, spark):
-        assets = synth_assets(spark, 30)
-        assert assets.count() == 30
-        decoded = decode_assets(assets).cache()
-        assert decoded.count() == 30
-        # Kind recovered from payload header matches the column.
-        joined = decoded.alias("d").join(assets.alias("a"), "asset_id")
-        assert joined.filter("d.kind != a.kind").count() == 0
-        feat = decoded.first()
-        assert len(feat.features) == 8
-        assert abs(sum(feat.features) - 1.0) < 1e-3  # histogram normalized
-
-    def test_frame_sample_only_video(self, spark):
-        decoded = decode_assets(synth_assets(spark, 30)).cache()
-        frames = frame_sample(decoded, every_n=5)
-        kinds = decoded.filter("kind = 'video'").count()
-        assert frames.select("asset_id").distinct().count() == kinds
-
-    def test_resize_plan_bounds(self, spark):
-        decoded = decode_assets(synth_assets(spark, 30))
-        r = resize_plan(decoded, target=32)
-        assert r.filter("out_width > 32 OR out_height > 32").count() == 0
-
-    def test_real_decode_gated(self, spark):
-        import pytest as _pytest
-
-        assets = synth_assets(spark, 3)
-        try:
-            import PIL  # noqa: F401
-
-            _pytest.skip("PIL present; stub gate not applicable")
-        except ImportError:
-            with _pytest.raises(NotImplementedError):
-                decode_assets(assets, fake=False)
-
-
-class TestScrubPii:
-    def test_typed_placeholders(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            scrub_pii,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "mail alice.smith+x@corp.example.com or call (555) 123-4567"),
-                (2, "ssn 123-45-6789 card 4111 1111 1111 1111 ok"),
-                (3, "clean text with no pii at all"),
-            ],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r.text for r in scrub_pii(df).collect()}
-        assert got[1] == "mail <EMAIL> or call <PHONE>"
-        assert got[2] == "ssn <SSN> card <CARD> ok"
-        assert got[3] == "clean text with no pii at all"
-
-    def test_email_redacted_before_phone_pattern(self, spark):
-        """An email's digit runs must vanish inside <EMAIL>, not be
-        half-matched by the phone pattern (the list-order contract)."""
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            scrub_pii,
-        )
-
-        df = spark.createDataFrame([(1, "x 555-123-4567@evil.example.com y")], ["doc_id", "text"])
-        assert scrub_pii(df).first().text == "x <EMAIL> y"
-
-
-class TestPiiAudit:
-    def test_counts_mirror_scrub_order(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            pii_audit,
-        )
-
-        df = spark.createDataFrame(
-            [
-                # two emails in one turn; the email's digits never count
-                # as a phone (sequential counting = scrub order)
-                ("c1", "user", "a@x.io and 555-123-4567@evil.example.com"),
-                ("c1", "assistant", "call (555) 123-4567 or 5551234567"),
-                ("c2", "assistant", "ssn 123-45-6789 card 4111 1111 1111 1111"),
-                ("c2", "user", "clean"),
-            ],
-            ["conv_id", "role", "text"],
-        )
-        got = {
-            (r.role, r.pii_class): (r.n_hits, r.n_turns, r.n_convs)
-            for r in pii_audit(df).collect()
-        }
-        assert got[("user", "EMAIL")] == (2, 1, 1)
-        assert got[("user", "PHONE")] == (0, 0, 0)
-        assert got[("assistant", "PHONE")] == (2, 1, 1)
-        assert got[("assistant", "SSN")] == (1, 1, 1)
-        assert got[("assistant", "CARD")] == (1, 1, 1)
-        assert got[("user", "CARD")] == (0, 0, 0)
-        # every (role, class) pair present, even all-zero ones
-        assert len(got) == 8
-
-
-class TestRepetitionRatio:
-    def test_values(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            repetition_ratio,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "abcdefgh" * 10),          # pure repetition
-                (2, "the quick brown fox jumps over the lazy dog"),
-                (3, "short"),                  # < shingle chars → 0
-            ],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r.rep_ratio for r in repetition_ratio(df).collect()}
-        # 80 chars → 73 shingles, 8 distinct (cyclic) → 1 - 8/73
-        assert abs(got[1] - (1 - 8 / 73)) < 1e-9
-        assert got[2] == 0.0  # every 8-gram of a pangram-ish line is novel
-        assert got[3] == 0.0
-
-
-class TestTfidfTopTerms:
-    def test_scores_and_ranking(self, spark):
-        import math
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            tfidf_top_terms,
-        )
-
-        # 3 docs; 'rare' only in doc 1, 'common' in all three.
-        df = spark.createDataFrame(
-            [
-                (1, "rare common common"),
-                (2, "common beta beta beta"),
-                (3, "common beta"),
-            ],
-            ["doc_id", "text"],
-        )
-        rows = tfidf_top_terms(df, k=2).collect()
-        got = {(r.doc_id, r.rk): (r.term, r.tf, r.df, r.tfidf) for r in rows}
-        # doc 1: rare tf=1 df=1 → ln(4/2)=0.693147; common tf=2 df=3 → 2·ln(1)=0
-        assert got[(1, 1)] == ("rare", 1, 1, round(math.log(2.0), 6))
-        assert got[(1, 2)] == ("common", 2, 3, 0.0)
-        # doc 2: beta tf=3 df=2 → 3·ln(4/3)
-        assert got[(2, 1)] == ("beta", 3, 2, round(3 * math.log(4.0 / 3.0), 6))
-        # doc 3 tie on tfidf=... beta (tf=1, df=2) vs common (tf=1, df=3):
-        # beta's idf is larger → rank 1
-        assert got[(3, 1)][0] == "beta" and got[(3, 2)][0] == "common"
-
-    def test_tie_breaks_by_df_then_term(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            tfidf_top_terms,
-        )
-
-        # two terms with IDENTICAL (tf, df) in the same doc → identical
-        # rounded score; the (df, term) tiebreak must order them
-        # lexicographically in every engine.
-        df = spark.createDataFrame(
-            [(1, "zz aa"), (2, "zz aa")], ["doc_id", "text"]
-        )
-        rows = tfidf_top_terms(df, k=2).filter("doc_id = 1").collect()
-        assert [r.term for r in sorted(rows, key=lambda r: r.rk)] == ["aa", "zz"]
-
-    def test_min_term_len_and_k(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            tfidf_top_terms,
-        )
-
-        df = spark.createDataFrame([(1, "a bb ccc dddd")], ["doc_id", "text"])
-        rows = tfidf_top_terms(df, k=10, min_term_len=3).collect()
-        assert {r.term for r in rows} == {"ccc", "dddd"}
+"""Co-occurrence edge construction (graph_algos.cooccurrence_edges)."""
 
 
 class TestCooccurrenceEdges:
@@ -296,354 +37,3 @@ class TestCooccurrenceEdges:
         assert got == {("A", "B"): 2}
         d = [(r.u, r.h, r.context_size) for r in dropped.collect()]
         assert d == [("u1", "h1", 3)]
-
-
-class TestUnigramLogprob:
-    def test_hand_computed(self, spark):
-        import math
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            unigram_logprob,
-        )
-
-        # corpus: 6 tokens total — 'aa'×3, 'bb'×2, 'cc'×1
-        df = spark.createDataFrame(
-            [(1, "aa bb aa"), (2, "bb cc"), (3, "aa")],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r for r in unigram_logprob(df).collect()}
-        p = {"aa": 3 / 6, "bb": 2 / 6, "cc": 1 / 6}
-        exp = {
-            1: (2 * math.log(p["aa"]) + math.log(p["bb"])) / 3,
-            2: (math.log(p["bb"]) + math.log(p["cc"])) / 2,
-            3: math.log(p["aa"]),
-        }
-        for d, e in exp.items():
-            assert got[d].avg_logprob == round(e, 6), d
-        assert got[1].n_tokens == 3 and got[3].n_tokens == 1
-        # typicality ordering: the all-common-token doc beats the
-        # rare-token doc
-        assert got[3].avg_logprob > got[2].avg_logprob
-
-    def test_empty_doc_absent_and_tokenizer_match(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            unigram_logprob,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "x? !"), (2, "hello world")], ["doc_id", "text"]
-        )
-        # 'x' is below min_term_len, '? !' are not tokens → doc 1 absent
-        got = {r.doc_id for r in unigram_logprob(df).collect()}
-        assert got == {2}
-
-
-class TestBigramLogprob:
-    def test_hand_computed(self, spark):
-        import math
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            bigram_logprob,
-        )
-
-        # corpus bigrams: doc1 'aa bb','bb aa'; doc2 'bb aa'; doc3 none
-        # ct('aa bb')=1, ct('bb aa')=2; ctx('aa')=1, ctx('bb')=2
-        df = spark.createDataFrame(
-            [(1, "aa bb aa"), (2, "bb aa"), (3, "aa")],
-            ["doc_id", "text"],
-        )
-        got = {r.doc_id: r for r in bigram_logprob(df).collect()}
-        # p('bb'|'aa') = 1/1 = 1; p('aa'|'bb') = 2/2 = 1
-        assert set(got) == {1, 2}  # single-token doc 3 absent
-        assert got[1].n_bigrams == 2 and got[2].n_bigrams == 1
-        assert got[1].avg_logprob2 == 0.0
-        assert got[2].avg_logprob2 == 0.0
-        # now break determinism of the trivial case: add a competing
-        # continuation so p('bb'|'aa') < 1
-        df2 = spark.createDataFrame(
-            [(1, "aa bb"), (2, "aa cc"), (3, "aa bb")],
-            ["doc_id", "text"],
-        )
-        got2 = {r.doc_id: r for r in bigram_logprob(df2).collect()}
-        # ctx('aa') = 3; p(bb|aa) = 2/3, p(cc|aa) = 1/3
-        assert got2[1].avg_logprob2 == round(math.log(2 / 3), 6)
-        assert got2[2].avg_logprob2 == round(math.log(1 / 3), 6)
-        # phrasing typicality: the common continuation scores higher
-        assert got2[1].avg_logprob2 > got2[2].avg_logprob2
-
-    def test_shuffled_text_craters_bigram_not_unigram(self, spark):
-        """The signal bigram adds over unigram: same bag of words,
-        atypical ordering → same unigram score, lower bigram score."""
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            bigram_logprob,
-            unigram_logprob,
-        )
-
-        rows = [(i, "the quick fox jumps over the lazy dog") for i in range(1, 9)]
-        rows.append((9, "dog the over lazy jumps quick the fox"))
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        uni = {r.doc_id: r.avg_logprob for r in unigram_logprob(df).collect()}
-        bi = {r.doc_id: r.avg_logprob2 for r in bigram_logprob(df).collect()}
-        assert uni[9] == uni[1]  # identical bag → identical unigram
-        assert bi[9] < bi[1]  # atypical phrasing → lower bigram
-
-
-class TestSourceDatasheet:
-    def test_rollup(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            source_datasheet,
-        )
-
-        df = spark.createDataFrame(
-            [
-                (1, "alpha beta", "en", "s1"),
-                (2, "alpha beta", "en", "s1"),  # exact dup inside s1
-                (3, "gamma", "de", "s1"),
-                (4, "alpha beta", "en", "s2"),  # dup content, other source
-            ],
-            ["doc_id", "text", "lang", "source"],
-        )
-        got = {r.source: r for r in source_datasheet(df).collect()}
-        s1 = got["s1"]
-        assert s1.n_docs == 3 and s1.n_distinct_texts == 2
-        assert s1.dup_rate == round(1 - 2 / 3, 6)
-        assert s1.n_langs == 2
-        assert s1.vocab_size == 3  # alpha beta gamma
-        s2 = got["s2"]
-        assert s2.n_docs == 1 and s2.dup_rate == 0.0
-        assert s2.n_langs == 1 and s2.vocab_size == 2
-
-
-class TestFeatureHash:
-    def test_signed_counts_and_determinism(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            feature_hash,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "alpha alpha beta"), (2, "alpha gamma")], ["doc_id", "text"]
-        )
-        a = {(r.doc_id, r.idx, r.weight) for r in feature_hash(df, dim=64).collect()}
-        b = {(r.doc_id, r.idx, r.weight) for r in feature_hash(df, dim=64).collect()}
-        assert a == b and a
-        # same term hashes identically across docs: 'alpha' cell in doc 1
-        # has twice doc 2's magnitude (assuming no collision at dim=64
-        # among 3 terms — verify by checking index sharing)
-        one = {r.idx: r.weight for r in feature_hash(df, dim=64).filter("doc_id = 1").collect()}
-        two = {r.idx: r.weight for r in feature_hash(df, dim=64).filter("doc_id = 2").collect()}
-        shared = set(one) & set(two)
-        assert shared  # 'alpha' appears in both docs
-        alpha_idx = next(iter(shared))
-        assert abs(one[alpha_idx]) == 2 * abs(two[alpha_idx]) or len(shared) > 1
-
-    def test_indices_bounded_and_sparse(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            feature_hash,
-        )
-
-        df = spark.createDataFrame(
-            [(i, f"word{i} common") for i in range(20)], ["doc_id", "text"]
-        )
-        rows = feature_hash(df, dim=16).collect()
-        assert all(0 <= r.idx < 16 for r in rows)
-        assert all(r.weight != 0 for r in rows)
-
-
-class TestUnigramKl:
-    def _docs(self, spark, texts):
-        return spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-        )
-
-    def test_identical_corpora_zero(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            unigram_kl,
-        )
-
-        a = self._docs(spark, ["alpha beta gamma", "beta beta delta"])
-        r = unigram_kl(a, a).collect()[0]
-        assert r.kl_divergence == 0.0
-        assert r.vocab_size == 4 and r.total_a == r.total_b == 6
-
-    def test_matches_pure_python(self, spark):
-        import math
-        import re
-        from collections import Counter
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            unigram_kl,
-        )
-
-        ta = ["aa bb cc aa", "bb dd"]
-        tb = ["aa cc cc", "ee ee ff"]
-
-        def counts(ts):
-            c = Counter()
-            for t in ts:
-                c.update(re.findall(r"[a-z0-9]{2,}", t.lower()))
-            return c
-
-        a, b = counts(ta), counts(tb)
-        vocab = set(a) | set(b)
-        v, sa, sb = len(vocab), sum(a.values()), sum(b.values())
-        kl = sum(
-            ((a[t] + 1) / (sa + v))
-            * math.log(((a[t] + 1) * (sb + v)) / ((b[t] + 1) * (sa + v)))
-            for t in vocab
-        )
-        got = unigram_kl(self._docs(spark, ta), self._docs(spark, tb)).collect()[0]
-        assert got.vocab_size == v and got.total_a == sa and got.total_b == sb
-        assert abs(got.kl_divergence - kl) < 1e-6
-
-    def test_drift_grows_with_divergence(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            unigram_kl,
-        )
-
-        base = self._docs(spark, ["aa bb cc dd" for _ in range(4)])
-        near = self._docs(spark, ["aa bb cc ee" for _ in range(4)])
-        far = self._docs(spark, ["xx yy zz ww" for _ in range(4)])
-        kl_near = unigram_kl(near, base).collect()[0].kl_divergence
-        kl_far = unigram_kl(far, base).collect()[0].kl_divergence
-        assert 0.0 < kl_near < kl_far
-
-
-class TestQualityGate:
-    def test_per_source_calibration(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            quality_gate,
-            quality_score,
-        )
-
-        prose = "the quick brown fox jumps over the lazy dog and runs on"
-        junk = "@@@ ### !!! $$$ %%% ^^^ &&& *** ((( )))"
-        rows = (
-            [(i, "web", prose + f" extra {i}") for i in range(8)]
-            + [(100 + i, "web", junk) for i in range(2)]
-            + [(200 + i, "logs", f"err {i}: x") for i in range(8)]
-        )
-        df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-        kept = quality_gate(df, q=0.25, group_col="source").collect()
-        by_src = {}
-        for r in kept:
-            by_src.setdefault(r.group, set()).add(r.doc_id)
-        # the junk docs are web's worst quartile → gated out
-        assert not ({100, 101} & by_src["web"])
-        # logs survive THEIR OWN cut even though every log doc scores
-        # below web prose — the point of per-source calibration
-        assert len(by_src["logs"]) >= 6
-        # threshold column is each group's actual score at the cut
-        scores = {r.doc_id: r.quality for r in quality_score(df).collect()}
-        for r in kept:
-            assert r.quality >= r.threshold
-            assert r.quality == scores[r.doc_id]
-
-    def test_monotone_in_q_and_validation(self, spark):
-        import pytest as _pytest
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            quality_gate,
-        )
-
-        rows = [(i, "s", f"some text {i} " * (i + 1)) for i in range(10)]
-        df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-        k25 = {r.doc_id for r in quality_gate(df, q=0.25, group_col="source").collect()}
-        k50 = {r.doc_id for r in quality_gate(df, q=0.5, group_col="source").collect()}
-        assert k50 <= k25  # a stricter cut only removes
-        with _pytest.raises(ValueError, match="q must be"):
-            quality_gate(df, q=0.0, group_col="source")
-        with _pytest.raises(ValueError, match="q must be"):
-            quality_gate(df, q=1.0, group_col="source")
-
-
-class TestQualityModelScore:
-    """Model-based quality filtering: pinned linear model over
-    feature_hash features (fastText/DCLM-style filter stage)."""
-
-    def _weights(self, spark, dim=64):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            hash_grid_weights,
-        )
-
-        return hash_grid_weights(spark, dim=dim)
-
-    def test_matches_local_recomputation(self, spark):
-        """Scores agree with a hashlib/math recomputation of the same
-        model on a tiny corpus (feature hash, grid weights, sigmoid)."""
-        import hashlib
-        import math
-        from collections import Counter
-        import re
-
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            quality_model_score,
-        )
-
-        def md5u(s):
-            return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "little")
-
-        dim = 64
-        rows = [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "alpha beta gamma delta"),
-            (3, ""),  # no features -> sigmoid(0) = 0.5 exactly
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = {
-            r.doc_id: (r.score, r.keep)
-            for r in quality_model_score(
-                df, self._weights(spark, dim), dim=dim
-            ).collect()
-        }
-        for doc_id, text in rows:
-            cells = Counter()
-            for term in re.findall(r"[a-z0-9]{2,}", text.lower()):
-                idx = md5u(f"fh:{term}") % dim
-                sign = (md5u(f"fhs:{term}") % 2) * 2 - 1
-                cells[idx] += sign
-            dot = sum(
-                w * ((md5u(f"qw:{i}") % 2001 - 1000) / 1000.0)
-                for i, w in cells.items()
-                if w != 0
-            )
-            score = round(1.0 / (1.0 + math.exp(-dot)), 6)
-            assert got[doc_id] == (score, score >= 0.5), doc_id
-
-    def test_empty_doc_scores_half_and_keeps(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            quality_model_score,
-        )
-
-        df = spark.createDataFrame([(7, "")], ["doc_id", "text"])
-        r = quality_model_score(df, self._weights(spark), dim=64).first()
-        assert r.score == 0.5 and r.keep is True
-
-    def test_bias_shifts_scores_monotonically(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            quality_model_score,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "some moderately long quality text here")], ["doc_id", "text"]
-        )
-        w = self._weights(spark, 64)
-        lo = quality_model_score(df, w, dim=64, bias=-2.0).first().score
-        hi = quality_model_score(df, w, dim=64, bias=2.0).first().score
-        assert lo < hi
-
-    def test_model_broadcast_no_sortmerge(self, spark):
-        """The weight table must broadcast — the corpus never shuffles
-        for the model join."""
-        from threat_intelligence_knowledge_graph_spark.operators.text_quality import (
-            quality_model_score,
-        )
-
-        df = spark.createDataFrame([(1, "alpha beta")], ["doc_id", "text"])
-        plan = quality_model_score(df, self._weights(spark), dim=64)._jdf.queryExecution().executedPlan().toString()
-        # model (idx) join: broadcast; the only sort-merge allowed is the
-        # final doc_id LeftOuter (doc-keyed, shuffle-join correct at scale)
-        assert "BroadcastHashJoin [idx" in plan
-        import re as _re
-
-        smj = _re.findall(r"SortMergeJoin \[(\w+)", plan)
-        assert all(c.startswith("doc_id") for c in smj), smj

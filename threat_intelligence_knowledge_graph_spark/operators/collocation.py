@@ -25,13 +25,13 @@ Plan shape (scale notes inline):
   N — the retained pairs' statistics are unchanged) and REPORTED via
   ``return_dropped=True``; a group with 10⁶ items carries no
   collocation signal, only a 10¹²-row join bomb. The LSH bucket-cap
-  convention (``operators.dedup``).
+  convention.
 - marginals are an item-dimension-sized count agg joined back
   BROADCAST; N is a 1-row agg crossed in broadcast — zero driver
   collects.
 - every count is an exact integer; the two ln() calls run once per
   surviving pair on integer arguments' exact doubles, then round(6) —
-  cross-engine reproducible (the dsir/tfidf discipline).
+  cross-engine reproducible.
 """
 
 from __future__ import annotations

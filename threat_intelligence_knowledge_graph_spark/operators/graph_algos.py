@@ -892,7 +892,7 @@ def node2vec_walks(
     ``u = (md5_bucket(walk_id|step|x) + 0.5)/10⁶`` and ``w`` = p, 1, or
     q per the class above (winning probability ∝ 1/w — exponential
     clocks), ties broken by x. Rounding BEFORE the compare + id
-    tiebreak is the dsir_resample discipline: the ln is the only
+    tiebreak keeps it reproducible: the ln is the only
     transcendental, and a 1-ulp libm divergence cannot flip a rounded
     compare, so the walk is engine/run/partitioning-identical.
 
@@ -1447,8 +1447,7 @@ def connected_components_increment(
     """Merge a batch of new edges into an existing min-id component
     ``assignment`` (id, component) WITHOUT recomputing over the full
     edge set — the steady-state form of ``connected_components`` for a
-    graph that grows by ingest batches (the `minhash_incremental` /
-    `curate_increment` discipline applied to graph maintenance).
+    graph that grows by ingest batches.
 
     Connectivity is transitive, so CC(E_old ∪ E_new) factors through
     the old assignment: map each new edge's endpoints to their current

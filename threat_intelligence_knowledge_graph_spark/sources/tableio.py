@@ -119,9 +119,9 @@ class LocalTableCatalog:
         as of BEFORE that run's commits — the resume primitive for
         multi-table jobs (a rerun after a mid-commit crash must compute
         against the pre-run state, not its own partial output). Only
-        valid when the excluded run exclusively APPENDED at the head
-        (curate_increment's shape); its entries are dropped and the
-        chain resolves from the remaining head.
+        valid when the excluded run exclusively APPENDED at the head;
+        its entries are dropped and the chain resolves from the
+        remaining head.
 
         ``as_of_snapshot`` is time travel (Iceberg ``VERSION AS OF``):
         read the state as of that commit — the newest entry with

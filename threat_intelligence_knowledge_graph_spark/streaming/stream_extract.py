@@ -48,7 +48,7 @@ def stream_extract(
     commit cost per batch (the dominant cost — each commit rewrites the
     merged tables); ``None`` removes the cap so ``availableNow`` drains
     the backlog in the fewest batches — the high-throughput/backfill
-    profile (scripts/bench_streaming.py measures both points).
+    profile.
     """
     reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
     if max_files_per_trigger is not None:
@@ -258,9 +258,8 @@ def streaming_exact_dedup(
     time, so state is bounded by the duplicate-arrival horizon (how far
     apart duplicates can arrive), not stream history. Duplicates
     arriving further apart than ``watermark`` are NOT caught — that is
-    the documented contract; the periodic batch dedup over the
-    materialized table (``operators/dedup.py``) is the backstop,
-    exactly the lambda split the curation pipeline uses.
+    the documented contract; a periodic batch dedup over the
+    materialized table is the backstop (the lambda split).
 
     ``max_files_per_trigger`` throttles file ingestion so tests can
     force duplicates into DIFFERENT micro-batches (proving the dedup is
