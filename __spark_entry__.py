@@ -2130,8 +2130,8 @@ def q_canonical_map(spark, sf_dir):
     blocking over normalized surfaces → Jaccard verify → connected
     components → (node_id, canonical_id) for every non-canonical alias.
 
-    Planted so the LSH outcome is ANALYTIC: every 7th orderkey seeds a family of 2-3
-    CASE-variant ids ('GRP-…-X' / 'Grp-…-x' / 'grp-…-x') whose
+    Planted so the LSH outcome is ANALYTIC: every 7th orderkey seeds a
+    family of 2-3 CASE-variant ids ('GRP-…-X' / 'Grp-…-x' / 'grp-…-x') whose
     lowercased surfaces are IDENTICAL — identical shingle sets ⇒
     identical signatures ⇒ certain candidacy in every band ⇒ Jaccard
     exactly 1.0. Family keys are FULL 32-char md5 digests (NOT
@@ -2433,8 +2433,9 @@ def q_graph_node2vec(spark, sf_dir):
     strong second-order bias (p=4 discourages returns, q=0.25 pushes
     outward) over the symmetrized chain+region graph of
     q_graph_random_walks. The weighted draw is an exponential race on
-    hash-seeded clocks rounded BEFORE the compare, so the oracle unrolls the identical md5 arithmetic,
-    the identical prev/dist-1/dist-2 CASE, and the identical
+    hash-seeded clocks rounded BEFORE the compare, so the oracle
+    unrolls the identical md5 arithmetic, the identical prev/dist-1/dist-2
+    CASE, and the identical
     (clock, candidate) total order per step."""
     from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
         node2vec_walks,
@@ -2453,9 +2454,9 @@ def q_events_cooccur_npmi(spark, sf_dir):
     """NPMI collocation scoring (Bouma 2009) of event types over
     (user, hour) contexts: the edge-confidence signal that separates
     'both items are everywhere' (npmi ≈ 0) from 'these travel together'
-    (npmi → 1). Contexts use epoch-integer hour buckets (timezone-portable);
-    pairs with fewer
-    than 2 shared contexts are pruned before the ln math. Oracle
+    (npmi → 1). Contexts use epoch-integer hour buckets
+    (timezone-portable); pairs with fewer than 2 shared contexts are
+    pruned before the ln math. Oracle
     recomputes the identical integer counts and rounded npmi."""
     from threat_intelligence_knowledge_graph_spark.operators.collocation import (
         cooccur_npmi,

@@ -19,9 +19,9 @@ Local::
         --warehouse /tmp/kg-wh --run-id dev --fused
 
 Resume: re-running with the same --run-id skips committed stages and is
-idempotent (MERGE sinks). Build the --py-files zip from the repo root
-with ``zip -r tikg_pyfiles.zip threat_intelligence_knowledge_graph_spark
--i '*.py'``.
+idempotent (MERGE sinks). Build the --py-files zip from the repo root::
+
+    zip -r tikg_pyfiles.zip threat_intelligence_knowledge_graph_spark -i '*.py'
 """
 
 from __future__ import annotations
