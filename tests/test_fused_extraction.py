@@ -2,7 +2,6 @@
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from threat_intelligence_knowledge_graph_spark.datagen import transcripts_rows
 from threat_intelligence_knowledge_graph_spark.operators.extraction import (
@@ -49,19 +48,6 @@ class TestFusedEqualsDeclarative:
         g1 = {(r.node_label, r.node_id): dict(r.properties) for r in n1.collect()}
         g2 = {(r.node_label, r.node_id): dict(r.properties) for r in n2.collect()}
         assert g1 == g2
-
-    def test_edges_only_emit_identical_edges(self, spark, transcripts):
-        """emit='edges' must produce exactly the edge records of
-        emit='all' (and zero node rows) — the timed bench variant."""
-        full = extract_graph_records_fused(transcripts, num_partitions=5)
-        eo = extract_graph_records_fused(
-            transcripts, num_partitions=5, emit="edges"
-        )
-        assert eo.filter(F.col("kind") == "node").count() == 0
-        key = lambda r: (r.conv_id, r.src_label, r.src_id, r.rel_type, r.dst_label, r.dst_id)  # noqa: E731
-        e1 = sorted(key(r) for r in full.filter(F.col("kind") == "edge").collect())
-        e2 = sorted(key(r) for r in eo.collect())
-        assert e1 == e2 and len(e1) > 20
 
     def test_null_conv_id_group_matches_declarative(self, spark):
         """Spark's JVM groupBy keeps a single NULL-key group; the fused

@@ -726,99 +726,6 @@ class TestRound5AnalystQueries:
             assert r.degree >= 2
             assert 0.0 <= r.lcc <= 1.0
 
-    def test_bursty_indicators(self, spark, warehouse):
-        import datetime
-
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            bursty_indicators,
-        )
-
-        base = datetime.datetime(2024, 1, 1)
-        rows = [
-            ("beacon", base + datetime.timedelta(hours=h)) for h in range(6)
-        ] + [
-            ("burst", base + datetime.timedelta(hours=h, minutes=m))
-            for h, n in [(0, 1), (1, 1), (2, 10)]
-            for m in range(n)
-        ]
-        ev = spark.createDataFrame(rows, ["event_type", "ts"])
-        got = bursty_indicators(spark, ev, k=5).collect()
-        assert [r.event_type for r in got] == ["burst", "beacon"]
-        assert got[0].fano > 1.0
-        assert got[1].fano == 0.0  # perfectly clocked
-
-    def test_clocked_beacons(self, spark, warehouse):
-        import datetime
-
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            clocked_beacons,
-        )
-
-        base = datetime.datetime(2024, 1, 1)
-        rows = [
-            ("imp-" + str(i), "implant", "dns", base + datetime.timedelta(seconds=60 * i))
-            for i in range(6)
-        ] + [
-            ("hum-" + str(i), "analyst", "web", base + datetime.timedelta(seconds=o))
-            for i, o in enumerate([0, 10, 110, 120, 400])
-        ] + [
-            ("fl-" + str(i), "flood", "burst", base) for i in range(5)
-        ]
-        ev = spark.createDataFrame(
-            rows, ["event_id", "user_id", "event_type", "ts"]
-        )
-        got = clocked_beacons(spark, ev, k=5).collect()
-        # flood channel (all same-second, cv2 NULL) must be excluded
-        assert [(r.user_id, r.event_type) for r in got] == [
-            ("implant", "dns"), ("analyst", "web"),
-        ]
-        assert got[0].cv2 == 0.0 and got[0].mean_gap_s == 60.0
-        assert got[1].cv2 > 0.5
-
-    def test_linked_indicators(self, spark, warehouse):
-        import datetime
-
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            linked_indicators,
-        )
-
-        base = datetime.datetime(2024, 1, 1)
-        series = {"d1": [1, 2, 3, 4], "d2": [2, 4, 6, 8], "d3": [4, 3, 2, 1]}
-        rows = [
-            (f"{t}{h}{i}", t, base + datetime.timedelta(hours=h, minutes=i))
-            for t, cs in series.items()
-            for h, c in enumerate(cs)
-            for i in range(c)
-        ]
-        ev = spark.createDataFrame(rows, ["event_id", "event_type", "ts"])
-        got = linked_indicators(spark, ev, k=5).collect()
-        # only the positively-correlated pair survives the direction gate
-        assert [(r.a, r.b, r.direction, r.r2) for r in got] == [
-            ("d1", "d2", 1, 1.0)
-        ]
-
-    def test_ramping_indicators(self, spark, warehouse):
-        import datetime
-
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            ramping_indicators,
-        )
-
-        base = datetime.datetime(2024, 1, 1)
-        series = {"up": [1, 2, 3, 4], "steep": [1, 3, 5, 7], "down": [4, 3, 2, 1]}
-        rows = [
-            (f"{t}{h}{i}", t, base + datetime.timedelta(hours=h, minutes=i))
-            for t, cs in series.items()
-            for h, c in enumerate(cs)
-            for i in range(c)
-        ]
-        ev = spark.createDataFrame(rows, ["event_id", "event_type", "ts"])
-        got = ramping_indicators(spark, ev, k=5).collect()
-        # declining indicator gated out; steepest ramp first
-        assert [(r.event_type, r.slope) for r in got] == [
-            ("steep", 2.0), ("up", 1.0)
-        ]
-
 
 class TestRound5bAnalystQueries:
     def test_corroborated_edges(self, spark, warehouse):
@@ -834,28 +741,6 @@ class TestRound5bAnalystQueries:
         for r in rows:
             assert r.n_sources <= r.n_mentions
             assert 0 < r.confidence < 1
-
-    def test_flux_timelines(self, spark, warehouse):
-        import datetime as dt
-
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            flux_timelines,
-        )
-
-        T = dt.datetime
-        obs = spark.createDataFrame(
-            [
-                ("d1", "R", "ip1", T(2026, 1, 1)),
-                ("d1", "R", "ip2", T(2026, 1, 2)),
-                ("d1", "R", "ip1", T(2026, 1, 3)),  # returns → 3 intervals
-                ("d2", "R", "ip9", T(2026, 1, 1)),
-            ],
-            "subj: string, pred: string, obj: string, ts: timestamp",
-        )
-        rows = flux_timelines(spark, obs, k=5).collect()
-        assert [r.subj for r in rows] == ["d1", "d2"]
-        top = rows[0]
-        assert (top.n_intervals, top.n_objects, top.current_obj) == (3, 2, "ip1")
 
 
 class TestNeighborhoodGrowth:
@@ -905,28 +790,3 @@ class TestNeighborhoodGrowth:
         rows = neighborhood_growth(spark, hops=2, p=4, k=5).collect()
         assert 0 < len(rows) <= 5
         assert all(r.est_ball > 0 for r in rows)
-
-
-class TestOfficeHoursChannels:
-    def test_diurnal_ranks_over_flat(self, spark):
-        import datetime as dt
-
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            office_hours_channels,
-        )
-
-        rows = []
-        # diurnal: 48 events all in hour 9 across 2 days
-        for d in (1, 2):
-            rows += [("nine-to-five", dt.datetime(2026, 4, d, 9, m)) for m in range(24)]
-        # flat: one event every hour for 2 days
-        for d in (1, 2):
-            rows += [("roundclock", dt.datetime(2026, 4, d, h, 0)) for h in range(24)]
-        # thin: below min_events, must be suppressed
-        rows += [("thin", dt.datetime(2026, 4, 1, 9, 0))]
-        ev = spark.createDataFrame(rows, "event_type: string, ts: timestamp")
-        got = office_hours_channels(spark, ev, k=5, min_events=24).collect()
-        assert [r.event_type for r in got] == ["nine-to-five", "roundclock"]
-        assert got[0].peak_hour == 9
-        assert got[0].chi2 > got[1].chi2
-        assert got[1].chi2 == 0.0

@@ -1,5 +1,5 @@
 """Round-5 continuation operators: sorted-neighborhood blocking,
-triple schema conformance audit, SCD2 intervals, temporal two-hop,
+triple schema conformance audit, edit-distance pair verification,
 triple corroboration."""
 
 from __future__ import annotations
@@ -139,72 +139,6 @@ class TestTripleSchemaAudit:
         assert audited.filter(audited.status != "ok").count() == 0
 
 
-class TestScd2Intervals:
-    def _obs(self, spark, rows):
-        return spark.createDataFrame(
-            rows, "subj: string, pred: string, obj: string, ts: timestamp"
-        )
-
-    def test_runs_and_reopened_interval(self, spark):
-        import datetime as dt
-
-        T = dt.datetime
-        obs = self._obs(
-            spark,
-            [
-                ("d1", "R", "ip1", T(2026, 1, 1)),
-                ("d1", "R", "ip1", T(2026, 1, 2)),
-                ("d1", "R", "ip2", T(2026, 1, 3)),
-                ("d1", "R", "ip1", T(2026, 1, 4)),  # ip1 RETURNS → new run
-                ("d2", "R", "ip9", T(2026, 1, 1)),
-            ],
-        )
-        from threat_intelligence_knowledge_graph_spark.operators.temporal_join import (
-            scd2_intervals,
-        )
-
-        got = [
-            (r.subj, r.obj, r.valid_from, r.valid_to, r.n_observations, r.is_current)
-            for r in scd2_intervals(obs).orderBy("subj", "valid_from", "obj").collect()
-        ]
-        assert got == [
-            ("d1", "ip1", T(2026, 1, 1), T(2026, 1, 3), 2, False),
-            ("d1", "ip2", T(2026, 1, 3), T(2026, 1, 4), 1, False),
-            ("d1", "ip1", T(2026, 1, 4), None, 1, True),
-            ("d2", "ip9", T(2026, 1, 1), None, 1, True),
-        ]
-
-    def test_same_instant_conflict_is_deterministic(self, spark):
-        import datetime as dt
-
-        T = dt.datetime
-        from threat_intelligence_knowledge_graph_spark.operators.temporal_join import (
-            scd2_intervals,
-        )
-
-        obs = self._obs(
-            spark,
-            [
-                ("d1", "R", "ipB", T(2026, 1, 1)),
-                ("d1", "R", "ipA", T(2026, 1, 1)),  # same instant, obj order
-                ("d1", "R", "ipC", T(2026, 1, 2)),
-            ],
-        )
-        got = [
-            (r.obj, r.valid_from, r.valid_to, r.is_current)
-            for r in scd2_intervals(obs)
-            .orderBy("valid_from", "obj")
-            .collect()
-        ]
-        # obj-ordered at the tied instant: ipA run then ipB run (both
-        # valid_from 1/1, A's valid_to = B's valid_from), then ipC.
-        assert got == [
-            ("ipA", T(2026, 1, 1), T(2026, 1, 1), False),
-            ("ipB", T(2026, 1, 1), T(2026, 1, 2), False),
-            ("ipC", T(2026, 1, 2), None, True),
-        ]
-
-
 class TestVerifyPairsEditDistance:
     def test_threshold_and_similarity(self, spark):
         from threat_intelligence_knowledge_graph_spark.operators.canonicalize import (
@@ -247,59 +181,6 @@ class TestVerifyPairsEditDistance:
 
         with _pt.raises(ValueError):
             verify_pairs_edit_distance(pairs, recs, tau=0)
-
-
-class TestTemporalTwoHop:
-    def _edges(self, spark, rows):
-        return spark.createDataFrame(
-            rows, "src: string, dst: string, ts: timestamp"
-        )
-
-    def test_causal_order_enforced(self, spark):
-        import datetime as dt
-
-        T = dt.datetime
-        from threat_intelligence_knowledge_graph_spark.operators.temporal_join import (
-            temporal_two_hop,
-        )
-
-        edges = self._edges(
-            spark,
-            [
-                ("a", "b", T(2026, 1, 1)),
-                ("b", "c", T(2026, 1, 2)),  # causal: after a→b
-                ("b", "d", T(2025, 12, 31)),  # BEFORE a→b → excluded
-                ("b", "e", T(2026, 1, 1)),  # same instant → excluded
-            ],
-        )
-        got = [
-            (r.a, r.b, r.c, r.gap_s)
-            for r in temporal_two_hop(edges).collect()
-        ]
-        assert got == [("a", "b", "c", 86400.0)]
-
-    def test_max_gap_bound(self, spark):
-        import datetime as dt
-
-        T = dt.datetime
-        from threat_intelligence_knowledge_graph_spark.operators.temporal_join import (
-            temporal_two_hop,
-        )
-
-        edges = self._edges(
-            spark,
-            [
-                ("a", "b", T(2026, 1, 1)),
-                ("b", "c", T(2026, 1, 2)),
-                ("b", "d", T(2026, 3, 1)),  # 59 days later
-            ],
-        )
-        got = {
-            r.c for r in temporal_two_hop(edges, max_gap_s=7 * 86400).collect()
-        }
-        assert got == {"c"}
-        with pytest.raises(ValueError):
-            temporal_two_hop(edges, max_gap_s=0)
 
 
 class TestTripleCorroboration:

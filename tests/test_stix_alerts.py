@@ -1,14 +1,10 @@
-"""STIX 2.1 export skeleton + watchlist alerting."""
+"""STIX 2.1 export: object and relationship mapping, export_stix CLI."""
 
 from __future__ import annotations
 
 import hashlib
 import re
 
-from threat_intelligence_knowledge_graph_spark.operators.alerts import (
-    watchlist_alerts,
-    watchlist_summary,
-)
 from threat_intelligence_knowledge_graph_spark.operators.stix_export import (
     STORE_LABEL_TO_STIX,
     stix_objects,
@@ -83,45 +79,6 @@ class TestStixRelationships:
         )
         ids = [r.stix_id for r in stix_relationships(edges).collect()]
         assert len(set(ids)) == 3  # unit separators prevent collisions
-
-
-class TestWatchlist:
-    def _frames(self, spark):
-        mentions = spark.createDataFrame(
-            [("CVE-1", "c1"), ("CVE-1", "c1"), ("CVE-1", "c2"),
-             ("CVE-2", "c3"), ("CVE-9", "c4")],
-            "value string, conv_id string",
-        )
-        wl = spark.createDataFrame(
-            [("CVE-1",), ("CVE-2",), ("CVE-SILENT",), ("CVE-2",)],
-            "value string",
-        )
-        return mentions, wl
-
-    def test_alert_feed(self, spark):
-        mentions, wl = self._frames(spark)
-        got = {(r.value, r.conv_id) for r in watchlist_alerts(mentions, wl).collect()}
-        # unwatched CVE-9 never alerts; multiplicity preserved pre-distinct
-        assert got == {("CVE-1", "c1"), ("CVE-1", "c2"), ("CVE-2", "c3")}
-        assert watchlist_alerts(mentions, wl).count() == 4  # 2x c1 mention
-
-    def test_summary_includes_silent(self, spark):
-        mentions, wl = self._frames(spark)
-        got = {
-            r.value: (r.n_mentions, r.n_convs)
-            for r in watchlist_summary(mentions, wl).collect()
-        }
-        assert got == {
-            "CVE-1": (3, 2),
-            "CVE-2": (1, 1),
-            "CVE-SILENT": (0, 0),
-        }
-
-    def test_broadcast_plan(self, spark):
-        mentions, wl = self._frames(spark)
-        plan = watchlist_alerts(mentions, wl)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
 
 
 class TestExportStixCli:

@@ -6,7 +6,7 @@ Joining observed IPs to a CIDR block table is the standard enrichment
 — and a containment (range) join, which Spark lacks as a built-in and
 which a naive inequality join turns into a cartesian product.
 
-Same cure as ``temporal_join.interval_join``, on IPv4 space: blocks
+The cure is a bucketed interval join on IPv4 space: blocks
 explode to the fixed-width /g prefix buckets they cover (a /16 block is
 ONE /16 bucket; a /8 explodes to 256), IPs map to exactly one bucket,
 the join is a hash equi-join on the bucket with exact containment as a

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.extract import extract_document, finalize_edges, finalize_nodes
 from ..schemas import EXTRACTION_SCHEMA
+from .reassembly import TURN_SEPARATOR
 
 _COLS = [f.name for f in EXTRACTION_SCHEMA.fields]
 
@@ -76,9 +77,6 @@ def extract_graph_records(
 def extract_graph_records_fused(
     transcripts: DataFrame,
     num_partitions: int | None = None,
-    turn_separator: str = "\n",
-    include_context: bool = False,
-    emit: str = "all",
     input_pregrouped: bool = False,
 ) -> DataFrame:
     """Fused reassembly+extraction: turns → extraction records in ONE
@@ -97,12 +95,6 @@ def extract_graph_records_fused(
     num_partitions) — size ``num_partitions`` so that fits the executor
     (default 2× parallelism; at cluster scale use input_bytes / 128 MB).
 
-    ``emit='edges'`` skips node finalization and node output rows
-    entirely — for consumers that only read the edge stream (the triple
-    bench, edge-only incremental loads), node rows are ~3/4 of the output
-    and carry the MapType properties column, the most expensive part of
-    the Arrow encode. Edge records are identical to ``emit='all'``.
-
     ``input_pregrouped=True`` skips the conv_id repartition — the ONE
     exchange in this plan — and maps directly over the input partitions.
     Only valid when every conversation's turns are co-located within a
@@ -114,10 +106,6 @@ def extract_graph_records_fused(
     two documents — enable this only when the ingest layout guarantees
     co-location.
     """
-    if emit not in ("all", "edges"):
-        raise ValueError("emit must be 'all' or 'edges'")
-    edges_only = emit == "edges"
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [pdf for pdf in batches if len(pdf)]
         if not parts:
@@ -147,24 +135,19 @@ def extract_graph_records_fused(
             starts = ends = ()
         for s, e in zip(starts, ends):
             conv_id = conv_arr[s]
-            text = turn_separator.join(text_arr[s:e])
+            text = TURN_SEPARATOR.join(text_arr[s:e])
             graph = extract_document(text)
-            for label, node_id, props in (
-                () if edges_only else finalize_nodes(graph)
-            ):
+            for label, node_id, props in finalize_nodes(graph):
                 key = (label, node_id)
                 if key in node_acc:
                     node_acc[key][1].update(props)
                     node_acc[key] = (conv_id, node_acc[key][1])
                 else:
                     node_acc[key] = (conv_id, props)
-            for src_l, src_id, rel, dst_l, dst_id, ctx in finalize_edges(graph):
+            for src_l, src_id, rel, dst_l, dst_id, _ctx in finalize_edges(graph):
                 key = (src_id, rel, dst_id)
                 if key not in edge_acc:
-                    edge_acc[key] = (
-                        conv_id, src_l, src_id, rel, dst_l, dst_id,
-                        ctx if include_context else None,
-                    )
+                    edge_acc[key] = (conv_id, src_l, src_id, rel, dst_l, dst_id)
         # Columnar construction (dict-of-lists → one DataFrame) — cheaper
         # than a list of 11-wide tuples at millions of output rows.
         n_nodes, n_edges = len(node_acc), len(edge_acc)
@@ -187,7 +170,7 @@ def extract_graph_records_fused(
             "rel_type": none_nodes + [e[3] for e in edge_acc.values()],
             "dst_label": none_nodes + [e[4] for e in edge_acc.values()],
             "dst_id": none_nodes + [e[5] for e in edge_acc.values()],
-            "context": none_nodes + [e[6] for e in edge_acc.values()],
+            "context": none_nodes + none_edges,
         }
         yield pd.DataFrame(out, columns=_COLS)
 

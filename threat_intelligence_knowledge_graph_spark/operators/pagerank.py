@@ -160,60 +160,3 @@ def pagerank(
             .localCheckpoint(eager=True)
         )
     return ranks.select("id", "rank")
-
-
-def pagerank_delta(
-    edges_before: DataFrame,
-    edges_after: DataFrame,
-    iterations: int = 10,
-    damping: float = 0.85,
-    src: str = "src_id",
-    dst: str = "dst_id",
-    weight: str | None = None,
-) -> DataFrame:
-    """(id, rank_before, rank_after, delta) — centrality SHIFT between
-    two edge snapshots of the same graph (e.g. the early and late half
-    of an observation window): ``delta = rank_after - rank_before``.
-
-    Analyst use: *rising infrastructure*. Raw-volume trend triage
-    (``stats.trend_slope``) catches indicators whose own mention count
-    ramps; a centrality delta additionally catches nodes whose VOLUME
-    is flat but whose POSITION is consolidating — e.g. a C2 domain that
-    newly links previously-separate actor clusters gains rank mass even
-    at constant sighting rate. The reference's Cypher surface
-    (main.py:191-210) exposes only point-in-time queries; this is the
-    temporal-graph extension on top of ``pagerank``.
-
-    Each window is ranked independently (same ``iterations``/
-    ``damping``/``weight`` semantics as :func:`pagerank` — per-window
-    rank masses each sum to 1, so deltas are comparable scale-free). A
-    node absent from a window (no incident edges there) carries rank
-    0.0 in it, so ``delta`` is defined on the union universe: a node
-    that newly appears AND ranks high is maximally "rising".
-
-    Scale shape: two independent pagerank runs (each iteration one
-    keyed join + agg, lineage truncated per step) and ONE full-outer
-    join on id at the end — no new shuffle pattern beyond the
-    underlying operator. At 10^12-turn scale the two edge snapshots
-    come from partition-pruned time-slice scans of the same events
-    table, so the windows never co-reside in memory.
-    """
-    before = pagerank(
-        edges_before, iterations=iterations, damping=damping,
-        src=src, dst=dst, weight=weight,
-    ).withColumnRenamed("rank", "rank_before")
-    after = pagerank(
-        edges_after, iterations=iterations, damping=damping,
-        src=src, dst=dst, weight=weight,
-    ).withColumnRenamed("rank", "rank_after")
-    rb = F.coalesce(F.col("rank_before"), F.lit(0.0))
-    ra = F.coalesce(F.col("rank_after"), F.lit(0.0))
-    return (
-        before.join(after, "id", "full_outer")
-        .select(
-            "id",
-            rb.alias("rank_before"),
-            ra.alias("rank_after"),
-            (ra - rb).alias("delta"),
-        )
-    )

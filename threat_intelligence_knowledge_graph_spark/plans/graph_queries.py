@@ -734,146 +734,6 @@ def dedicated_infrastructure(
     )
 
 
-def bursty_indicators(
-    spark: SparkSession, events: DataFrame, k: int = 20
-) -> DataFrame:
-    """Burstiness triage over an observation log keyed by indicator:
-    Fano factor of each indicator's hourly sighting volume — clocked
-    beacons (F ≪ 1) and campaign bursts (F ≫ 1) both stand out from
-    Poisson-ish background noise (F ≈ 1). Expects (ts, event_type)
-    where event_type carries the indicator/node id; most-bursty first,
-    id tiebreak."""
-    from ..operators.stats import burstiness_fano
-
-    return (
-        burstiness_fano(events)
-        .orderBy(F.col("fano").desc(), "event_type")
-        .limit(k)
-    )
-
-
-def clocked_beacons(
-    spark: SparkSession, events: DataFrame, k: int = 20
-) -> DataFrame:
-    """Timing-regularity triage over an observation log: the k most
-    metronome-like (user, indicator) channels by inter-arrival cv² —
-    the RITA-style C2 check that catches what count-dispersion (Fano)
-    can't: a beacon checking in every N seconds looks identical to a
-    uniform human trickle per-hour, but its gap variance is ~0.
-    Most-regular (lowest cv², NULLs excluded) first, id tiebreak;
-    mean_gap_s in the output IS the implant's check-in period."""
-    from ..operators.anomaly import beacon_regularity
-
-    return (
-        beacon_regularity(events)
-        .filter(F.col("cv2").isNotNull())
-        .orderBy(F.col("cv2").asc(), "user_id", "event_type")
-        .limit(k)
-    )
-
-
-def linked_indicators(
-    spark: SparkSession, events: DataFrame, k: int = 20
-) -> DataFrame:
-    """Campaign-linkage triage: the k indicator pairs whose hourly
-    activity series are most POSITIVELY correlated (direction +1,
-    highest r² first, pair tiebreak) — infrastructure steered by one
-    operator surges and idles together even when no single event ties
-    the two indicators. Expects (ts, event_type) where event_type
-    carries the indicator id."""
-    from ..operators.stats import correlated_series
-
-    return (
-        correlated_series(events)
-        .filter(F.col("direction") == 1)
-        .orderBy(F.col("r2").desc(), "a", "b")
-        .limit(k)
-    )
-
-
-def ramping_indicators(
-    spark: SparkSession, events: DataFrame, k: int = 20
-) -> DataFrame:
-    """Escalation triage: the k indicators whose hourly volume is
-    ramping up fastest (positive LSQ slope, steepest first, id
-    tiebreak) — the "what is getting worse right now" complement to
-    recency-decay's "what is still hot"."""
-    from ..operators.stats import trend_slope
-
-    return (
-        trend_slope(events)
-        .filter(F.col("direction") == 1)
-        .orderBy(F.col("slope").desc(), "event_type")
-        .limit(k)
-    )
-
-
-def resurrected_indicators(
-    spark: SparkSession,
-    events: DataFrame,
-    min_quiet_s: float = 86400.0,
-    k: int = 20,
-) -> DataFrame:
-    """Came-back-from-the-dead triage: the k indicators whose MOST
-    RECENT sighting follows a quiet period longer than ``min_quiet_s``
-    — parked domains re-armed, C2 IPs rotated back in. Longest-dormant
-    first, id tiebreak. Expects (ts, event_type); complements
-    ``ramping_indicators`` (getting louder) and ``rising_infrastructure``
-    (gaining position): this one is *seen before, vanished, now back*."""
-    from ..operators.anomaly import dormancy_reactivation
-
-    return (
-        dormancy_reactivation(events, min_quiet_s)
-        .filter(F.col("reactivated"))
-        .orderBy(F.col("last_quiet_s").desc(), "key")
-        .limit(k)
-    )
-
-
-def rising_infrastructure(
-    spark: SparkSession,
-    events: DataFrame,
-    split_ts: str,
-    k: int = 20,
-    iterations: int = 5,
-) -> DataFrame:
-    """Centrality-shift triage: the k indicators whose PageRank in the
-    observer→indicator sighting graph rose most from the window before
-    ``split_ts`` to the window at/after it — the "what is becoming
-    structurally important" complement to ``ramping_indicators``'s
-    raw-volume slope. A beacon whose sighting VOLUME is flat still
-    rises here when NEW observers start reporting it (its rank mass
-    consolidates); conversely a noisy-but-isolated indicator does not.
-
-    Expects (ts, user_id, event_type); edges are user→indicator
-    weighted by per-window sighting count. Most-risen first, id
-    tiebreak. At scale the two windows are partition-pruned time-slice
-    scans (ts-partitioned events table), never co-resident."""
-    from ..operators.pagerank import pagerank_delta
-
-    obs = events.select(
-        F.col("ts"),
-        F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("src_id"),
-        F.col("event_type").alias("dst_id"),
-    ).filter(F.col("ts").isNotNull() & F.col("dst_id").isNotNull())
-    cut = F.lit(split_ts).cast("timestamp")
-    win = lambda pred: (  # noqa: E731 — two symmetric window slices
-        obs.filter(pred)
-        .groupBy("src_id", "dst_id")
-        .agg(F.count("*").alias("wt"))
-    )
-    return (
-        pagerank_delta(
-            win(F.col("ts") < cut),
-            win(F.col("ts") >= cut),
-            iterations=iterations,
-            weight="wt",
-        )
-        .orderBy(F.col("delta").desc(), "id")
-        .limit(k)
-    )
-
-
 def flagship_query(spark: SparkSession) -> DataFrame:
     """SURVEY.md §7: "Which infrastructure does each malware family
     communicate with, and which CVEs are exploited?"."""
@@ -884,36 +744,6 @@ def flagship_query(spark: SparkSession) -> DataFrame:
         ORDER BY subj, pred, obj
         """
     )
-
-
-def flux_timelines(
-    spark: SparkSession,
-    observations: DataFrame,
-    k: int = 20,
-) -> DataFrame:
-    """Fast-flux triage: the k (subj, pred) channels whose resolution
-    HISTORY churned through the most validity intervals (SCD2 runs —
-    re-pointed infrastructure, rotating C2), with the interval count,
-    distinct-object count, current object, and first/latest change
-    timestamps. A domain pinned to one IP forever has 1 interval; a
-    fast-flux domain has dozens — ``n_intervals > n_objects`` means
-    objects RETURN (rotation, not migration). Expects (subj, pred,
-    obj, ts) observations; most-churned first, subj tiebreak."""
-    from ..operators.temporal_join import scd2_intervals
-
-    iv = scd2_intervals(observations)
-    # ONE aggregate pass: the current object is the last run's obj —
-    # max_by over the (valid_from, obj) run order, the same ordering
-    # that makes the SCD2 lead deterministic — so the interval chain
-    # is not recomputed for a second is_current branch.
-    per = iv.groupBy("subj", "pred").agg(
-        F.count("*").cast("long").alias("n_intervals"),
-        F.countDistinct("obj").cast("long").alias("n_objects"),
-        F.min("valid_from").alias("first_seen"),
-        F.max("valid_from").alias("last_change"),
-        F.max_by("obj", F.struct("valid_from", "obj")).alias("current_obj"),
-    )
-    return per.orderBy(F.col("n_intervals").desc(), "subj", "pred").limit(k)
 
 
 def corroborated_edges(
@@ -974,29 +804,5 @@ def neighborhood_growth(
     return (
         balls.select("id", "est_ball", "n_zero")
         .orderBy(F.col("est_ball").desc(), "id")
-        .limit(k)
-    )
-
-
-def office_hours_channels(
-    spark: SparkSession, events: DataFrame, k: int = 20, min_events: int = 24
-) -> DataFrame:
-    """Time-of-day-structure triage over an observation log: the k
-    most diurnally-structured channels by the hour-of-day chi-square
-    (highest χ² first, channel tiebreak) — a human operator keeps
-    office hours, a cron job spikes one hour, and both light up here
-    while around-the-clock automation sits near the uniform null.
-    Complements `clocked_beacons` on the orthogonal axis: a metronome
-    implant with a 1-hour period is seasonality-FLAT but cv²-loud;
-    a 9-to-5 keyboard actor is the reverse. ``peak_hour`` is the
-    channel's busiest UTC hour — the first clue for the operator's
-    timezone. ``min_events`` suppresses channels too thin to call
-    (χ² against 24 cells needs counts, not anecdotes)."""
-    from ..operators.stats import hourly_seasonality
-
-    return (
-        hourly_seasonality(events)
-        .filter(F.col("n") >= min_events)
-        .orderBy(F.col("chi2").desc(), "event_type")
         .limit(k)
     )

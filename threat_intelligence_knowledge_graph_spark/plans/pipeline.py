@@ -69,7 +69,7 @@ def run_pipeline(
     throughput. The final graph tables (nodes/edges/triples) are
     identical either way (tested); the intermediate ``extraction`` table
     is NOT: the fused kernel pre-dedups per partition and omits edge
-    ``context`` by default, so its row counts/provenance differ from the
+    ``context``, so its row counts/provenance differ from the
     declarative per-conversation records.
 
     ``input_pregrouped=True`` (fused path only) declares that each input

@@ -112,16 +112,9 @@ class LocalTableCatalog:
         self,
         spark: SparkSession,
         name: str,
-        exclude_run_id: str | None = None,
         as_of_snapshot: int | None = None,
     ) -> DataFrame:
-        """Read the table head; with ``exclude_run_id``, read the state
-        as of BEFORE that run's commits — the resume primitive for
-        multi-table jobs (a rerun after a mid-commit crash must compute
-        against the pre-run state, not its own partial output). Only
-        valid when the excluded run exclusively APPENDED at the head;
-        its entries are dropped and the chain resolves from the
-        remaining head.
+        """Read the table head.
 
         ``as_of_snapshot`` is time travel (Iceberg ``VERSION AS OF``):
         read the state as of that commit — the newest entry with
@@ -131,8 +124,6 @@ class LocalTableCatalog:
         keeps every record, only data files are reclaimed — a silent
         partial read would be worse than failing)."""
         entries = self.log(name)
-        if exclude_run_id is not None:
-            entries = [e for e in entries if e["run_id"] != exclude_run_id]
         if as_of_snapshot is not None:
             entries = [e for e in entries if e["snapshot"] <= as_of_snapshot]
             if not entries:
@@ -149,12 +140,6 @@ class LocalTableCatalog:
         if not entries:
             raise FileNotFoundError(f"table {name} has no committed snapshot")
         return spark.read.parquet(*self._chain_dirs(name, entries))
-
-    def exists_before(self, name: str, run_id: str) -> bool:
-        """Does the table have commits from OTHER runs? (resume twin of
-        ``exists`` — a rerun must not mistake its own partial commits
-        for pre-existing state)."""
-        return any(e["run_id"] != run_id for e in self.log(name))
 
     def append(
         self, df: DataFrame, name: str, run_id: str = "", stage: str = ""

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extraction import extract_graph_records_fused
+from ..operators.reassembly import TURN_SEPARATOR
 from ..operators.triples import build_edges, build_nodes, build_triples
 from ..schemas import TRANSCRIPTS_SCHEMA
 from ..sources.tableio import LocalTableCatalog
@@ -94,7 +95,6 @@ def stream_extract(
 def stateful_reassembly(
     stream: DataFrame,
     idle_timeout_ms: int = 30_000,
-    turn_separator: str = "\n",
 ) -> DataFrame:
     """Cross-batch conversation reassembly with ``applyInPandasWithState``.
 
@@ -146,7 +146,7 @@ def stateful_reassembly(
             yield pd.DataFrame(
                 {
                     "conv_id": [conv_id],
-                    "doc_text": [turn_separator.join(ordered)],
+                    "doc_text": [TURN_SEPARATOR.join(ordered)],
                     "n_turns": [len(ordered)],
                 }
             )
