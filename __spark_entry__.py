@@ -561,6 +561,62 @@ def q_skew_hot_entities(spark, sf_dir):
     return hot_entity_counts(_constructed_triples(spark, sf_dir), n_salts=32)
 
 
+def q_train_val_split(spark, sf_dir):
+    """Deterministic train/val assignment by engine-portable md5 hash —
+    reproducible across engines/runs/partitionings, no RNG."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        split_by_hash,
+    )
+
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    return split_by_hash(d, "doc_id", train_frac=0.9)
+
+
+def q_sample_stratified(spark, sf_dir):
+    """Deterministic stratified sampling by engine-portable md5 bucket —
+    per-stratum rates, partition-independent, monotone in the rate."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        sample_by_hash,
+    )
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    return sample_by_hash(
+        o, "o_orderkey", "o_orderstatus", {"O": 0.1, "F": 0.05, "P": 0.5}
+    )
+
+
+def q_sample_mixture(spark, sf_dir):
+    """Exact-proportion corpus mixing (pretraining mixture weights):
+    the largest md5-deterministic sample with per-source composition
+    O:F:P = 5:3:2. P is the binding (smallest/share) source and is taken
+    whole; O and F down-sample to match — the oracle recomputes the
+    water level T and thresholds in the identical double arithmetic."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        mixture_sample,
+    )
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    return mixture_sample(
+        o, "o_orderkey", "o_orderstatus", {"O": 0.5, "F": 0.3, "P": 0.2}
+    )
+
+
+def q_split_oversized_docs(spark, sf_dir):
+    """Oversized-document splitting ahead of packing: docs over 40
+    whitespace tokens become contiguous 40-token pieces (piece_idx
+    preserves order)."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        split_oversized,
+    )
+
+    return split_oversized(_t(spark, sf_dir, "documents"), 40).select(
+        "doc_id",
+        F.col("piece_idx").cast("int").alias("piece_idx"),
+        "text",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+    )
+
+
 def q_graph_connected_components(spark, sf_dir):
     """Connected components (min-id labeling) over a planted chain
     forest: every 11th orderkey contributes a 5-node path (diameter 4 —
@@ -1113,6 +1169,81 @@ def q_graph_sssp_weighted(spark, sf_dir):
     return sssp_weighted(chain.union(cuts), src, max_iter=12)
 
 
+def q_graph_mst(spark, sf_dir):
+    """Minimum spanning forest via distributed Borůvka
+    (operators/mst.py::boruvka_mst — the single-linkage-clustering
+    backbone) over a planted analytic graph from `orders`: nodes are
+    the first 256 row_number ranks, path edges (i, i+1) with zig-zag
+    weights 100·(i%2)+i+10 (phase 1 selects only the even edges, so
+    multi-phase contraction is genuinely exercised) and chords
+    (i, i+2) at weight 100000+i — each chord is the unique heaviest
+    edge of its triangle, so the MSF is EXACTLY the path, which the
+    oracle selects analytically (weight < 100000). Distinct weights →
+    unique MSF; integer-valued doubles → exact cross-engine."""
+    from threat_intelligence_knowledge_graph_spark.operators.mst import (
+        boruvka_mst,
+    )
+    from pyspark.sql import Window
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey")
+    idx = (
+        o.select(
+            (F.row_number().over(Window.orderBy("o_orderkey")) - 1).alias("i")
+        )
+        .filter(F.col("i") < 256)
+    )
+    a, b = idx.alias("a"), idx.alias("b")
+    ai = F.col("a.i")
+    path = a.join(b, F.col("b.i") == ai + 1).select(
+        ai.alias("src"),
+        F.col("b.i").alias("dst"),
+        (F.lit(100) * (ai % 2) + ai + 10).cast("double").alias("weight"),
+    )
+    chords = a.join(b, F.col("b.i") == ai + 2).select(
+        ai.alias("src"),
+        F.col("b.i").alias("dst"),
+        (F.lit(100000) + ai).cast("double").alias("weight"),
+    )
+    return boruvka_mst(path.unionByName(chords))
+
+
+def q_graph_single_linkage(spark, sf_dir):
+    """Single-linkage clusters (operators/mst.py::single_linkage_labels
+    — cut the Borůvka MSF at a distance threshold; components ARE the
+    dendrogram level) over the same planted chord-triangle graph as
+    q_graph_mst, threshold 109: even path edges (i, i+1) with i ≤ 98
+    survive (weight i+10 ≤ 108), every odd edge (weight 110+i) and
+    every later even edge (weight ≥ 110) is cut — clusters are
+    analytically the pairs {2k, 2k+1} for i ≤ 99 and singletons above,
+    which the oracle states in closed form (i − i%2 below 100, i
+    above)."""
+    from threat_intelligence_knowledge_graph_spark.operators.mst import (
+        single_linkage_labels,
+    )
+    from pyspark.sql import Window
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey")
+    idx = (
+        o.select(
+            (F.row_number().over(Window.orderBy("o_orderkey")) - 1).alias("i")
+        )
+        .filter(F.col("i") < 256)
+    )
+    a, b = idx.alias("a"), idx.alias("b")
+    ai = F.col("a.i")
+    path = a.join(b, F.col("b.i") == ai + 1).select(
+        ai.alias("src"),
+        F.col("b.i").alias("dst"),
+        (F.lit(100) * (ai % 2) + ai + 10).cast("double").alias("weight"),
+    )
+    chords = a.join(b, F.col("b.i") == ai + 2).select(
+        ai.alias("src"),
+        F.col("b.i").alias("dst"),
+        (F.lit(100000) + ai).cast("double").alias("weight"),
+    )
+    return single_linkage_labels(path.unionByName(chords), threshold=109.0)
+
+
 def q_graph_betweenness(spark, sf_dir):
     """Sampled Brandes betweenness over a planted directed graph from
     `nation`: chain n0→…→n11, parallel rails n_i→p_i→n_{i+2} at
@@ -1398,6 +1529,24 @@ def q_kmv_distinct_users(spark, sf_dir):
     return kmv_estimate(kmv_build(ev, "user_id", k=256), k=256)
 
 
+def q_events_percentiles_exact(spark, sf_dir):
+    """Per-event-type exact nearest-rank percentiles (p50/p90/p99) of
+    events.value: the value at ordered row ceil(q·n) with event_id
+    tiebreak — pure integer/comparison logic, no interpolation
+    arithmetic to diverge cross-engine (the interpolating
+    `events_percentiles` twin survives only because of its 4-decimal
+    rounding; this one is exact at full precision and extends to any
+    q without re-auditing float behavior)."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        exact_percentiles,
+    )
+
+    return exact_percentiles(
+        _t(spark, sf_dir, "events"), "value", "event_type", "event_id",
+        qs=(0.5, 0.9, 0.99),
+    )
+
+
 def q_graph_assortativity(spark, sf_dir):
     """Degree assortativity over the planted 3-clique+pendant gadgets:
     identical disjoint gadgets make the coefficient analytic and
@@ -1628,6 +1777,28 @@ def q_events_json_props(spark, sf_dir):
             F.countDistinct("_k").cast("long").alias("n_distinct_k"),
         )
     )
+
+
+def q_events_benford(spark, sf_dir):
+    """Benford first-significant-digit chi-square per event type — the
+    volume-tamper screen; exact fixed-point digit extraction (no float
+    log10), absent-digit-safe chi2 identity, round-6 post-sum."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        benford_deviation,
+    )
+
+    return benford_deviation(_t(spark, sf_dir, "events"))
+
+
+def q_curriculum_order(spark, sf_dir):
+    """Curriculum bucketing: token-count difficulty staged into 4
+    buckets via deterministic-sample nearest-rank boundaries (the
+    TeraSort range-boundary shape, md5-drawn sample)."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        curriculum_order,
+    )
+
+    return curriculum_order(_t(spark, sf_dir, "documents"))
 
 
 def q_events_type_cooccurrence(spark, sf_dir):
@@ -1872,6 +2043,36 @@ def q_graph_conductance(spark, sf_dir):
     return conductance(e, asg)
 
 
+def q_events_retention(spark, sf_dir):
+    """Cohort retention (indicator-lifetime triage: of entities first
+    seen in bucket W, how many were active k buckets on) — daily
+    buckets over the events timeline; epoch-integer bucketing, keyed
+    min/join/distinct-count only."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        retention_cohorts,
+    )
+
+    return retention_cohorts(
+        _t(spark, sf_dir, "events"), bucket_seconds=86400
+    )
+
+
+def q_events_funnel(spark, sf_dir):
+    """Ordered funnel (kill-chain progression / signup→purchase→error):
+    per user, step k counts only when it happens STRICTLY AFTER that
+    user's step k−1 reach time (earliest valid completion — min over
+    later events). Epoch-integer comparisons; per-step counts are
+    bounded 1-long pulls; the oracle chains the identical min-after
+    joins."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        funnel,
+    )
+
+    return funnel(
+        _t(spark, sf_dir, "events"), ["signup", "purchase", "error"]
+    )
+
+
 def q_events_hist_quantiles(spark, sf_dir):
     """Mergeable fixed-bucket histogram quantiles (the order-statistics
     sketch completing KMV/CMS/HLL/Bloom): 64 buckets over value ∈
@@ -1980,6 +2181,39 @@ def q_graph_eigenvector(spark, sf_dir):
     )
 
 
+def q_events_zorder(spark, sf_dir):
+    """Z-order (Morton) clustering key over (user_id, floor(value)) —
+    the OPTIMIZE ZORDER BY / Iceberg sort-rewrite key as a pure
+    Catalyst unrolled shift/mask/or chain: bit i of column j lands at
+    output bit i·n+j, out-of-range inputs clamp. Integer-exact, so the
+    oracle evaluates the identical bit arithmetic."""
+    from threat_intelligence_knowledge_graph_spark.operators.layout import (
+        morton_key,
+    )
+
+    e = _t(spark, sf_dir, "events")
+    key = morton_key(
+        [F.col("user_id").cast("long"), F.floor(F.col("value")).cast("long")],
+        bits=16,
+    )
+    return e.select("event_id", key.alias("zkey"))
+
+
+def q_sample_temperature(spark, sf_dir):
+    """Temperature-scaled mixture (share ∝ count^0.5 — the XLM-R
+    exponentiated-sampling / pretraining data-mixing knob) over order
+    status: α = 0.5 upweights the rare P status against O/F. sqrt is
+    correctly-rounded IEEE on both engines, so the water level and the
+    per-source thresholds are exactly reproducible; the oracle
+    recomputes the identical chain."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        temperature_mixture,
+    )
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    return temperature_mixture(o, "o_orderkey", "o_orderstatus", alpha=0.5)
+
+
 def q_graph_node2vec(spark, sf_dir):
     """Deterministic node2vec walks (Grover & Leskovec 2016) with
     strong second-order bias (p=4 discourages returns, q=0.25 pushes
@@ -2074,6 +2308,135 @@ def q_graph_reciprocity(spark, sf_dir):
     )
 
     return reciprocity(_reciprocity_gadget_edges(spark, sf_dir))
+
+
+def q_events_burstiness(spark, sf_dir):
+    """Fano factor (variance/mean) of per-type hourly volumes via the
+    n-scaled integer identity (n·Σx² − (Σx)²)/(n·Σx): exact-integer
+    numerator and denominator, ONE identical division per group,
+    round-6 — Poisson noise ≈ 1, campaign bursts ≫ 1, clocked beacons
+    ≪ 1."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        burstiness_fano,
+    )
+
+    return burstiness_fano(_t(spark, sf_dir, "events"))
+
+
+def q_events_churn(spark, sf_dir):
+    """Day-over-day churn of the active (user, type) channel set:
+    exact-integer intersection/union counts from a (group, bucket)
+    keyed self-join with the period folded into the key, ONE round-6
+    division per statistic; gap days emit no row."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        set_churn,
+    )
+
+    ev = _t(spark, sf_dir, "events").select(
+        F.concat_ws("|", "user_id", "event_type").alias("chan"), "ts"
+    )
+    return set_churn(ev, group_col="chan")
+
+
+def q_events_autocorr(spark, sf_dir):
+    """Per-type hourly-volume autocorrelation at lag 24 (diurnal-cycle
+    detector): squared-Pearson integer identity over the paired sample
+    {(x_t, x_{t+24})} for co-observed hours, sign separate, ONE round-6
+    division; zero-variance sides and short-overlap types dropped."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        autocorrelation,
+    )
+
+    return autocorrelation(_t(spark, sf_dir, "events"), lag_hours=24)
+
+
+def q_events_novelty(spark, sf_dir):
+    """Per-day first-seen novelty curve over (user, type) channel ids
+    (higher cardinality than the 5 event types, so the curve decays
+    non-trivially): epoch-integer day buckets, n_new = channels whose
+    min-bucket is this bucket, exact integers + ONE round-6 division."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        novelty_curve,
+    )
+
+    ev = _t(spark, sf_dir, "events").select(
+        F.concat_ws("|", "user_id", "event_type").alias("chan"), "ts"
+    )
+    return novelty_curve(ev, group_col="chan")
+
+
+def q_events_trend(spark, sf_dir):
+    """Per-type least-squares hourly-volume trend: integer hour index
+    rebased to the frame's first bucket (1-row broadcast min), exact
+    integer slope numerator/denominator, sign separate, ONE round-6
+    division; single-hour types dropped (zero denominator)."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        trend_slope,
+    )
+
+    return trend_slope(_t(spark, sf_dir, "events"))
+
+
+def q_events_correlation(spark, sf_dir):
+    """Pairwise temporal correlation of per-type hourly volumes over
+    the common bucket universe: exact-integer Pearson identity
+    r² = (n·Σxy − Σx·Σy)²/((n·Σx²−(Σx)²)(n·Σy²−(Σy)²)), sign reported
+    separately — ONE round-6 division per co-active pair."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        correlated_series,
+    )
+
+    return correlated_series(_t(spark, sf_dir, "events"))
+
+
+def q_events_entropy(spark, sf_dir):
+    """Shannon entropy (nats) of each user's event-type distribution —
+    scripted automation / beacons sit at H ≈ 0, organic behavior near
+    ln k. H = ln n − (Σ c·ln c)/n so every ln argument is an exact
+    integer count; round-6 after the sum."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        event_entropy,
+    )
+
+    return event_entropy(_t(spark, sf_dir, "events"))
+
+
+def q_events_top_sequences(spark, sf_dir):
+    """Top-20 consecutive event-type trigrams across all users
+    (kill-chain / playbook pattern mining): n−1 lag columns over ONE
+    (user) window exchange ordered by the (ts, id) total key, exact
+    integer counts, (n DESC, pattern ASC) rank AFTER the top-k cut."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        top_event_sequences,
+    )
+
+    return top_event_sequences(_t(spark, sf_dir, "events"), n=3, k=20)
+
+
+def q_corpus_source_gini(spark, sf_dir):
+    """Gini coefficient of per-source corpus contribution in CHARS (mixture
+    balance): rank formula G = (Σ(2i−1)·x_i − n·Σx)/(n·Σx) over totals
+    sorted by (count, source) — integer ranks over identical physical
+    rows, exact-integer numerator/denominator, ONE round-6 division."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        gini_concentration,
+    )
+
+    return gini_concentration(
+        _t(spark, sf_dir, "documents"), group_col="source", weight_col="n_chars"
+    )
+
+
+def q_events_markov(spark, sf_dir):
+    """First-order Markov transition estimates over per-user event
+    sequences: exact-integer pair counts over the (ts, event_id) total
+    order (same-instant events sequence identically cross-engine),
+    ONE round-6 division per transition."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        markov_transitions,
+    )
+
+    return markov_transitions(_t(spark, sf_dir, "events"))
 
 
 def q_er_sorted_neighborhood(spark, sf_dir):
@@ -2198,6 +2561,36 @@ def q_kg_corroboration(spark, sf_dir):
     return triple_corroboration(obs, base_conf=0.7)
 
 
+def q_sample_weighted(spark, sf_dir):
+    """Efraimidis-Spirakis weighted sample without replacement (k=50,
+    weight = doc length): md5-derived u, priority = -ln(u)/w rounded
+    to 6 with doc_id tie-break BEFORE the top-k cut — both engines
+    pick identical rows; TakeOrderedAndProject, no global sort."""
+    from threat_intelligence_knowledge_graph_spark.operators.packing import (
+        weighted_sample,
+    )
+
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.length("text").cast("double").alias("w")
+    )
+    return weighted_sample(d, "doc_id", "w", k=50).select(
+        "doc_id", "priority", "rk"
+    )
+
+
+def q_events_seasonality(spark, sf_dir):
+    """Per-type hour-of-day seasonality card: exact-integer chi-square
+    against the uniform-over-24-hours null via (24*sum(c^2) - n^2)/n,
+    peak hour with smallest-hour tie-break, ONE round-6 division per
+    emitted ratio; single (type, hour) count-agg, window + final agg
+    share one type-keyed exchange."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        hourly_seasonality,
+    )
+
+    return hourly_seasonality(_t(spark, sf_dir, "events"))
+
+
 def q_graph_transitivity(spark, sf_dir):
     """Global clustering coefficient over the planted 3-clique+pendant
     gadgets: per gadget 3 closed wedges of 5 total (degrees 2,2,3,1),
@@ -2234,6 +2627,56 @@ def q_graph_avg_nbr_deg(spark, sf_dir):
     return avg_neighbor_degree(_triangle_gadget_edges(spark, sf_dir))
 
 
+def q_events_k_anonymity(spark, sf_dir):
+    """k-anonymity audit of the (user_id, event_type, hour-of-day)
+    projection of the event log at k=5 — time-of-activity is the
+    classic indirect identifier: every quasi class smaller than 5 is
+    a release fingerprint. One keyed count-agg + filter."""
+    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+        k_anonymity_audit,
+    )
+
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.hour("ts").cast("int").alias("hour")
+    )
+    return k_anonymity_audit(ev, ["user_id", "event_type", "hour"], k=5)
+
+
+def q_events_trimmed_mean(spark, sf_dir):
+    """Per-type 10%-trimmed mean of event values: Fraction-exact trim
+    counts over the (value, event_id) total order, decimal(38,6)
+    order-independent sum, ONE round-6 division; rank window and
+    final aggregate share one type-keyed exchange."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        trimmed_mean,
+    )
+
+    return trimmed_mean(
+        _t(spark, sf_dir, "events"), "value", "event_type", "event_id", trim=0.1
+    )
+
+
+def q_events_l_diversity(spark, sf_dir):
+    """l-diversity audit companion to the k-anonymity entry: for the
+    (user_id, event_type, hour) quasi projection, classes whose
+    sensitive attribute (the day-of-month of activity — the temporal
+    fingerprint) takes < 3 distinct values; ONE keyed aggregate with
+    partial count-distinct + scan-local filter."""
+    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+        l_diversity_audit,
+    )
+
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_type",
+        F.hour("ts").cast("int").alias("hour"),
+        F.dayofmonth("ts").cast("int").alias("day"),
+    )
+    return l_diversity_audit(
+        ev, ["user_id", "event_type", "hour"], "day", l=3
+    )
+
+
 def q_hll_user_overlap(spark, sf_dir):
     """Pairwise distinct-user overlap between event types by HLL
     inclusion-exclusion: per-type sketches from ONE scan, densified
@@ -2245,6 +2688,37 @@ def q_hll_user_overlap(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     return hll_overlap(ev, "user_id", "event_type")
+
+
+def q_events_survival(spark, sf_dir):
+    """Kaplan-Meier signup→purchase conversion curve with right
+    censoring at the corpus horizon: exact integer-µs day durations,
+    descending-cumsum risk sets, running ln-sum survival (cumulative
+    frame = deterministic addition order), round-6."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        survival_curve,
+    )
+
+    return survival_curve(_t(spark, sf_dir, "events"), "signup", "purchase")
+
+
+def q_events_value_pct(spark, sf_dir):
+    """Per-type percent-rank normalization of event values (the
+    cross-source score-mixing transform): both engines define
+    percent_rank identically, ties share a rank; NULL values filtered
+    (NULLS FIRST vs LAST differs across engines); round-6."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        percentile_normalize,
+    )
+
+    ev = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .select("event_id", "event_type", "value")
+    )
+    return percentile_normalize(ev, "value", "event_type").select(
+        "event_id", "event_type", "pct"
+    )
 
 
 def q_graph_degree_hist(spark, sf_dir):
@@ -2267,6 +2741,102 @@ def q_graph_hill_tail(spark, sf_dir):
     )
 
     return hill_tail(_triangle_gadget_edges(spark, sf_dir), d_min=2)
+
+
+def q_events_simpson(spark, sf_dir):
+    """Simpson concentration λ = Σcᵢ²/n² + inverse-Simpson effective
+    state count per user — the entropy triage's no-log companion;
+    both ratios are single round-6 divisions of exact integers."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        simpson_index,
+    )
+
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
+    )
+    return simpson_index(ev, "user_id", "event_type")
+
+
+def q_events_best_lag(spark, sf_dir):
+    """Best-lag cross-correlation (±3 h) between event-type hourly
+    series — the relay/lead-lag read lag-0 correlation can't make;
+    dense-range universe, exact integer moments (y's re-computed per
+    shifted window), one round-6 division, round-before-rank best-lag
+    pick. Oracle: the identical dense-range moment algebra with the
+    shifted join expressed independently as cb.bucket = ca.bucket+lag."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        best_lag_correlation,
+    )
+
+    return best_lag_correlation(
+        _t(spark, sf_dir, "events"), max_lag=3, min_overlap=3
+    )
+
+
+def q_events_dp_counts(spark, sf_dir):
+    """ε-DP (type, user) counts via the seeded Laplace mechanism
+    (ε=0.5): md5 inverse-CDF noise makes the release a pure function
+    of the input — reproducible and oracle-auditable; only the noisy
+    column is emitted (the release posture)."""
+    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+        dp_noisy_counts,
+    )
+
+    ev = _t(spark, sf_dir, "events").filter(
+        F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
+    )
+    return dp_noisy_counts(ev, ["event_type", "user_id"], epsilon=0.5)
+
+
+_DRIFT_COLUMNS = ("user_id", "event_type", "value", "props")
+
+
+def q_events_profile_drift(spark, sf_dir):
+    """Schema-profile drift between the even/odd event_id halves of
+    the events table (a synthetic two-batch split): per-column null
+    rates, exact distinct counts, and their deltas — each emitted
+    ratio one round-6 division. Oracle: per-column UNION ALL profile
+    generated from the same column tuple."""
+    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+        profile_drift,
+    )
+
+    ev = _t(spark, sf_dir, "events")
+    return profile_drift(
+        ev.filter(F.col("event_id") % 2 == 0),
+        ev.filter(F.col("event_id") % 2 == 1),
+        list(_DRIFT_COLUMNS),
+    )
+
+
+def q_events_robust_trend(spark, sf_dir):
+    """Mann-Kendall S/z + Theil-Sen median slope per event type over
+    hourly volumes — exact integer S and ×18-scaled tie-corrected
+    variance, one sqrt + one round-6 division for z; the Sen slope is
+    a nearest-rank PICK (pair-key tiebreak) so the emitted value is a
+    single division of one engine-stable chosen pair."""
+    from threat_intelligence_knowledge_graph_spark.operators.stats import (
+        robust_trend,
+    )
+
+    return robust_trend(_t(spark, sf_dir, "events"))
+
+
+def q_events_ks_drift(spark, sf_dir):
+    """Two-sample KS distance of the `value` distribution between the
+    even/odd event_id halves: D's numerator |c_a·n_b − c_b·n_a| is an
+    exact integer, so the max and its location are integer-argmax
+    picks (value-ASC tiebreak) and D is ONE round-6 division."""
+    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+        ks_two_sample,
+    )
+
+    ev = _t(spark, sf_dir, "events")
+    return ks_two_sample(
+        ev.filter(F.col("event_id") % 2 == 0),
+        ev.filter(F.col("event_id") % 2 == 1),
+        "value",
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -2308,7 +2878,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact_docs": q_dedup_exact_docs,
         "html_to_text": q_html_to_text,
         "skew_hot_entities": q_skew_hot_entities,
+        "train_val_split": q_train_val_split,
         "canonical_map": q_canonical_map,
+        "sample_stratified": q_sample_stratified,
         "graph_pagerank": q_graph_pagerank,
         "graph_pagerank_weighted": q_graph_pagerank_weighted,
         "graph_pagerank_personalized": q_graph_pagerank_personalized,
@@ -2320,19 +2892,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_ktruss": q_graph_ktruss,
         "graph_harmonic_closeness": q_graph_harmonic_closeness,
         "graph_sssp_weighted": q_graph_sssp_weighted,
+        "graph_mst": q_graph_mst,
+        "graph_single_linkage": q_graph_single_linkage,
         "graph_betweenness": q_graph_betweenness,
         "table_checks": q_table_checks,
         "graph_bfs_distances": q_graph_bfs_distances,
         "graph_anf": q_graph_anf,
         "graph_label_propagation": q_graph_label_propagation,
+        "sample_mixture": q_sample_mixture,
+        "split_oversized_docs": q_split_oversized_docs,
         "graph_connected_components": q_graph_connected_components,
         "graph_triangle_count": q_graph_triangle_count,
         "graph_node_similarity": q_graph_node_similarity,
         "graph_link_prediction": q_graph_link_prediction,
+        "curriculum_order": q_curriculum_order,
+        "events_benford": q_events_benford,
+        "sample_weighted": q_sample_weighted,
+        "events_seasonality": q_events_seasonality,
         "graph_transitivity": q_graph_transitivity,
         "graph_rich_club": q_graph_rich_club,
         "graph_avg_nbr_deg": q_graph_avg_nbr_deg,
+        "events_k_anonymity": q_events_k_anonymity,
+        "events_trimmed_mean": q_events_trimmed_mean,
+        "events_l_diversity": q_events_l_diversity,
         "hll_user_overlap": q_hll_user_overlap,
+        "events_survival": q_events_survival,
+        "events_value_pct": q_events_value_pct,
         "graph_degree_hist": q_graph_degree_hist,
         "graph_hill_tail": q_graph_hill_tail,
         "events_json_props": q_events_json_props,
@@ -2347,6 +2932,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_katz": q_graph_katz,
         "kmv_distinct_users": q_kmv_distinct_users,
         "hll_distinct_users": q_hll_distinct_users,
+        "events_percentiles_exact": q_events_percentiles_exact,
         "cypher_optional_match": q_cypher_optional_match,
         "cypher_var_length": q_cypher_var_length,
         "graph_louvain": q_graph_louvain,
@@ -2354,14 +2940,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_modularity": q_graph_modularity,
         "events_cooccur_npmi": q_events_cooccur_npmi,
         "graph_node2vec": q_graph_node2vec,
+        "sample_temperature": q_sample_temperature,
+        "events_zorder_key": q_events_zorder,
         "graph_eigenvector": q_graph_eigenvector,
         "graph_cc_increment": q_graph_cc_increment,
         "url_normalize": q_url_normalize,
         "events_hist_quantiles": q_events_hist_quantiles,
+        "events_funnel": q_events_funnel,
+        "events_retention": q_events_retention,
         "graph_conductance": q_graph_conductance,
         "cms_join_size": q_cms_join_size,
         "graph_lcc": q_graph_lcc,
+        "events_burstiness": q_events_burstiness,
+        "events_entropy": q_events_entropy,
+        "events_correlation": q_events_correlation,
+        "events_trend": q_events_trend,
+        "events_novelty": q_events_novelty,
+        "events_autocorr": q_events_autocorr,
+        "events_churn": q_events_churn,
+        "corpus_source_gini": q_corpus_source_gini,
+        "events_top_sequences": q_events_top_sequences,
         "graph_reciprocity": q_graph_reciprocity,
+        "events_markov": q_events_markov,
         "graph_assortativity": q_graph_assortativity,
         "stix_objects": q_stix_objects,
         "stix_relationships": q_stix_relationships,
@@ -2369,6 +2969,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_schema_audit": q_kg_schema_audit,
         "er_verified_matches": q_er_verified_matches,
         "kg_corroboration": q_kg_corroboration,
+        "events_simpson": q_events_simpson,
+        "events_best_lag": q_events_best_lag,
+        "events_dp_counts": q_events_dp_counts,
+        "events_profile_drift": q_events_profile_drift,
+        "events_robust_trend": q_events_robust_trend,
+        "events_ks_drift": q_events_ks_drift,
     }
 
 
@@ -3353,6 +3959,19 @@ def _anf_oracle_sql(hops: int = 2, m: int = 16) -> str:
     """
 
 
+def _morton_sql(exprs: list, bits: int = 16) -> str:
+    """Unrolled Morton interleave of SQL integer expressions — the
+    operators/layout.py::morton_key bit arithmetic verbatim (clamp to
+    [0, 2^bits), bit i of column j → output bit i·n+j)."""
+    n = len(exprs)
+    terms = []
+    for j, ex in enumerate(exprs):
+        v = f"least(greatest(cast({ex} AS bigint), 0), {(1 << bits) - 1})"
+        for i in range(bits):
+            terms.append(f"((({v} >> {i}) & 1) << {i * n + j})")
+    return " | ".join(terms)
+
+
 def _schema_audit_oracle_sql() -> str:
     """Conformance-audit oracle: the signature VALUES are generated
     from the SAME rule expansion the operator broadcasts
@@ -3410,6 +4029,44 @@ def _schema_audit_oracle_sql() -> str:
         LEFT JOIN sigs s
           ON l.pred = s.pred AND l.subj_label = s.subj_label
          AND l.obj_label = s.obj_label
+    """
+
+
+def _profile_drift_oracle_sql() -> str:
+    """Per-column profile UNION generated from the same _DRIFT_COLUMNS
+    tuple the Spark entry profiles (single source of truth); identical
+    round-6 ratio arithmetic (see q_events_profile_drift)."""
+
+    def _prof(side: str, pred: str) -> str:
+        parts = []
+        for c in _DRIFT_COLUMNS:
+            parts.append(
+                f"SELECT '{c}' AS col, count(*) AS n, "
+                f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS nu, "
+                f"count(DISTINCT {c}) AS nd "
+                f"FROM events WHERE {pred}"
+            )
+        return f"{side} AS ({' UNION ALL '.join(parts)})"
+
+    return f"""
+        WITH {_prof('pa', 'event_id % 2 = 0')},
+        {_prof('pb', 'event_id % 2 = 1')}
+        SELECT pa.col,
+               cast(pa.n AS bigint) AS n_a,
+               cast(pb.n AS bigint) AS n_b,
+               round(cast(pa.nu AS double) / cast(pa.n AS double), 6)
+                 AS null_rate_a,
+               round(cast(pb.nu AS double) / cast(pb.n AS double), 6)
+                 AS null_rate_b,
+               round(cast(pb.nu AS double) / cast(pb.n AS double)
+                     - cast(pa.nu AS double) / cast(pa.n AS double), 6)
+                 AS null_rate_delta,
+               cast(pa.nd AS bigint) AS n_distinct_a,
+               cast(pb.nd AS bigint) AS n_distinct_b,
+               CASE WHEN pa.nd > 0 THEN
+                 round(cast(pb.nd AS double) / cast(pa.nd AS double), 6)
+               END AS distinct_ratio
+        FROM pa JOIN pb USING (col)
     """
 
 
@@ -3831,6 +4488,54 @@ def oracle_sql() -> dict[str, str]:
             FROM x
             GROUP BY event_type
         """,
+        # Efraimidis-Spirakis weighted sample: md5-bucket u, priority
+        # -ln(u)/w round-6, (priority, doc_id) top-50 cut (see
+        # q_sample_weighted).
+        "sample_weighted": """
+            WITH w AS (
+              SELECT doc_id, cast(length(text) AS double) AS wt,
+                     cast(md5_number_upper('wsample:'
+                            || cast(doc_id AS varchar)) % 1000000 + 1
+                          AS double) / 1000001.0 AS u
+              FROM documents
+              WHERE length(text) > 0
+            ),
+            p AS (SELECT doc_id, round(-ln(u) / wt, 6) AS priority FROM w),
+            r AS (
+              SELECT doc_id, priority, row_number() OVER (
+                ORDER BY priority ASC, doc_id ASC
+              ) AS rk
+              FROM p
+            )
+            SELECT doc_id, priority, cast(rk AS int) AS rk
+            FROM r WHERE rk <= 50
+        """,
+        # Hour-of-day seasonality: integer chi-square identity
+        # (24*sum(c^2) - n^2)/n, smallest-hour peak tie-break (see
+        # q_events_seasonality).
+        "events_seasonality": """
+            WITH c AS (
+              SELECT event_type AS g, cast(hour(ts) AS int) AS h,
+                     cast(count(*) AS bigint) AS c
+              FROM events GROUP BY 1, 2
+            ),
+            m AS (SELECT g, max(c) AS cmax FROM c GROUP BY g),
+            a AS (
+              SELECT c.g, cast(sum(c.c) AS bigint) AS n,
+                     cast(count(*) AS int) AS nh,
+                     min(CASE WHEN c.c = m.cmax THEN c.h END) AS peak_hour,
+                     max(m.cmax) AS peak,
+                     cast(sum(c.c * c.c) AS bigint) AS sc2
+              FROM c JOIN m USING (g) GROUP BY c.g
+            )
+            SELECT g AS event_type, n, nh AS n_hours_active,
+                   cast(peak_hour AS int) AS peak_hour,
+                   round(cast(peak AS double) / cast(n AS double), 6)
+                     AS peak_share,
+                   round(cast(24 * sc2 - n * n AS double)
+                         / cast(n AS double), 6) AS chi2
+            FROM a
+        """,
         # Global transitivity over the 3-clique+pendant gadgets is
         # ANALYTIC: each disjoint gadget contributes 3 closed wedges,
         # 1 triangle, 5 wedges (degrees 2,2,3,1) — see
@@ -3884,7 +4589,113 @@ def oracle_sql() -> dict[str, str]:
                      AS avg_nbr_deg
             FROM ks CROSS JOIN o
         """,
+        # k-anonymity audit: GROUP BY + HAVING < k (see
+        # q_events_k_anonymity).
+        "events_k_anonymity": """
+            SELECT user_id, event_type, cast(hour(ts) AS int) AS hour,
+                   cast(count(*) AS bigint) AS n
+            FROM events
+            GROUP BY user_id, event_type, hour(ts)
+            HAVING count(*) < 5
+        """,
+        # 10%-trimmed mean: identical rank/trim/decimal-sum chain (see
+        # q_events_trimmed_mean).
+        "events_trimmed_mean": """
+            WITH r AS (
+              SELECT event_type AS g,
+                     cast(value AS decimal(38,6)) AS v,
+                     row_number() OVER (
+                       PARTITION BY event_type
+                       ORDER BY value ASC, event_id ASC
+                     ) AS rn,
+                     count(*) OVER (PARTITION BY event_type) AS n
+              FROM events WHERE value IS NOT NULL
+            ),
+            t AS (SELECT *, (1 * n) // 10 AS tt FROM r),
+            k AS (
+              SELECT g, cast(max(n) AS bigint) AS n,
+                     cast(max(tt) AS bigint) AS t,
+                     sum(v) AS s, cast(count(*) AS bigint) AS c
+              FROM t WHERE rn > tt AND rn <= n - tt
+              GROUP BY g
+            )
+            SELECT g AS event_type, n, t AS n_trimmed_each_side,
+                   round(cast(s AS double) / cast(c AS double), 6)
+                     AS trimmed_mean
+            FROM k
+        """,
+        # l-diversity: GROUP BY + HAVING count(DISTINCT sensitive) < l
+        # (see q_events_l_diversity).
+        "events_l_diversity": """
+            SELECT user_id, event_type, cast(hour(ts) AS int) AS hour,
+                   cast(count(*) AS bigint) AS n,
+                   cast(count(DISTINCT day(ts)) AS bigint) AS n_sensitive
+            FROM events
+            GROUP BY user_id, event_type, hour(ts)
+            HAVING count(DISTINCT day(ts)) < 3
+        """,
         "hll_user_overlap": _hll_overlap_oracle_sql(),
+        # Kaplan-Meier: identical duration/risk/ln-sum chain (see
+        # q_events_survival).
+        "events_survival": """
+            WITH ev AS (
+              SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us
+              FROM events WHERE ts IS NOT NULL
+            ),
+            t0 AS (SELECT u, min(us) AS t0 FROM ev
+                   WHERE t = 'signup' GROUP BY u),
+            conv AS (
+              SELECT ev.u, min(us) AS t1 FROM ev JOIN t0 USING (u)
+              WHERE t = 'purchase' AND us >= t0 GROUP BY ev.u
+            ),
+            hz AS (SELECT max(us) AS hz FROM ev),
+            subj AS (
+              SELECT (coalesce(t1, hz) - t0) // 86400000000 AS t_day,
+                     CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS e
+              FROM t0 LEFT JOIN conv USING (u) CROSS JOIN hz
+            ),
+            days AS (
+              SELECT t_day, cast(sum(e) AS bigint) AS d,
+                     cast(sum(1 - e) AS bigint) AS c
+              FROM subj GROUP BY t_day
+            ),
+            risk AS (
+              SELECT *, sum(d + c) OVER (
+                ORDER BY t_day DESC
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+              ) AS n FROM days
+            ),
+            curve AS (
+              SELECT *,
+                sum(CASE WHEN d > 0 AND d < n
+                         THEN ln(cast(n - d AS double) / cast(n AS double))
+                         ELSE 0.0 END) OVER (
+                  ORDER BY t_day ASC
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                ) AS lns,
+                max(CASE WHEN d > 0 AND d >= n THEN 1 ELSE 0 END) OVER (
+                  ORDER BY t_day ASC
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                ) AS dead
+              FROM risk
+            )
+            SELECT cast(t_day AS bigint) AS t_day,
+                   cast(n AS bigint) AS n_at_risk,
+                   d AS n_events, c AS n_censored,
+                   CASE WHEN dead = 1 THEN 0.0
+                        ELSE round(exp(lns), 6) END AS survival
+            FROM curve
+        """,
+        # percent_rank is identically defined in both engines; NULLs
+        # filtered (NULLS FIRST/LAST divergence) — see
+        # q_events_value_pct.
+        "events_value_pct": """
+            SELECT event_id, event_type,
+                   round(percent_rank() OVER (
+                     PARTITION BY event_type ORDER BY value ASC
+                   ), 6) AS pct
+            FROM events WHERE value IS NOT NULL
+        """,
         # Degree histogram over the gadgets is analytic (see
         # q_graph_degree_hist).
         "graph_degree_hist": """
@@ -3912,6 +4723,69 @@ def oracle_sql() -> dict[str, str]:
                             * ln(cast(3 AS double) / cast(2 AS double))), 6)
                      AS alpha
             FROM g
+        """,
+        "events_benford": """
+            WITH digits AS (
+              SELECT event_type AS "group",
+                     cast(left(cast(cast(round(value * 100) AS bigint)
+                                    AS varchar), 1) AS integer) AS d,
+                     count(*) AS c
+              FROM events
+              WHERE value IS NOT NULL AND value >= 0.01
+              GROUP BY 1, 2
+            ),
+            terms AS (
+              SELECT "group", c,
+                     c * c / (ln((d + 1.0) / d) / ln(10.0)) AS cc_over_p
+              FROM digits
+            )
+            SELECT "group",
+                   cast(sum(c) AS bigint) AS n,
+                   round(sum(cc_over_p) / sum(c) - sum(c), 6) AS chi2
+            FROM terms GROUP BY 1
+        """,
+        "curriculum_order": """
+            WITH sc AS (
+              SELECT doc_id AS key,
+                     cast(len(regexp_extract_all(lower(text),
+                                                 '[a-z0-9]{2,}'))
+                          AS bigint) AS difficulty
+              FROM documents
+            ),
+            smp AS (
+              SELECT * FROM sc
+              WHERE md5_number_upper('curriculum:'
+                      || cast(key AS varchar)) % 1000000 < 50000
+            ),
+            r AS (
+              SELECT difficulty,
+                     row_number() OVER (ORDER BY difficulty ASC, key ASC)
+                       AS rn,
+                     count(*) OVER () AS n
+              FROM smp
+            ),
+            b AS (
+              SELECT max(CASE WHEN rn = (1 * n + 3) // 4
+                              THEN difficulty END) AS b1,
+                     max(CASE WHEN rn = (2 * n + 3) // 4
+                              THEN difficulty END) AS b2,
+                     max(CASE WHEN rn = (3 * n + 3) // 4
+                              THEN difficulty END) AS b3
+              FROM r
+            )
+            SELECT sc.key, sc.difficulty,
+                   cast(1
+                        + (CASE WHEN b.b1 IS NOT NULL
+                                 AND sc.difficulty > b.b1
+                                THEN 1 ELSE 0 END)
+                        + (CASE WHEN b.b2 IS NOT NULL
+                                 AND sc.difficulty > b.b2
+                                THEN 1 ELSE 0 END)
+                        + (CASE WHEN b.b3 IS NOT NULL
+                                 AND sc.difficulty > b.b3
+                                THEN 1 ELSE 0 END)
+                     AS integer) AS bucket
+            FROM sc CROSS JOIN b
         """,
         "graph_scc": """
             WITH RECURSIVE ks AS (
@@ -3988,6 +4862,23 @@ def oracle_sql() -> dict[str, str]:
             FROM agg
         """,
         "hll_distinct_users": _hll_oracle_sql(),
+        "events_percentiles_exact": """
+            WITH r AS (
+              SELECT event_type, value AS v,
+                     row_number() OVER (PARTITION BY event_type
+                                        ORDER BY value ASC, event_id ASC) AS rn,
+                     count(*) OVER (PARTITION BY event_type) AS n
+              FROM events WHERE value IS NOT NULL
+            )
+            SELECT event_type, max(n) AS n,
+                   max(CASE WHEN rn = (1 * n + 1) // 2
+                            THEN v END) AS p50,
+                   max(CASE WHEN rn = (9 * n + 9) // 10
+                            THEN v END) AS p90,
+                   max(CASE WHEN rn = (99 * n + 99) // 100
+                            THEN v END) AS p99
+            FROM r GROUP BY event_type
+        """,
         # Newman degree assortativity over the 3-clique+pendant gadget
         # union: exact bigint sums over edge-endpoint degrees, the
         # 4M²-scaled integer numerator/denominator, ONE round-6
@@ -4053,6 +4944,13 @@ def oracle_sql() -> dict[str, str]:
             FROM k
         """,
         "html_to_text": _html_to_text_oracle_sql(),
+        "train_val_split": """
+            SELECT doc_id,
+                   CASE WHEN md5_number_upper('split:' || cast(doc_id AS varchar))
+                             % 1000000 < 900000
+                        THEN 'train' ELSE 'val' END AS split
+            FROM documents
+        """,
         "skew_hot_entities": f"""
             WITH triples AS ({_CONSTRUCTED_TRIPLES_SQL}),
             m AS (
@@ -4083,6 +4981,63 @@ def oracle_sql() -> dict[str, str]:
             FROM v JOIN m USING (k8)
             WHERE v.node_id <> m.canon
             ORDER BY v.node_id
+        """,
+        "sample_stratified": """
+            SELECT o_orderkey, o_orderstatus
+            FROM orders
+            WHERE md5_number_upper('sample:' || cast(o_orderkey AS varchar))
+                  % 1000000
+                  < CASE o_orderstatus WHEN 'O' THEN 100000
+                                       WHEN 'F' THEN 50000
+                                       WHEN 'P' THEN 500000
+                                       ELSE 0 END
+        """,
+        # Water level T = min(count_s / share_s) and per-source
+        # thresholds recomputed in the identical double expression
+        # order: ((1000000 * share) * T) / count. Shares cast to double
+        # (bare 0.5 is DECIMAL in DuckDB).
+        "sample_mixture": """
+            WITH cnt AS (
+              SELECT o_orderstatus AS src, count(*) AS n
+              FROM orders WHERE o_orderstatus IN ('O', 'F', 'P')
+              GROUP BY o_orderstatus
+            ),
+            tm AS (
+              SELECT min(n / (CASE src WHEN 'O' THEN cast(0.5 AS double)
+                                       WHEN 'F' THEN cast(0.3 AS double)
+                                       ELSE cast(0.2 AS double) END)) AS t
+              FROM cnt
+            )
+            SELECT o_orderkey, o_orderstatus
+            FROM orders o
+            JOIN cnt ON cnt.src = o.o_orderstatus
+            CROSS JOIN tm
+            WHERE md5_number_upper('mixture:' || cast(o_orderkey AS varchar))
+                    % 1000000
+                  < ((1000000 * (CASE o_orderstatus
+                                 WHEN 'O' THEN cast(0.5 AS double)
+                                 WHEN 'F' THEN cast(0.3 AS double)
+                                 ELSE cast(0.2 AS double) END)) * tm.t) / cnt.n
+        """,
+        "split_oversized_docs": r"""
+            WITH t AS (
+              SELECT doc_id,
+                     regexp_split_to_array(trim(coalesce(text, '')), '\s+') AS toks
+              FROM documents
+            ),
+            p AS (
+              SELECT doc_id, toks,
+                     unnest(range(cast(ceil(len(toks) / cast(40 AS double))
+                                       AS bigint))) AS i
+              FROM t
+            )
+            SELECT doc_id,
+                   cast(i AS int) AS piece_idx,
+                   array_to_string(toks[(i * 40 + 1):(i * 40 + 40)], ' ') AS text,
+                   cast(len(regexp_split_to_array(
+                     array_to_string(toks[(i * 40 + 1):(i * 40 + 40)], ' '),
+                     '\s+')) AS bigint) AS n_tokens
+            FROM p
         """,
         "graph_label_propagation": _lpa_oracle_sql(iterations=4),
         "graph_anf": _anf_oracle_sql(hops=2, m=16),
@@ -4329,6 +5284,35 @@ def oracle_sql() -> dict[str, str]:
             FROM md WHERE d > 0 GROUP BY id
         """,
         "graph_sssp_weighted": _sssp_oracle_sql(iterations=12),
+        # The planted MSF is analytic: chords (i, i+2) are each the
+        # unique heaviest edge of their triangle, so Borůvka's answer
+        # is exactly the path — selected here by the weight rule.
+        "graph_mst": """
+            WITH idx AS (
+              SELECT i FROM (
+                SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS i
+                FROM orders
+              ) WHERE i < 256
+            )
+            SELECT a.i AS src, b.i AS dst,
+                   cast(100 * (a.i % 2) + a.i + 10 AS double) AS weight
+            FROM idx a JOIN idx b ON b.i = a.i + 1
+        """,
+        # Closed-form single-linkage clusters at threshold 109 on the
+        # planted graph: pairs {2k, 2k+1} while even-edge weights
+        # (i + 10) stay ≤ 109, singletons beyond; cluster labels are
+        # min-id per component, matching connected_components.
+        "graph_single_linkage": """
+            WITH idx AS (
+              SELECT i FROM (
+                SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS i
+                FROM orders
+              ) WHERE i < 256
+            )
+            SELECT i AS id,
+                   CASE WHEN i <= 99 THEN i - (i % 2) ELSE i END AS cluster
+            FROM idx
+        """,
         "graph_betweenness": _betweenness_oracle_sql(levels=13),
         "table_checks": """
             WITH a AS (
@@ -4386,6 +5370,32 @@ def oracle_sql() -> dict[str, str]:
         "graph_node2vec": _node2vec_cte_sql(4, 2, 4.0, 0.25)
         + """
             SELECT walk_id, start_id, step, node FROM walks
+        """,
+        # Temperature mixture: identical sqrt weights, water level, and
+        # pinned threshold evaluation order (1e6 · w · T / n) — see
+        # q_sample_temperature / operators.packing.temperature_mixture.
+        "sample_temperature": """
+            WITH c AS (
+              SELECT o_orderstatus AS s, cast(count(*) AS bigint) AS n
+              FROM orders WHERE o_orderstatus IS NOT NULL GROUP BY 1
+            ),
+            w AS (SELECT s, n, sqrt(cast(n AS double)) AS wgt FROM c),
+            t AS (SELECT min(n / wgt) AS tmax FROM w),
+            r AS (
+              SELECT s, 1000000.0 * wgt * t.tmax / n AS thresh
+              FROM w CROSS JOIN t
+            )
+            SELECT o.o_orderkey, o.o_orderstatus
+            FROM orders o JOIN r ON o.o_orderstatus = r.s
+            WHERE cast(md5_number_upper('mixture-temp:'
+                    || cast(o_orderkey AS varchar)) % 1000000 AS double)
+                  < r.thresh
+        """,
+        "events_zorder_key": f"""
+            SELECT event_id,
+                   cast({_morton_sql(['user_id', 'floor(value)'], 16)}
+                     AS bigint) AS zkey
+            FROM events
         """,
         "graph_eigenvector": _eigenvector_oracle_sql(3),
         # CMS join-size estimate: identical cells, bucketwise integer
@@ -4469,6 +5479,52 @@ def oracle_sql() -> dict[str, str]:
                          ELSE 0.0 END, 9) AS conductance
             FROM mem LEFT JOIN per_c ON mem.community = per_c.community
             CROSS JOIN m2
+        """,
+        # Cohort retention: identical epoch-day bucketing and keyed
+        # min/join/distinct-count (see q_events_retention).
+        "events_retention": """
+            WITH b AS (
+              SELECT user_id AS g,
+                     epoch_us(ts) // 1000000 // 86400 AS w
+              FROM events
+              WHERE ts IS NOT NULL AND user_id IS NOT NULL
+            ),
+            f AS (SELECT g, min(w) AS cohort FROM b GROUP BY g)
+            SELECT f.cohort, b.w - f.cohort AS periods_since,
+                   cast(count(DISTINCT b.g) AS bigint) AS n_active
+            FROM b JOIN f ON b.g = f.g
+            GROUP BY 1, 2
+        """,
+        # Ordered funnel: identical chained min-after-previous-step
+        # joins on epoch integers (see q_events_funnel).
+        "events_funnel": """
+            WITH b AS (
+              SELECT user_id AS g, event_type AS s,
+                     epoch_us(ts) // 1000000 AS e
+              FROM events
+              WHERE ts IS NOT NULL AND user_id IS NOT NULL
+            ),
+            r0 AS (SELECT g, min(e) AS t FROM b
+                   WHERE s = 'signup' GROUP BY g),
+            r1 AS (SELECT b.g, min(b.e) AS t FROM b JOIN r0 ON b.g = r0.g
+                   WHERE b.s = 'purchase' AND b.e > r0.t GROUP BY b.g),
+            r2 AS (SELECT b.g, min(b.e) AS t FROM b JOIN r1 ON b.g = r1.g
+                   WHERE b.s = 'error' AND b.e > r1.t GROUP BY b.g),
+            n AS (SELECT (SELECT count(*) FROM r0) AS n0,
+                         (SELECT count(*) FROM r1) AS n1,
+                         (SELECT count(*) FROM r2) AS n2)
+            SELECT cast(0 AS int) AS step_idx, 'signup' AS step,
+                   cast(n0 AS bigint) AS n_reached,
+                   round(CASE WHEN n0 > 0 THEN cast(n0 AS double) / n0
+                              ELSE 0.0 END, 6) AS conversion FROM n
+            UNION ALL
+            SELECT 1, 'purchase', cast(n1 AS bigint),
+                   round(CASE WHEN n0 > 0 THEN cast(n1 AS double) / n0
+                              ELSE 0.0 END, 6) FROM n
+            UNION ALL
+            SELECT 2, 'error', cast(n2 AS bigint),
+                   round(CASE WHEN n0 > 0 THEN cast(n2 AS double) / n0
+                              ELSE 0.0 END, 6) FROM n
         """,
         # Histogram-sketch quantiles: identical bucketing, integer
         # cumulative counts, and double rank arithmetic (q cast to
@@ -4618,6 +5674,183 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN deg ON deg.id = n.id
             LEFT JOIN tc ON tc.id = n.id
         """,
+        # Fano burstiness: exact-integer numerator/denominator, one
+        # identical division per group (see q_events_burstiness).
+        "events_burstiness": """
+            WITH c AS (
+              SELECT event_type AS grp, date_trunc('hour', ts) AS bucket,
+                     cast(count(*) AS bigint) AS x
+              FROM events GROUP BY 1, 2
+            ),
+            a AS (
+              SELECT grp, cast(count(*) AS bigint) AS n,
+                     cast(sum(x) AS bigint) AS s1,
+                     cast(sum(x * x) AS bigint) AS s2
+              FROM c GROUP BY grp
+            )
+            SELECT grp AS event_type, n AS n_buckets,
+                   round((n * s2 - s1 * s1) / (n * s1), 6) AS fano
+            FROM a
+        """,
+        # Set churn: period folded into the (group, bucket) join key,
+        # exact integer set sizes, one round-6 division each (see
+        # q_events_churn).
+        "events_churn": """
+            WITH gb AS (
+              SELECT DISTINCT user_id || '|' || event_type AS g,
+                     cast((epoch_us(ts) // 1000000) // 86400 AS bigint) AS w
+              FROM events WHERE ts IS NOT NULL
+            ),
+            s AS (SELECT w, cast(count(*) AS bigint) AS n FROM gb GROUP BY w),
+            com AS (
+              SELECT a.w, cast(count(*) AS bigint) AS n_common
+              FROM gb a JOIN gb b ON a.g = b.g AND b.w = a.w - 1
+              GROUP BY a.w
+            )
+            SELECT cur.w AS bucket, cur.n AS n_cur, prv.n AS n_prev,
+                   cast(coalesce(com.n_common, 0) AS bigint) AS n_common,
+                   round(coalesce(com.n_common, 0)
+                         / (cur.n + prv.n - coalesce(com.n_common, 0)), 6)
+                     AS jaccard,
+                   round(1 - coalesce(com.n_common, 0)
+                         / (cur.n + prv.n - coalesce(com.n_common, 0)), 6)
+                     AS churn
+            FROM s cur
+            JOIN s prv ON prv.w = cur.w - 1
+            LEFT JOIN com ON com.w = cur.w
+        """,
+        # Autocorrelation: lag folded into the (group, hour) join key,
+        # paired-sample integer Pearson identity (see q_events_autocorr).
+        "events_autocorr": """
+            WITH c AS (
+              SELECT event_type AS g,
+                     cast(epoch_us(date_trunc('hour', ts)) // 3600000000
+                          AS bigint) AS h,
+                     cast(count(*) AS bigint) AS x
+              FROM events GROUP BY 1, 2
+            ),
+            p AS (
+              SELECT a.g, a.x AS x, b.x AS y
+              FROM c a JOIN c b ON a.g = b.g AND b.h = a.h + 24
+            ),
+            a AS (
+              SELECT g, cast(count(*) AS bigint) AS n,
+                     cast(sum(x) AS bigint) AS sx,
+                     cast(sum(y) AS bigint) AS sy,
+                     cast(sum(x * x) AS bigint) AS sx2,
+                     cast(sum(y * y) AS bigint) AS sy2,
+                     cast(sum(x * y) AS bigint) AS sxy
+              FROM p GROUP BY g HAVING count(*) >= 3
+            )
+            SELECT g AS event_type, n AS n_pairs,
+                   cast(sign(n * sxy - sx * sy) AS int) AS direction,
+                   round(((n * sxy - sx * sy) * (n * sxy - sx * sy))
+                         / ((n * sx2 - sx * sx) * (n * sy2 - sy * sy)),
+                         6) AS r2
+            FROM a
+            WHERE n * sx2 - sx * sx > 0 AND n * sy2 - sy * sy > 0
+        """,
+        # Novelty curve: epoch-integer day buckets, first-seen min,
+        # bucket-keyed counts, one round-6 division (see
+        # q_events_novelty).
+        "events_novelty": """
+            WITH gb AS (
+              SELECT DISTINCT user_id || '|' || event_type AS g,
+                     cast((epoch_us(ts) // 1000000) // 86400 AS bigint) AS w
+              FROM events WHERE ts IS NOT NULL
+            ),
+            act AS (
+              SELECT w, cast(count(*) AS bigint) AS n_active FROM gb GROUP BY w
+            ),
+            fs AS (SELECT g, min(w) AS w FROM gb GROUP BY g),
+            nw AS (
+              SELECT w, cast(count(*) AS bigint) AS n_new FROM fs GROUP BY w
+            )
+            SELECT act.w AS bucket,
+                   cast(coalesce(nw.n_new, 0) AS bigint) AS n_new,
+                   act.n_active,
+                   round(coalesce(nw.n_new, 0) / act.n_active, 6) AS pct_new
+            FROM act LEFT JOIN nw ON act.w = nw.w
+        """,
+        # Trend slope: rebased integer hour index, exact-integer LSQ
+        # identity, one round-6 division (see q_events_trend).
+        "events_trend": """
+            WITH c AS (
+              SELECT event_type AS g,
+                     cast(epoch_us(date_trunc('hour', ts)) // 3600000000
+                          AS bigint) AS h,
+                     cast(count(*) AS bigint) AS y
+              FROM events GROUP BY 1, 2
+            ),
+            b AS (SELECT cast(min(h) AS bigint) AS h0 FROM c),
+            r AS (SELECT g, h - h0 AS t, y FROM c CROSS JOIN b),
+            a AS (
+              SELECT g, cast(count(*) AS bigint) AS n,
+                     cast(sum(t) AS bigint) AS st,
+                     cast(sum(t * t) AS bigint) AS st2,
+                     cast(sum(y) AS bigint) AS sy,
+                     cast(sum(t * y) AS bigint) AS sty
+              FROM r GROUP BY g
+            )
+            SELECT g AS event_type, n AS n_buckets,
+                   cast(sign(n * sty - st * sy) AS int) AS direction,
+                   round((n * sty - st * sy) / (n * st2 - st * st), 6) AS slope
+            FROM a WHERE n * st2 - st * st > 0
+        """,
+        # Temporal correlation: exact-integer Pearson identity over the
+        # common hourly bucket universe, sign separate, one round-6
+        # division (see q_events_correlation).
+        "events_correlation": """
+            WITH c AS (
+              SELECT event_type AS g, date_trunc('hour', ts) AS bucket,
+                     cast(count(*) AS bigint) AS x
+              FROM events GROUP BY 1, 2
+            ),
+            nb AS (SELECT cast(count(DISTINCT bucket) AS bigint) AS n FROM c),
+            m AS (
+              SELECT g, cast(sum(x) AS bigint) AS s1,
+                     cast(sum(x * x) AS bigint) AS s2
+              FROM c GROUP BY g
+            ),
+            xy AS (
+              SELECT ca.g AS a, cb.g AS b,
+                     cast(sum(ca.x * cb.x) AS bigint) AS sxy,
+                     cast(count(*) AS bigint) AS ns
+              FROM c ca JOIN c cb ON ca.bucket = cb.bucket AND ca.g < cb.g
+              GROUP BY 1, 2 HAVING count(*) >= 3
+            )
+            SELECT xy.a, xy.b, xy.ns AS n_shared,
+                   cast(sign(nb.n * xy.sxy - ma.s1 * mb.s1) AS int) AS direction,
+                   round(((nb.n * xy.sxy - ma.s1 * mb.s1)
+                          * (nb.n * xy.sxy - ma.s1 * mb.s1))
+                         / ((nb.n * ma.s2 - ma.s1 * ma.s1)
+                            * (nb.n * mb.s2 - mb.s1 * mb.s1)), 6) AS r2
+            FROM xy
+            CROSS JOIN nb
+            JOIN m ma ON ma.g = xy.a
+            JOIN m mb ON mb.g = xy.b
+            WHERE nb.n * ma.s2 - ma.s1 * ma.s1 > 0
+              AND nb.n * mb.s2 - mb.s1 * mb.s1 > 0
+        """,
+        # Shannon entropy: every ln argument an exact integer count via
+        # H = ln n − (Σ c·ln c)/n; round-6 after the sum (see
+        # q_events_entropy).
+        "events_entropy": """
+            WITH c AS (
+              SELECT user_id AS grp, event_type AS state,
+                     cast(count(*) AS bigint) AS c
+              FROM events GROUP BY 1, 2
+            ),
+            a AS (
+              SELECT grp, cast(count(*) AS bigint) AS k,
+                     cast(sum(c) AS bigint) AS n,
+                     sum(c * ln(c)) AS sclogc
+              FROM c GROUP BY grp
+            )
+            SELECT grp AS user_id, n AS n_events, k AS n_states,
+                   round(ln(n) - sclogc / n, 6) AS entropy
+            FROM a
+        """,
         # Reciprocity: identical gadget construction, distinct/self-loop
         # conventions, EXISTS mutual test, one round-6 division (see
         # q_graph_reciprocity).
@@ -4646,6 +5879,72 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN n_directed > 0
                         THEN round(n_mutual / n_directed, 6) END AS reciprocity
             FROM n, m
+        """,
+        # Event-sequence trigrams: (ts, id) total order, exact counts,
+        # rank after the deterministic top-k cut (see
+        # q_events_top_sequences).
+        "events_top_sequences": """
+            WITH s AS (
+              SELECT concat_ws(' > ',
+                       lag(event_type, 2) OVER w,
+                       lag(event_type, 1) OVER w,
+                       event_type) AS pattern,
+                     lag(event_type, 2) OVER w AS f
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ),
+            c AS (
+              SELECT pattern, cast(count(*) AS bigint) AS n
+              FROM s WHERE f IS NOT NULL GROUP BY pattern
+            ),
+            t AS (SELECT * FROM c ORDER BY n DESC, pattern ASC LIMIT 20)
+            SELECT pattern, n,
+                   cast(row_number() OVER (ORDER BY n DESC, pattern ASC) AS int) AS rk
+            FROM t
+        """,
+        # Gini concentration: integer ranks over (count, source)-sorted
+        # totals, exact-integer rank formula, one round-6 division (see
+        # q_corpus_source_gini).
+        "corpus_source_gini": """
+            WITH t AS (
+              SELECT source AS grp, cast(sum(n_chars) AS bigint) AS x
+              FROM documents GROUP BY source
+            ),
+            r AS (
+              SELECT x, cast(row_number() OVER (ORDER BY x, grp) AS bigint) AS i
+              FROM t
+            ),
+            a AS (
+              SELECT cast(count(*) AS bigint) AS n,
+                     cast(sum(x) AS bigint) AS t,
+                     cast(sum((2 * i - 1) * x) AS bigint) AS s
+              FROM r
+            )
+            SELECT n AS n_groups, t AS total,
+                   round((s - n * t) / (n * t), 6) AS gini
+            FROM a
+        """,
+        # Markov transitions: identical (ts, id) sequence order, exact
+        # integer counts, one round-6 division (see q_events_markov).
+        "events_markov": """
+            WITH p AS (
+              SELECT lag(event_type) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                     ) AS src_state,
+                     event_type AS dst_state
+              FROM events
+            ),
+            c AS (
+              SELECT src_state, dst_state, cast(count(*) AS bigint) AS n
+              FROM p WHERE src_state IS NOT NULL GROUP BY 1, 2
+            ),
+            m AS (
+              SELECT src_state, cast(sum(n) AS bigint) AS total
+              FROM c GROUP BY 1
+            )
+            SELECT c.src_state, c.dst_state, c.n,
+                   round(c.n / m.total, 6) AS prob
+            FROM c JOIN m USING (src_state)
         """,
         "er_sorted_neighborhood": """
             -- literal Hernandez-Stolfo window over the global order;
@@ -4705,5 +6004,206 @@ def oracle_sql() -> dict[str, str]:
                      count(DISTINCT l_orderkey % 13)), 6) AS confidence
             FROM lineitem
             GROUP BY 1, 2, 3
+        """,
+        # Simpson concentration: Σcᵢ²/n² with exact integer numerator
+        # and denominator, one round-6 division each way
+        # (see q_events_simpson).
+        "events_simpson": """
+            WITH c AS (
+              SELECT user_id AS g, event_type AS s, count(*) AS c
+              FROM events
+              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+              GROUP BY 1, 2
+            )
+            SELECT g AS user_id,
+                   cast(sum(c) AS bigint) AS n_events,
+                   cast(count(*) AS bigint) AS n_states,
+                   round(cast(sum(c * c) AS double)
+                         / cast(sum(c) * sum(c) AS double), 6) AS simpson,
+                   round(cast(sum(c) * sum(c) AS double)
+                         / cast(sum(c * c) AS double), 6) AS inv_simpson
+            FROM c GROUP BY g
+        """,
+        # Best-lag cross-correlation: identical dense-range moment
+        # algebra; the shifted co-activity join is written the other
+        # way around (cb.bucket = ca.bucket + lag) as an independence
+        # check (see q_events_best_lag).
+        "events_best_lag": """
+            WITH ev AS (
+              SELECT event_type AS g,
+                     epoch_us(ts) // 1000000 // 3600 AS bucket
+              FROM events WHERE ts IS NOT NULL
+            ),
+            c AS (SELECT g, bucket, count(*) AS x FROM ev GROUP BY 1, 2),
+            rng AS (
+              SELECT min(bucket) AS mn, max(bucket) AS mx,
+                     max(bucket) - min(bucket) + 1 AS n
+              FROM c
+            ),
+            lags AS (SELECT unnest(generate_series(-3, 3)) AS lag),
+            mxm AS (
+              SELECT g, sum(x) AS s1, sum(x * x) AS s2 FROM c GROUP BY g
+            ),
+            my AS (
+              SELECT g, lag, sum(x) AS sy1, sum(x * x) AS sy2
+              FROM c CROSS JOIN lags CROSS JOIN rng
+              WHERE bucket >= mn + lag AND bucket <= mx + lag
+              GROUP BY 1, 2
+            ),
+            xy AS (
+              SELECT ca.g AS a, cb.g AS b, l.lag AS lag,
+                     sum(ca.x * cb.x) AS sxy, count(*) AS n_shared
+              FROM c ca
+              CROSS JOIN lags l
+              JOIN c cb ON cb.bucket = ca.bucket + l.lag AND ca.g < cb.g
+              GROUP BY 1, 2, 3
+              HAVING count(*) >= 3
+            ),
+            scored AS (
+              SELECT a, b, xy.lag AS lag, n_shared,
+                     rng.n * sxy - mxm.s1 * my.sy1 AS num,
+                     rng.n * mxm.s2 - mxm.s1 * mxm.s1 AS vara,
+                     rng.n * my.sy2 - my.sy1 * my.sy1 AS varb
+              FROM xy
+              JOIN mxm ON mxm.g = xy.a
+              JOIN my ON my.g = xy.b AND my.lag = xy.lag
+              CROSS JOIN rng
+            ),
+            ranked AS (
+              -- factors cast to double BEFORE multiplying, mirroring
+              -- the operator's overflow-safe form (identical while
+              -- |num| < 2^53, gracefully degrading past it)
+              SELECT a, b, lag, n_shared,
+                     sign(num) AS direction,
+                     round((cast(num AS double) * cast(num AS double))
+                           / (cast(vara AS double)
+                              * cast(varb AS double)), 6) AS r2,
+                     row_number() OVER (
+                       PARTITION BY a, b
+                       ORDER BY round((cast(num AS double)
+                                   * cast(num AS double))
+                                 / (cast(vara AS double)
+                                    * cast(varb AS double)), 6) DESC,
+                                abs(lag) ASC, lag ASC
+                     ) AS rk
+              FROM scored
+              WHERE vara > 0 AND varb > 0
+            )
+            SELECT a, b, cast(lag AS int) AS lag,
+                   cast(n_shared AS bigint) AS n_shared,
+                   cast(direction AS int) AS direction, r2
+            FROM ranked WHERE rk = 1
+        """,
+        "events_profile_drift": _profile_drift_oracle_sql(),
+        # Mann-Kendall + Theil-Sen: identical integer S / ×18 variance
+        # / nearest-rank slope pick (see q_events_robust_trend).
+        "events_robust_trend": """
+            WITH c AS (
+              SELECT event_type AS g,
+                     epoch_us(ts) // 1000000 // 3600 AS h,
+                     count(*) AS y
+              FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
+            ),
+            p AS (
+              SELECT a.g, a.h AS hi, a.y AS yi, b.h AS hj, b.y AS yj
+              FROM c a JOIN c b ON a.g = b.g AND a.h < b.h
+            ),
+            mk AS (
+              SELECT g, sum(sign(yj - yi)) AS s FROM p GROUP BY g
+            ),
+            nb AS (SELECT g, count(*) AS n FROM c GROUP BY g),
+            tc AS (
+              SELECT g, sum(t * (t - 1) * (2 * t + 5)) AS tie18
+              FROM (SELECT g, y, count(*) AS t FROM c GROUP BY g, y)
+              GROUP BY g
+            ),
+            mz AS (
+              SELECT nb.g, nb.n, mk.s,
+                     round((CASE WHEN mk.s > 0
+                                 THEN cast(mk.s - 1 AS double)
+                                 WHEN mk.s < 0
+                                 THEN cast(mk.s + 1 AS double)
+                                 ELSE 0.0 END)
+                           / sqrt(cast(nb.n * (nb.n - 1) * (2 * nb.n + 5)
+                                       - tc.tie18 AS double) / 18.0), 6)
+                       AS mk_z
+              FROM nb JOIN mk USING (g) JOIN tc USING (g)
+              WHERE nb.n >= 2
+                AND nb.n * (nb.n - 1) * (2 * nb.n + 5) - tc.tie18 > 0
+            ),
+            sen AS (
+              SELECT g, round(sl, 6) AS sen_slope FROM (
+                SELECT g, sl,
+                       row_number() OVER (
+                         PARTITION BY g ORDER BY sl, hi, hj
+                       ) AS rn,
+                       count(*) OVER (PARTITION BY g) AS m
+                FROM (
+                  SELECT g, hi, hj,
+                         cast(yj - yi AS double)
+                           / cast(hj - hi AS double) AS sl
+                  FROM p
+                )
+              ) WHERE rn = cast(ceil(m / 2.0) AS bigint)
+            )
+            SELECT mz.g AS event_type,
+                   cast(mz.n AS bigint) AS n_buckets,
+                   cast(mz.s AS bigint) AS mk_s,
+                   mz.mk_z, sen.sen_slope
+            FROM mz JOIN sen USING (g)
+        """,
+        # Two-sample KS: identical integer-numerator cumulative chain,
+        # integer argmax with value-ASC tiebreak
+        # (see q_events_ks_drift).
+        "events_ks_drift": """
+            WITH m AS (
+              SELECT value AS v,
+                     CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS da,
+                     CASE WHEN event_id % 2 = 1 THEN 1 ELSE 0 END AS db
+              FROM events WHERE value IS NOT NULL
+            ),
+            per AS (
+              SELECT v, sum(da) AS da, sum(db) AS db FROM m GROUP BY v
+            ),
+            cum AS (
+              SELECT v,
+                     sum(da) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
+                       PRECEDING AND CURRENT ROW) AS ca,
+                     sum(db) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
+                       PRECEDING AND CURRENT ROW) AS cb,
+                     sum(da) OVER () AS na,
+                     sum(db) OVER () AS nb
+              FROM per
+            )
+            SELECT cast(na AS bigint) AS n_a,
+                   cast(nb AS bigint) AS n_b,
+                   v AS at_value,
+                   round(cast(abs(ca * nb - cb * na) AS double)
+                         / cast(na * nb AS double), 6) AS ks_d
+            FROM cum WHERE na > 0 AND nb > 0
+            ORDER BY abs(ca * nb - cb * na) DESC, v ASC LIMIT 1
+        """,
+        "events_dp_counts": """
+            WITH c AS (
+              SELECT event_type, user_id, count(*) AS tc
+              FROM events
+              WHERE event_type IS NOT NULL AND user_id IS NOT NULL
+              GROUP BY 1, 2
+            ),
+            u AS (
+              SELECT event_type, user_id, tc,
+                     (cast(md5_number_upper('dp:'
+                        || coalesce(event_type, chr(0) || 'null')
+                        || chr(31)
+                        || coalesce(cast(user_id AS varchar),
+                                    chr(0) || 'null')) % 1000000
+                        AS double) + 0.5) / 1000000.0 AS u
+              FROM c
+            )
+            SELECT event_type, user_id,
+                   round(tc + (-(1.0 / 0.5) * sign(u - 0.5)
+                         * ln(1.0 - 2.0 * abs(u - 0.5))), 6)
+                     AS noisy_count
+            FROM u
         """,
     }

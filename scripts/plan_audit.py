@@ -53,6 +53,39 @@ def _anf_round_plan(spark):
     return _anf_round(sym, sk, 16)
 
 
+def _mst_phase_plan(em, spark, sf_dir):
+    """One Borůvka phase's un-checkpointed selection plan over the
+    planted chord-triangle graph (the q_graph_mst input)."""
+    from pyspark.sql import functions as F
+    from threat_intelligence_knowledge_graph_spark.operators.mst import (
+        _canonical_edges,
+        _phase_select,
+    )
+
+    from pyspark.sql import Window
+
+    o = em._t(spark, sf_dir, "orders").select("o_orderkey")
+    idx = o.select(
+        (F.row_number().over(Window.orderBy("o_orderkey")) - 1).alias("i")
+    ).filter(F.col("i") < 256)
+    a, b = idx.alias("a"), idx.alias("b")
+    ai = F.col("a.i")
+    edges = a.join(b, F.col("b.i") == ai + 1).select(
+        ai.alias("src"),
+        F.col("b.i").alias("dst"),
+        (F.lit(100) * (ai % 2) + ai + 10).cast("double").alias("weight"),
+    )
+    e = _canonical_edges(edges, "src", "dst", "weight")
+    comp = (
+        e.select(F.col("a").alias("id"))
+        .union(e.select(F.col("b").alias("id")))
+        .distinct()
+        .withColumn("comp", F.col("id"))
+    )
+    _, sel = _phase_select(e, comp)
+    return sel
+
+
 def main(sf_dir: str) -> int:
     spark = build_session("plan-audit", master="local[4]", shuffle_partitions=8)
     import __spark_entry__ as em
@@ -163,6 +196,13 @@ def main(sf_dir: str) -> int:
         print(f"FAIL fused_single_exchange: exchanges={n_exchanges}")
 
     # round 3 shapes -------------------------------------------------------
+    # Stratified sampling: a pure scan+filter — no exchange, no Python.
+    check(
+        "stratified_sample_no_shuffle",
+        em.q_sample_stratified(spark, sf_dir),
+        ["Filter"],
+        must_not=["Exchange", "BatchEvalPython", "ArrowEvalPython"],
+    )
     check(
         # Equi-joins only (keyed shuffles); an unkeyed pair blowup would
         # surface as CartesianProduct/BroadcastNestedLoopJoin. Python
@@ -212,6 +252,16 @@ def main(sf_dir: str) -> int:
         ["Join"],
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
     )
+    check(
+        # Borůvka phase: endpoint→component labels are two keyed
+        # equi-joins, min-edge selection is a hash aggregate with a
+        # map-side partial (partial_min in the plan) — never a
+        # cartesian pair blowup, never Python.
+        "mst_phase_no_cartesian",
+        _mst_phase_plan(em, spark, sf_dir),
+        ["Join", "partial_min"],
+        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
+    )
     # round 5 shapes -------------------------------------------------------
     # rcATT store normalization must use the Catalyst py_title/node_id
     # twins, never a per-row Python UDF (the r4 verdict nit).
@@ -257,6 +307,14 @@ def main(sf_dir: str) -> int:
         must_not=["CartesianProduct", "EvalPython"],
     )
     check(
+        # Markov transitions: marginals join BROADCAST (states² rows);
+        # keyed joins only, JVM-side.
+        "markov_broadcast_marginals",
+        em.q_events_markov(spark, sf_dir),
+        ["BroadcastHashJoin"],
+        must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
+    )
+    check(
         # LCC: triangle three-way join + degree agg stay keyed equi-
         # joins — a cartesian here is the classic O(V^2) trap.
         # (equi-join flavor — SortMergeJoin vs BroadcastHashJoin — is
@@ -265,6 +323,29 @@ def main(sf_dir: str) -> int:
         "graph_lcc_no_cartesian",
         em.q_graph_lcc(spark, sf_dir),
         ["HashAggregate"],
+        must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
+    )
+    # Event-sequence mining: the n−1 lag columns must share ONE window
+    # exchange (one Window operator), Zipf head collapses map-side, cut
+    # is TakeOrderedAndProject.
+    seq_plan = plan_of(em.q_events_top_sequences(spark, sf_dir))
+    n_win = len(_re.findall(r"^\(\d+\) Window", seq_plan, _re.MULTILINE))
+    if (
+        n_win <= 2  # group window + the k-row rank window
+        and "TakeOrderedAndProject" in seq_plan
+        and "EvalPython" not in seq_plan
+        and "CartesianProduct" not in seq_plan
+    ):
+        print("PASS top_sequences_shared_window_take_ordered")
+    else:
+        failures.append(("top_sequences_shared_window_take_ordered", f"windows={n_win}"))
+        print(f"FAIL top_sequences_shared_window_take_ordered: windows={n_win}")
+    check(
+        # Gini: the rank window runs over the dimension-sized totals
+        # frame (after the count agg), never the corpus; JVM-side.
+        "gini_window_over_totals_only",
+        em.q_corpus_source_gini(spark, sf_dir),
+        ["HashAggregate", "Window"],
         must_not=["CartesianProduct", "EvalPython", "BroadcastNestedLoopJoin"],
     )
     check(
@@ -279,6 +360,16 @@ def main(sf_dir: str) -> int:
         must_not=["CartesianProduct", "EvalPython"],
     )
     check(
+        # Correlation: per-group moments join BROADCAST (dimension-
+        # sized), the pair space comes from the bucket-keyed self-join
+        # — never cartesian. (The 1-row bucket-universe constant rides
+        # a BNLJ by design — BM25-constants dispensation.)
+        "correlation_broadcast_moments",
+        em.q_events_correlation(spark, sf_dir),
+        ["BroadcastHashJoin"],
+        must_not=["CartesianProduct", "EvalPython"],
+    )
+    check(
         # Assortativity: keyed degree equi-joins + 1-row aggregates
         # (the 1-row×1-row combine broadcasts; a row-explosive
         # cartesian never appears).
@@ -286,6 +377,16 @@ def main(sf_dir: str) -> int:
         em.q_graph_assortativity(spark, sf_dir),
         ["HashAggregate"],
         must_not=["EvalPython", "CartesianProduct"],
+    )
+    # 62: curriculum assignment is a pure scan-local projection — the
+    # boundary collect happens at build time; the returned frame must
+    # have NO sort, exchange, join, or aggregate (a global-ntile
+    # implementation would show a SinglePartition sort here).
+    check(
+        "curriculum_scan_local_assignment",
+        em.q_curriculum_order(spark, sf_dir),
+        ["Scan parquet"],
+        must_not=["Sort", "Exchange", "Join", "HashAggregate", "EvalPython"],
     )
     # 66: sorted-neighborhood pair generation is a keyed equi-join on
     # the rank block (never a cartesian/range join), rank windows are
@@ -328,6 +429,38 @@ def main(sf_dir: str) -> int:
         ["HashAggregate"],
         must_not=["EvalPython", "CartesianProduct", "SortAggregate"],
     )
+    # 73: weighted sampling is priority projection + ONE
+    # TakeOrderedAndProject (never a global sort/window over the
+    # corpus); the rank window runs over the k surviving rows only, so
+    # the plan has NO exchange at all in local mode.
+    plan = plan_of(em.q_sample_weighted(spark, sf_dir))
+    import re as _re2
+
+    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
+    if (
+        "TakeOrderedAndProject" in plan
+        and "EvalPython" not in plan
+        and n_ex == 0
+    ):
+        print("PASS weighted_sample_take_ordered")
+    else:
+        failures.append(("weighted_sample_take_ordered", f"exchanges={n_ex}"))
+        print(f"FAIL weighted_sample_take_ordered: exchanges={n_ex}")
+    # 74: seasonality — (group, hour) count-agg exchange, then the
+    # window max and the final aggregate SHARE one group-keyed
+    # exchange: exactly two exchange nodes, hash aggregates, no
+    # Python.
+    plan = plan_of(em.q_events_seasonality(spark, sf_dir))
+    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
+    if (
+        n_ex <= 2
+        and "EvalPython" not in plan
+        and "SortAggregate" not in plan
+    ):
+        print("PASS seasonality_two_exchanges")
+    else:
+        failures.append(("seasonality_two_exchanges", f"exchanges={n_ex}"))
+        print(f"FAIL seasonality_two_exchanges: exchanges={n_ex}")
     # 75: transitivity — the audited canonical three-way triangle join
     # (keyed equi-joins only; the only nested-loop joins are the final
     # 1-row × 1-row stat combines), exact-integer wedge aggregate.
@@ -358,12 +491,44 @@ def main(sf_dir: str) -> int:
             "SortAggregate",
         ],
     )
+    # 79: k-anonymity audit — ONE map-side-combining count aggregate +
+    # scan-local filter; a single quasi-key exchange.
+    plan = plan_of(em.q_events_k_anonymity(spark, sf_dir))
+    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
+    if n_ex <= 1 and "EvalPython" not in plan and "Join" not in plan:
+        print("PASS k_anonymity_single_exchange")
+    else:
+        failures.append(("k_anonymity_single_exchange", f"exchanges={n_ex}"))
+        print(f"FAIL k_anonymity_single_exchange: exchanges={n_ex}")
+    # 80: trimmed mean — the rank window and the final aggregate share
+    # ONE group-keyed exchange (the exact_percentiles discipline), no
+    # global sort, no Python.
+    plan = plan_of(em.q_events_trimmed_mean(spark, sf_dir))
+    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
+    if (
+        n_ex <= 1
+        and "EvalPython" not in plan
+        and "Exchange SinglePartition" not in plan
+    ):
+        print("PASS trimmed_mean_single_exchange")
+    else:
+        failures.append(("trimmed_mean_single_exchange", f"exchanges={n_ex}"))
+        print(f"FAIL trimmed_mean_single_exchange: exchanges={n_ex}")
+    # 81: l-diversity — the two-phase distinct aggregate only (quasi +
+    # (quasi, sensitive) partials), no join, no Python.
+    plan = plan_of(em.q_events_l_diversity(spark, sf_dir))
+    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
+    if n_ex <= 2 and "EvalPython" not in plan and "Join" not in plan:
+        print("PASS l_diversity_two_phase_distinct")
+    else:
+        failures.append(("l_diversity_two_phase_distinct", f"exchanges={n_ex}"))
+        print(f"FAIL l_diversity_two_phase_distinct: exchanges={n_ex}")
     # 83: HLL overlap — the checkpointed sketch means the RAW corpus
     # is scanned at most once in the pair plan (zero parquet scans
     # after the eager checkpoint), and the pair join is a register
     # equi-join, never cartesian.
     plan = plan_of(em.q_hll_user_overlap(spark, sf_dir))
-    n_scan = len(_re.findall(r"^\(\d+\) Scan parquet", plan, _re.M))
+    n_scan = len(_re2.findall(r"^\(\d+\) Scan parquet", plan, _re2.M))
     if (
         n_scan <= 1
         and "CartesianProduct" not in plan
@@ -373,6 +538,29 @@ def main(sf_dir: str) -> int:
     else:
         failures.append(("hll_overlap_single_corpus_scan", f"scans={n_scan}"))
         print(f"FAIL hll_overlap_single_corpus_scan: scans={n_scan}")
+    # 87: Kaplan-Meier — keyed min-aggregates + a 1-row broadcast
+    # horizon; the curve windows run over the day table (dimension-
+    # sized by the horizon), everything JVM-side.
+    check(
+        "survival_jvm_only",
+        em.q_events_survival(spark, sf_dir),
+        ["Window", "HashAggregate"],
+        must_not=["CartesianProduct", "EvalPython", "SortAggregate"],
+    )
+    # 88: percent-rank normalization — ONE group-keyed window
+    # exchange, scan-local otherwise, no aggregate, no Python.
+    plan = plan_of(em.q_events_value_pct(spark, sf_dir))
+    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
+    if (
+        n_ex <= 1
+        and "EvalPython" not in plan
+        and "HashAggregate" not in plan
+        and "Exchange SinglePartition" not in plan
+    ):
+        print("PASS value_pct_single_window_exchange")
+    else:
+        failures.append(("value_pct_single_window_exchange", f"exchanges={n_ex}"))
+        print(f"FAIL value_pct_single_window_exchange: exchanges={n_ex}")
     # 91: Hill tail — two histogram aggregates then a 1-row stat; all
     # hash aggregates, no Python, no cartesian.
     check(
@@ -380,6 +568,56 @@ def main(sf_dir: str) -> int:
         em.q_graph_hill_tail(spark, sf_dir),
         ["HashAggregate"],
         must_not=["CartesianProduct", "EvalPython", "SortAggregate"],
+    )
+    # 95: Simpson — two map-side-combining aggregates, nothing else.
+    check(
+        "simpson_two_aggregates",
+        em.q_events_simpson(spark, sf_dir),
+        ["HashAggregate"],
+        must_not=["CartesianProduct", "EvalPython", "Join", "Window"],
+    )
+    # 99: best-lag correlation — bucket-keyed co-activity join with
+    # bounded lag fan-out; the lag table and moments broadcast; no
+    # cartesian between data-sized frames, no Python.
+    check(
+        "best_lag_keyed_joins",
+        em.q_events_best_lag(spark, sf_dir),
+        ["HashAggregate", "Window"],
+        must_not=["CartesianProduct", "EvalPython"],
+    )
+    # 101: DP counts — ONE keyed count + scan-local noise projection;
+    # no join, no window, no Python.
+    check(
+        "dp_counts_single_aggregate",
+        em.q_events_dp_counts(spark, sf_dir),
+        ["HashAggregate"],
+        must_not=["CartesianProduct", "EvalPython", "Join", "Window"],
+    )
+    # 105: profile drift — one aggregate pass per batch (the
+    # multi-distinct expand is schema-bounded) + a schema-sized join;
+    # no window, no Python, no cartesian.
+    check(
+        "profile_drift_schema_sized",
+        em.q_events_profile_drift(spark, sf_dir),
+        ["HashAggregate"],
+        must_not=["CartesianProduct", "EvalPython", "Window"],
+    )
+    # 107: robust trend — group-keyed pair self-join (documented
+    # quadratic fan-out in BUCKET count, not rows) + keyed aggs and
+    # the median window; no Python, no cartesian.
+    check(
+        "robust_trend_keyed_pairs",
+        em.q_events_robust_trend(spark, sf_dir),
+        ["HashAggregate", "Window"],
+        must_not=["CartesianProduct", "EvalPython"],
+    )
+    # 108: KS drift — one value-keyed count, the distinct-value
+    # cumulative window, one TakeOrdered argmax; no join, no Python.
+    check(
+        "ks_drift_cumulative_argmax",
+        em.q_events_ks_drift(spark, sf_dir),
+        ["HashAggregate", "Window", "TakeOrderedAndProject"],
+        must_not=["CartesianProduct", "EvalPython", "Join"],
     )
     spark.stop()
     print(f"\n{'OK' if not failures else 'FAILURES: ' + str(failures)}")

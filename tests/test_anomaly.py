@@ -1,141 +1,6 @@
-"""z-score outlier scoring: hand-computed fixtures."""
+"""Benford first-digit deviation: hand-computed fixtures."""
 
 from __future__ import annotations
-
-import statistics
-
-import pytest
-
-from threat_intelligence_knowledge_graph_spark.operators.anomaly import zscore_outliers
-
-
-def _events(spark, rows):
-    return spark.createDataFrame(rows, ["event_id", "event_type", "value"])
-
-
-class TestZscoreOutliers:
-    def test_group_relative_scoring(self, spark):
-        # 1000.0 is normal for 'big' but a huge outlier for 'small'.
-        rows = [(i, "small", 1.0 + (i % 3)) for i in range(9)]
-        rows += [(100, "small", 1000.0)]
-        rows += [(200 + i, "big", 1000.0 + (i % 5)) for i in range(10)]
-        got = zscore_outliers(_events(spark, rows), k=3).collect()
-        assert got[0].event_id == 100
-        mu = statistics.mean([r[2] for r in rows if r[1] == "small"])
-        sigma = statistics.pstdev([r[2] for r in rows if r[1] == "small"])
-        assert got[0].z == pytest.approx(round((1000.0 - mu) / sigma, 3), abs=1e-9)
-
-    def test_constant_group_scores_zero(self, spark):
-        rows = [(i, "const", 5.0) for i in range(5)] + [(10, "varied", 1.0), (11, "varied", 9.0)]
-        got = zscore_outliers(_events(spark, rows), k=10).collect()
-        z = {r.event_id: r.z for r in got}
-        for i in range(5):
-            assert z[i] == 0.0
-        assert abs(z[10]) == abs(z[11]) == 1.0
-
-    def test_deterministic_tiebreak_by_id(self, spark):
-        rows = [(3, "t", 0.0), (1, "t", 10.0), (2, "t", 10.0), (4, "t", 0.0)]
-        got = zscore_outliers(_events(spark, rows), k=4).collect()
-        # |z| equal for all four (symmetric values): ids ascend.
-        assert [r.event_id for r in got] == [1, 2, 3, 4]
-
-    def test_rejects_bad_k(self, spark):
-        with pytest.raises(ValueError):
-            zscore_outliers(_events(spark, [(1, "t", 1.0)]), k=0)
-
-
-class TestRecencyWeightedCounts:
-    def test_hand_computed_and_ranking_flip(self, spark):
-        from datetime import datetime as DT
-
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            recency_weighted_counts,
-        )
-
-        rows = (
-            # 'old': 4 events, 14 days before the anchor
-            [("old", DT(2024, 1, 1))] * 4
-            # 'hot': 2 events, at the anchor (the newest ts)
-            + [("hot", DT(2024, 1, 15))] * 2
-        )
-        df = spark.createDataFrame(rows, "k string, ts timestamp")
-        got = {
-            r.k: (r.n_events, r.decayed_count, r.last_seen_epoch)
-            for r in recency_weighted_counts(
-                df, "k", half_life_days=7.0
-            ).collect()
-        }
-        # hot: age 0 → weight 1 each; old: age 14d = 2 half-lives → 0.25
-        assert got["hot"][0] == 2 and got["hot"][1] == 2.0
-        assert got["old"][0] == 4 and got["old"][1] == round(4 * 0.25, 6)
-        # raw count ranks old first; decay flips it
-        assert got["hot"][1] > got["old"][1] < got["old"][0]
-        assert got["hot"][2] > got["old"][2]
-
-    def test_null_ts_dropped_and_validation(self, spark):
-        from datetime import datetime as DT
-
-        import pytest as _pytest
-
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            recency_weighted_counts,
-        )
-
-        df = spark.createDataFrame(
-            [("a", DT(2024, 1, 1)), ("a", None)], "k string, ts timestamp"
-        )
-        got = recency_weighted_counts(df, "k").collect()
-        assert got[0].n_events == 1
-        with _pytest.raises(ValueError, match="half_life"):
-            recency_weighted_counts(df, "k", half_life_days=0)
-
-
-class TestMadOutliers:
-    def test_robust_to_the_outlier_itself(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            mad_outliers,
-        )
-
-        # 9 values near 10 plus one beacon at 1000: median/MAD barely
-        # move, so the beacon scores an enormous robust z
-        rows = [(i, "t", 10.0 + i * 0.1) for i in range(9)] + [(99, "t", 1000.0)]
-        df = spark.createDataFrame(rows, "event_id int, event_type string, value double")
-        got = mad_outliers(df, "value", "event_type", "event_id", threshold=3.5).collect()
-        assert [r.id for r in got] == [99]
-        # hand-check: sorted values -> med = 10.4 (rank 5 of 10); adevs
-        # sorted (0.0,0.1,0.1,0.2,0.2,…) -> mad = 0.2 (rank 5);
-        # z = .6745·(1000−10.4)/0.2
-        assert got[0].robust_z == round(0.6745 * (1000 - 10.4) / 0.2, 6)
-
-    def test_zero_mad_group_emits_nothing(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            mad_outliers,
-        )
-
-        rows = [(i, "t", 5.0) for i in range(6)] + [(9, "t", 50.0)]
-        df = spark.createDataFrame(rows, "event_id int, event_type string, value double")
-        # over half the group identical → MAD 0 → convention: no outliers
-        assert mad_outliers(df, "value", "event_type", "event_id").collect() == []
-
-    def test_group_relative_and_validation(self, spark):
-        import pytest as _pytest
-
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            mad_outliers,
-        )
-
-        rows = (
-            [(i, "small", float(i % 3)) for i in range(8)]
-            + [(100, "small", 40.0)]
-            + [(200 + i, "big", 1000.0 + (i % 5)) for i in range(8)]
-        )
-        df = spark.createDataFrame(rows, "event_id int, event_type string, value double")
-        got = mad_outliers(df, "value", "event_type", "event_id", threshold=3.5).collect()
-        assert [r.id for r in got] == [100]  # big's 1000s are normal FOR big
-        with _pytest.raises(ValueError):
-            mad_outliers(df, "value", "event_type", "event_id", k=0)
-        with _pytest.raises(ValueError):
-            mad_outliers(df, "value", "event_type", "event_id", threshold=-1)
 
 
 class TestBenfordDeviation:

@@ -1,6 +1,6 @@
-"""Round-5 continuation graph operators, batch C: global transitivity,
-rich-club coefficient, average neighbor degree, HLL overlap and the
-degree histogram with its Hill tail estimate."""
+"""Round-5 continuation operators, batch C: A-ES weighted sampling,
+hour-of-day seasonality, global transitivity and the other event/graph
+analytics."""
 
 from __future__ import annotations
 
@@ -9,15 +9,97 @@ import math
 import pytest
 
 from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
-    avg_neighbor_degree,
-    degree_histogram,
-    hill_tail,
-    rich_club,
     transitivity,
 )
-from threat_intelligence_knowledge_graph_spark.operators.sketches import (
-    hll_overlap,
+from threat_intelligence_knowledge_graph_spark.operators.packing import (
+    weighted_sample,
 )
+from threat_intelligence_knowledge_graph_spark.operators.stats import (
+    hourly_seasonality,
+)
+
+
+class TestWeightedSample:
+    def _docs(self, spark):
+        return spark.createDataFrame(
+            [(i, float(1 + (i % 5))) for i in range(100)],
+            "doc_id: long, w: double",
+        )
+
+    def test_k_rows_and_determinism(self, spark):
+        docs = self._docs(spark)
+        a = weighted_sample(docs, "doc_id", "w", k=10).collect()
+        b = weighted_sample(docs, "doc_id", "w", k=10).collect()
+        assert len(a) == 10
+        assert [r.doc_id for r in a] == [r.doc_id for r in b]
+        assert [r.rk for r in a] == list(range(1, 11))
+
+    def test_nonpositive_and_null_weights_excluded(self, spark):
+        docs = spark.createDataFrame(
+            [(1, 1.0), (2, 0.0), (3, -1.0), (4, None), (5, 2.0)],
+            "doc_id: long, w: double",
+        )
+        got = {r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=10).collect()}
+        assert got == {1, 5}
+
+    def test_heavy_weight_always_sampled(self, spark):
+        docs = spark.createDataFrame(
+            [(i, 1.0) for i in range(50)] + [(999, 1e9)],
+            "doc_id: long, w: double",
+        )
+        got = {r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=5).collect()}
+        # Exp(1e9) priority is ~1e-9 of any unit-weight row's: always in.
+        assert 999 in got
+
+    def test_salt_redraws(self, spark):
+        docs = self._docs(spark)
+        a = [r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=10, salt="s1").collect()]
+        b = [r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=10, salt="s2").collect()]
+        assert a != b
+
+    def test_validation(self, spark):
+        with pytest.raises(ValueError):
+            weighted_sample(self._docs(spark), "doc_id", "w", k=0)
+
+
+class TestHourlySeasonality:
+    def test_hand_computed(self, spark):
+        import datetime as dt
+
+        def t(h, m=0):
+            return dt.datetime(2026, 3, 1, h, m)
+
+        rows = [("spike", t(3, i)) for i in range(4)]
+        rows += [("flat", t(h)) for h in range(24)]
+        ev = spark.createDataFrame(rows, "event_type: string, ts: timestamp")
+        got = {r.event_type: r.asDict() for r in hourly_seasonality(ev).collect()}
+        # spike: all 4 in hour 3 -> chi2 = (24*16 - 16)/4 = 92
+        assert got["spike"]["n"] == 4
+        assert got["spike"]["n_hours_active"] == 1
+        assert got["spike"]["peak_hour"] == 3
+        assert got["spike"]["peak_share"] == 1.0
+        assert got["spike"]["chi2"] == 92.0
+        # flat: perfectly uniform -> chi2 = 0
+        assert got["flat"]["chi2"] == 0.0
+        assert got["flat"]["n_hours_active"] == 24
+        assert got["flat"]["peak_share"] == round(1 / 24, 6)
+
+    def test_peak_tie_smallest_hour(self, spark):
+        import datetime as dt
+
+        ev = spark.createDataFrame(
+            [
+                ("x", dt.datetime(2026, 3, 1, 7, 0)),
+                ("x", dt.datetime(2026, 3, 1, 7, 1)),
+                ("x", dt.datetime(2026, 3, 2, 5, 0)),
+                ("x", dt.datetime(2026, 3, 2, 5, 1)),
+            ],
+            "event_type: string, ts: timestamp",
+        )
+        row = hourly_seasonality(ev).collect()[0]
+        assert row.peak_hour == 5
+        # chi2 = (24*(4+4) - 16)/4 = 44
+        assert row.chi2 == 44.0
 
 
 class TestTransitivity:
@@ -58,6 +140,18 @@ class TestTransitivity:
         row = transitivity(e).collect()[0]
         assert row.n_wedges == 5
         assert row.transitivity == 0.6
+
+
+from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
+    avg_neighbor_degree,
+    rich_club,
+)
+from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+    k_anonymity_audit,
+)
+from threat_intelligence_knowledge_graph_spark.operators.stats import (
+    trimmed_mean,
+)
 
 
 def _tri_pendant(spark):
@@ -119,6 +213,109 @@ class TestAvgNeighborDegree:
         }
 
 
+class TestKAnonymityAudit:
+    def test_risky_classes(self, spark):
+        rows = [("u1", "t1")] * 5 + [("u2", "t1")] * 2 + [("u3", "t2")]
+        df = spark.createDataFrame(rows, "user_id: string, event_type: string")
+        got = {
+            (r.user_id, r.event_type): r.n
+            for r in k_anonymity_audit(df, ["user_id", "event_type"], k=5).collect()
+        }
+        assert got == {("u2", "t1"): 2, ("u3", "t2"): 1}
+
+    def test_anonymous_table_empty(self, spark):
+        rows = [("u1", "t1")] * 5 + [("u2", "t1")] * 5
+        df = spark.createDataFrame(rows, "user_id: string, event_type: string")
+        assert k_anonymity_audit(df, ["user_id", "event_type"], k=5).collect() == []
+
+    def test_null_is_a_quasi_value(self, spark):
+        df = spark.createDataFrame(
+            [("u1", None), ("u1", None), ("u2", "t")],
+            "user_id: string, event_type: string",
+        )
+        got = k_anonymity_audit(df, ["user_id", "event_type"], k=3).collect()
+        assert {(r.user_id, r.event_type, r.n) for r in got} == {
+            ("u1", None, 2),
+            ("u2", "t", 1),
+        }
+
+    def test_validation(self, spark):
+        df = spark.createDataFrame([("a",)], "x: string")
+        with pytest.raises(ValueError):
+            k_anonymity_audit(df, [], k=5)
+        with pytest.raises(ValueError):
+            k_anonymity_audit(df, ["x"], k=1)
+
+
+class TestTrimmedMean:
+    def test_hand_computed(self, spark):
+        rows = [("g", float(v), i) for i, v in enumerate([1, 2, 3, 4, 1000])]
+        df = spark.createDataFrame(rows, "g: string, v: double, id: long")
+        row = trimmed_mean(df, "v", "g", "id", trim=0.2).collect()[0]
+        # t = floor(0.2*5) = 1: drop 1 and 1000 -> mean(2,3,4) = 3
+        assert (row.n, row.n_trimmed_each_side, row.trimmed_mean) == (5, 1, 3.0)
+
+    def test_trim_zero_is_plain_mean(self, spark):
+        rows = [("g", float(v), v) for v in range(1, 11)]
+        df = spark.createDataFrame(rows, "g: string, v: double, id: long")
+        row = trimmed_mean(df, "v", "g", "id", trim=0.0).collect()[0]
+        assert (row.n, row.n_trimmed_each_side, row.trimmed_mean) == (10, 0, 5.5)
+
+    def test_nulls_excluded_and_groups_independent(self, spark):
+        df = spark.createDataFrame(
+            [("a", 10.0, 1), ("a", None, 2), ("a", 20.0, 3), ("b", 7.0, 1)],
+            "g: string, v: double, id: long",
+        )
+        got = {r.g: r.asDict() for r in trimmed_mean(df, "v", "g", "id", trim=0.1).collect()}
+        assert got["a"]["n"] == 2 and got["a"]["trimmed_mean"] == 15.0
+        assert got["b"]["trimmed_mean"] == 7.0
+
+    def test_validation(self, spark):
+        df = spark.createDataFrame([("g", 1.0, 1)], "g: string, v: double, id: long")
+        with pytest.raises(ValueError):
+            trimmed_mean(df, "v", "g", "id", trim=0.5)
+        with pytest.raises(ValueError):
+            trimmed_mean(df, "v", "g", "id", trim=-0.1)
+
+
+from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
+    l_diversity_audit,
+)
+from threat_intelligence_knowledge_graph_spark.operators.sketches import (
+    hll_overlap,
+)
+
+
+class TestLDiversityAudit:
+    def test_homogeneous_class_flagged(self, spark):
+        df = spark.createDataFrame(
+            [("q1", "a"), ("q1", "a"), ("q1", "a"),
+             ("q2", "a"), ("q2", "b"), ("q2", "c"),
+             ("q3", "a"), ("q3", "b")],
+            "quasi: string, sens: string",
+        )
+        got2 = {(r.quasi, r.n, r.n_sensitive)
+                for r in l_diversity_audit(df, ["quasi"], "sens", l=2).collect()}
+        assert got2 == {("q1", 3, 1)}
+        got3 = {(r.quasi, r.n_sensitive)
+                for r in l_diversity_audit(df, ["quasi"], "sens", l=3).collect()}
+        assert got3 == {("q1", 1), ("q3", 2)}
+
+    def test_null_sensitive_is_one_value(self, spark):
+        df = spark.createDataFrame(
+            [("q", None), ("q", None)], "quasi: string, sens: string"
+        )
+        row = l_diversity_audit(df, ["quasi"], "sens", l=2).collect()[0]
+        assert (row.n, row.n_sensitive) == (2, 1)
+
+    def test_validation(self, spark):
+        df = spark.createDataFrame([("q", "a")], "quasi: string, sens: string")
+        with pytest.raises(ValueError):
+            l_diversity_audit(df, [], "sens", l=2)
+        with pytest.raises(ValueError):
+            l_diversity_audit(df, ["quasi"], "sens", l=1)
+
+
 class TestHllOverlap:
     def test_identical_groups_full_overlap(self, spark):
         rows = [("A", f"k{i}") for i in range(200)] + [
@@ -145,6 +342,85 @@ class TestHllOverlap:
         df = spark.createDataFrame(rows, "g: string, key: string")
         got = {(r.a, r.b) for r in hll_overlap(df, "key", "g").collect()}
         assert got == {("A", "B"), ("A", "C"), ("B", "C")}
+
+
+from threat_intelligence_knowledge_graph_spark.operators.stats import (
+    percentile_normalize,
+    survival_curve,
+)
+
+
+class TestSurvivalCurve:
+    def _ev(self, spark, rows):
+        import datetime as dt
+
+        base = dt.datetime(2026, 5, 1)
+        return spark.createDataFrame(
+            [(u, t, base + dt.timedelta(days=d)) for u, t, d in rows],
+            "user_id: string, event_type: string, ts: timestamp",
+        )
+
+    def test_hand_computed_km(self, spark):
+        ev = self._ev(spark, [
+            ("u1", "signup", 0), ("u1", "purchase", 2),
+            ("u2", "signup", 0), ("u2", "purchase", 5),
+            ("u3", "signup", 0),
+            ("u4", "purchase", -1), ("u4", "signup", 1),  # pre-start conversion ignored
+        ])
+        got = {r.t_day: r.asDict() for r in survival_curve(ev, "signup", "purchase").collect()}
+        # day 2: risk 4, event u1 -> S = 3/4
+        assert got[2]["n_at_risk"] == 4 and got[2]["n_events"] == 1
+        assert got[2]["survival"] == 0.75
+        # day 4: u4 censored (horizon - its t0), no event -> S unchanged
+        assert got[4]["n_censored"] == 1 and got[4]["n_events"] == 0
+        assert got[4]["survival"] == 0.75
+        # day 5: risk 2 (u2 event + u3 censored at horizon) -> S = 0.375
+        assert got[5]["n_at_risk"] == 2
+        assert got[5]["survival"] == 0.375
+        assert set(got) == {2, 4, 5}
+
+    def test_risk_set_fully_consumed_hits_zero(self, spark):
+        ev = self._ev(spark, [
+            ("a", "signup", 0), ("a", "purchase", 1),
+            ("b", "signup", 0), ("b", "purchase", 1),
+        ])
+        got = survival_curve(ev, "signup", "purchase").collect()
+        assert len(got) == 1
+        assert got[0].survival == 0.0 and got[0].n_at_risk == 2
+
+    def test_no_converters_flat_one(self, spark):
+        ev = self._ev(spark, [
+            ("a", "signup", 0), ("b", "signup", 0), ("b", "click", 3),
+        ])
+        got = survival_curve(ev, "signup", "purchase").collect()
+        assert all(r.survival == 1.0 for r in got)
+        assert sum(r.n_censored for r in got) == 2
+
+
+class TestPercentileNormalize:
+    def test_rank_transform(self, spark):
+        df = spark.createDataFrame(
+            [("g", 10.0), ("g", 20.0), ("g", 30.0), ("h", 7.0)],
+            "g: string, v: double",
+        )
+        got = sorted(
+            (r.g, r.v, r.pct) for r in percentile_normalize(df, "v", "g").collect()
+        )
+        assert got == [("g", 10.0, 0.0), ("g", 20.0, 0.5), ("g", 30.0, 1.0),
+                       ("h", 7.0, 0.0)]
+
+    def test_ties_share_rank(self, spark):
+        df = spark.createDataFrame(
+            [("g", 1.0), ("g", 1.0), ("g", 2.0)], "g: string, v: double"
+        )
+        got = sorted(r.pct for r in percentile_normalize(df, "v", "g").collect())
+        assert got == [0.0, 0.0, 1.0]
+
+
+from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
+    degree_histogram,
+    hill_tail,
+)
 
 
 class TestDegreeHistogramHill:

@@ -1,5 +1,6 @@
-"""Round-5 continuation operators, batch D: dyadic EWMA surge
-detection, Simpson concentration and the other event analytics."""
+"""Round-5 continuation operators, batch D: Simpson concentration,
+lagged and robust trend statistics, and the noisy-count, drift and
+two-sample quality checks."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ import datetime
 
 import pytest
 
-from threat_intelligence_knowledge_graph_spark.operators.anomaly import ewma_surge
 from threat_intelligence_knowledge_graph_spark.operators.stats import simpson_index
 
 
@@ -15,52 +15,6 @@ def _ts(hour: int, sec: int = 0) -> datetime.datetime:
     return datetime.datetime(2024, 1, 1) + datetime.timedelta(
         hours=hour, seconds=sec
     )
-
-
-class TestEwmaSurge:
-    def _events(self, spark):
-        rows = (
-            [("a", _ts(0, i)) for i in range(2)]
-            + [("a", _ts(1, i)) for i in range(4)]
-            + [("a", _ts(3, i)) for i in range(8)]
-        )
-        return spark.createDataFrame(rows, "event_type: string, ts: timestamp")
-
-    def test_dyadic_exact_recurrence(self, spark):
-        got = {
-            r.bucket: r.asDict()
-            for r in ewma_surge(self._events(spark), n_lags=8).collect()
-        }
-        base = min(got)
-        # bucket 0: ewma = 2/2 = 1.0; bucket 1: 4/2 + 2/4 = 2.5;
-        # bucket 3 (row-based lag skips the empty hour): 8/2+4/4+2/8 = 5.25
-        assert got[base]["cnt"] == 2 and got[base]["ewma"] == 1.0
-        assert got[base]["surge_ratio"] == 2.0
-        assert got[base + 1]["ewma"] == 2.5
-        assert got[base + 1]["surge_ratio"] == 1.6
-        assert got[base + 3]["ewma"] == 5.25
-        assert got[base + 3]["surge_ratio"] == 1.52381
-
-    def test_single_lag_degenerates_to_constant_ratio(self, spark):
-        rows = ewma_surge(self._events(spark), n_lags=1).collect()
-        assert all(r.surge_ratio == 2.0 for r in rows)
-        assert all(r.ewma == r.cnt / 2 for r in rows)
-
-    def test_groups_independent(self, spark):
-        d = spark.createDataFrame(
-            [("a", _ts(0)), ("b", _ts(0)), ("b", _ts(1))],
-            "event_type: string, ts: timestamp",
-        )
-        got = {
-            (r.event_type, r.bucket): r.ewma for r in ewma_surge(d).collect()
-        }
-        base = min(b for (_, b) in got)
-        # b's second bucket sees only b's history (1/2 + 1/4), never a's
-        assert got[("b", base + 1)] == 0.75
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError):
-            ewma_surge(self._events(spark), n_lags=0)
 
 
 class TestSimpsonIndex:
@@ -84,57 +38,6 @@ class TestSimpsonIndex:
         )
         row = simpson_index(d).collect()[0]
         assert row.simpson == 0.25 and row.inv_simpson == 4.0
-
-
-class TestNearestJoin:
-    def _run(self, spark, lefts, rights, tol=10):
-        from threat_intelligence_knowledge_graph_spark.operators.temporal_join import (
-            nearest_join,
-        )
-
-        left = spark.createDataFrame(
-            [(i, u, _ts(0, s)) for i, (u, s) in enumerate(lefts)],
-            "rid: long, user_id: long, ts: timestamp",
-        )
-        right = spark.createDataFrame(
-            [(u, _ts(0, s)) for (u, s) in rights],
-            "user_id: long, ts: timestamp",
-        )
-        out = nearest_join(
-            left, right, key="user_id", left_time="ts", right_time="ts",
-            tolerance_seconds=tol,
-        )
-        return {r.rid: (r.nearest_epoch, r.gap_s) for r in out.collect()}
-
-    def test_forward_wins_when_closer(self, spark):
-        got = self._run(spark, [(1, 100)], [(1, 90), (1, 105)])
-        e, g = got[0]
-        assert g == 5 and e is not None
-
-    def test_tie_prefers_earlier(self, spark):
-        got = self._run(spark, [(1, 100)], [(1, 95), (1, 105)])
-        assert got[0][1] == -5
-
-    def test_simultaneous_is_gap_zero(self, spark):
-        got = self._run(spark, [(1, 100)], [(1, 100), (1, 101)])
-        assert got[0][1] == 0
-
-    def test_tolerance_and_left_outer(self, spark):
-        got = self._run(spark, [(1, 100), (2, 100)], [(1, 130)], tol=10)
-        assert got[0] == (None, None)  # out of tolerance
-        assert got[1] == (None, None)  # no rights for user 2 at all
-        got = self._run(spark, [(1, 100)], [(1, 130)], tol=30)
-        assert got[0][1] == 30  # inclusive boundary
-
-    def test_groups_independent(self, spark):
-        got = self._run(spark, [(1, 100)], [(2, 100)])
-        assert got[0] == (None, None)
-
-    def test_validation(self, spark):
-        import pytest as _pt
-
-        with _pt.raises(ValueError):
-            self._run(spark, [(1, 100)], [(1, 100)], tol=0)
 
 
 class TestBestLagCorrelation:
@@ -179,75 +82,6 @@ class TestBestLagCorrelation:
             best_lag_correlation(ev, max_lag=0)
         with pytest.raises(ValueError):
             best_lag_correlation(ev, min_overlap=0)
-
-
-class TestAnalyzeEventsCliRound5d:
-    def test_new_reports(self, spark, tmp_path):
-        import importlib.util as _ilu
-        import os as _os
-
-        spec = _ilu.spec_from_file_location(
-            "analyze_events",
-            _os.path.join(
-                _os.path.dirname(__file__), "..", "jobs", "analyze_events.py"
-            ),
-        )
-        ae = _ilu.module_from_spec(spec)
-        spec.loader.exec_module(ae)
-        rows = [
-            (f"e{h}{i}", f"u{i % 2}", t, _ts(h), 1.0)
-            for h in range(6)
-            for i in range(3)
-            for t in ("click", "error")
-        ]
-        src = str(tmp_path / "ev.parquet")
-        spark.createDataFrame(
-            rows, ["event_id", "user_id", "event_type", "ts", "value"]
-        ).write.parquet(src)
-        for report in ("ewma", "lags", "simpson", "surge", "ks"):
-            assert ae.main(["--input", src, "--report", report], spark=spark) == 0
-
-
-class TestSeasonalSurge:
-    def test_two_week_baseline(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            seasonal_surge,
-        )
-
-        rows = (
-            [("a", _ts(0, i)) for i in range(2)]           # week w, cell H
-            + [("a", _ts(7 * 24, i)) for i in range(4)]    # week w+1, same H
-            + [("a", _ts(1))]                              # different cell
-        )
-        ev = spark.createDataFrame(rows, "event_type: string, ts: timestamp")
-        got = {
-            (r.week, r.hour_of_week): r for r in seasonal_surge(ev).collect()
-        }
-        hows = {h for (_, h) in got}
-        assert len(hows) == 2  # the repeated cell + the lone one
-        cells = sorted(
-            (r for r in got.values() if r.baseline_total == 6),
-            key=lambda r: r.week,
-        )
-        assert [c.cnt for c in cells] == [2, 4]
-        assert cells[0].ratio == 0.666667 and cells[1].ratio == 1.333333
-        lone = [r for r in got.values() if r.baseline_total == 1][0]
-        # active in 1 of 2 weeks: observed 1 vs per-week mean 0.5
-        assert lone.ratio == 2.0
-
-    def test_hour_of_week_alignment(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.anomaly import (
-            seasonal_surge,
-        )
-
-        # same wall-clock hour, 7 days apart -> SAME hour_of_week
-        ev = spark.createDataFrame(
-            [("a", _ts(5)), ("a", _ts(5 + 7 * 24))],
-            "event_type: string, ts: timestamp",
-        )
-        rows = seasonal_surge(ev).collect()
-        assert len({r.hour_of_week for r in rows}) == 1
-        assert len({r.week for r in rows}) == 2
 
 
 class TestDpNoisyCounts:

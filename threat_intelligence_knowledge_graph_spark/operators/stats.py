@@ -676,9 +676,8 @@ def autocorrelation(
     """Per-group autocorrelation of hourly volumes at a fixed lag —
     the cycle detector that completes the timeline family: a diurnal
     workload shows r² ≈ 1 at lag 24, a weekly one at lag 168, and a
-    beacon whose period ISN'T a divisor of the lag shows nothing (the
-    inter-arrival cv² in ``beacon_regularity`` is the period-free
-    complement).
+    beacon whose period ISN'T a divisor of the lag shows nothing (an
+    inter-arrival cv² is the period-free complement).
 
     Statistic: the squared-Pearson integer identity (the
     ``correlated_series`` discipline — no sqrt, sign separate) over
