@@ -2236,29 +2236,6 @@ def q_graph_node2vec(spark, sf_dir):
     ).select("walk_id", F.col("start").alias("start_id"), "step", "node")
 
 
-def q_events_cooccur_npmi(spark, sf_dir):
-    """NPMI collocation scoring (Bouma 2009) of event types over
-    (user, hour) contexts: the edge-confidence signal that separates
-    'both items are everywhere' (npmi ≈ 0) from 'these travel together'
-    (npmi → 1). Contexts use epoch-integer hour buckets
-    (timezone-portable); pairs with fewer than 2 shared contexts are
-    pruned before the ln math. Oracle
-    recomputes the identical integer counts and rounded npmi."""
-    from threat_intelligence_knowledge_graph_spark.operators.collocation import (
-        cooccur_npmi,
-    )
-
-    e = _t(spark, sf_dir, "events").select(
-        F.concat_ws(
-            "|",
-            F.col("user_id").cast("string"),
-            F.floor(F.unix_timestamp("ts") / 3600).cast("long").cast("string"),
-        ).alias("ctx"),
-        "event_type",
-    )
-    return cooccur_npmi(e, "ctx", "event_type", min_pair_count=2)
-
-
 def q_graph_lcc(spark, sf_dir):
     """Local clustering coefficient over the planted 3-clique + pendant
     graph (see q_graph_triangle_count): clique corners score 1.0 (deg 2)
@@ -2534,31 +2511,6 @@ def q_er_verified_matches(spark, sf_dir):
     return verify_pairs_edit_distance(
         pairs, p, key_col="name", id_col="node_id", tau=0.45
     )
-
-
-def q_kg_corroboration(spark, sf_dir):
-    """Knowledge-fusion confidence (noisy-OR over DISTINCT sources) for
-    the lineitem-derived supply triples: part -SUPPLIED_BY-> supplier
-    observed by order-derived source feeds; a feed repeating itself is
-    ONE vote."""
-    from threat_intelligence_knowledge_graph_spark.operators.triples import (
-        triple_corroboration,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    obs = li.select(
-        F.concat(F.lit("part_"), F.col("l_partkey").cast("string")).alias(
-            "subj"
-        ),
-        F.lit("SUPPLIED_BY").alias("pred"),
-        F.concat(F.lit("supp_"), F.col("l_suppkey").cast("string")).alias(
-            "obj"
-        ),
-        F.concat(
-            F.lit("feed_"), (F.col("l_orderkey") % 13).cast("string")
-        ).alias("source"),
-    )
-    return triple_corroboration(obs, base_conf=0.7)
 
 
 def q_sample_weighted(spark, sf_dir):
@@ -2938,7 +2890,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_louvain": q_graph_louvain,
         "graph_louvain_weighted": q_graph_louvain_weighted,
         "graph_modularity": q_graph_modularity,
-        "events_cooccur_npmi": q_events_cooccur_npmi,
         "graph_node2vec": q_graph_node2vec,
         "sample_temperature": q_sample_temperature,
         "events_zorder_key": q_events_zorder,
@@ -2968,7 +2919,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_sorted_neighborhood": q_er_sorted_neighborhood,
         "kg_schema_audit": q_kg_schema_audit,
         "er_verified_matches": q_er_verified_matches,
-        "kg_corroboration": q_kg_corroboration,
         "events_simpson": q_events_simpson,
         "events_best_lag": q_events_best_lag,
         "events_dp_counts": q_events_dp_counts,
@@ -5334,39 +5284,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL SELECT 'in_range(o_totalprice)', c3, c3 = 0 FROM a
             UNION ALL SELECT 'matches(o_orderpriority)', c4, c4 = 0 FROM a
         """,
-        # NPMI collocation over (user, hour) contexts — identical integer
-        # counts, identical exact-double quotients into ln, round(6)
-        # before compare (see q_events_cooccur_npmi).
-        "events_cooccur_npmi": """
-            WITH inc AS (
-              SELECT DISTINCT
-                     cast(user_id AS varchar) || '|' ||
-                       cast(epoch_us(ts) // 1000000 // 3600 AS varchar) AS g,
-                     event_type AS item
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-            ),
-            n AS (SELECT cast(count(DISTINCT g) AS bigint) AS n_groups
-                  FROM inc),
-            marg AS (SELECT item, cast(count(*) AS bigint) AS n_i
-                     FROM inc GROUP BY item),
-            pairs AS (
-              SELECT a.item AS item_a, b.item AS item_b,
-                     cast(count(*) AS bigint) AS n_ab
-              FROM inc a JOIN inc b ON a.g = b.g AND a.item < b.item
-              GROUP BY 1, 2
-              HAVING count(*) >= 2
-            )
-            SELECT p.item_a, p.item_b, p.n_ab,
-                   ma.n_i AS n_a, mb.n_i AS n_b,
-                   round(CASE WHEN p.n_ab = n.n_groups THEN 1.0
-                         ELSE ln(p.n_ab * n.n_groups / (ma.n_i * mb.n_i))
-                              / -ln(p.n_ab / n.n_groups) END, 6) AS npmi
-            FROM pairs p
-            JOIN marg ma ON p.item_a = ma.item
-            JOIN marg mb ON p.item_b = mb.item
-            CROSS JOIN n
-        """,
         "graph_node2vec": _node2vec_cte_sql(4, 2, 4.0, 0.25)
         + """
             SELECT walk_id, start_id, step, node FROM walks
@@ -5991,19 +5908,6 @@ def oracle_sql() -> dict[str, str]:
               FROM cand
             )
             SELECT * FROM scored WHERE similarity >= 0.45
-        """,
-        "kg_corroboration": """
-            SELECT 'part_' || cast(l_partkey AS varchar) AS subj,
-                   'SUPPLIED_BY' AS pred,
-                   'supp_' || cast(l_suppkey AS varchar) AS obj,
-                   cast(count(DISTINCT 'feed_' ||
-                        cast(l_orderkey % 13 AS varchar)) AS bigint)
-                     AS n_sources,
-                   cast(count(*) AS bigint) AS n_mentions,
-                   round(1.0 - power(0.3,
-                     count(DISTINCT l_orderkey % 13)), 6) AS confidence
-            FROM lineitem
-            GROUP BY 1, 2, 3
         """,
         # Simpson concentration: Σcᵢ²/n² with exact integer numerator
         # and denominator, one round-6 division each way

@@ -11,12 +11,12 @@ Invocation::
 
     spark-submit --py-files tikg_pyfiles.zip jobs/run_pipeline.py \
         --input s3a://bucket/transcripts/ --warehouse /mnt/shared/kg-wh \
-        --run-id 2026-08-16 --fused
+        --run-id 2026-08-16
 
 Local::
 
     python jobs/run_pipeline.py --input /tmp/transcripts.parquet \
-        --warehouse /tmp/kg-wh --run-id dev --fused
+        --warehouse /tmp/kg-wh --run-id dev
 
 Resume: re-running with the same --run-id skips committed stages and is
 idempotent (MERGE sinks). Build the --py-files zip from the repo root::
@@ -56,14 +56,12 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True, help="table catalog root")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--model", default="ner", help="extractor (only 'ner' is productionized)")
-    ap.add_argument("--fused", action="store_true", help="fused reassembly+extraction hot path")
     ap.add_argument(
         "--pregrouped",
         action="store_true",
         help="input partitions already hold whole conversations (bucketed "
-        "ingest layout) — skip the conv_id exchange (requires --fused)",
+        "ingest layout) — skip the conv_id exchange",
     )
-    ap.add_argument("--salt-blocks", type=int, default=None, help="two-phase reassembly block size for skewed convs")
     ap.add_argument("--show-flagship", action="store_true")
     ap.add_argument("--compact", action="store_true",
                     help="rewrite graph tables to ~128 MB files after the run "
@@ -75,9 +73,6 @@ def main() -> None:
 
     if args.model != "ner":
         raise SystemExit("only the deterministic 'ner' extractor is productionized")
-    if args.pregrouped and not args.fused:
-        raise SystemExit("--pregrouped requires --fused (the declarative "
-                         "path materializes its own reassembly)")
     if "://" in args.warehouse:
         # Reject file:// too: LocalTableCatalog's os/json side would treat
         # the URI as a literal relative path while Spark writers resolve
@@ -110,7 +105,6 @@ def main() -> None:
         print({"quarantined_rows": n_bad})
     result = run_pipeline(
         spark, transcripts, catalog, run_id=args.run_id,
-        salt_blocks=args.salt_blocks, fused=args.fused,
         input_pregrouped=args.pregrouped,
     )
     print({"run_id": result.run_id, "counts": result.counts})

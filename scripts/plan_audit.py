@@ -8,9 +8,15 @@ pushdown/broadcast/codegen shapes.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too: point them at this checkout.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+)
 
 from pyspark.sql import functions as F
 
@@ -294,19 +300,6 @@ def main(sf_dir: str) -> int:
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
     )
     check(
-        # NPMI collocation: pairs come from ONE group-keyed self-join;
-        # marginals and the 1-row N come back as broadcasts. A cartesian
-        # or a SortMergeJoin on `item` would defeat both bounds; the
-        # whole chain stays JVM-side.
-        # (the 1-row N crossJoin plans as a BroadcastNestedLoopJoin with a
-        # single-row inner side, so only true
-        # cartesians are banned here.)
-        "cooccur_npmi_keyed_join_broadcast_marginals",
-        em.q_events_cooccur_npmi(spark, sf_dir),
-        ["BroadcastHashJoin", "HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython"],
-    )
-    check(
         # Markov transitions: marginals join BROADCAST (states² rows);
         # keyed joins only, JVM-side.
         "markov_broadcast_marginals",
@@ -420,14 +413,6 @@ def main(sf_dir: str) -> int:
         em.q_er_verified_matches(spark, sf_dir),
         ["levenshtein"],
         must_not=["EvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"],
-    )
-    # 71: corroboration — one triple-keyed aggregate chain (partial
-    # countDistinct), pure JVM.
-    check(
-        "corroboration_partial_agg",
-        em.q_kg_corroboration(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["EvalPython", "CartesianProduct", "SortAggregate"],
     )
     # 73: weighted sampling is priority projection + ONE
     # TakeOrderedAndProject (never a global sort/window over the

@@ -4,10 +4,9 @@ import pytest
 
 from threat_intelligence_knowledge_graph_spark.session import build_session
 
-# build_session's 48g default heap lets the test driver grow past the RAM
-# of a 16 GB host until the kernel kills it mid-suite. 8g holds the
-# largest test broadcast (test_enrich's all-matches join, which fails
-# at 4g).
+# A fixed test driver heap: Spark's own default is too small for the
+# suite, and an unbounded one can outgrow the host. 8g holds the largest
+# test broadcast (test_enrich's all-matches join, which fails at 4g).
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
 
 

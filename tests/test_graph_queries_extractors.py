@@ -32,7 +32,7 @@ def warehouse(spark, tmp_path_factory):
     transcripts = spark.createDataFrame(
         pd.DataFrame(transcripts_rows(10)), schema=TRANSCRIPTS_SCHEMA
     )
-    run_pipeline(spark, transcripts, catalog, run_id="g1", fused=True)
+    run_pipeline(spark, transcripts, catalog, run_id="g1")
     register_graph_views(spark, catalog)
     return catalog
 
@@ -575,24 +575,6 @@ class TestGraphSummary:
         assert row.assortativity is None or -1.0 <= row.assortativity <= 1.0
 
 
-class TestSurprisingPairs:
-    def test_npmi_ranked_collocations(self, spark, warehouse):
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            surprising_pairs,
-        )
-
-        rows = surprising_pairs(spark, k=15, min_convs=2).collect()
-        assert rows, "the planted convs re-mention entities"
-        npmis = [r.npmi for r in rows]
-        assert npmis == sorted(npmis, reverse=True)
-        for r in rows:
-            assert r.item_a < r.item_b
-            assert r.n_ab >= 2
-            assert -1.0 <= r.npmi <= 1.0
-            # marginals can never be below the joint count
-            assert r.n_a >= r.n_ab and r.n_b >= r.n_ab
-
-
 class TestQueryGraphCli:
     def test_cypher_sql_and_output_modes(self, spark, warehouse, tmp_path, capsys):
         import importlib.util as _ilu
@@ -725,22 +707,6 @@ class TestRound5AnalystQueries:
         for r in rows:
             assert r.degree >= 2
             assert 0.0 <= r.lcc <= 1.0
-
-
-class TestRound5bAnalystQueries:
-    def test_corroborated_edges(self, spark, warehouse):
-        from threat_intelligence_knowledge_graph_spark.plans.graph_queries import (
-            corroborated_edges,
-        )
-
-        rows = corroborated_edges(spark, k=10).collect()
-        assert rows
-        # confidence sorted desc; n_sources counts DISTINCT convs only
-        confs = [r.confidence for r in rows]
-        assert confs == sorted(confs, reverse=True)
-        for r in rows:
-            assert r.n_sources <= r.n_mentions
-            assert 0 < r.confidence < 1
 
 
 class TestNeighborhoodGrowth:

@@ -40,7 +40,6 @@ class TestNeo4jExport:
             generate_transcripts_df(spark, 40),
             catalog,
             run_id="a",
-            fused=True,
         )
         out = str(tmp_path / "export")
         summary = export_graph(spark, catalog, out)

@@ -26,14 +26,13 @@ class TestPipeline:
     def test_end_to_end(self, spark, transcripts, tmp_path):
         catalog = LocalTableCatalog(str(tmp_path / "wh"))
         result = run_pipeline(spark, transcripts, catalog, run_id="r1")
-        assert result.counts["documents"] == 10
+        assert result.counts["extraction"] > 0
         assert result.counts["triples"] > 0
         assert result.counts["nodes"] > result.counts["triples"] * 0  # exists
-        # Every stage left lineage rows.
-        stages = {
-            r.stage for r in catalog.read(spark, "metrics").collect()
-        }
-        assert {"reassemble", "extract"} <= stages
+        # The extract stage left lineage rows that account for every
+        # extraction row.
+        lineage = catalog.read(spark, "metrics").filter("stage = 'extract'")
+        assert sum(r.value for r in lineage.collect()) == result.counts["extraction"]
 
     def test_rerun_is_idempotent(self, spark, transcripts, tmp_path):
         catalog = LocalTableCatalog(str(tmp_path / "wh"))
@@ -226,7 +225,7 @@ class TestTableIO:
 
         catalog = LocalTableCatalog(str(tmp_path / "wh"))
         t = generate_transcripts_df(spark, 30)
-        run_pipeline(spark, t, catalog, run_id="a", fused=True)
+        run_pipeline(spark, t, catalog, run_id="a")
         audit = audit_graph_tables(spark, catalog, run_id="a")
         assert all(r.passed for r in audit.collect())
         # audit rows merged into metrics as stage='audit'
@@ -282,10 +281,8 @@ class TestCanonicalizePipeline:
     def test_alias_layer_keeps_graph_valid(self, spark, transcripts, tmp_path):
         catalog = LocalTableCatalog(str(tmp_path / "canon"))
         base = LocalTableCatalog(str(tmp_path / "base"))
-        run_pipeline(spark, transcripts, base, run_id="r", fused=True)
-        run_pipeline(
-            spark, transcripts, catalog, run_id="r", fused=True, canonicalize=True
-        )
+        run_pipeline(spark, transcripts, base, run_id="r")
+        run_pipeline(spark, transcripts, catalog, run_id="r", canonicalize=True)
         raw = base.read(spark, "triples").count()
         canon = catalog.read(spark, "triples").count()
         # Canonicalization can only merge — never invent — triples.
@@ -315,7 +312,7 @@ class TestIncremental:
         r2 = run_incremental(spark, dfall, catalog, run_id="day2")
 
         full = LocalTableCatalog(str(tmp_path / "full"))
-        run_pipeline(spark, dfall, full, run_id="f", fused=True)
+        run_pipeline(spark, dfall, full, run_id="f")
         assert _triples(spark, catalog) == _triples(spark, full)
         assert r2.counts["triples"] == full.read(spark, "triples").count()
 
@@ -387,17 +384,18 @@ class TestCrashWindowResume:
         """Crash between a stage's data commit and its metrics commit must
         not skip the stage on resume (review finding): the gate requires
         BOTH commits."""
-        from threat_intelligence_knowledge_graph_spark.operators.reassembly import (
-            reassemble,
+        from threat_intelligence_knowledge_graph_spark.operators.extraction import (
+            extract_graph_records_fused,
         )
 
         catalog = LocalTableCatalog(str(tmp_path / "crash"))
         # Simulate the crash: data snapshot committed, metrics never merged.
         catalog.overwrite(
-            reassemble(transcripts), "documents", run_id="r1", stage="reassemble"
+            extract_graph_records_fused(transcripts),
+            "extraction", run_id="r1", stage="extract",
         )
         assert not catalog.exists("metrics")
 
         run_pipeline(spark, transcripts, catalog, run_id="r1")
         stages = {r.stage for r in catalog.read(spark, "metrics").collect()}
-        assert "reassemble" in stages  # lineage recovered, not lost forever
+        assert "extract" in stages  # lineage recovered, not lost forever

@@ -181,40 +181,3 @@ class TestVerifyPairsEditDistance:
 
         with _pt.raises(ValueError):
             verify_pairs_edit_distance(pairs, recs, tau=0)
-
-
-class TestTripleCorroboration:
-    def test_distinct_sources_drive_confidence(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.triples import (
-            triple_corroboration,
-        )
-
-        obs = spark.createDataFrame(
-            [
-                # triple X seen by 2 sources, one of them twice
-                ("s", "P", "o", "feedA"),
-                ("s", "P", "o", "feedA"),
-                ("s", "P", "o", "feedB"),
-                # triple Y seen once
-                ("s2", "P", "o2", "feedA"),
-            ],
-            "subj: string, pred: string, obj: string, source: string",
-        )
-        got = {
-            (r.subj, r.obj): (r.n_sources, r.n_mentions, r.confidence)
-            for r in triple_corroboration(obs, base_conf=0.7).collect()
-        }
-        assert got[("s", "o")] == (2, 3, 0.91)  # 1 - 0.3^2
-        assert got[("s2", "o2")] == (1, 1, 0.7)
-
-    def test_base_conf_validation(self, spark):
-        from threat_intelligence_knowledge_graph_spark.operators.triples import (
-            triple_corroboration,
-        )
-
-        obs = spark.createDataFrame(
-            [("s", "P", "o", "f")],
-            "subj: string, pred: string, obj: string, source: string",
-        )
-        with pytest.raises(ValueError):
-            triple_corroboration(obs, base_conf=1.0)

@@ -107,7 +107,7 @@ class TestExportStixCli:
         transcripts = spark.createDataFrame(
             pd.DataFrame(transcripts_rows(10)), schema=TRANSCRIPTS_SCHEMA
         )
-        run_pipeline(spark, transcripts, catalog, run_id="s1", fused=True)
+        run_pipeline(spark, transcripts, catalog, run_id="s1")
 
         spec = importlib.util.spec_from_file_location(
             "export_stix",

@@ -168,50 +168,3 @@ def validate_triple_schema(
         "subj", "pred", "obj", "subj_label", "obj_label",
         status.alias("status"),
     )
-
-
-def triple_corroboration(
-    observations: DataFrame,
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-    source_col: str = "source",
-    base_conf: float = 0.7,
-) -> DataFrame:
-    """Knowledge-fusion confidence per distinct triple (Knowledge
-    Vault-style noisy-OR): ``confidence = 1 − (1 − base_conf)^k`` over
-    ``k`` DISTINCT corroborating sources — one feed repeating itself
-    10^6 times is ONE vote, three independent feeds agreeing is strong
-    evidence. The reference's store keeps no provenance count at all;
-    this is the triage column an analyst sorts by before trusting an
-    edge.
-
-    Output: ``(subj, pred, obj, n_sources, n_mentions, confidence)``,
-    confidence rounded to 6 places (pow's last-ulp libm divergence
-    across engines vanishes at round-6 — the repo's derived-float
-    discipline).
-
-    Scale shape: ONE map-side-combining aggregate keyed by the triple
-    (partial countDistinct on source); hot triples (a common CVE edge
-    observed everywhere) are single reduce groups under AQE skew
-    split. Nothing collects.
-    """
-    if not 0 < base_conf < 1:
-        raise ValueError("base_conf must be in (0, 1)")
-    return (
-        observations.groupBy(
-            F.col(subj_col).alias("subj"),
-            F.col(pred_col).alias("pred"),
-            F.col(obj_col).alias("obj"),
-        )
-        .agg(
-            F.countDistinct(source_col).cast("long").alias("n_sources"),
-            F.count("*").cast("long").alias("n_mentions"),
-        )
-        .withColumn(
-            "confidence",
-            F.round(
-                1.0 - F.pow(F.lit(1.0 - base_conf), F.col("n_sources")), 6
-            ),
-        )
-    )

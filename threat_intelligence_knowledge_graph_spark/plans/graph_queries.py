@@ -15,7 +15,7 @@ from ..sources.tableio import LocalTableCatalog
 
 
 def register_graph_views(spark: SparkSession, catalog: LocalTableCatalog) -> None:
-    """Expose nodes/edges/triples (+ metrics, extraction provenance) as
+    """Expose nodes/edges/triples (+ metrics, extraction) as
     temp views for spark.sql."""
     for t in ("nodes", "edges", "triples", "metrics", "extraction"):
         if catalog.exists(t):
@@ -628,31 +628,6 @@ def graph_summary(spark: SparkSession) -> DataFrame:
     )
 
 
-def surprising_pairs(
-    spark: SparkSession, k: int = 20, min_convs: int = 2
-) -> DataFrame:
-    """NPMI-ranked entity collocations from per-conversation mentions
-    (the ``extraction`` provenance view): pairs that co-occur across
-    conversations far MORE than their individual frequencies predict.
-    Raw co-mention counts rank ubiquitous entities (a common CVE next
-    to everything — npmi ≈ 0); npmi → 1 means the two specifically
-    travel together, the "same campaign" smoking gun a count can't
-    surface. ``min_convs`` prunes one-off pairs before the ln math."""
-    from ..operators.collocation import cooccur_npmi
-
-    inc = (
-        spark.table("extraction")
-        .filter(F.col("kind") == "node")
-        .select("conv_id", "node_id")
-    )
-    scored = cooccur_npmi(
-        inc, "conv_id", "node_id", min_pair_count=min_convs
-    )
-    return scored.orderBy(
-        F.col("npmi").desc(), F.col("n_ab").desc(), "item_a", "item_b"
-    ).limit(k)
-
-
 def infrastructure_by_block(
     spark: SparkSession, blocks: DataFrame, min_ips: int = 1
 ) -> DataFrame:
@@ -743,40 +718,6 @@ def flagship_query(spark: SparkSession) -> DataFrame:
         WHERE pred IN ('COMMUNICATES_WITH', 'RESOLVES_TO', 'TARGETS')
         ORDER BY subj, pred, obj
         """
-    )
-
-
-def corroborated_edges(
-    spark: SparkSession, k: int = 20, base_conf: float = 0.7
-) -> DataFrame:
-    """Most independently-corroborated edges: noisy-OR confidence over
-    DISTINCT reporting conversations (each conversation = one
-    independent report; a single conversation repeating an edge is ONE
-    vote) from the extraction provenance table — the sort-before-
-    trusting triage column. Highest confidence first, then mention
-    count, then triple order."""
-    from ..operators.triples import triple_corroboration
-
-    ext = (
-        spark.table("extraction")
-        .filter(F.col("kind") == "edge")
-        .select(
-            F.col("src_id").alias("subj"),
-            F.col("rel_type").alias("pred"),
-            F.col("dst_id").alias("obj"),
-            F.col("conv_id").alias("source"),
-        )
-    )
-    return (
-        triple_corroboration(ext, base_conf=base_conf)
-        .orderBy(
-            F.col("confidence").desc(),
-            F.col("n_mentions").desc(),
-            "subj",
-            "pred",
-            "obj",
-        )
-        .limit(k)
     )
 
 

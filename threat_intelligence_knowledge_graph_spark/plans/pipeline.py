@@ -2,9 +2,9 @@
 
 Stage graph (SURVEY.md §3.1 "Spark lifecycle"):
 
-  transcripts ──A reassemble──> documents ──C extract──> extraction
-       extraction ──E assemble──> nodes / edges / triples
-       every stage ──> metrics rows (run_id, stage, partition_id)
+  transcripts ──C extract (fused kernel)──> extraction
+       extraction ──E commit_graph──> nodes / edges / triples
+       extraction ──> metrics rows (run_id, stage, partition_id)
 
 Each stage commits a snapshot via the TableIO seam; a resumed run skips
 any stage already committed for its ``run_id`` (idempotent — re-running a
@@ -12,6 +12,10 @@ finished run rewrites nothing and the triple set is unchanged, the
 run-twice test). Lineage is per-partition row counts in the ``metrics``
 table, satisfying the north_star's "per-partition lineage and metrics
 rows".
+
+``commit_graph`` is the one write path into the graph tables: batch and
+incremental runs call it through ``run_pipeline``, and every streaming
+micro-batch calls it from ``streaming/stream_extract``.
 """
 
 from __future__ import annotations
@@ -21,10 +25,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.canonicalize import apply_canonicalization, build_alias_dictionary
-from ..operators.extraction import extract_graph_records, extract_graph_records_fused
-from ..operators.reassembly import reassemble
+from ..operators.extraction import extract_graph_records_fused
 from ..operators.triples import build_edges, build_nodes, build_triples
 from ..sources.tableio import LocalTableCatalog
+
+GRAPH_KEYS = {
+    "nodes": ["node_label", "node_id"],
+    "edges": ["src_id", "rel_type", "dst_id"],
+    "triples": ["subj", "pred", "obj"],
+}
 
 
 @dataclass
@@ -50,79 +59,127 @@ def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
     )
 
 
+def commit_graph(
+    spark: SparkSession,
+    catalog: LocalTableCatalog,
+    extraction: DataFrame,
+    run_id: str,
+    stage: str,
+    canonicalize: bool = False,
+) -> None:
+    """MERGE one extraction into ``nodes``, ``edges`` and ``triples``.
+
+    Order: nodes first; then this extraction's edges, semi-joined
+    against the HEAD ``nodes`` (MATCH-before-MERGE, so an endpoint
+    committed by an earlier run also counts); then the triples of those
+    same edges — a delta of O(extraction), not a re-read of the whole
+    ``edges`` table. The key-based MERGE keeps the result identical to a
+    rebuild.
+
+    Resume rule: each table is skipped when it already holds a commit
+    under ``(run_id, stage)``, so replaying a committed extraction
+    commits nothing and a crash between two tables resumes at the first
+    missing one.
+
+    ``canonicalize=True`` enables stage D's alias layer (MinHash/LSH +
+    connected components over node surface forms) and builds the
+    triples from ``edges_canonical`` instead. OFF by default: the NER
+    path's ids are already exact-canonical and the parity gate requires
+    the exact triple set (SURVEY.md §7 step 6). The dictionary is
+    committed as the ``canonical_map`` table.
+    """
+
+    def merge(df: DataFrame, table: str) -> None:
+        if not catalog.committed(table, run_id, stage):
+            catalog.merge(
+                spark, df, table, keys=GRAPH_KEYS[table],
+                run_id=run_id, stage=stage,
+            )
+
+    merge(build_nodes(extraction), "nodes")
+    nodes = catalog.read(spark, "nodes")
+    edges = build_edges(extraction, nodes)
+    merge(edges, "edges")
+
+    # --- Stage D (optional): alias canonicalization -------------------------
+    # The rewrite is committed as its own `edges_canonical` table (and
+    # feeds the triples build) rather than silently diverging from the
+    # raw `edges` view: the raw edges/nodes tables keep surface-form ids
+    # for provenance, `edges_canonical`/`triples` carry resolved ids, and
+    # graph queries choose explicitly which layer they read.
+    if canonicalize:
+        if not catalog.committed("canonical_map", run_id, "canonicalize"):
+            # Conservative threshold: ids are already exact-canonical, so
+            # only near-identical surface forms (punctuation/underscore
+            # variants) may merge — 0.75 would falsely merge distinct
+            # domains that differ by one char (evil-1 vs evil-2).
+            alias = build_alias_dictionary(nodes, jaccard_threshold=0.9)
+            catalog.overwrite(alias, "canonical_map", run_id, "canonicalize")
+        alias = catalog.read(spark, "canonical_map")
+        if not catalog.committed("edges_canonical", run_id, "canonicalize"):
+            # edges_canonical is DERIVED (current edges × current alias
+            # map), so it is recomputed and overwritten whole — a MERGE
+            # would keep rows rewritten under superseded alias mappings
+            # forever when the dictionary changes across runs.
+            catalog.overwrite(
+                apply_canonicalization(catalog.read(spark, "edges"), alias),
+                "edges_canonical",
+                run_id,
+                "canonicalize",
+            )
+        edges = catalog.read(spark, "edges_canonical")
+
+    merge(build_triples(edges), "triples")
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     catalog: LocalTableCatalog,
     run_id: str,
-    salt_blocks: int | None = None,
     collect_counts: bool = True,
-    fused: bool = False,
+    fused: bool = True,
     canonicalize: bool = False,
     input_pregrouped: bool = False,
 ) -> PipelineResult:
     """Execute (or resume) the full pipeline for ``run_id``.
 
-    ``fused=True`` runs reassembly+extraction as one shuffle + one Arrow
-    pass (the hot path, see BENCH.md) — it skips the materialized
-    ``documents`` checkpoint, trading stage-A resume granularity for ~2×
-    throughput. The final graph tables (nodes/edges/triples) are
-    identical either way (tested); the intermediate ``extraction`` table
-    is NOT: the fused kernel pre-dedups per partition and omits edge
-    ``context``, so its row counts/provenance differ from the
-    declarative per-conversation records.
+    Extraction is the fused kernel: reassembly and extraction run as one
+    shuffle + one Arrow pass (``extract_graph_records_fused``). The
+    ``extraction`` table it checkpoints is pre-deduped per partition and
+    carries no edge ``context``, so it holds one ``conv_id`` per key, not
+    every reporting conversation. ``fused`` must be ``True``; it stays only
+    for callers that still pass it.
 
-    ``input_pregrouped=True`` (fused path only) declares that each input
-    partition already holds whole conversations — the layout an Iceberg
+    ``input_pregrouped=True`` declares that each input partition already
+    holds whole conversations — the layout an Iceberg
     ``bucket(conv_id)``-clustered table scan provides — so the fused
     kernel skips the conv_id exchange entirely (correctness tested in
     test_bucketing.py; measured faster at both core levels with the
     round-3 kernel, see BENCH.md).
 
-    ``canonicalize=True`` enables stage D's alias layer (MinHash/LSH +
-    connected components over node surface forms) and rewrites edge
-    endpoints through the broadcast alias dictionary before the triple
-    view. OFF by default: the NER path's ids are already exact-canonical
-    and the parity gate requires the exact triple set (SURVEY.md §7
-    step 6). The dictionary is committed as the ``canonical_map`` table.
+    ``canonicalize`` is passed to ``commit_graph``.
     """
+    if not fused:
+        raise ValueError(
+            "the declarative extraction path (reassembly into a documents "
+            "table, then per-document extraction) is removed; the fused "
+            "kernel is the only extraction path, so fused must be True"
+        )
     result = PipelineResult(run_id=run_id)
 
-    def stage_done(table: str, stage: str, with_metrics: bool = False) -> bool:
-        """A stage counts as committed only when its LAST write landed —
-        for checkpoint stages that's the metrics merge, not the data
-        snapshot, else a crash between the two would skip the lineage
-        rows forever on resume (both writes are idempotent to redo)."""
-        ok = catalog.committed(table, run_id, stage)
-        if with_metrics:
-            ok = ok and catalog.committed("metrics", run_id, f"{stage}-metrics")
-        return ok
-
-    # --- Stage A: reassembly (skipped in fused mode) ------------------------
-    if not fused:
-        if not stage_done("documents", "reassemble", with_metrics=True):
-            documents = reassemble(transcripts, salt_blocks=salt_blocks)
-            catalog.overwrite(documents, "documents", run_id, "reassemble")
-            catalog.merge(
-                spark,
-                _partition_metrics(
-                    catalog.read(spark, "documents"), run_id, "reassemble"
-                ),
-                "metrics",
-                keys=["run_id", "stage", "partition_id", "metric"],
-                run_id=run_id,
-                stage="reassemble-metrics",
-            )
-        documents = catalog.read(spark, "documents")
-
     # --- Stage C: extraction (checkpointed once, split by kind after) ------
-    if not stage_done("extraction", "extract", with_metrics=True):
-        if fused:
-            extraction = extract_graph_records_fused(
-                transcripts, input_pregrouped=input_pregrouped
-            )
-        else:
-            extraction = extract_graph_records(documents)
+    # The stage counts as committed only when its LAST write landed — the
+    # metrics merge, not the data snapshot — else a crash between the two
+    # would skip the lineage rows forever on resume (both writes are
+    # idempotent to redo).
+    if not (
+        catalog.committed("extraction", run_id, "extract")
+        and catalog.committed("metrics", run_id, "extract-metrics")
+    ):
+        extraction = extract_graph_records_fused(
+            transcripts, input_pregrouped=input_pregrouped
+        )
         catalog.overwrite(extraction, "extraction", run_id, "extract")
         catalog.merge(
             spark,
@@ -132,64 +189,14 @@ def run_pipeline(
             run_id=run_id,
             stage="extract-metrics",
         )
-    extraction = catalog.read(spark, "extraction")
 
     # --- Stage E: graph tables (MERGE upserts — incremental-run ready) -----
-    if not stage_done("nodes", "assemble"):
-        nodes = build_nodes(extraction)
-        catalog.merge(
-            spark, nodes, "nodes", keys=["node_label", "node_id"],
-            run_id=run_id, stage="assemble",
-        )
-    nodes = catalog.read(spark, "nodes")
+    commit_graph(
+        spark, catalog, catalog.read(spark, "extraction"), run_id, "assemble",
+        canonicalize=canonicalize,
+    )
 
-    if not stage_done("edges", "assemble"):
-        edges = build_edges(extraction, nodes)
-        catalog.merge(
-            spark, edges, "edges", keys=["src_id", "rel_type", "dst_id"],
-            run_id=run_id, stage="assemble",
-        )
-    edges = catalog.read(spark, "edges")
-
-    # --- Stage D (optional): alias canonicalization -------------------------
-    # The rewrite is committed as its own `edges_canonical` table (and
-    # feeds the triples build) rather than silently diverging from the
-    # raw `edges` view: the raw edges/nodes tables keep surface-form ids
-    # for provenance, `edges_canonical`/`triples` carry resolved ids, and
-    # graph queries choose explicitly which layer they read.
-    if canonicalize:
-        if not stage_done("canonical_map", "canonicalize"):
-            # Conservative threshold: ids are already exact-canonical, so
-            # only near-identical surface forms (punctuation/underscore
-            # variants) may merge — 0.75 would falsely merge distinct
-            # domains that differ by one char (evil-1 vs evil-2).
-            alias = build_alias_dictionary(nodes, jaccard_threshold=0.9)
-            catalog.overwrite(alias, "canonical_map", run_id, "canonicalize")
-        alias = catalog.read(spark, "canonical_map")
-        if not stage_done("edges_canonical", "canonicalize"):
-            # edges_canonical is DERIVED (current edges × current alias
-            # map), so it is recomputed and overwritten whole — a MERGE
-            # would keep rows rewritten under superseded alias mappings
-            # forever when the dictionary changes across runs.
-            catalog.overwrite(
-                apply_canonicalization(edges, alias),
-                "edges_canonical",
-                run_id,
-                "canonicalize",
-            )
-        edges = catalog.read(spark, "edges_canonical")
-
-    if not stage_done("triples", "assemble"):
-        triples = build_triples(edges)
-        catalog.merge(
-            spark, triples, "triples", keys=["subj", "pred", "obj"],
-            run_id=run_id, stage="assemble",
-        )
-
-    tables = ["extraction", "nodes", "edges", "triples", "metrics"]
-    if not fused:
-        tables.insert(0, "documents")
-    for t in tables:
+    for t in ("extraction", "nodes", "edges", "triples", "metrics"):
         result.tables[t] = t
         if collect_counts:
             result.counts[t] = catalog.read(spark, t).count()
@@ -201,7 +208,6 @@ def run_incremental(
     transcripts: DataFrame,
     catalog: LocalTableCatalog,
     run_id: str,
-    fused: bool = True,
 ) -> PipelineResult:
     """Daily-increment mode: process only conversations not yet in the
     warehouse, then MERGE into the graph tables.
@@ -218,9 +224,7 @@ def run_incremental(
         todo = transcripts.join(seen, "conv_id", "left_anti")
     else:
         todo = transcripts
-    result = run_pipeline(
-        spark, todo, catalog, run_id=run_id, fused=fused, collect_counts=False
-    )
+    result = run_pipeline(spark, todo, catalog, run_id=run_id, collect_counts=False)
     catalog.merge(
         spark,
         todo.select("conv_id").distinct(),

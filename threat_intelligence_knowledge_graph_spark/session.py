@@ -39,9 +39,12 @@ def build_session(
         # Broadcast threshold comfortably above all dimension tables.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
     )
+    # The driver heap is set only on request: a fixed default sized for
+    # one host starves another (spark-submit's --driver-memory also works).
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        builder = builder.config("spark.driver.memory", os.environ["SPARK_DRIVER_MEMORY"])
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():

@@ -5,11 +5,13 @@ module is OUR scale addition: continuous transcript ingestion with the
 same extraction semantics and idempotent MERGE sinks.
 
 Design: ``readStream`` over a transcripts directory → ``foreachBatch`` →
-fused extraction kernel per micro-batch → MERGE into the snapshot-table
-catalog (the Iceberg seam). The sinks dedup on their natural keys, so
-replays after failure are idempotent — the Structured Streaming
-exactly-once discipline the batch checkpoint design mirrors (SURVEY.md
-§2 op-checklist, streaming row).
+fused extraction kernel per micro-batch → ``plans.pipeline.commit_graph``,
+the same MERGE path batch runs use, into the snapshot-table catalog (the
+Iceberg seam). Each micro-batch commits under the query id plus its
+``batch_id``, and ``commit_graph`` skips a table that already holds that
+commit, so a batch replayed after a failure commits nothing — the
+idempotent ``foreachBatch`` write pattern (Armbrust et al., *Delta
+Lake*, VLDB 2020).
 
 Assumption (documented): a conversation's turns arrive within one
 micro-batch (file-shipping granularity = whole conversations). For feeds
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extraction import extract_graph_records_fused
 from ..operators.reassembly import TURN_SEPARATOR
-from ..operators.triples import build_edges, build_nodes, build_triples
+from ..plans.pipeline import commit_graph
 from ..schemas import TRANSCRIPTS_SCHEMA
 from ..sources.tableio import LocalTableCatalog
 
@@ -57,29 +59,18 @@ def stream_extract(
     stream = reader.parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extraction = extract_graph_records_fused(batch_df)
+        # The query id survives restarts from the same checkpoint, so a
+        # micro-batch replayed after a crash carries the commit id it had
+        # the first time and commits nothing; a new query (fresh
+        # checkpoint) into the same warehouse gets a new id and commits.
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if query_id is None:
+            raise RuntimeError("foreachBatch ran without a streaming query id")
         # Persist: nodes and edges both read the extraction output.
-        extraction = extraction.persist()
+        extraction = extract_graph_records_fused(batch_df).persist()
         try:
-            nodes = build_nodes(extraction)
-            catalog.merge(
-                spark, nodes, "nodes", keys=["node_label", "node_id"],
-                run_id=run_id, stage=f"batch-{batch_id}-nodes",
-            )
-            all_nodes = catalog.read(spark, "nodes")
-            edges = build_edges(extraction, all_nodes)
-            catalog.merge(
-                spark, edges, "edges", keys=["src_id", "rel_type", "dst_id"],
-                run_id=run_id, stage=f"batch-{batch_id}-edges",
-            )
-            # Triples delta comes from THIS batch's (already endpoint-
-            # checked) edges, not a re-read of the whole edges table —
-            # per-batch work stays O(batch), not O(total graph); the
-            # key-based MERGE keeps the result identical and idempotent.
-            triples = build_triples(edges)
-            catalog.merge(
-                spark, triples, "triples", keys=["subj", "pred", "obj"],
-                run_id=run_id, stage=f"batch-{batch_id}-triples",
+            commit_graph(
+                spark, catalog, extraction, run_id, f"{query_id}-batch-{batch_id}"
             )
         finally:
             extraction.unpersist()
