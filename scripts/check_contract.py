@@ -17,10 +17,6 @@ import duckdb
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-# Spark's Python workers import the package too: point them at this checkout.
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
-)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from threat_intelligence_knowledge_graph_spark.session import build_session  # noqa: E402

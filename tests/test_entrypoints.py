@@ -1,13 +1,19 @@
 """Dangling-import guard: every package module imports, and every job's
 CLI parses ``--help``. A job that imports a removed module would
 otherwise only fail at spark-submit time. Also pins the input boundary
-of the graph query pack: its queries read only the registered KG views."""
+of the graph query pack (its queries read only the registered KG views),
+README's list of modules no entry point reaches, and that Spark's Python
+workers import the package from any working directory."""
 
+import ast
 import importlib
 import inspect
+import os
 import pkgutil
+import re
 import subprocess
 import sys
+import textwrap
 from pathlib import Path
 
 import pytest
@@ -80,3 +86,100 @@ def test_graph_queries_take_only_scalars():
             and (name, p.name) not in _REFERENCE_INPUTS
         ]
     assert not bad, bad
+
+
+def test_python_workers_import_package_from_any_directory(tmp_path):
+    """A driver run from another directory, without PYTHONPATH or
+    --py-files, still runs Python tasks that import the package:
+    build_session puts the package's root on the workers' PYTHONPATH."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(REPO)!r})
+        from threat_intelligence_knowledge_graph_spark.session import build_session
+
+        spark = build_session("worker-import-probe", master="local[1]")
+        name = "threat_intelligence_knowledge_graph_spark"
+        print(spark.sparkContext.parallelize([name], 1)
+              .map(lambda n: __import__(n).__name__).collect())
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.pop("SPARK_DRIVER_MEMORY", None)  # Spark's 1g default is plenty
+    r = subprocess.run(
+        [sys.executable, str(probe)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "['threat_intelligence_knowledge_graph_spark']" in r.stdout
+
+
+def _module_file(name):
+    path = REPO.joinpath(*name.split("."))
+    return path / "__init__.py" if path.is_dir() else path.with_suffix(".py")
+
+
+def _imported_modules(path, module, modules):
+    """Package modules that ``path`` imports, lazy imports included;
+    ``module`` is its dotted name (None outside the package), used to
+    resolve relative imports."""
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module
+            if node.level:
+                parts = module.split(".")
+                if path.name != "__init__.py":
+                    parts = parts[:-1]
+                parts = parts[: len(parts) - node.level + 1]
+                base = ".".join(parts + ([node.module] if node.module else []))
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+    return names & modules
+
+
+def _readme_unreached():
+    readme = (REPO / "README.md").read_text()
+    table = readme.split("Modules no entry point reaches", 1)[1].split("\n\n")[1]
+    return {
+        m.group(1)
+        for m in re.finditer(r"^\| `([\w/]+)` \|", table, re.MULTILINE)
+    }
+
+
+def test_readme_lists_the_modules_no_entry_point_reaches():
+    """The entry points README "Scope" names (jobs/*.py,
+    streaming/stream_extract.py, oracle/ and perfbench/*.py) and their
+    static import closure: the package modules outside it are exactly
+    the README table's rows. A change that orphans a module, or that
+    leaves a stale row, fails here."""
+    modules = {pkg.__name__} | set(_modules())
+    todo = [
+        m
+        for f in sorted((REPO / "jobs").glob("*.py"))
+        + sorted((REPO / "perfbench").glob("*.py"))
+        for m in _imported_modules(f, None, modules)
+    ]
+    todo += [f"{pkg.__name__}.streaming.stream_extract"]
+    todo += [m for m in modules if m.split(".")[:2] == [pkg.__name__, "oracle"]]
+    reached = set()
+    while todo:
+        m = todo.pop()
+        if m in reached:
+            continue
+        reached.add(m)
+        if "." in m:  # importing a module runs its parent packages first
+            todo.append(m.rpartition(".")[0])
+        todo += _imported_modules(_module_file(m), m, modules)
+    unreached = {
+        m.removeprefix(pkg.__name__ + ".").replace(".", "/")
+        for m in modules - reached
+        if _module_file(m).name != "__init__.py"
+    }
+    assert unreached == _readme_unreached()

@@ -276,6 +276,37 @@ class TestTableIO:
         assert catalog.committed("t2", "r", "s")
         assert not catalog.committed("t2", "other", "s")
 
+    def test_two_log_writers_leave_a_readable_log(self, tmp_path):
+        """Two threads commit to one table's log at once: no call raises
+        and the final log parses. It does not check that all 400 commits
+        landed: the read-modify-write still loses some and can repeat a
+        snapshot id. Put-if-absent log files fix that (ROADMAP item 2)."""
+        import os
+        import threading
+
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        os.makedirs(catalog._table_dir("t"))
+        errors = []
+
+        def writer(w):
+            for i in range(200):
+                try:
+                    catalog._append_log(
+                        "t",
+                        {"snapshot": i, "run_id": f"w{w}", "stage": str(i),
+                         "operation": "append"},
+                    )
+                except Exception as e:
+                    errors.append(repr(e))
+
+        threads = [threading.Thread(target=writer, args=(w,)) for w in (0, 1)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert errors == []
+        assert catalog.log("t")  # parses
+
 
 class TestCanonicalizePipeline:
     def test_alias_layer_keeps_graph_valid(self, spark, transcripts, tmp_path):

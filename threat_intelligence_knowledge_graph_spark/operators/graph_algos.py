@@ -1952,9 +1952,8 @@ def hill_tail(
     Output (d_min, n_tail, alpha); alpha NULL when the tail is empty
     or entirely AT d_min (Σ ln = 0: the MLE diverges — reported as
     undefined, never +inf). The ln sum runs over the DIMENSION-SIZED
-    histogram (count · ln(deg/d_min) per distinct degree — the
-    event_entropy discipline: ln arguments are exact integer ratios),
-    round-6 after the one division.
+    histogram (count · ln(deg/d_min) per distinct degree, so every ln
+    argument is an exact integer ratio), round-6 after the one division.
     """
     if d_min < 1:
         raise ValueError("d_min must be >= 1")

@@ -333,7 +333,7 @@ def curriculum_order(
     deterministic: a ``sample_pct``% md5-drawn sample (partition- and
     run-independent, the mixture_sample draw), nearest-rank percentiles
     at k/n_buckets over the sample ordered by (difficulty, key) — the
-    ``exact_percentiles`` ceil-rank integer arithmetic — then the
+    value at ordered row ceil(q·n), integer arithmetic — then the
     n_buckets−1 boundary values come back in ONE bounded collect and
     bucket assignment is a scan-local broadcast-literal comparison:
     ``bucket = 1 + #{boundaries < difficulty}`` (strictly-less, so a

@@ -215,9 +215,12 @@ def run_incremental(
     Seen-conversation lineage comes from the committed ``conv_seen``
     table (conv_id set — tiny relative to the corpus); new transcripts
     anti-join it, so a feed that replays old conversations costs one
-    broadcast-able anti-join instead of a full re-extraction. MERGE sinks
-    keep the result identical to a from-scratch run over the union
-    (asserted by tests).
+    broadcast-able anti-join instead of a full re-extraction. When each
+    input holds whole conversations, MERGE sinks keep the result identical
+    to a from-scratch run over the union (asserted by tests). A
+    conversation that continues into a later input is not: the anti-join
+    drops every later turn of a conversation already seen, so the
+    increment loses its triples (ROADMAP item 1).
     """
     if catalog.exists("conv_seen"):
         seen = catalog.read(spark, "conv_seen")

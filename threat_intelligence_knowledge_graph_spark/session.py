@@ -49,6 +49,14 @@ def build_session(
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # Spark's Python workers import this package and inherit the
+    # environment the JVM takes from this process when it starts, so a
+    # job run from another directory without --py-files needs the
+    # package's root on PYTHONPATH before the first session is built.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     spark = builder.getOrCreate()
     # AQE coalescing balances shuffle BYTES, but our post-shuffle stages
     # (pandas extraction kernel, collect_list reassembly) are CPU-heavy per

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -59,8 +60,11 @@ class LocalTableCatalog:
     def _append_log(self, name: str, record: dict) -> None:
         entries = self.log(name)
         entries.append(record)
-        tmp = self._log_path(name) + ".tmp"
-        with open(tmp, "w") as f:
+        # A temp file per writer: with one shared path, two writers
+        # interleave in it and can replace the log with a torn file.
+        # (mkstemp would also do, but makes the log mode 0600.)
+        tmp = f"{self._log_path(name)}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "x") as f:
             json.dump(entries, f, indent=1)
         os.replace(tmp, self._log_path(name))
 

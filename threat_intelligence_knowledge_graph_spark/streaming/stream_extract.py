@@ -14,10 +14,13 @@ idempotent ``foreachBatch`` write pattern (Armbrust et al., *Delta
 Lake*, VLDB 2020).
 
 Assumption (documented): a conversation's turns arrive within one
-micro-batch (file-shipping granularity = whole conversations). For feeds
-where turns trickle in across batches, ``stateful_reassembly`` buffers
-turns per conv_id with ``applyInPandasWithState`` and emits a document
-only after an idle timeout.
+micro-batch (file-shipping granularity = whole conversations).
+``stream_extract`` does not handle feeds where turns trickle in across
+batches: it extracts each micro-batch on its own, so a conversation split
+across two batches is extracted as two documents (ROADMAP item 1).
+``stateful_reassembly`` below buffers turns per conv_id with
+``applyInPandasWithState`` and emits a document only after an idle
+timeout, but ``stream_extract`` does not use it.
 """
 
 from __future__ import annotations
@@ -195,71 +198,4 @@ def windowed_mention_counts(
             F.col("cve"),
             F.col("n_mentions"),
         )
-    )
-
-
-def sessionized_event_counts(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming gap-sessionization (the streaming twin of the batch
-    ``events_sessionize`` contract entry): per-user sessions via
-    ``session_window`` — consecutive events closer than ``gap`` merge
-    into one growing window, state is per-OPEN-session (bounded by
-    concurrent users, not history), and the watermark both admits late
-    events inside ``watermark`` and lets closed sessions emit and
-    evict. Same session boundaries as the batch gap rule: a new
-    session starts exactly when the gap to the previous event exceeds
-    ``gap``."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), user_col)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            user_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def streaming_exact_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    key_cols: tuple[str, ...] = ("content_hash",),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming exact dedup — the streaming twin of the batch
-    ``dedup_exact_docs`` entry: the first row per ``key_cols`` passes,
-    later duplicates are dropped, via ``dropDuplicatesWithinWatermark``.
-
-    State discipline at 100 TB/day: plain streaming ``dropDuplicates``
-    keys state on every key EVER seen (unbounded); the within-watermark
-    variant evicts a key's state once the watermark passes its event
-    time, so state is bounded by the duplicate-arrival horizon (how far
-    apart duplicates can arrive), not stream history. Duplicates
-    arriving further apart than ``watermark`` are NOT caught — that is
-    the documented contract; a periodic batch dedup over the
-    materialized table is the backstop (the lambda split).
-
-    ``max_files_per_trigger`` throttles file ingestion so tests can
-    force duplicates into DIFFERENT micro-batches (proving the dedup is
-    stateful across batches, not batch-local).
-    """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
     )
