@@ -90,7 +90,10 @@ def main() -> None:
         read_transcripts,
     )
 
-    transcripts, quarantined = read_transcripts(spark, args.input, fmt=args.format)
+    try:
+        transcripts, quarantined = read_transcripts(spark, args.input, fmt=args.format)
+    except ValueError as e:  # a mistyped input file: one line, no traceback
+        raise SystemExit(str(e)) from None
     # Quarantine-don't-drop: bad feed rows land in an auditable table.
     # ALWAYS overwrite — a clean run must replace (empty out) any stale
     # quarantine from a previous run, or post-run audits would blame the
@@ -100,7 +103,7 @@ def main() -> None:
         quarantined.withColumn("run_id", F.lit(args.run_id)),
         "quarantine", args.run_id, "ingest",
     )
-    n_bad = catalog.read(spark, "quarantine").count()
+    n_bad = catalog.rows("quarantine")
     if n_bad:
         print({"quarantined_rows": n_bad})
     result = run_pipeline(

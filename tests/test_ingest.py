@@ -106,3 +106,20 @@ class TestParquetIngest:
 
         with pytest.raises(ValueError):
             read_transcripts(spark, str(tmp_path), fmt="avro")
+
+    def test_pandas_typed_parquet_fails_with_one_line(self, spark, tmp_path):
+        """pandas writes turn_idx as int64 and ts in nanoseconds; the read
+        must name both columns in one line instead of failing mid-job."""
+        import pandas as pd
+        import pytest
+
+        from threat_intelligence_knowledge_graph_spark.datagen import transcripts_rows
+
+        path = str(tmp_path / "pandas.parquet")
+        pd.DataFrame(transcripts_rows(5)).to_parquet(path)
+        with pytest.raises(ValueError) as exc:
+            read_transcripts(spark, path, fmt="parquet")
+        msg = str(exc.value)
+        assert "\n" not in msg
+        assert "turn_idx is int64, expected int" in msg
+        assert "ts is timestamp[ns], expected timestamp" in msg

@@ -1,5 +1,8 @@
 """Pipeline-level tests: checkpoint/resume, idempotence, lineage/metrics."""
 
+import json
+import uuid
+
 import pandas as pd
 import pytest
 
@@ -20,6 +23,33 @@ def _triples(spark, catalog):
     return {
         (r.subj, r.pred, r.obj) for r in catalog.read(spark, "triples").collect()
     }
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` submits, through a job group of its
+    own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # Job starts reach the status tracker through the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _strip_metadata(catalog, name: str) -> None:
+    """Rewrite ``name``'s log as a log written before commit records
+    carried ``schema`` and ``rows``."""
+    entries = catalog.log(name)
+    for e in entries:
+        e.pop("schema", None)
+        e.pop("rows", None)
+    with open(catalog._log_path(name), "w") as f:
+        json.dump(entries, f)
 
 
 class TestPipeline:
@@ -430,3 +460,88 @@ class TestCrashWindowResume:
         run_pipeline(spark, transcripts, catalog, run_id="r1")
         stages = {r.stage for r in catalog.read(spark, "metrics").collect()}
         assert "extract" in stages  # lineage recovered, not lost forever
+
+
+class TestCommitMetadata:
+    """Each commit record carries the written schema and row count."""
+
+    def _df(self, spark, rows):
+        return spark.createDataFrame(rows, "k string, v int")
+
+    def test_every_write_records_its_row_count(self, spark, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+
+        def check(name):
+            head = catalog.log(name)[-1]
+            assert head["rows"] == catalog.read(spark, name).count()
+            assert head["schema"]
+
+        catalog.overwrite(self._df(spark, [("a", 1), ("b", 2)]), "o")
+        check("o")
+        catalog.merge(spark, self._df(spark, [("a", 1), ("b", 2)]), "m", keys=["k"])
+        check("m")  # into an absent table: a plain write
+        catalog.merge(spark, self._df(spark, [("b", 20), ("c", 3)]), "m", keys=["k"])
+        check("m")  # into an existing table: the merged head, 3 rows
+        assert catalog.log("m")[-1]["rows"] == 3
+        catalog.append(self._df(spark, [("a", 1)]), "a")
+        catalog.append(self._df(spark, [("b", 2), ("c", 3)]), "a")
+        assert [e["rows"] for e in catalog.log("a")] == [1, 2]
+        catalog.compact(spark, "a")
+        check("a")
+        assert catalog.log("a")[-1]["rows"] == 3
+
+    def test_rows_sums_an_append_chain(self, spark, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        catalog.overwrite(self._df(spark, [("a", 1), ("b", 2)]), "t")
+        for i in range(3):
+            catalog.append(self._df(spark, [(f"x{i}", i)] * (i + 1)), "t")
+        assert catalog.rows("t") == 2 + 1 + 2 + 3 == catalog.read(spark, "t").count()
+        with pytest.raises(FileNotFoundError):
+            catalog.rows("absent")
+
+    def test_entries_without_metadata_still_read_and_count(self, spark, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        catalog.overwrite(self._df(spark, [("a", 1), ("b", 2)]), "t")
+        catalog.append(self._df(spark, [("c", 3)]), "t")
+        _strip_metadata(catalog, "t")
+        assert "rows" not in catalog.log("t")[-1]
+        assert catalog.rows("t") == 3
+        assert sorted(catalog.read(spark, "t").collect()) == [
+            ("a", 1), ("b", 2), ("c", 3)
+        ]
+        # Such a read infers the schema, with a Spark job.
+        assert _job_ids(spark, lambda: catalog.read(spark, "t"))
+
+    def test_time_travel_reads_with_the_resolved_entry_schema(self, spark, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        catalog.overwrite(self._df(spark, [("a", 1)]), "t")
+        catalog.overwrite(
+            spark.createDataFrame([("b", "x", 1.5)], "k string, v string, w double"), "t"
+        )
+        assert catalog.read(spark, "t", as_of_snapshot=0).schema.simpleString() == (
+            "struct<k:string,v:int>"
+        )
+        assert catalog.read(spark, "t").columns == ["k", "v", "w"]
+        # The stored schema is what the read passes: narrow entry 0's.
+        entries = catalog.log("t")
+        entries[0]["schema"] = spark.createDataFrame([], "k string").schema.json()
+        with open(catalog._log_path("t"), "w") as f:
+            json.dump(entries, f)
+        assert catalog.read(spark, "t", as_of_snapshot=0).collect() == [("a",)]
+
+
+class TestJobCounts:
+    """Reads, counts and resume decide from the commit log: no Spark job."""
+
+    def test_read_submits_no_job(self, spark, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        catalog.overwrite(spark.createDataFrame([("a", 1)], "k string, v int"), "t")
+        assert _job_ids(spark, lambda: catalog.read(spark, "t")) == []
+
+    def test_rerun_of_a_committed_run_submits_no_job(self, spark, transcripts, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        first = _job_ids(spark, lambda: run_pipeline(spark, transcripts, catalog, run_id="r1"))
+        assert first  # the probe sees the jobs of a fresh build
+        assert _job_ids(
+            spark, lambda: run_pipeline(spark, transcripts, catalog, run_id="r1")
+        ) == []

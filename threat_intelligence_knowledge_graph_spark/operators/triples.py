@@ -45,14 +45,16 @@ def build_edges(extraction: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 def build_triples(edges: DataFrame) -> DataFrame:
-    """Distinct (subj, pred, obj) — reference neo4j_store.py:152-161."""
-    return (
-        edges.select(
-            F.col("src_id").alias("subj"),
-            F.col("rel_type").alias("pred"),
-            F.col("dst_id").alias("obj"),
-        )
-        .distinct()
+    """(subj, pred, obj) per edge — reference neo4j_store.py:152-161.
+
+    No ``distinct``: ``edges`` must be unique on ``(src_id, rel_type,
+    dst_id)``, as ``build_edges`` and ``apply_canonicalization`` return
+    them and as the merged ``edges`` table is, so the triples are
+    already unique."""
+    return edges.select(
+        F.col("src_id").alias("subj"),
+        F.col("rel_type").alias("pred"),
+        F.col("dst_id").alias("obj"),
     )
 
 

@@ -44,7 +44,15 @@ class PipelineResult:
 
 
 def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
-    """Per-partition row counts — the lineage record for this stage."""
+    """Per-partition row counts — the lineage record for this stage.
+
+    ``df`` is the stage's committed snapshot as read back, so
+    ``partition_id`` is a split of that snapshot's file scan, not a task
+    of the stage that wrote it: Spark packs small files into one split,
+    so a build whose extraction ran 8 tasks can leave 4 rows here. The
+    rows describe the committed data, which every later stage and a
+    resumed run read, and they sum to the snapshot's row count. The
+    writing stage's own tasks are in Spark's event log."""
     return (
         df.withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
@@ -71,15 +79,17 @@ def commit_graph(
 
     Order: nodes first; then this extraction's edges, semi-joined
     against the HEAD ``nodes`` (MATCH-before-MERGE, so an endpoint
-    committed by an earlier run also counts); then the triples of those
-    same edges — a delta of O(extraction), not a re-read of the whole
-    ``edges`` table. The key-based MERGE keeps the result identical to a
-    rebuild.
+    committed by an earlier run also counts); then the triples, built
+    from the ``edges`` table just committed, read back through its
+    stored schema (no job). Under today's rewrite merges that table is
+    the whole edges head, so the triples need no second pass over the
+    extraction and no second broadcast of the node ids. The key-based
+    MERGE keeps the result identical to a rebuild.
 
     Resume rule: each table is skipped when it already holds a commit
-    under ``(run_id, stage)``, so replaying a committed extraction
-    commits nothing and a crash between two tables resumes at the first
-    missing one.
+    under ``(run_id, stage)`` and its rows are then not even planned, so
+    replaying a committed extraction commits nothing and submits no Spark
+    job, and a crash between two tables resumes at the first missing one.
 
     ``canonicalize=True`` enables stage D's alias layer (MinHash/LSH +
     connected components over node surface forms) and builds the
@@ -89,17 +99,18 @@ def commit_graph(
     committed as the ``canonical_map`` table.
     """
 
-    def merge(df: DataFrame, table: str) -> None:
+    def merge(table: str, build) -> None:
+        # ``build`` runs only for a table this commit has not written, so
+        # a resume reads and plans nothing.
         if not catalog.committed(table, run_id, stage):
             catalog.merge(
-                spark, df, table, keys=GRAPH_KEYS[table],
+                spark, build(), table, keys=GRAPH_KEYS[table],
                 run_id=run_id, stage=stage,
             )
 
-    merge(build_nodes(extraction), "nodes")
-    nodes = catalog.read(spark, "nodes")
-    edges = build_edges(extraction, nodes)
-    merge(edges, "edges")
+    merge("nodes", lambda: build_nodes(extraction))
+    merge("edges", lambda: build_edges(extraction, catalog.read(spark, "nodes")))
+    triples_from = "edges"
 
     # --- Stage D (optional): alias canonicalization -------------------------
     # The rewrite is committed as its own `edges_canonical` table (and
@@ -113,23 +124,26 @@ def commit_graph(
             # only near-identical surface forms (punctuation/underscore
             # variants) may merge — 0.75 would falsely merge distinct
             # domains that differ by one char (evil-1 vs evil-2).
-            alias = build_alias_dictionary(nodes, jaccard_threshold=0.9)
+            alias = build_alias_dictionary(
+                catalog.read(spark, "nodes"), jaccard_threshold=0.9
+            )
             catalog.overwrite(alias, "canonical_map", run_id, "canonicalize")
-        alias = catalog.read(spark, "canonical_map")
         if not catalog.committed("edges_canonical", run_id, "canonicalize"):
             # edges_canonical is DERIVED (current edges × current alias
             # map), so it is recomputed and overwritten whole — a MERGE
             # would keep rows rewritten under superseded alias mappings
             # forever when the dictionary changes across runs.
             catalog.overwrite(
-                apply_canonicalization(catalog.read(spark, "edges"), alias),
+                apply_canonicalization(
+                    catalog.read(spark, "edges"), catalog.read(spark, "canonical_map")
+                ),
                 "edges_canonical",
                 run_id,
                 "canonicalize",
             )
-        edges = catalog.read(spark, "edges_canonical")
+        triples_from = "edges_canonical"
 
-    merge(build_triples(edges), "triples")
+    merge("triples", lambda: build_triples(catalog.read(spark, triples_from)))
 
 
 def run_pipeline(
@@ -199,7 +213,7 @@ def run_pipeline(
     for t in ("extraction", "nodes", "edges", "triples", "metrics"):
         result.tables[t] = t
         if collect_counts:
-            result.counts[t] = catalog.read(spark, t).count()
+            result.counts[t] = catalog.rows(t)
     return result
 
 
@@ -237,7 +251,7 @@ def run_incremental(
         stage="conv-seen",
     )
     for t in ("nodes", "edges", "triples"):
-        result.counts[t] = catalog.read(spark, t).count()
+        result.counts[t] = catalog.rows(t)
     return result
 
 

@@ -22,8 +22,12 @@ write both sides out and read back rather than caching (the
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from ..schemas import TRANSCRIPTS_SCHEMA
 
@@ -31,6 +35,41 @@ _CORRUPT = "_corrupt_record"
 # Key fields the pipeline's reassembly groups/sorts on — a null here is
 # not recoverable downstream.
 _KEY_FIELDS = ("conv_id", "turn_idx")
+# The Arrow type a parquet column must have to be read as each of the
+# schema's non-timestamp types.
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32()}
+
+
+def _check_parquet_types(path: str) -> None:
+    """Raise a one-line ``ValueError`` naming every column of a local
+    parquet input whose type Spark cannot read as ``TRANSCRIPTS_SCHEMA``'s
+    (pandas writes ``turn_idx`` as int64 and ``ts`` as nanoseconds; Spark
+    would fail mid-job with a long Java stack trace). It reads only the
+    footer schema, with INT96 timestamps (Spark's legacy encoding) taken
+    as microseconds. A path that is not a local file or directory (an
+    object-store URI, a glob) is left to Spark's own read."""
+    if not os.path.exists(path):
+        return
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
+    found = ds.dataset(path, format=fmt).schema
+    wrong = []
+    for f in TRANSCRIPTS_SCHEMA.fields:
+        if f.name not in found.names:
+            continue
+        t = found.field(f.name).type
+        if isinstance(f.dataType, TimestampType):
+            ok = pa.types.is_timestamp(t) and t.unit in ("ms", "us")
+        else:
+            ok = t == _ARROW_TYPES[f.dataType.simpleString()]
+        if not ok:
+            wrong.append(f"{f.name} is {t}, expected {f.dataType.simpleString()}")
+    if wrong:
+        raise ValueError(
+            f"transcripts file {path} does not match TRANSCRIPTS_SCHEMA: "
+            + "; ".join(wrong)
+        )
 
 
 def read_transcripts(
@@ -43,9 +82,11 @@ def read_transcripts(
     ``valid`` has exactly ``TRANSCRIPTS_SCHEMA``; ``quarantined`` has
     the raw parse columns plus ``_reason`` ('corrupt' | 'null_key').
     For parquet the file format enforces types natively, so only the
-    null-key split applies.
+    null-key split applies; a local file's column types are checked
+    against the schema first (``_check_parquet_types``).
     """
     if fmt == "parquet":
+        _check_parquet_types(path)
         raw = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
         corrupt = F.lit(False)
     elif fmt in ("json", "csv"):

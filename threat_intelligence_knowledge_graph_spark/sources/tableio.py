@@ -17,6 +17,16 @@ Layout per table::
 Commit = write ``snap-<n>`` then atomically replace ``_log.json``
 (``os.replace``). Readers resolve the latest committed snapshot from the
 log; a crashed writer leaves only an orphan directory, never a torn table.
+
+A commit record holds ``snapshot``, ``run_id``, ``stage``, ``operation``
+(``overwrite`` | ``merge`` | ``append`` | ``compact``), ``parent`` (append
+only), ``schema`` (the written DataFrame's ``StructType`` as JSON) and
+``rows`` (the rows written into ``snap-<n>``, from its parquet footers).
+This is the metadata an Iceberg snapshot summary or a Delta ``add``
+action carries: ``read`` passes the stored schema, so it submits no
+schema-inference job, and ``rows`` answers a table's row count from the
+log alone. Entries written before these two fields existed still read
+and count, through schema inference and a ``count()``.
 """
 
 from __future__ import annotations
@@ -25,17 +35,10 @@ import json
 import os
 import shutil
 import uuid
-from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-@dataclass
-class CommitRecord:
-    snapshot: int
-    run_id: str
-    stage: str
-    operation: str  # 'overwrite' | 'merge' | 'append' | 'compact'
+from pyspark.sql.types import StructType
 
 
 class LocalTableCatalog:
@@ -84,32 +87,53 @@ class LocalTableCatalog:
     def _snap_dir(self, name: str, snap: int) -> str:
         return os.path.join(self._table_dir(name), f"snap-{snap}")
 
-    def _chain_dirs(self, name: str, entries: list[dict]) -> list[str]:
-        """Data dirs of the HEAD snapshot: an append snapshot's file set
-        is its own dir plus its parent's file set (Iceberg append
-        manifest chain); any other operation materializes fully."""
+    @staticmethod
+    def _chain(entries: list[dict], head: dict | None = None) -> list[dict]:
+        """The entries whose data make up ``head``'s file set (default:
+        the last entry), oldest first: an append snapshot's file set is
+        its own dir plus its parent's file set (Iceberg append manifest
+        chain); any other operation materializes fully."""
         by_snap = {e["snapshot"]: e for e in entries}
-        dirs: list[str] = []
-        e: dict | None = entries[-1]
+        chain: list[dict] = []
+        e: dict | None = head or entries[-1]
         while e is not None:
-            dirs.append(self._snap_dir(name, e["snapshot"]))
+            chain.append(e)
             parent = e.get("parent") if e["operation"] == "append" else None
             e = by_snap.get(parent) if parent is not None else None
-        return list(reversed(dirs))
+        return chain[::-1]
+
+    def _chain_dirs(self, name: str, entries: list[dict]) -> list[str]:
+        """Data dirs of the HEAD snapshot (see ``_chain``)."""
+        return [self._snap_dir(name, e["snapshot"]) for e in self._chain(entries)]
 
     def _live_snapshots(self, name: str, heads: list[dict]) -> set[int]:
         """Snapshot ids reachable from the given head entries via append
         parent chains — these must survive vacuum."""
         entries = self.log(name)
-        by_snap = {e["snapshot"]: e for e in entries}
-        live: set[int] = set()
-        for head in heads:
-            e: dict | None = head
-            while e is not None and e["snapshot"] not in live:
-                live.add(e["snapshot"])
-                parent = e.get("parent") if e["operation"] == "append" else None
-                e = by_snap.get(parent) if parent is not None else None
-        return live
+        return {e["snapshot"] for h in heads for e in self._chain(entries, h)}
+
+    def _write(self, df: DataFrame, name: str, record: dict) -> int:
+        """Write ``df`` as the next snapshot of ``name`` and commit
+        ``record`` with the snapshot id, ``df``'s schema and the row
+        count of the written files, read from their parquet footers (no
+        Spark job, no second pass over the data). Returns the snapshot id.
+
+        Not ``DataFrame.observe``: in Spark 4.1 the first ``Observation``
+        makes the session unserializable (its ``ObservationManager`` is
+        not), and Spark ML closures that capture the session then fail."""
+        os.makedirs(self._table_dir(name), exist_ok=True)
+        snap = self._next_snapshot(name)
+        path = self._snap_dir(name, snap)
+        df.write.mode("overwrite").parquet(path)
+        rows = sum(
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+        self._append_log(
+            name, {"snapshot": snap, **record, "schema": df.schema.json(), "rows": rows}
+        )
+        return snap
 
     # -- operations ---------------------------------------------------------
     def read(
@@ -123,10 +147,11 @@ class LocalTableCatalog:
         ``as_of_snapshot`` is time travel (Iceberg ``VERSION AS OF``):
         read the state as of that commit — the newest entry with
         ``snapshot <= as_of_snapshot`` becomes the head and its chain
-        resolves normally. History older than the vacuum horizon raises
-        ``FileNotFoundError`` naming the reclaimed snapshot (the log
-        keeps every record, only data files are reclaimed — a silent
-        partial read would be worse than failing)."""
+        resolves normally, read with that entry's stored schema. History
+        older than the vacuum horizon raises ``FileNotFoundError`` naming
+        the reclaimed snapshot (the log keeps every record, only data
+        files are reclaimed — a silent partial read would be worse than
+        failing)."""
         entries = self.log(name)
         if as_of_snapshot is not None:
             entries = [e for e in entries if e["snapshot"] <= as_of_snapshot]
@@ -143,7 +168,22 @@ class LocalTableCatalog:
                     )
         if not entries:
             raise FileNotFoundError(f"table {name} has no committed snapshot")
-        return spark.read.parquet(*self._chain_dirs(name, entries))
+        reader = spark.read
+        if "schema" in entries[-1]:  # absent only from entries of older logs
+            reader = reader.schema(StructType.fromJson(json.loads(entries[-1]["schema"])))
+        return reader.parquet(*self._chain_dirs(name, entries))
+
+    def rows(self, name: str) -> int:
+        """Row count of the table head, from the log: the head's ``rows``,
+        summed along its append chain. Only a chain with an entry that
+        predates the ``rows`` field is counted with a Spark job."""
+        entries = self.log(name)
+        if not entries:
+            raise FileNotFoundError(f"table {name} has no committed snapshot")
+        chain = self._chain(entries)
+        if all("rows" in e for e in chain):
+            return sum(e["rows"] for e in chain)
+        return self.read(SparkSession.active(), name).count()
 
     def append(
         self, df: DataFrame, name: str, run_id: str = "", stage: str = ""
@@ -155,33 +195,18 @@ class LocalTableCatalog:
         per-batch cost is proportional to the BATCH, not the table.
         Small files accrete across batches; run ``compact`` periodically
         to materialize the chain into one snapshot, then ``vacuum``."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
         entries = self.log(name)
         parent = entries[-1]["snapshot"] if entries else None
-        snap = self._next_snapshot(name)
-        df.write.mode("overwrite").parquet(self._snap_dir(name, snap))
-        self._append_log(
-            name,
-            {
-                "snapshot": snap,
-                "run_id": run_id,
-                "stage": stage,
-                "operation": "append",
-                "parent": parent,
-            },
+        self._write(
+            df, name,
+            {"run_id": run_id, "stage": stage, "operation": "append", "parent": parent},
         )
 
     def overwrite(
         self, df: DataFrame, name: str, run_id: str = "", stage: str = ""
     ) -> None:
         """Full-snapshot replace (checkpoint write)."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        snap = self._next_snapshot(name)
-        df.write.mode("overwrite").parquet(self._snap_dir(name, snap))
-        self._append_log(
-            name,
-            {"snapshot": snap, "run_id": run_id, "stage": stage, "operation": "overwrite"},
-        )
+        self._write(df, name, {"run_id": run_id, "stage": stage, "operation": "overwrite"})
 
     def merge(
         self,
@@ -198,20 +223,22 @@ class LocalTableCatalog:
         += props``); WHEN NOT MATCHED → insert. Idempotent: merging the
         same batch twice is a no-op on content.
 
-        Incoming batches carrying duplicate keys with *different* values
-        would make the survivor nondeterministic (every incoming row has
-        ``_commit=1``); callers pre-dedup on keys (the pipeline does —
-        nodes/edges/triples are distinct-by-key before merge). Key-only
-        tables skip the max_by path entirely: a plain ``distinct`` over
-        the keys is the whole merge (and avoids an empty-struct max_by,
-        a fragile edge case).
+        Precondition: the rows of ``df`` are unique on ``keys``. Every
+        caller meets it (``build_nodes``, ``build_edges`` and
+        ``build_triples`` return rows unique on their merge keys). So a
+        merge into a table with no commit is a plain write of ``df``.
+        Into an existing table it is a rewrite: the head and ``df`` are
+        unioned and, per key, the incoming row wins through ``max_by``
+        over a commit flag; a table whose columns are all keys needs only
+        a ``distinct`` over the union (and avoids an empty-struct
+        ``max_by``, a fragile edge case).
         """
-        if self.exists(name):
-            current = self.read(spark, name).withColumn("_commit", F.lit(0))
-            incoming = df.withColumn("_commit", F.lit(1))
-            unioned = current.unionByName(incoming)
-        else:
-            unioned = df.withColumn("_commit", F.lit(1))
+        record = {"run_id": run_id, "stage": stage, "operation": "merge"}
+        if not self.exists(name):
+            self._write(df, name, record)
+            return
+        current = self.read(spark, name).withColumn("_commit", F.lit(0))
+        unioned = current.unionByName(df.withColumn("_commit", F.lit(1)))
         value_cols = [c for c in unioned.columns if c not in keys and c != "_commit"]
         if not value_cols:
             merged = unioned.select(*keys).distinct()
@@ -223,13 +250,7 @@ class LocalTableCatalog:
                 )
                 .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in value_cols])
             )
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        snap = self._next_snapshot(name)
-        merged.write.mode("overwrite").parquet(self._snap_dir(name, snap))
-        self._append_log(
-            name,
-            {"snapshot": snap, "run_id": run_id, "stage": stage, "operation": "merge"},
-        )
+        self._write(merged, name, record)
 
     def compact(
         self,
@@ -267,7 +288,7 @@ class LocalTableCatalog:
         # Materializes append chains too: the new snapshot carries the
         # full content with no parent reference, so vacuum can reclaim
         # the superseded per-batch files.
-        df = spark.read.parquet(*chain)
+        df = self.read(spark, name)
         df = (
             df.repartitionByRange(n_files, *sort_cols)
             if sort_cols
@@ -275,16 +296,8 @@ class LocalTableCatalog:
             if df.rdd.getNumPartitions() > n_files
             else df.repartition(n_files)
         )
-        snap = self._next_snapshot(name)
-        df.write.mode("overwrite").parquet(self._snap_dir(name, snap))
-        self._append_log(
-            name,
-            {
-                "snapshot": snap,
-                "run_id": run_id,
-                "stage": "compact",
-                "operation": "compact",
-            },
+        snap = self._write(
+            df, name, {"run_id": run_id, "stage": "compact", "operation": "compact"}
         )
         written = sum(
             1
