@@ -123,3 +123,32 @@ class TestParquetIngest:
         assert "\n" not in msg
         assert "turn_idx is int64, expected int" in msg
         assert "ts is timestamp[ns], expected timestamp" in msg
+
+    def test_arrow_typed_parquet_that_spark_reads_is_accepted(self, spark, tmp_path):
+        """Large and dictionary strings are stored as UTF8 BINARY and int16
+        as INT32, so Spark reads them as the schema's types; the type check
+        must let such a file through."""
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from threat_intelligence_knowledge_graph_spark.datagen import transcripts_rows
+
+        pdf = pd.DataFrame(transcripts_rows(5))
+        arrow_schema = pa.schema([
+            ("conv_id", pa.large_string()),
+            ("turn_idx", pa.int16()),
+            ("role", pa.dictionary(pa.int8(), pa.string())),
+            ("text", pa.large_string()),
+            ("tool", pa.string()),
+            ("ts", pa.timestamp("us")),
+        ])
+        path = str(tmp_path / "arrow.parquet")
+        pq.write_table(
+            pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False),
+            path,
+        )
+        valid, quarantined = read_transcripts(spark, path, fmt="parquet")
+        assert valid.count() == len(pdf)
+        assert quarantined.count() == 0
+        assert sorted(r.turn_idx for r in valid.collect()) == sorted(pdf.turn_idx)

@@ -82,9 +82,16 @@ def commit_graph(
     committed by an earlier run also counts); then the triples, built
     from the ``edges`` table just committed, read back through its
     stored schema (no job). Under today's rewrite merges that table is
-    the whole edges head, so the triples need no second pass over the
-    extraction and no second broadcast of the node ids. The key-based
-    MERGE keeps the result identical to a rebuild.
+    the whole edges head, not this call's edges: the triples merge
+    already reads and rewrites the whole triples head, so this adds
+    about |edges| rows to that union and distinct, and in exchange
+    skips a second pass over the extraction and a second broadcast of
+    the node ids. On a 4-vCPU host (``local[4]``), committing 50 new
+    conversations into a warehouse of 10,000 (an edges head 200 times
+    the delta), the triples merge took about half the time of one built
+    from the delta. Under append commits (ROADMAP item 2) the committed
+    snapshot is the delta itself. The key-based MERGE keeps the result
+    identical to a rebuild.
 
     Resume rule: each table is skipped when it already holds a commit
     under ``(run_id, stage)`` and its rows are then not even planned, so

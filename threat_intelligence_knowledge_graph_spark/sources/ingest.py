@@ -35,9 +35,34 @@ _CORRUPT = "_corrupt_record"
 # Key fields the pipeline's reassembly groups/sorts on — a null here is
 # not recoverable downstream.
 _KEY_FIELDS = ("conv_id", "turn_idx")
-# The Arrow type a parquet column must have to be read as each of the
-# schema's non-timestamp types.
-_ARROW_TYPES = {"string": pa.string(), "int": pa.int32()}
+
+
+def _spark_reads_as(t: pa.DataType, spark_type) -> bool:
+    """Whether Spark's parquet reader reads a column that pyarrow types
+    as ``t`` into ``spark_type`` (one of ``TRANSCRIPTS_SCHEMA``'s types).
+    Every Arrow string or binary flavour, dictionary-encoded or not, is
+    stored as BINARY; a signed integer of up to 32 bits or an unsigned
+    one of up to 16 as INT32; second and millisecond timestamps as
+    millis. Spark rejects int64, uint32 and nanosecond timestamps."""
+    if pa.types.is_dictionary(t):
+        t = t.value_type
+    if isinstance(spark_type, TimestampType):
+        return pa.types.is_timestamp(t) and t.unit in ("s", "ms", "us")
+    if isinstance(spark_type, StringType):
+        return any(
+            is_type(t)
+            for is_type in (
+                pa.types.is_string,
+                pa.types.is_large_string,
+                pa.types.is_string_view,
+                pa.types.is_binary,
+                pa.types.is_large_binary,
+                pa.types.is_binary_view,
+            )
+        )
+    return pa.types.is_integer(t) and t.bit_width <= (
+        32 if pa.types.is_signed_integer(t) else 16
+    )
 
 
 def _check_parquet_types(path: str) -> None:
@@ -59,11 +84,7 @@ def _check_parquet_types(path: str) -> None:
         if f.name not in found.names:
             continue
         t = found.field(f.name).type
-        if isinstance(f.dataType, TimestampType):
-            ok = pa.types.is_timestamp(t) and t.unit in ("ms", "us")
-        else:
-            ok = t == _ARROW_TYPES[f.dataType.simpleString()]
-        if not ok:
+        if not _spark_reads_as(t, f.dataType):
             wrong.append(f"{f.name} is {t}, expected {f.dataType.simpleString()}")
     if wrong:
         raise ValueError(
