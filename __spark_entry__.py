@@ -561,62 +561,6 @@ def q_skew_hot_entities(spark, sf_dir):
     return hot_entity_counts(_constructed_triples(spark, sf_dir), n_salts=32)
 
 
-def q_train_val_split(spark, sf_dir):
-    """Deterministic train/val assignment by engine-portable md5 hash —
-    reproducible across engines/runs/partitionings, no RNG."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        split_by_hash,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    return split_by_hash(d, "doc_id", train_frac=0.9)
-
-
-def q_sample_stratified(spark, sf_dir):
-    """Deterministic stratified sampling by engine-portable md5 bucket —
-    per-stratum rates, partition-independent, monotone in the rate."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        sample_by_hash,
-    )
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    return sample_by_hash(
-        o, "o_orderkey", "o_orderstatus", {"O": 0.1, "F": 0.05, "P": 0.5}
-    )
-
-
-def q_sample_mixture(spark, sf_dir):
-    """Exact-proportion corpus mixing (pretraining mixture weights):
-    the largest md5-deterministic sample with per-source composition
-    O:F:P = 5:3:2. P is the binding (smallest/share) source and is taken
-    whole; O and F down-sample to match — the oracle recomputes the
-    water level T and thresholds in the identical double arithmetic."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        mixture_sample,
-    )
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    return mixture_sample(
-        o, "o_orderkey", "o_orderstatus", {"O": 0.5, "F": 0.3, "P": 0.2}
-    )
-
-
-def q_split_oversized_docs(spark, sf_dir):
-    """Oversized-document splitting ahead of packing: docs over 40
-    whitespace tokens become contiguous 40-token pieces (piece_idx
-    preserves order)."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        split_oversized,
-    )
-
-    return split_oversized(_t(spark, sf_dir, "documents"), 40).select(
-        "doc_id",
-        F.col("piece_idx").cast("int").alias("piece_idx"),
-        "text",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-    )
-
-
 def q_graph_connected_components(spark, sf_dir):
     """Connected components (min-id labeling) over a planted chain
     forest: every 11th orderkey contributes a 5-node path (diameter 4 —
@@ -1169,81 +1113,6 @@ def q_graph_sssp_weighted(spark, sf_dir):
     return sssp_weighted(chain.union(cuts), src, max_iter=12)
 
 
-def q_graph_mst(spark, sf_dir):
-    """Minimum spanning forest via distributed Borůvka
-    (operators/mst.py::boruvka_mst — the single-linkage-clustering
-    backbone) over a planted analytic graph from `orders`: nodes are
-    the first 256 row_number ranks, path edges (i, i+1) with zig-zag
-    weights 100·(i%2)+i+10 (phase 1 selects only the even edges, so
-    multi-phase contraction is genuinely exercised) and chords
-    (i, i+2) at weight 100000+i — each chord is the unique heaviest
-    edge of its triangle, so the MSF is EXACTLY the path, which the
-    oracle selects analytically (weight < 100000). Distinct weights →
-    unique MSF; integer-valued doubles → exact cross-engine."""
-    from threat_intelligence_knowledge_graph_spark.operators.mst import (
-        boruvka_mst,
-    )
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey")
-    idx = (
-        o.select(
-            (F.row_number().over(Window.orderBy("o_orderkey")) - 1).alias("i")
-        )
-        .filter(F.col("i") < 256)
-    )
-    a, b = idx.alias("a"), idx.alias("b")
-    ai = F.col("a.i")
-    path = a.join(b, F.col("b.i") == ai + 1).select(
-        ai.alias("src"),
-        F.col("b.i").alias("dst"),
-        (F.lit(100) * (ai % 2) + ai + 10).cast("double").alias("weight"),
-    )
-    chords = a.join(b, F.col("b.i") == ai + 2).select(
-        ai.alias("src"),
-        F.col("b.i").alias("dst"),
-        (F.lit(100000) + ai).cast("double").alias("weight"),
-    )
-    return boruvka_mst(path.unionByName(chords))
-
-
-def q_graph_single_linkage(spark, sf_dir):
-    """Single-linkage clusters (operators/mst.py::single_linkage_labels
-    — cut the Borůvka MSF at a distance threshold; components ARE the
-    dendrogram level) over the same planted chord-triangle graph as
-    q_graph_mst, threshold 109: even path edges (i, i+1) with i ≤ 98
-    survive (weight i+10 ≤ 108), every odd edge (weight 110+i) and
-    every later even edge (weight ≥ 110) is cut — clusters are
-    analytically the pairs {2k, 2k+1} for i ≤ 99 and singletons above,
-    which the oracle states in closed form (i − i%2 below 100, i
-    above)."""
-    from threat_intelligence_knowledge_graph_spark.operators.mst import (
-        single_linkage_labels,
-    )
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey")
-    idx = (
-        o.select(
-            (F.row_number().over(Window.orderBy("o_orderkey")) - 1).alias("i")
-        )
-        .filter(F.col("i") < 256)
-    )
-    a, b = idx.alias("a"), idx.alias("b")
-    ai = F.col("a.i")
-    path = a.join(b, F.col("b.i") == ai + 1).select(
-        ai.alias("src"),
-        F.col("b.i").alias("dst"),
-        (F.lit(100) * (ai % 2) + ai + 10).cast("double").alias("weight"),
-    )
-    chords = a.join(b, F.col("b.i") == ai + 2).select(
-        ai.alias("src"),
-        F.col("b.i").alias("dst"),
-        (F.lit(100000) + ai).cast("double").alias("weight"),
-    )
-    return single_linkage_labels(path.unionByName(chords), threshold=109.0)
-
-
 def q_graph_betweenness(spark, sf_dir):
     """Sampled Brandes betweenness over a planted directed graph from
     `nation`: chain n0→…→n11, parallel rails n_i→p_i→n_{i+2} at
@@ -1761,17 +1630,6 @@ def q_events_json_props(spark, sf_dir):
     )
 
 
-def q_curriculum_order(spark, sf_dir):
-    """Curriculum bucketing: token-count difficulty staged into 4
-    buckets via deterministic-sample nearest-rank boundaries (the
-    TeraSort range-boundary shape, md5-drawn sample)."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        curriculum_order,
-    )
-
-    return curriculum_order(_t(spark, sf_dir, "documents"))
-
-
 def q_events_type_cooccurrence(spark, sf_dir):
     """Behavioral co-occurrence edges from the event log: event types
     fired by the same user within the same hour, weight = #shared
@@ -2122,39 +1980,6 @@ def q_graph_eigenvector(spark, sf_dir):
     )
 
 
-def q_events_zorder(spark, sf_dir):
-    """Z-order (Morton) clustering key over (user_id, floor(value)) —
-    the OPTIMIZE ZORDER BY / Iceberg sort-rewrite key as a pure
-    Catalyst unrolled shift/mask/or chain: bit i of column j lands at
-    output bit i·n+j, out-of-range inputs clamp. Integer-exact, so the
-    oracle evaluates the identical bit arithmetic."""
-    from threat_intelligence_knowledge_graph_spark.operators.layout import (
-        morton_key,
-    )
-
-    e = _t(spark, sf_dir, "events")
-    key = morton_key(
-        [F.col("user_id").cast("long"), F.floor(F.col("value")).cast("long")],
-        bits=16,
-    )
-    return e.select("event_id", key.alias("zkey"))
-
-
-def q_sample_temperature(spark, sf_dir):
-    """Temperature-scaled mixture (share ∝ count^0.5 — the XLM-R
-    exponentiated-sampling / pretraining data-mixing knob) over order
-    status: α = 0.5 upweights the rare P status against O/F. sqrt is
-    correctly-rounded IEEE on both engines, so the water level and the
-    per-source thresholds are exactly reproducible; the oracle
-    recomputes the identical chain."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        temperature_mixture,
-    )
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    return temperature_mixture(o, "o_orderkey", "o_orderstatus", alpha=0.5)
-
-
 def q_graph_node2vec(spark, sf_dir):
     """Deterministic node2vec walks (Grover & Leskovec 2016) with
     strong second-order bias (p=4 discourages returns, q=0.25 pushes
@@ -2325,23 +2150,6 @@ def q_er_verified_matches(spark, sf_dir):
     )
 
 
-def q_sample_weighted(spark, sf_dir):
-    """Efraimidis-Spirakis weighted sample without replacement (k=50,
-    weight = doc length): md5-derived u, priority = -ln(u)/w rounded
-    to 6 with doc_id tie-break BEFORE the top-k cut — both engines
-    pick identical rows; TakeOrderedAndProject, no global sort."""
-    from threat_intelligence_knowledge_graph_spark.operators.packing import (
-        weighted_sample,
-    )
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").cast("double").alias("w")
-    )
-    return weighted_sample(d, "doc_id", "w", k=50).select(
-        "doc_id", "priority", "rk"
-    )
-
-
 def q_graph_transitivity(spark, sf_dir):
     """Global clustering coefficient over the planted 3-clique+pendant
     gadgets: per gadget 3 closed wedges of 5 total (degrees 2,2,3,1),
@@ -2378,42 +2186,6 @@ def q_graph_avg_nbr_deg(spark, sf_dir):
     return avg_neighbor_degree(_triangle_gadget_edges(spark, sf_dir))
 
 
-def q_events_k_anonymity(spark, sf_dir):
-    """k-anonymity audit of the (user_id, event_type, hour-of-day)
-    projection of the event log at k=5 — time-of-activity is the
-    classic indirect identifier: every quasi class smaller than 5 is
-    a release fingerprint. One keyed count-agg + filter."""
-    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-        k_anonymity_audit,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.hour("ts").cast("int").alias("hour")
-    )
-    return k_anonymity_audit(ev, ["user_id", "event_type", "hour"], k=5)
-
-
-def q_events_l_diversity(spark, sf_dir):
-    """l-diversity audit companion to the k-anonymity entry: for the
-    (user_id, event_type, hour) quasi projection, classes whose
-    sensitive attribute (the day-of-month of activity — the temporal
-    fingerprint) takes < 3 distinct values; ONE keyed aggregate with
-    partial count-distinct + scan-local filter."""
-    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-        l_diversity_audit,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.hour("ts").cast("int").alias("hour"),
-        F.dayofmonth("ts").cast("int").alias("day"),
-    )
-    return l_diversity_audit(
-        ev, ["user_id", "event_type", "hour"], "day", l=3
-    )
-
-
 def q_hll_user_overlap(spark, sf_dir):
     """Pairwise distinct-user overlap between event types by HLL
     inclusion-exclusion: per-type sketches from ONE scan, densified
@@ -2447,59 +2219,6 @@ def q_graph_hill_tail(spark, sf_dir):
     )
 
     return hill_tail(_triangle_gadget_edges(spark, sf_dir), d_min=2)
-
-
-def q_events_dp_counts(spark, sf_dir):
-    """ε-DP (type, user) counts via the seeded Laplace mechanism
-    (ε=0.5): md5 inverse-CDF noise makes the release a pure function
-    of the input — reproducible and oracle-auditable; only the noisy
-    column is emitted (the release posture)."""
-    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-        dp_noisy_counts,
-    )
-
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
-    )
-    return dp_noisy_counts(ev, ["event_type", "user_id"], epsilon=0.5)
-
-
-_DRIFT_COLUMNS = ("user_id", "event_type", "value", "props")
-
-
-def q_events_profile_drift(spark, sf_dir):
-    """Schema-profile drift between the even/odd event_id halves of
-    the events table (a synthetic two-batch split): per-column null
-    rates, exact distinct counts, and their deltas — each emitted
-    ratio one round-6 division. Oracle: per-column UNION ALL profile
-    generated from the same column tuple."""
-    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-        profile_drift,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    return profile_drift(
-        ev.filter(F.col("event_id") % 2 == 0),
-        ev.filter(F.col("event_id") % 2 == 1),
-        list(_DRIFT_COLUMNS),
-    )
-
-
-def q_events_ks_drift(spark, sf_dir):
-    """Two-sample KS distance of the `value` distribution between the
-    even/odd event_id halves: D's numerator |c_a·n_b − c_b·n_a| is an
-    exact integer, so the max and its location are integer-argmax
-    picks (value-ASC tiebreak) and D is ONE round-6 division."""
-    from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-        ks_two_sample,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    return ks_two_sample(
-        ev.filter(F.col("event_id") % 2 == 0),
-        ev.filter(F.col("event_id") % 2 == 1),
-        "value",
-    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -2541,9 +2260,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact_docs": q_dedup_exact_docs,
         "html_to_text": q_html_to_text,
         "skew_hot_entities": q_skew_hot_entities,
-        "train_val_split": q_train_val_split,
         "canonical_map": q_canonical_map,
-        "sample_stratified": q_sample_stratified,
         "graph_pagerank": q_graph_pagerank,
         "graph_pagerank_weighted": q_graph_pagerank_weighted,
         "graph_pagerank_personalized": q_graph_pagerank_personalized,
@@ -2555,26 +2272,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_ktruss": q_graph_ktruss,
         "graph_harmonic_closeness": q_graph_harmonic_closeness,
         "graph_sssp_weighted": q_graph_sssp_weighted,
-        "graph_mst": q_graph_mst,
-        "graph_single_linkage": q_graph_single_linkage,
         "graph_betweenness": q_graph_betweenness,
         "table_checks": q_table_checks,
         "graph_bfs_distances": q_graph_bfs_distances,
         "graph_anf": q_graph_anf,
         "graph_label_propagation": q_graph_label_propagation,
-        "sample_mixture": q_sample_mixture,
-        "split_oversized_docs": q_split_oversized_docs,
         "graph_connected_components": q_graph_connected_components,
         "graph_triangle_count": q_graph_triangle_count,
         "graph_node_similarity": q_graph_node_similarity,
         "graph_link_prediction": q_graph_link_prediction,
-        "curriculum_order": q_curriculum_order,
-        "sample_weighted": q_sample_weighted,
         "graph_transitivity": q_graph_transitivity,
         "graph_rich_club": q_graph_rich_club,
         "graph_avg_nbr_deg": q_graph_avg_nbr_deg,
-        "events_k_anonymity": q_events_k_anonymity,
-        "events_l_diversity": q_events_l_diversity,
         "hll_user_overlap": q_hll_user_overlap,
         "graph_degree_hist": q_graph_degree_hist,
         "graph_hill_tail": q_graph_hill_tail,
@@ -2596,8 +2305,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_louvain_weighted": q_graph_louvain_weighted,
         "graph_modularity": q_graph_modularity,
         "graph_node2vec": q_graph_node2vec,
-        "sample_temperature": q_sample_temperature,
-        "events_zorder_key": q_events_zorder,
         "graph_eigenvector": q_graph_eigenvector,
         "graph_cc_increment": q_graph_cc_increment,
         "url_normalize": q_url_normalize,
@@ -2612,9 +2319,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_sorted_neighborhood": q_er_sorted_neighborhood,
         "kg_schema_audit": q_kg_schema_audit,
         "er_verified_matches": q_er_verified_matches,
-        "events_dp_counts": q_events_dp_counts,
-        "events_profile_drift": q_events_profile_drift,
-        "events_ks_drift": q_events_ks_drift,
     }
 
 
@@ -3599,19 +3303,6 @@ def _anf_oracle_sql(hops: int = 2, m: int = 16) -> str:
     """
 
 
-def _morton_sql(exprs: list, bits: int = 16) -> str:
-    """Unrolled Morton interleave of SQL integer expressions — the
-    operators/layout.py::morton_key bit arithmetic verbatim (clamp to
-    [0, 2^bits), bit i of column j → output bit i·n+j)."""
-    n = len(exprs)
-    terms = []
-    for j, ex in enumerate(exprs):
-        v = f"least(greatest(cast({ex} AS bigint), 0), {(1 << bits) - 1})"
-        for i in range(bits):
-            terms.append(f"((({v} >> {i}) & 1) << {i * n + j})")
-    return " | ".join(terms)
-
-
 def _schema_audit_oracle_sql() -> str:
     """Conformance-audit oracle: the signature VALUES are generated
     from the SAME rule expansion the operator broadcasts
@@ -3669,44 +3360,6 @@ def _schema_audit_oracle_sql() -> str:
         LEFT JOIN sigs s
           ON l.pred = s.pred AND l.subj_label = s.subj_label
          AND l.obj_label = s.obj_label
-    """
-
-
-def _profile_drift_oracle_sql() -> str:
-    """Per-column profile UNION generated from the same _DRIFT_COLUMNS
-    tuple the Spark entry profiles (single source of truth); identical
-    round-6 ratio arithmetic (see q_events_profile_drift)."""
-
-    def _prof(side: str, pred: str) -> str:
-        parts = []
-        for c in _DRIFT_COLUMNS:
-            parts.append(
-                f"SELECT '{c}' AS col, count(*) AS n, "
-                f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS nu, "
-                f"count(DISTINCT {c}) AS nd "
-                f"FROM events WHERE {pred}"
-            )
-        return f"{side} AS ({' UNION ALL '.join(parts)})"
-
-    return f"""
-        WITH {_prof('pa', 'event_id % 2 = 0')},
-        {_prof('pb', 'event_id % 2 = 1')}
-        SELECT pa.col,
-               cast(pa.n AS bigint) AS n_a,
-               cast(pb.n AS bigint) AS n_b,
-               round(cast(pa.nu AS double) / cast(pa.n AS double), 6)
-                 AS null_rate_a,
-               round(cast(pb.nu AS double) / cast(pb.n AS double), 6)
-                 AS null_rate_b,
-               round(cast(pb.nu AS double) / cast(pb.n AS double)
-                     - cast(pa.nu AS double) / cast(pa.n AS double), 6)
-                 AS null_rate_delta,
-               cast(pa.nd AS bigint) AS n_distinct_a,
-               cast(pb.nd AS bigint) AS n_distinct_b,
-               CASE WHEN pa.nd > 0 THEN
-                 round(cast(pb.nd AS double) / cast(pa.nd AS double), 6)
-               END AS distinct_ratio
-        FROM pa JOIN pb USING (col)
     """
 
 
@@ -4128,28 +3781,6 @@ def oracle_sql() -> dict[str, str]:
             FROM x
             GROUP BY event_type
         """,
-        # Efraimidis-Spirakis weighted sample: md5-bucket u, priority
-        # -ln(u)/w round-6, (priority, doc_id) top-50 cut (see
-        # q_sample_weighted).
-        "sample_weighted": """
-            WITH w AS (
-              SELECT doc_id, cast(length(text) AS double) AS wt,
-                     cast(md5_number_upper('wsample:'
-                            || cast(doc_id AS varchar)) % 1000000 + 1
-                          AS double) / 1000001.0 AS u
-              FROM documents
-              WHERE length(text) > 0
-            ),
-            p AS (SELECT doc_id, round(-ln(u) / wt, 6) AS priority FROM w),
-            r AS (
-              SELECT doc_id, priority, row_number() OVER (
-                ORDER BY priority ASC, doc_id ASC
-              ) AS rk
-              FROM p
-            )
-            SELECT doc_id, priority, cast(rk AS int) AS rk
-            FROM r WHERE rk <= 50
-        """,
         # Global transitivity over the 3-clique+pendant gadgets is
         # ANALYTIC: each disjoint gadget contributes 3 closed wedges,
         # 1 triangle, 5 wedges (degrees 2,2,3,1) — see
@@ -4203,25 +3834,6 @@ def oracle_sql() -> dict[str, str]:
                      AS avg_nbr_deg
             FROM ks CROSS JOIN o
         """,
-        # k-anonymity audit: GROUP BY + HAVING < k (see
-        # q_events_k_anonymity).
-        "events_k_anonymity": """
-            SELECT user_id, event_type, cast(hour(ts) AS int) AS hour,
-                   cast(count(*) AS bigint) AS n
-            FROM events
-            GROUP BY user_id, event_type, hour(ts)
-            HAVING count(*) < 5
-        """,
-        # l-diversity: GROUP BY + HAVING count(DISTINCT sensitive) < l
-        # (see q_events_l_diversity).
-        "events_l_diversity": """
-            SELECT user_id, event_type, cast(hour(ts) AS int) AS hour,
-                   cast(count(*) AS bigint) AS n,
-                   cast(count(DISTINCT day(ts)) AS bigint) AS n_sensitive
-            FROM events
-            GROUP BY user_id, event_type, hour(ts)
-            HAVING count(DISTINCT day(ts)) < 3
-        """,
         "hll_user_overlap": _hll_overlap_oracle_sql(),
         # Degree histogram over the gadgets is analytic (see
         # q_graph_degree_hist).
@@ -4250,49 +3862,6 @@ def oracle_sql() -> dict[str, str]:
                             * ln(cast(3 AS double) / cast(2 AS double))), 6)
                      AS alpha
             FROM g
-        """,
-        "curriculum_order": """
-            WITH sc AS (
-              SELECT doc_id AS key,
-                     cast(len(regexp_extract_all(lower(text),
-                                                 '[a-z0-9]{2,}'))
-                          AS bigint) AS difficulty
-              FROM documents
-            ),
-            smp AS (
-              SELECT * FROM sc
-              WHERE md5_number_upper('curriculum:'
-                      || cast(key AS varchar)) % 1000000 < 50000
-            ),
-            r AS (
-              SELECT difficulty,
-                     row_number() OVER (ORDER BY difficulty ASC, key ASC)
-                       AS rn,
-                     count(*) OVER () AS n
-              FROM smp
-            ),
-            b AS (
-              SELECT max(CASE WHEN rn = (1 * n + 3) // 4
-                              THEN difficulty END) AS b1,
-                     max(CASE WHEN rn = (2 * n + 3) // 4
-                              THEN difficulty END) AS b2,
-                     max(CASE WHEN rn = (3 * n + 3) // 4
-                              THEN difficulty END) AS b3
-              FROM r
-            )
-            SELECT sc.key, sc.difficulty,
-                   cast(1
-                        + (CASE WHEN b.b1 IS NOT NULL
-                                 AND sc.difficulty > b.b1
-                                THEN 1 ELSE 0 END)
-                        + (CASE WHEN b.b2 IS NOT NULL
-                                 AND sc.difficulty > b.b2
-                                THEN 1 ELSE 0 END)
-                        + (CASE WHEN b.b3 IS NOT NULL
-                                 AND sc.difficulty > b.b3
-                                THEN 1 ELSE 0 END)
-                     AS integer) AS bucket
-            FROM sc CROSS JOIN b
         """,
         "graph_scc": """
             WITH RECURSIVE ks AS (
@@ -4434,13 +4003,6 @@ def oracle_sql() -> dict[str, str]:
             FROM k
         """,
         "html_to_text": _html_to_text_oracle_sql(),
-        "train_val_split": """
-            SELECT doc_id,
-                   CASE WHEN md5_number_upper('split:' || cast(doc_id AS varchar))
-                             % 1000000 < 900000
-                        THEN 'train' ELSE 'val' END AS split
-            FROM documents
-        """,
         "skew_hot_entities": f"""
             WITH triples AS ({_CONSTRUCTED_TRIPLES_SQL}),
             m AS (
@@ -4471,63 +4033,6 @@ def oracle_sql() -> dict[str, str]:
             FROM v JOIN m USING (k8)
             WHERE v.node_id <> m.canon
             ORDER BY v.node_id
-        """,
-        "sample_stratified": """
-            SELECT o_orderkey, o_orderstatus
-            FROM orders
-            WHERE md5_number_upper('sample:' || cast(o_orderkey AS varchar))
-                  % 1000000
-                  < CASE o_orderstatus WHEN 'O' THEN 100000
-                                       WHEN 'F' THEN 50000
-                                       WHEN 'P' THEN 500000
-                                       ELSE 0 END
-        """,
-        # Water level T = min(count_s / share_s) and per-source
-        # thresholds recomputed in the identical double expression
-        # order: ((1000000 * share) * T) / count. Shares cast to double
-        # (bare 0.5 is DECIMAL in DuckDB).
-        "sample_mixture": """
-            WITH cnt AS (
-              SELECT o_orderstatus AS src, count(*) AS n
-              FROM orders WHERE o_orderstatus IN ('O', 'F', 'P')
-              GROUP BY o_orderstatus
-            ),
-            tm AS (
-              SELECT min(n / (CASE src WHEN 'O' THEN cast(0.5 AS double)
-                                       WHEN 'F' THEN cast(0.3 AS double)
-                                       ELSE cast(0.2 AS double) END)) AS t
-              FROM cnt
-            )
-            SELECT o_orderkey, o_orderstatus
-            FROM orders o
-            JOIN cnt ON cnt.src = o.o_orderstatus
-            CROSS JOIN tm
-            WHERE md5_number_upper('mixture:' || cast(o_orderkey AS varchar))
-                    % 1000000
-                  < ((1000000 * (CASE o_orderstatus
-                                 WHEN 'O' THEN cast(0.5 AS double)
-                                 WHEN 'F' THEN cast(0.3 AS double)
-                                 ELSE cast(0.2 AS double) END)) * tm.t) / cnt.n
-        """,
-        "split_oversized_docs": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(coalesce(text, '')), '\s+') AS toks
-              FROM documents
-            ),
-            p AS (
-              SELECT doc_id, toks,
-                     unnest(range(cast(ceil(len(toks) / cast(40 AS double))
-                                       AS bigint))) AS i
-              FROM t
-            )
-            SELECT doc_id,
-                   cast(i AS int) AS piece_idx,
-                   array_to_string(toks[(i * 40 + 1):(i * 40 + 40)], ' ') AS text,
-                   cast(len(regexp_split_to_array(
-                     array_to_string(toks[(i * 40 + 1):(i * 40 + 40)], ' '),
-                     '\s+')) AS bigint) AS n_tokens
-            FROM p
         """,
         "graph_label_propagation": _lpa_oracle_sql(iterations=4),
         "graph_anf": _anf_oracle_sql(hops=2, m=16),
@@ -4774,35 +4279,6 @@ def oracle_sql() -> dict[str, str]:
             FROM md WHERE d > 0 GROUP BY id
         """,
         "graph_sssp_weighted": _sssp_oracle_sql(iterations=12),
-        # The planted MSF is analytic: chords (i, i+2) are each the
-        # unique heaviest edge of their triangle, so Borůvka's answer
-        # is exactly the path — selected here by the weight rule.
-        "graph_mst": """
-            WITH idx AS (
-              SELECT i FROM (
-                SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS i
-                FROM orders
-              ) WHERE i < 256
-            )
-            SELECT a.i AS src, b.i AS dst,
-                   cast(100 * (a.i % 2) + a.i + 10 AS double) AS weight
-            FROM idx a JOIN idx b ON b.i = a.i + 1
-        """,
-        # Closed-form single-linkage clusters at threshold 109 on the
-        # planted graph: pairs {2k, 2k+1} while even-edge weights
-        # (i + 10) stay ≤ 109, singletons beyond; cluster labels are
-        # min-id per component, matching connected_components.
-        "graph_single_linkage": """
-            WITH idx AS (
-              SELECT i FROM (
-                SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS i
-                FROM orders
-              ) WHERE i < 256
-            )
-            SELECT i AS id,
-                   CASE WHEN i <= 99 THEN i - (i % 2) ELSE i END AS cluster
-            FROM idx
-        """,
         "graph_betweenness": _betweenness_oracle_sql(levels=13),
         "table_checks": """
             WITH a AS (
@@ -4827,32 +4303,6 @@ def oracle_sql() -> dict[str, str]:
         "graph_node2vec": _node2vec_cte_sql(4, 2, 4.0, 0.25)
         + """
             SELECT walk_id, start_id, step, node FROM walks
-        """,
-        # Temperature mixture: identical sqrt weights, water level, and
-        # pinned threshold evaluation order (1e6 · w · T / n) — see
-        # q_sample_temperature / operators.packing.temperature_mixture.
-        "sample_temperature": """
-            WITH c AS (
-              SELECT o_orderstatus AS s, cast(count(*) AS bigint) AS n
-              FROM orders WHERE o_orderstatus IS NOT NULL GROUP BY 1
-            ),
-            w AS (SELECT s, n, sqrt(cast(n AS double)) AS wgt FROM c),
-            t AS (SELECT min(n / wgt) AS tmax FROM w),
-            r AS (
-              SELECT s, 1000000.0 * wgt * t.tmax / n AS thresh
-              FROM w CROSS JOIN t
-            )
-            SELECT o.o_orderkey, o.o_orderstatus
-            FROM orders o JOIN r ON o.o_orderstatus = r.s
-            WHERE cast(md5_number_upper('mixture-temp:'
-                    || cast(o_orderkey AS varchar)) % 1000000 AS double)
-                  < r.thresh
-        """,
-        "events_zorder_key": f"""
-            SELECT event_id,
-                   cast({_morton_sql(['user_id', 'floor(value)'], 16)}
-                     AS bigint) AS zkey
-            FROM events
         """,
         "graph_eigenvector": _eigenvector_oracle_sql(3),
         # CMS join-size estimate: identical cells, bucketwise integer
@@ -5159,60 +4609,5 @@ def oracle_sql() -> dict[str, str]:
               FROM cand
             )
             SELECT * FROM scored WHERE similarity >= 0.45
-        """,
-        "events_profile_drift": _profile_drift_oracle_sql(),
-        # Two-sample KS: identical integer-numerator cumulative chain,
-        # integer argmax with value-ASC tiebreak
-        # (see q_events_ks_drift).
-        "events_ks_drift": """
-            WITH m AS (
-              SELECT value AS v,
-                     CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS da,
-                     CASE WHEN event_id % 2 = 1 THEN 1 ELSE 0 END AS db
-              FROM events WHERE value IS NOT NULL
-            ),
-            per AS (
-              SELECT v, sum(da) AS da, sum(db) AS db FROM m GROUP BY v
-            ),
-            cum AS (
-              SELECT v,
-                     sum(da) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) AS ca,
-                     sum(db) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) AS cb,
-                     sum(da) OVER () AS na,
-                     sum(db) OVER () AS nb
-              FROM per
-            )
-            SELECT cast(na AS bigint) AS n_a,
-                   cast(nb AS bigint) AS n_b,
-                   v AS at_value,
-                   round(cast(abs(ca * nb - cb * na) AS double)
-                         / cast(na * nb AS double), 6) AS ks_d
-            FROM cum WHERE na > 0 AND nb > 0
-            ORDER BY abs(ca * nb - cb * na) DESC, v ASC LIMIT 1
-        """,
-        "events_dp_counts": """
-            WITH c AS (
-              SELECT event_type, user_id, count(*) AS tc
-              FROM events
-              WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-              GROUP BY 1, 2
-            ),
-            u AS (
-              SELECT event_type, user_id, tc,
-                     (cast(md5_number_upper('dp:'
-                        || coalesce(event_type, chr(0) || 'null')
-                        || chr(31)
-                        || coalesce(cast(user_id AS varchar),
-                                    chr(0) || 'null')) % 1000000
-                        AS double) + 0.5) / 1000000.0 AS u
-              FROM c
-            )
-            SELECT event_type, user_id,
-                   round(tc + (-(1.0 / 0.5) * sign(u - 0.5)
-                         * ln(1.0 - 2.0 * abs(u - 0.5))), 6)
-                     AS noisy_count
-            FROM u
         """,
     }

@@ -18,8 +18,10 @@ Local::
     python jobs/run_pipeline.py --input /tmp/transcripts.parquet \
         --warehouse /tmp/kg-wh --run-id dev
 
-Resume: re-running with the same --run-id skips committed stages and is
-idempotent (MERGE sinks). Build the --py-files zip from the repo root::
+Resume: re-running with the same --run-id skips committed stages and
+commits nothing (the audit is recomputed and printed, not re-recorded);
+only --compact and --vacuum-keep still write. Build the --py-files zip
+from the repo root::
 
     zip -r tikg_pyfiles.zip threat_intelligence_knowledge_graph_spark -i '*.py'
 """
@@ -95,14 +97,16 @@ def main() -> None:
     except ValueError as e:  # a mistyped input file: one line, no traceback
         raise SystemExit(str(e)) from None
     # Quarantine-don't-drop: bad feed rows land in an auditable table.
-    # ALWAYS overwrite — a clean run must replace (empty out) any stale
-    # quarantine from a previous run, or post-run audits would blame the
-    # current feed for old rows — and stamp run_id on the rows themselves
-    # so snapshots are attributable even when read outside the catalog.
-    catalog.overwrite(
-        quarantined.withColumn("run_id", F.lit(args.run_id)),
-        "quarantine", args.run_id, "ingest",
-    )
+    # Each new run overwrites it — a clean run must replace (empty out)
+    # any stale quarantine from a previous run, or post-run audits would
+    # blame the current feed for old rows — and stamps run_id on the rows
+    # themselves so snapshots are attributable even when read outside the
+    # catalog. Re-running a committed run_id commits nothing.
+    if not catalog.committed("quarantine", args.run_id, "ingest"):
+        catalog.overwrite(
+            quarantined.withColumn("run_id", F.lit(args.run_id)),
+            "quarantine", args.run_id, "ingest",
+        )
     n_bad = catalog.rows("quarantine")
     if n_bad:
         print({"quarantined_rows": n_bad})

@@ -9,6 +9,7 @@ pushdown/broadcast/codegen shapes.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -53,39 +54,6 @@ def _anf_round_plan(spark):
         "id", F.array(*[F.lit(0) for _ in range(16)]).alias("regs")
     )
     return _anf_round(sym, sk, 16)
-
-
-def _mst_phase_plan(em, spark, sf_dir):
-    """One Borůvka phase's un-checkpointed selection plan over the
-    planted chord-triangle graph (the q_graph_mst input)."""
-    from pyspark.sql import functions as F
-    from threat_intelligence_knowledge_graph_spark.operators.mst import (
-        _canonical_edges,
-        _phase_select,
-    )
-
-    from pyspark.sql import Window
-
-    o = em._t(spark, sf_dir, "orders").select("o_orderkey")
-    idx = o.select(
-        (F.row_number().over(Window.orderBy("o_orderkey")) - 1).alias("i")
-    ).filter(F.col("i") < 256)
-    a, b = idx.alias("a"), idx.alias("b")
-    ai = F.col("a.i")
-    edges = a.join(b, F.col("b.i") == ai + 1).select(
-        ai.alias("src"),
-        F.col("b.i").alias("dst"),
-        (F.lit(100) * (ai % 2) + ai + 10).cast("double").alias("weight"),
-    )
-    e = _canonical_edges(edges, "src", "dst", "weight")
-    comp = (
-        e.select(F.col("a").alias("id"))
-        .union(e.select(F.col("b").alias("id")))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-    )
-    _, sel = _phase_select(e, comp)
-    return sel
 
 
 def main(sf_dir: str) -> int:
@@ -185,12 +153,10 @@ def main(sf_dir: str) -> int:
         [("c1", 0, "a", "The domain evil.example.net resolves to 10.0.0.1.", None, None)],
         schema=TRANSCRIPTS_SCHEMA,
     )
-    import re as _re
-
     fused_plan = plan_of(extract_graph_records_fused(tr, num_partitions=4))
     # formatted mode prints each node in the tree AND a details header
     # "(n) Exchange" — count only the details headers.
-    n_exchanges = len(_re.findall(r"^\(\d+\) Exchange", fused_plan, _re.MULTILINE))
+    n_exchanges = len(re.findall(r"^\(\d+\) Exchange", fused_plan, re.MULTILINE))
     if n_exchanges == 1:
         print("PASS fused_single_exchange")
     else:
@@ -198,13 +164,6 @@ def main(sf_dir: str) -> int:
         print(f"FAIL fused_single_exchange: exchanges={n_exchanges}")
 
     # round 3 shapes -------------------------------------------------------
-    # Stratified sampling: a pure scan+filter — no exchange, no Python.
-    check(
-        "stratified_sample_no_shuffle",
-        em.q_sample_stratified(spark, sf_dir),
-        ["Filter"],
-        must_not=["Exchange", "BatchEvalPython", "ArrowEvalPython"],
-    )
     check(
         # Equi-joins only (keyed shuffles); an unkeyed pair blowup would
         # surface as CartesianProduct/BroadcastNestedLoopJoin. Python
@@ -252,16 +211,6 @@ def main(sf_dir: str) -> int:
         "ktruss_round_no_cartesian",
         _ktruss_round_plan(em, spark, sf_dir),
         ["Join"],
-        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
-    )
-    check(
-        # Borůvka phase: endpoint→component labels are two keyed
-        # equi-joins, min-edge selection is a hash aggregate with a
-        # map-side partial (partial_min in the plan) — never a
-        # cartesian pair blowup, never Python.
-        "mst_phase_no_cartesian",
-        _mst_phase_plan(em, spark, sf_dir),
-        ["Join", "partial_min"],
         must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "EvalPython"],
     )
     # round 5 shapes -------------------------------------------------------
@@ -326,16 +275,6 @@ def main(sf_dir: str) -> int:
         ["HashAggregate"],
         must_not=["EvalPython", "CartesianProduct"],
     )
-    # 62: curriculum assignment is a pure scan-local projection — the
-    # boundary collect happens at build time; the returned frame must
-    # have NO sort, exchange, join, or aggregate (a global-ntile
-    # implementation would show a SinglePartition sort here).
-    check(
-        "curriculum_scan_local_assignment",
-        em.q_curriculum_order(spark, sf_dir),
-        ["Scan parquet"],
-        must_not=["Sort", "Exchange", "Join", "HashAggregate", "EvalPython"],
-    )
     # 66: sorted-neighborhood pair generation is a keyed equi-join on
     # the rank block (never a cartesian/range join), rank windows are
     # bucket-partitioned (no SinglePartition global window: the plan's
@@ -369,23 +308,6 @@ def main(sf_dir: str) -> int:
         ["levenshtein"],
         must_not=["EvalPython", "CartesianProduct", "BroadcastNestedLoopJoin"],
     )
-    # 73: weighted sampling is priority projection + ONE
-    # TakeOrderedAndProject (never a global sort/window over the
-    # corpus); the rank window runs over the k surviving rows only, so
-    # the plan has NO exchange at all in local mode.
-    plan = plan_of(em.q_sample_weighted(spark, sf_dir))
-    import re as _re2
-
-    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
-    if (
-        "TakeOrderedAndProject" in plan
-        and "EvalPython" not in plan
-        and n_ex == 0
-    ):
-        print("PASS weighted_sample_take_ordered")
-    else:
-        failures.append(("weighted_sample_take_ordered", f"exchanges={n_ex}"))
-        print(f"FAIL weighted_sample_take_ordered: exchanges={n_ex}")
     # 75: transitivity — the audited canonical three-way triangle join
     # (keyed equi-joins only; the only nested-loop joins are the final
     # 1-row × 1-row stat combines), exact-integer wedge aggregate.
@@ -416,30 +338,12 @@ def main(sf_dir: str) -> int:
             "SortAggregate",
         ],
     )
-    # 79: k-anonymity audit — ONE map-side-combining count aggregate +
-    # scan-local filter; a single quasi-key exchange.
-    plan = plan_of(em.q_events_k_anonymity(spark, sf_dir))
-    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
-    if n_ex <= 1 and "EvalPython" not in plan and "Join" not in plan:
-        print("PASS k_anonymity_single_exchange")
-    else:
-        failures.append(("k_anonymity_single_exchange", f"exchanges={n_ex}"))
-        print(f"FAIL k_anonymity_single_exchange: exchanges={n_ex}")
-    # 81: l-diversity — the two-phase distinct aggregate only (quasi +
-    # (quasi, sensitive) partials), no join, no Python.
-    plan = plan_of(em.q_events_l_diversity(spark, sf_dir))
-    n_ex = len(_re2.findall(r"^\(\d+\) Exchange", plan, _re2.M))
-    if n_ex <= 2 and "EvalPython" not in plan and "Join" not in plan:
-        print("PASS l_diversity_two_phase_distinct")
-    else:
-        failures.append(("l_diversity_two_phase_distinct", f"exchanges={n_ex}"))
-        print(f"FAIL l_diversity_two_phase_distinct: exchanges={n_ex}")
     # 83: HLL overlap — the checkpointed sketch means the RAW corpus
     # is scanned at most once in the pair plan (zero parquet scans
     # after the eager checkpoint), and the pair join is a register
     # equi-join, never cartesian.
     plan = plan_of(em.q_hll_user_overlap(spark, sf_dir))
-    n_scan = len(_re2.findall(r"^\(\d+\) Scan parquet", plan, _re2.M))
+    n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
     if (
         n_scan <= 1
         and "CartesianProduct" not in plan
@@ -456,31 +360,6 @@ def main(sf_dir: str) -> int:
         em.q_graph_hill_tail(spark, sf_dir),
         ["HashAggregate"],
         must_not=["CartesianProduct", "EvalPython", "SortAggregate"],
-    )
-    # 101: DP counts — ONE keyed count + scan-local noise projection;
-    # no join, no window, no Python.
-    check(
-        "dp_counts_single_aggregate",
-        em.q_events_dp_counts(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "Join", "Window"],
-    )
-    # 105: profile drift — one aggregate pass per batch (the
-    # multi-distinct expand is schema-bounded) + a schema-sized join;
-    # no window, no Python, no cartesian.
-    check(
-        "profile_drift_schema_sized",
-        em.q_events_profile_drift(spark, sf_dir),
-        ["HashAggregate"],
-        must_not=["CartesianProduct", "EvalPython", "Window"],
-    )
-    # 108: KS drift — one value-keyed count, the distinct-value
-    # cumulative window, one TakeOrdered argmax; no join, no Python.
-    check(
-        "ks_drift_cumulative_argmax",
-        em.q_events_ks_drift(spark, sf_dir),
-        ["HashAggregate", "Window", "TakeOrderedAndProject"],
-        must_not=["CartesianProduct", "EvalPython", "Join"],
     )
     spark.stop()
     print(f"\n{'OK' if not failures else 'FAILURES: ' + str(failures)}")

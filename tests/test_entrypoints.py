@@ -2,8 +2,9 @@
 CLI parses ``--help``. A job that imports a removed module would
 otherwise only fail at spark-submit time. Also pins the input boundary
 of the graph query pack (its queries read only the registered KG views),
-README's list of modules no entry point reaches, and that Spark's Python
-workers import the package from any working directory."""
+README's list of modules no entry point reaches, that Spark's Python
+workers import the package from any working directory, and that the
+contract (`__spark_entry__.py`) and the plan guards still resolve."""
 
 import ast
 import importlib
@@ -183,3 +184,62 @@ def test_readme_lists_the_modules_no_entry_point_reaches():
         if _module_file(m).name != "__init__.py"
     }
     assert unreached == _readme_unreached()
+
+
+def _defined_names(path):
+    """Names bound at the top level of a module file."""
+    names = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def test_contract_and_plan_guards_resolve():
+    """The contract (__spark_entry__.py) and the plan guards
+    (scripts/plan_audit.py) still resolve after a cut: every entry has an
+    oracle, every ``em.<name>`` the guards call exists, and every name
+    they import from the package is defined where they import it from."""
+    sys.path.insert(0, str(REPO))
+    try:
+        import __spark_entry__ as em
+    finally:
+        sys.path.remove(str(REPO))
+    assert em.queries().keys() == em.oracle_sql().keys()
+
+    audit = ast.parse((REPO / "scripts" / "plan_audit.py").read_text())
+    missing = sorted(
+        n.attr
+        for n in ast.walk(audit)
+        if isinstance(n, ast.Attribute)
+        and isinstance(n.value, ast.Name)
+        and n.value.id == "em"
+        and not hasattr(em, n.attr)
+    )
+    assert not missing, missing
+
+    unresolved = []
+    for f in (REPO / "__spark_entry__.py", REPO / "scripts" / "plan_audit.py"):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[0] == pkg.__name__
+            ):
+                continue
+            path = _module_file(node.module)
+            if not path.exists():
+                unresolved.append((f.name, node.module))
+                continue
+            defined = _defined_names(path)
+            unresolved += [
+                (f.name, f"{node.module}.{a.name}")
+                for a in node.names
+                if a.name not in defined
+                and not _module_file(f"{node.module}.{a.name}").exists()
+            ]
+    assert not unresolved, unresolved

@@ -1,7 +1,11 @@
 """Pipeline-level tests: checkpoint/resume, idempotence, lineage/metrics."""
 
 import json
+import os
+import subprocess
+import sys
 import uuid
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -39,6 +43,11 @@ def _job_ids(spark, fn) -> list[int]:
     # Job starts reach the status tracker through the listener bus.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _logs(root) -> dict[str, str]:
+    """Every table's commit log under a warehouse root, as written."""
+    return {p.parent.name: p.read_text() for p in Path(root).glob("*/_log.json")}
 
 
 def _strip_metadata(catalog, name: str) -> None:
@@ -545,3 +554,64 @@ class TestJobCounts:
         assert _job_ids(
             spark, lambda: run_pipeline(spark, transcripts, catalog, run_id="r1")
         ) == []
+
+    def test_incremental_rerun_commits_nothing(self, spark, transcripts, tmp_path):
+        from threat_intelligence_knowledge_graph_spark.plans.pipeline import (
+            run_incremental,
+        )
+
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        first = run_incremental(spark, transcripts, catalog, run_id="d1")
+        logs = _logs(tmp_path / "wh")
+        assert "conv_seen" in logs
+        rerun = []
+        assert _job_ids(
+            spark,
+            lambda: rerun.append(
+                run_incremental(spark, transcripts, catalog, run_id="d1")
+            ),
+        ) == []
+        assert _logs(tmp_path / "wh") == logs
+        assert rerun[0].counts == first.counts
+
+    def test_audit_rerun_records_once(self, spark, transcripts, tmp_path):
+        from threat_intelligence_knowledge_graph_spark.plans.pipeline import (
+            audit_graph_tables,
+        )
+
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        run_pipeline(spark, transcripts, catalog, run_id="r1")
+        first = audit_graph_tables(spark, catalog, run_id="r1").collect()
+        second = audit_graph_tables(spark, catalog, run_id="r1").collect()
+        assert sorted(first) == sorted(second)
+        audits = [e for e in catalog.log("metrics") if e["stage"] == "audit"]
+        assert len(audits) == 1
+
+
+def test_job_rerun_commits_nothing(spark, transcripts, tmp_path):
+    """Re-running jobs/run_pipeline.py with a committed --run-id leaves
+    every table's commit log as the first run wrote it."""
+    transcripts.write.parquet(str(tmp_path / "in"))
+    job = Path(__file__).resolve().parents[1] / "jobs" / "run_pipeline.py"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.pop("SPARK_DRIVER_MEMORY", None)  # Spark's 1g default is plenty
+    env["SPARK_MASTER"] = "local[2]"
+
+    def run():
+        r = subprocess.run(
+            [sys.executable, str(job), "--input", str(tmp_path / "in"),
+             "--warehouse", str(tmp_path / "wh"), "--run-id", "r1"],
+            cwd=tmp_path,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert "'audit': 'PASS'" in r.stdout
+
+    run()
+    logs = _logs(tmp_path / "wh")
+    assert {"quarantine", "extraction", "nodes", "edges", "triples", "metrics"} <= set(logs)
+    run()
+    assert _logs(tmp_path / "wh") == logs

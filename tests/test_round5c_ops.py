@@ -1,6 +1,5 @@
-"""Round-5 continuation operators, batch C: A-ES weighted sampling,
-global transitivity, the other graph analytics and the k-anonymity and
-l-diversity audits."""
+"""Round-5 continuation operators, batch C: global transitivity, the
+other graph analytics and HLL group overlap."""
 
 from __future__ import annotations
 
@@ -11,52 +10,6 @@ import pytest
 from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
     transitivity,
 )
-from threat_intelligence_knowledge_graph_spark.operators.packing import (
-    weighted_sample,
-)
-
-
-class TestWeightedSample:
-    def _docs(self, spark):
-        return spark.createDataFrame(
-            [(i, float(1 + (i % 5))) for i in range(100)],
-            "doc_id: long, w: double",
-        )
-
-    def test_k_rows_and_determinism(self, spark):
-        docs = self._docs(spark)
-        a = weighted_sample(docs, "doc_id", "w", k=10).collect()
-        b = weighted_sample(docs, "doc_id", "w", k=10).collect()
-        assert len(a) == 10
-        assert [r.doc_id for r in a] == [r.doc_id for r in b]
-        assert [r.rk for r in a] == list(range(1, 11))
-
-    def test_nonpositive_and_null_weights_excluded(self, spark):
-        docs = spark.createDataFrame(
-            [(1, 1.0), (2, 0.0), (3, -1.0), (4, None), (5, 2.0)],
-            "doc_id: long, w: double",
-        )
-        got = {r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=10).collect()}
-        assert got == {1, 5}
-
-    def test_heavy_weight_always_sampled(self, spark):
-        docs = spark.createDataFrame(
-            [(i, 1.0) for i in range(50)] + [(999, 1e9)],
-            "doc_id: long, w: double",
-        )
-        got = {r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=5).collect()}
-        # Exp(1e9) priority is ~1e-9 of any unit-weight row's: always in.
-        assert 999 in got
-
-    def test_salt_redraws(self, spark):
-        docs = self._docs(spark)
-        a = [r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=10, salt="s1").collect()]
-        b = [r.doc_id for r in weighted_sample(docs, "doc_id", "w", k=10, salt="s2").collect()]
-        assert a != b
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError):
-            weighted_sample(self._docs(spark), "doc_id", "w", k=0)
 
 
 class TestTransitivity:
@@ -102,9 +55,6 @@ class TestTransitivity:
 from threat_intelligence_knowledge_graph_spark.operators.graph_algos import (
     avg_neighbor_degree,
     rich_club,
-)
-from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-    k_anonymity_audit,
 )
 
 
@@ -167,76 +117,9 @@ class TestAvgNeighborDegree:
         }
 
 
-class TestKAnonymityAudit:
-    def test_risky_classes(self, spark):
-        rows = [("u1", "t1")] * 5 + [("u2", "t1")] * 2 + [("u3", "t2")]
-        df = spark.createDataFrame(rows, "user_id: string, event_type: string")
-        got = {
-            (r.user_id, r.event_type): r.n
-            for r in k_anonymity_audit(df, ["user_id", "event_type"], k=5).collect()
-        }
-        assert got == {("u2", "t1"): 2, ("u3", "t2"): 1}
-
-    def test_anonymous_table_empty(self, spark):
-        rows = [("u1", "t1")] * 5 + [("u2", "t1")] * 5
-        df = spark.createDataFrame(rows, "user_id: string, event_type: string")
-        assert k_anonymity_audit(df, ["user_id", "event_type"], k=5).collect() == []
-
-    def test_null_is_a_quasi_value(self, spark):
-        df = spark.createDataFrame(
-            [("u1", None), ("u1", None), ("u2", "t")],
-            "user_id: string, event_type: string",
-        )
-        got = k_anonymity_audit(df, ["user_id", "event_type"], k=3).collect()
-        assert {(r.user_id, r.event_type, r.n) for r in got} == {
-            ("u1", None, 2),
-            ("u2", "t", 1),
-        }
-
-    def test_validation(self, spark):
-        df = spark.createDataFrame([("a",)], "x: string")
-        with pytest.raises(ValueError):
-            k_anonymity_audit(df, [], k=5)
-        with pytest.raises(ValueError):
-            k_anonymity_audit(df, ["x"], k=1)
-
-
-from threat_intelligence_knowledge_graph_spark.operators.quality_checks import (
-    l_diversity_audit,
-)
 from threat_intelligence_knowledge_graph_spark.operators.sketches import (
     hll_overlap,
 )
-
-
-class TestLDiversityAudit:
-    def test_homogeneous_class_flagged(self, spark):
-        df = spark.createDataFrame(
-            [("q1", "a"), ("q1", "a"), ("q1", "a"),
-             ("q2", "a"), ("q2", "b"), ("q2", "c"),
-             ("q3", "a"), ("q3", "b")],
-            "quasi: string, sens: string",
-        )
-        got2 = {(r.quasi, r.n, r.n_sensitive)
-                for r in l_diversity_audit(df, ["quasi"], "sens", l=2).collect()}
-        assert got2 == {("q1", 3, 1)}
-        got3 = {(r.quasi, r.n_sensitive)
-                for r in l_diversity_audit(df, ["quasi"], "sens", l=3).collect()}
-        assert got3 == {("q1", 1), ("q3", 2)}
-
-    def test_null_sensitive_is_one_value(self, spark):
-        df = spark.createDataFrame(
-            [("q", None), ("q", None)], "quasi: string, sens: string"
-        )
-        row = l_diversity_audit(df, ["quasi"], "sens", l=2).collect()[0]
-        assert (row.n, row.n_sensitive) == (2, 1)
-
-    def test_validation(self, spark):
-        df = spark.createDataFrame([("q", "a")], "quasi: string, sens: string")
-        with pytest.raises(ValueError):
-            l_diversity_audit(df, [], "sens", l=2)
-        with pytest.raises(ValueError):
-            l_diversity_audit(df, ["quasi"], "sens", l=1)
 
 
 class TestHllOverlap:

@@ -1,6 +1,14 @@
-"""Count-min sketch: guarantees, determinism, and sizing."""
+"""Count-min sketch: guarantees, determinism, and sizing; the md5 hash
+primitives the sketches build on."""
+
+import hashlib
 
 from pyspark.sql import functions as F
+
+from threat_intelligence_knowledge_graph_spark.operators.hashing import (
+    _md5_bucket,
+    _md5_u64,
+)
 
 from threat_intelligence_knowledge_graph_spark.operators.sketches import (
     hll_build,
@@ -13,6 +21,21 @@ from threat_intelligence_knowledge_graph_spark.operators.sketches import (
     cms_estimate,
     cms_heavy_hitters,
 )
+
+
+def test_md5_primitives_match_python_md5(spark):
+    keys = [f"k{i}" for i in range(48)] + ["", "é"]
+    df = spark.createDataFrame([(k,) for k in keys], ["k"])
+    got = df.select(
+        "k", _md5_u64("k", "s1").alias("u64"), _md5_bucket("k", "s1").alias("b")
+    ).collect()
+    assert len(got) == 50
+    for r in got:
+        want = int.from_bytes(
+            hashlib.md5(f"s1:{r.k}".encode()).digest()[:8], "little"
+        )
+        assert int(r.u64) == want
+        assert r.b == want % 1_000_000
 
 
 def _skewed(spark):

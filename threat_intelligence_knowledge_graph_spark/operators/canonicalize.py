@@ -150,7 +150,7 @@ def sorted_neighborhood_pairs(
     bucket; the window caps per-row output at ``window - 1`` pairs
     regardless, so skew affects parallelism, not volume.
     """
-    from .packing import sampled_boundaries
+    from .hashing import sampled_boundaries
 
     if window < 2:
         raise ValueError("window must be >= 2")

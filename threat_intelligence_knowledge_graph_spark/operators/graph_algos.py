@@ -906,7 +906,7 @@ def node2vec_walks(
         raise ValueError("walk_length >= 0 and walks_per_node >= 1")
     if p <= 0 or q <= 0:
         raise ValueError("p and q must be positive")
-    from .packing import _md5_bucket
+    from .hashing import _md5_bucket
 
     e = (
         edges.select(
@@ -1678,7 +1678,7 @@ def anf_ball_sizes(
     hash-checked integer witness; a raw-HLL estimate, no small-range
     correction, per sketches.py).
     """
-    from .packing import _md5_u64
+    from .hashing import _md5_u64
     from .sketches import _HLL_SCALE, _hll_rank
 
     if not 1 <= p <= 8:

@@ -14,7 +14,7 @@ per-partition lineage rows (``plans/pipeline.py``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # A check is (name, violations_aggregate_column). The aggregate must be
 # valid inside one df.agg(...) call.
@@ -95,316 +95,5 @@ def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
             "r.check",
             "r.violations",
             (F.col("r.violations") == 0).alias("passed"),
-        )
-    )
-
-
-def k_anonymity_audit(
-    df: DataFrame,
-    quasi_cols: list[str],
-    k: int = 5,
-) -> DataFrame:
-    """Re-identification risk audit before a corpus/telemetry release
-    (Sweeney's k-anonymity): every quasi-identifier combination whose
-    equivalence class holds FEWER than ``k`` rows, as (quasi cols...,
-    n) — each such row is a fingerprint that singles out ≲ k
-    individuals, the governance gate a training-data pipeline runs
-    next to PII scrubbing (scrub_pii removes direct identifiers; THIS
-    catches the indirect ones: a rare (user, type, hour) combination
-    identifies without containing a name). Empty output ⇔ the
-    projection is k-anonymous. NULL is a quasi-value like any other
-    (a NULL birthday still narrows the crowd).
-
-    Scale shape: ONE map-side-combining keyed count-aggregate + a
-    scan-local filter — the audit costs one shuffle of the distinct
-    combinations regardless of table size; the risky set it returns
-    is small by definition (classes below k).
-    """
-    if not quasi_cols:
-        raise ValueError("quasi_cols must be non-empty")
-    if k < 2:
-        raise ValueError("k must be >= 2 (k=1 is vacuous)")
-    return (
-        df.groupBy(*quasi_cols)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") < k)
-        .select(*quasi_cols, F.col("n").cast("long").alias("n"))
-    )
-
-
-def l_diversity_audit(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str,
-    l: int = 3,
-) -> DataFrame:
-    """The companion gate to :func:`k_anonymity_audit` (Machanavajjhala
-    et al. 2007): a class can be k-anonymous yet leak — if all k rows
-    share ONE sensitive value, linking any member to the class reveals
-    it (homogeneity attack). Returns every quasi-identifier class whose
-    sensitive attribute takes FEWER than ``l`` distinct values, as
-    (quasi cols..., n, n_sensitive). Empty output ⇔ the projection is
-    l-diverse. NULL sensitive values count as one value (a class that
-    is all-NULL is maximally homogeneous — exactly what must surface).
-
-    Scale shape: ONE keyed aggregate with a partial count-distinct
-    (the distinct expansion shuffles (quasi, sensitive) pairs, already
-    deduplicated map-side) + a scan-local filter.
-    """
-    if not quasi_cols:
-        raise ValueError("quasi_cols must be non-empty")
-    if l < 2:
-        raise ValueError("l must be >= 2 (l=1 is vacuous)")
-    return (
-        df.groupBy(*quasi_cols)
-        .agg(
-            F.count("*").alias("n"),
-            F.count_distinct(
-                F.coalesce(F.col(sensitive_col).cast("string"), F.lit("\0null"))
-            ).alias("n_sensitive"),
-        )
-        .filter(F.col("n_sensitive") < l)
-        .select(
-            *quasi_cols,
-            F.col("n").cast("long").alias("n"),
-            F.col("n_sensitive").cast("long").alias("n_sensitive"),
-        )
-    )
-
-
-def dp_noisy_counts(
-    df: DataFrame,
-    group_cols: list[str],
-    epsilon: float = 1.0,
-    salt: str = "dp",
-    include_true: bool = False,
-) -> DataFrame:
-    """ε-differentially-private group counts via the Laplace mechanism
-    — the release-side member of the privacy family
-    (:func:`k_anonymity_audit` / :func:`l_diversity_audit` measure
-    re-identification risk; this one produces counts safe to publish):
-    count per group plus Laplace(1/ε) noise (sensitivity 1 for a
-    count), so any single row changes the distribution of the output
-    by at most a factor e^ε.
-
-    The noise draw is SEEDED (md5 of salt + group key), making the
-    release a pure function of the input — reproducible across runs,
-    engines, and partition layouts, and auditable by the oracle. This
-    is the standard deterministic-DP testing posture; rotate ``salt``
-    per release in production (re-releasing under many salts spends
-    budget ε each time — the usual composition caveat, documented not
-    enforced). Inverse-CDF transform: u = (md5 mod 1e6 + 0.5)/1e6 ∈
-    (0,1), noise = −(1/ε)·sign(u−½)·ln(1−2·|u−½|); the single ln is
-    the only libm call, and the emitted noisy count rounds to 6 AFTER
-    the add (the corpus_kl ULP discipline).
-
-    ``include_true=True`` additionally emits the raw count — for
-    audits and tests ONLY; a published release selects the noisy
-    column alone (emitting both would make the noise pointless).
-
-    Scale shape: ONE map-side-combining keyed count, then a scan-local
-    noise projection on the group-sized frame. No window, no Python.
-    """
-    if epsilon <= 0:
-        raise ValueError("epsilon must be positive")
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty")
-    from .packing import _md5_u64
-
-    # NULL-sentinel each component BEFORE joining: concat_ws skips
-    # NULLs, which would collide distinct groups like ('x', NULL) and
-    # (NULL, 'x') onto ONE seed — identical (correlated) noise, which
-    # a seeded-DP release must never draw. The shared _md5_u64 is the
-    # repo's ONE cross-engine hash primitive (no inline twin to drift).
-    key = F.concat_ws(
-        "\x1f",
-        *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-            for c in group_cols
-        ],
-    )
-    u64 = _md5_u64(key, salt)
-    u = ((u64 % F.lit(1_000_000)).cast("double") + F.lit(0.5)) / F.lit(1e6)
-    b = F.lit(1.0 / epsilon)
-    centered = u - F.lit(0.5)
-    noise = (
-        -b
-        * F.signum(centered)
-        * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(centered))
-    )
-    counts = df.groupBy(*group_cols).agg(F.count("*").alias("true_count"))
-    cols = [F.col(c) for c in group_cols]
-    if include_true:
-        cols.append(F.col("true_count").cast("long").alias("true_count"))
-    cols.append(F.round(F.col("true_count") + noise, 6).alias("noisy_count"))
-    return counts.select(*cols)
-
-
-def profile_drift(
-    batch_a: DataFrame,
-    batch_b: DataFrame,
-    columns: list[str],
-) -> DataFrame:
-    """Schema-profile drift between two ingest batches — the per-column
-    health diff a steady-state pipeline alerts on BEFORE content-level
-    drift metrics (``corpus_kl``/PSI) even apply: a feed that suddenly
-    ships 40% NULL ``tool`` columns or collapses ``event_type`` to one
-    value shows up here as a null-rate or distinct-count shift, while
-    its text distribution may still look fine.
-
-    One row per profiled column: (column, n_a, n_b, null_rate_a,
-    null_rate_b, null_rate_delta, n_distinct_a, n_distinct_b,
-    distinct_ratio) — rates and the b/a distinct ratio are each ONE
-    round-6 division of exact integers; ``distinct_ratio`` is NULL
-    when a batch-A column has zero distinct values (no baseline).
-
-    Scale shape: ONE aggregate pass per batch computing every
-    column's null sum and exact distinct count (schema-sized
-    aggregate list; the multi-distinct expand is bounded by the
-    profiled-column count — cap the list, not the data), then a
-    schema-sized unpivot + one tiny join on column name. At 100 TB
-    swap exact distinct counts for the HLL sketches in
-    ``operators.sketches`` — same output shape, documented here.
-    """
-    if not columns:
-        raise ValueError("columns must be non-empty")
-
-    def _profile(df: DataFrame) -> DataFrame:
-        aggs = [F.count("*").alias("_n")]
-        for c in columns:
-            aggs.append(
-                F.sum(F.col(c).isNull().cast("long")).alias(f"_null_{c}")
-            )
-            aggs.append(F.count_distinct(F.col(c)).alias(f"_nd_{c}"))
-        row = df.agg(*aggs)
-        stack_args = ", ".join(
-            f"'{c}', _null_{c}, _nd_{c}" for c in columns
-        )
-        return row.select(
-            "_n",
-            F.expr(
-                f"stack({len(columns)}, {stack_args}) AS (col, n_nulls, n_distinct)"
-            ),
-        ).select(
-            F.col("col"),
-            F.col("_n").alias("n"),
-            F.col("n_nulls"),
-            F.col("n_distinct"),
-        )
-
-    pa = _profile(batch_a)
-    pb = _profile(batch_b)
-    a = pa.select(
-        "col",
-        F.col("n").alias("n_a"),
-        F.col("n_nulls").alias("_nu_a"),
-        F.col("n_distinct").alias("n_distinct_a"),
-    )
-    b = pb.select(
-        "col",
-        F.col("n").alias("n_b"),
-        F.col("n_nulls").alias("_nu_b"),
-        F.col("n_distinct").alias("n_distinct_b"),
-    )
-    ra = F.col("_nu_a").cast("double") / F.col("n_a").cast("double")
-    rb = F.col("_nu_b").cast("double") / F.col("n_b").cast("double")
-    return a.join(b, "col").select(
-        # 'col', not 'column' — COLUMN is a reserved word in several
-        # SQL dialects (incl. the oracle's)
-        F.col("col"),
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        F.round(ra, 6).alias("null_rate_a"),
-        F.round(rb, 6).alias("null_rate_b"),
-        F.round(rb - ra, 6).alias("null_rate_delta"),
-        F.col("n_distinct_a").cast("long").alias("n_distinct_a"),
-        F.col("n_distinct_b").cast("long").alias("n_distinct_b"),
-        F.round(
-            F.when(
-                F.col("n_distinct_a") > 0,
-                F.col("n_distinct_b").cast("double")
-                / F.col("n_distinct_a").cast("double"),
-            ),
-            6,
-        ).alias("distinct_ratio"),
-    )
-
-
-def ks_two_sample(
-    batch_a: DataFrame,
-    batch_b: DataFrame,
-    value_col: str,
-) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov distance between a numeric
-    column's distributions in two batches — the CONTINUOUS member of
-    the drift family (:func:`profile_drift` = schema shape,
-    ``corpus_kl`` = categorical shape, this = where along the value
-    axis two batches' distributions pull apart):
-
-        D = max_x |F_a(x) − F_b(x)|,  reported with the value at
-        which the max is attained (smallest such value on ties).
-
-    Exactness: with c_a(x)/c_b(x) the cumulative counts at each
-    observed value, D's numerator |c_a·n_b − c_b·n_a| is an exact
-    integer — the max and its arg are picked by INTEGER comparison
-    (value ASC tiebreak), and the emitted D is ONE round-6 division
-    of the winning numerator by n_a·n_b. NULLs excluded; an empty
-    side yields no row (no distribution to compare).
-
-    Scale shape: one (value, side) count aggregate, one running-sum
-    window over the DISTINCT merged values (bounded by value
-    cardinality, the AUC posture — quantize first if the column is
-    continuous at full precision), one TakeOrdered argmax. No Python.
-    """
-    a = batch_a.filter(F.col(value_col).isNotNull()).select(
-        F.col(value_col).alias("v"), F.lit(1).alias("_ca"), F.lit(0).alias("_cb")
-    )
-    b = batch_b.filter(F.col(value_col).isNotNull()).select(
-        F.col(value_col).alias("v"), F.lit(0).alias("_ca"), F.lit(1).alias("_cb")
-    )
-    per = (
-        a.unionByName(b)
-        .groupBy("v")
-        .agg(F.sum("_ca").alias("da"), F.sum("_cb").alias("db"))
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cum = per.select(
-        "v",
-        F.sum("da").over(w).alias("ca"),
-        F.sum("db").over(w).alias("cb"),
-        F.sum("da").over(tot).alias("na"),
-        F.sum("db").over(tot).alias("nb"),
-    )
-    # decimal(19)-widened cross products (the simpson discipline): at
-    # multi-billion-row scale ca·nb exceeds int64 and a long product
-    # would wrap; the argmax stays an EXACT decimal comparison.
-    ca19 = F.col("ca").cast("decimal(19,0)")
-    cb19 = F.col("cb").cast("decimal(19,0)")
-    na19 = F.col("na").cast("decimal(19,0)")
-    nb19 = F.col("nb").cast("decimal(19,0)")
-    num = F.abs(ca19 * nb19 - cb19 * na19)
-    return (
-        cum.filter((F.col("na") > 0) & (F.col("nb") > 0))
-        .select(
-            "v",
-            num.alias("_num"),
-            "na",
-            "nb",
-        )
-        .orderBy(F.col("_num").desc(), F.col("v").asc())
-        .limit(1)
-        .select(
-            F.col("na").cast("long").alias("n_a"),
-            F.col("nb").cast("long").alias("n_b"),
-            F.col("v").alias("at_value"),
-            F.round(
-                F.col("_num").cast("double")
-                / (
-                    F.col("na").cast("decimal(19,0)")
-                    * F.col("nb").cast("decimal(19,0)")
-                ).cast("double"),
-                6,
-            ).alias("ks_d"),
         )
     )

@@ -10,7 +10,7 @@ partial states merge associatively across executors, exactly Spark's
 partial-agg model.
 
 Hashing uses the repo's engine-portable md5 bucket (the
-``md5_number_upper`` twin from ``operators.packing``), so a sketch
+``md5_number_upper`` twin from ``operators.hashing``), so a sketch
 built here is bit-identical to one built by the DuckDB oracle — the
 'random' hash functions are pure functions of (salt, row, key).
 """
@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .packing import _md5_bucket, _md5_u64
+from .hashing import _md5_bucket, _md5_u64
 
 
 def _projections(key_col: str, depth: int, width: int, salt: str):

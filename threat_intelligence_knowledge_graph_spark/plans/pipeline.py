@@ -241,7 +241,8 @@ def run_incremental(
     to a from-scratch run over the union (asserted by tests). A
     conversation that continues into a later input is not: the anti-join
     drops every later turn of a conversation already seen, so the
-    increment loses its triples (ROADMAP item 1).
+    increment loses its triples (ROADMAP item 1). Re-running a committed
+    ``run_id`` commits nothing and submits no Spark job.
     """
     if catalog.exists("conv_seen"):
         seen = catalog.read(spark, "conv_seen")
@@ -249,14 +250,15 @@ def run_incremental(
     else:
         todo = transcripts
     result = run_pipeline(spark, todo, catalog, run_id=run_id, collect_counts=False)
-    catalog.merge(
-        spark,
-        todo.select("conv_id").distinct(),
-        "conv_seen",
-        keys=["conv_id"],
-        run_id=run_id,
-        stage="conv-seen",
-    )
+    if not catalog.committed("conv_seen", run_id, "conv-seen"):
+        catalog.merge(
+            spark,
+            todo.select("conv_id").distinct(),
+            "conv_seen",
+            keys=["conv_id"],
+            run_id=run_id,
+            stage="conv-seen",
+        )
     for t in ("nodes", "edges", "triples"):
         result.counts[t] = catalog.rows(t)
     return result
@@ -271,7 +273,9 @@ def audit_graph_tables(
     (``operators/quality_checks``); returns (table, check, violations,
     passed) and, when ``run_id`` is given, merges the results into the
     ``metrics`` table as stage='audit' rows (partition_id −1, value =
-    violations) so audits live next to the lineage they guard."""
+    violations) so audits live next to the lineage they guard. A
+    ``run_id`` whose audit rows are already committed gets the results
+    back but commits nothing."""
     from ..operators.quality_checks import not_null, run_checks
 
     suites = {
@@ -337,7 +341,7 @@ def audit_graph_tables(
             (F.col("violations") == 0).alias("passed"),
         )
         results = results.union(conf)
-    if run_id:
+    if run_id and not catalog.committed("metrics", run_id, "audit"):
         audit_rows = results.select(
             F.lit(run_id).alias("run_id"),
             F.lit("audit").alias("stage"),

@@ -15,9 +15,11 @@ and splits the input into (valid, quarantined):
 
 Scale notes: parsing is the scan itself (JSON/CSV datasources with an
 explicit schema — no sampling/inference pass over 100 TB), and the
-valid/quarantine split is two filters over one cached scan. At scale,
-write both sides out and read back rather than caching (the
-``jobs/run_pipeline.py`` warehouse pattern).
+valid/quarantine split is two filters over the same uncached scan:
+each action that reads a side parses the files again, and nothing pins
+the parsed corpus in storage memory. ``jobs/run_pipeline.py`` commits
+the quarantine side once and reads the valid side once through the
+extraction it checkpoints.
 """
 
 from __future__ import annotations
