@@ -17,7 +17,10 @@ produced by ``jobs/run_pipeline.py`` and run either
   — "what changed since snapshot N": the row-level changelog between
   two commits of a warehouse table (insert/delete, or
   update_pre/update_post when ``--keys`` is given) — the Iceberg
-  changelog / Delta CDF analog over ``tableio`` snapshots.
+  changelog / Delta CDF analog over ``tableio`` snapshots. ``triples``
+  is a view over the edges head, so ``--diff triples`` takes the
+  snapshot ids of its base table (``edges``, or ``edges_canonical``
+  when the last run canonicalized) and diffs their projections.
 
 Invocation::
 
@@ -57,7 +60,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     g = ap.add_mutually_exclusive_group(required=True)
     g.add_argument("--cypher", help="Cypher-lite query (see plans/cypher_lite.py)")
     g.add_argument("--sql", help="Spark SQL over nodes/edges/triples/metrics views")
-    g.add_argument("--diff", metavar="TABLE", help="changelog of a warehouse table")
+    g.add_argument(
+        "--diff", metavar="TABLE",
+        help="changelog of a warehouse table; the triples view diffs its base "
+        "table (edges, or edges_canonical) by that table's snapshot ids",
+    )
     ap.add_argument("--from-snapshot", type=int, default=None,
                     help="diff: older snapshot id (required with --diff)")
     ap.add_argument("--to-snapshot", type=int, default=None,

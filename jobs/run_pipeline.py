@@ -122,7 +122,7 @@ def main() -> None:
         if not r["passed"]
     ]
     print({"audit": "PASS" if not failed else "FAIL", "failed": failed})
-    maintenance_tables = ("nodes", "edges", "triples", "metrics", "extraction")
+    maintenance_tables = ("nodes", "edges", "metrics", "extraction")
     if args.compact:
         compacted = {
             t: catalog.compact(spark, t, run_id=args.run_id)

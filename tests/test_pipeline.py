@@ -272,18 +272,24 @@ class TestTableIO:
         assert m.count() == audit.count()
         assert {r.value for r in m.collect()} == {0}
 
-        # Plant a duplicate triple + a null endpoint → audit must fail.
-        bad = catalog.read(spark, "triples").limit(1).union(
+        # Plant a duplicate edge + a null endpoint with a predicate no
+        # rule emits → the edges checks and the checks over the triples
+        # view must all fail.
+        edges = catalog.read(spark, "edges")
+        bad = edges.limit(1).unionByName(
             spark.createDataFrame(
-                [(None, "X", "y")], "subj string, pred string, obj string"
+                [("Malware", None, "X", "Domain", "y")],
+                "src_label string, src_id string, rel_type string, "
+                "dst_label string, dst_id string",
             )
         )
-        snap = catalog.read(spark, "triples").union(bad)
-        catalog.overwrite(snap, "triples", run_id="b", stage="tamper")
+        catalog.overwrite(edges.unionByName(bad), "edges", run_id="b", stage="tamper")
         audit2 = {
             (r["table"], r["check"]): r["passed"]
             for r in audit_graph_tables(spark, catalog).collect()
         }
+        assert audit2[("edges", "unique(src_id,rel_type,dst_id)")] is False
+        assert audit2[("edges", "not_null(src_id)")] is False
         assert audit2[("triples", "unique(subj,pred,obj)")] is False
         assert audit2[("triples", "not_null(subj)")] is False
         # The planted row's pred 'X' is no rule's predicate and its null
@@ -364,6 +370,126 @@ class TestCanonicalizePipeline:
         for a, b in alias.items():
             assert a.split("_")[0] == b.split("_")[0]  # same type prefix
 
+    def test_triples_view_follows_the_current_base(self, spark, transcripts, tmp_path):
+        """Two canonicalizing runs whose alias dictionaries differ, then a
+        run without canonicalize. After each, the triples view equals the
+        projection of its base row for row: ``edges_canonical`` while its
+        head comes from the current edges head, else ``edges``. So no row
+        rewritten under a superseded alias mapping lingers, and no
+        committed edge is hidden behind a stale canonical table."""
+        from datetime import datetime
+
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        host = "update-service-for-windows-security-telemetry-collector-alpha"
+        texts = {
+            "conv_alias_1": f"Also {host}x.example.com resolves to 45.33.12.8.",
+            "conv_alias_2": f"The malware beacons to {host}.example.com which resolves to 45.33.12.7.",
+            "conv_alias_3": "The malware beacons to evil-relay.example.org which resolves to 45.33.12.9.",
+        }
+
+        def feed(*convs):
+            rows = [
+                {"conv_id": c, "turn_idx": 0, "role": "assistant", "text": texts[c],
+                 "tool": None, "ts": datetime(2025, 1, 1)}
+                for c in convs
+            ]
+            return transcripts.unionByName(
+                spark.createDataFrame(pd.DataFrame(rows), schema=TRANSCRIPTS_SCHEMA)
+            )
+
+        def projection(table):
+            return sorted(
+                (r.src_id, r.rel_type, r.dst_id) for r in catalog.read(spark, table).collect()
+            )
+
+        def check(result, base):
+            triples = sorted(tuple(r) for r in catalog.read(spark, "triples").collect())
+            assert triples == projection(base)
+            assert result.counts["triples"] == len(triples)
+            return triples
+
+        def aliases():
+            return {(r.node_id, r.canonical_id) for r in catalog.read(spark, "canonical_map").collect()}
+
+        r1 = run_pipeline(spark, feed("conv_alias_1"), catalog, run_id="r1", canonicalize=True)
+        first_aliases = aliases()
+        stale = ("Domain_Update-Service-For-Windows-Security-Telemetry-Collector-Alphax_Example_Com",
+                 "RESOLVES_TO", "Ipv4_45_33_12_8")
+        assert stale in check(r1, "edges_canonical")
+
+        r2 = run_pipeline(
+            spark, feed("conv_alias_1", "conv_alias_2"), catalog, run_id="r2", canonicalize=True
+        )
+        assert aliases() != first_aliases and stale[0] in dict(aliases())
+        # The run-1 row now maps to the new canonical id; it must not linger.
+        assert stale not in check(r2, "edges_canonical")
+
+        r3 = run_pipeline(spark, feed("conv_alias_3"), catalog, run_id="r3")
+        # edges_canonical's head is run 2's, so the view reads every
+        # committed edge, run 3's included.
+        triples = check(r3, "edges")  # every committed edge, row for row
+        assert stale in triples
+        assert ("Domain_Evil-Relay_Example_Org", "RESOLVES_TO", "Ipv4_45_33_12_9") in triples
+
+
+class TestTriplesView:
+    """``triples`` is the catalog's view over the edges head."""
+
+    EDGES = "src_label string, src_id string, rel_type string, dst_label string, dst_id string"
+
+    def test_view_resolves_its_base_and_refuses_writes(self, spark, tmp_path):
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        assert not catalog.exists("triples")
+        # A triples table an older warehouse left behind is never read.
+        legacy = catalog._snap_dir("triples", 0)
+        spark.createDataFrame([("old", "P", "o")], "subj string, pred string, obj string") \
+            .write.parquet(legacy)
+        with open(catalog._log_path("triples"), "w") as f:
+            json.dump([{"snapshot": 0, "run_id": "r0", "stage": "assemble",
+                        "operation": "merge"}], f)
+
+        raw = [("Domain", "d1", "RESOLVES_TO", "Ipv4", "i1"),
+               ("Domain", "d2", "RESOLVES_TO", "Ipv4", "i1")]
+        catalog.overwrite(spark.createDataFrame(raw, self.EDGES), "edges", "r1", "assemble")
+        assert catalog.log("triples") == [] and not catalog.committed("triples", "r0", "assemble")
+        assert catalog._chain_dirs("triples", catalog.log("triples")) == []
+        assert sorted(catalog.read(spark, "triples").collect()) == [
+            ("d1", "RESOLVES_TO", "i1"), ("d2", "RESOLVES_TO", "i1")
+        ]
+        assert catalog.exists("triples")
+        assert _job_ids(spark, lambda: catalog.rows("triples")) == []
+        assert catalog.rows("triples") == 2
+
+        # A canonical head derived from the current edges head is the base;
+        # once edges move on without it, edges is the base again.
+        canon = [("Domain", "d1", "RESOLVES_TO", "Ipv4", "i1")]
+        catalog.overwrite(spark.createDataFrame(canon, self.EDGES), "edges_canonical", "r1", "canonicalize")
+        assert catalog.rows("triples") == 1
+        catalog.compact(spark, "edges")  # same rows: the base stays canonical
+        assert catalog.rows("triples") == 1
+        catalog.append(
+            spark.createDataFrame([("Url", "u1", "CONTAINS", "Domain", "d1")], self.EDGES),
+            "edges", "r2", "assemble",
+        )
+        assert catalog.rows("triples") == 3
+        # Time travel and diff use the base's snapshot ids.
+        assert catalog.read(spark, "triples", as_of_snapshot=1).count() == 2
+        assert [tuple(r) for r in catalog.diff(spark, "triples", 1).collect()] == [
+            ("insert", "u1", "CONTAINS", "d1")
+        ]
+
+        df = catalog.read(spark, "triples")
+        for write in (
+            lambda: catalog.overwrite(df, "triples"),
+            lambda: catalog.merge(spark, df, "triples", keys=["subj", "pred", "obj"]),
+            lambda: catalog.append(df, "triples"),
+            lambda: catalog.compact(spark, "triples"),
+            lambda: catalog.vacuum("triples"),
+        ):
+            with pytest.raises(ValueError, match="view"):
+                write()
+        assert sorted(os.listdir(catalog._table_dir("triples"))) == ["_log.json", "snap-0"]
+
 
 class TestIncremental:
     def test_daily_increments_equal_full_run(self, spark, tmp_path):
@@ -389,6 +515,8 @@ class TestIncremental:
         # Third increment with a pure replay: nothing changes.
         r3 = run_incremental(spark, dfall, catalog, run_id="day3")
         assert r3.counts["triples"] == r2.counts["triples"]
+        # Increments write no triples table: it is a view.
+        assert not os.path.exists(catalog._table_dir("triples"))
 
 
 class TestVacuum:
@@ -555,6 +683,27 @@ class TestJobCounts:
             spark, lambda: run_pipeline(spark, transcripts, catalog, run_id="r1")
         ) == []
 
+    def test_fresh_build_jobs_carry_their_stage(self, spark, transcripts, tmp_path):
+        """A fresh build submits at most 9 jobs (10 while triples was a
+        table), each described as ``<run_id>:<stage>``, and the caller's
+        description is restored afterwards."""
+        sc = spark.sparkContext
+        catalog = LocalTableCatalog(str(tmp_path / "wh"))
+        after = []
+
+        def build():
+            run_pipeline(spark, transcripts, catalog, run_id="r1")
+            after.append(sc.getLocalProperty("spark.job.description"))
+
+        ids = _job_ids(spark, build)
+        assert 0 < len(ids) <= 9
+        store = sc._jsc.sc().statusStore()
+        described = [store.job(i).description() for i in ids]
+        assert all(d.isDefined() and d.get().startswith("r1:") for d in described)
+        assert {d.get() for d in described} >= {"r1:extract", "r1:assemble/edges"}
+        assert after[0].startswith("jobs-")  # _job_ids' own description
+        assert not os.path.exists(catalog._table_dir("triples"))
+
     def test_incremental_rerun_commits_nothing(self, spark, transcripts, tmp_path):
         from threat_intelligence_knowledge_graph_spark.plans.pipeline import (
             run_incremental,
@@ -612,6 +761,7 @@ def test_job_rerun_commits_nothing(spark, transcripts, tmp_path):
 
     run()
     logs = _logs(tmp_path / "wh")
-    assert {"quarantine", "extraction", "nodes", "edges", "triples", "metrics"} <= set(logs)
+    assert {"quarantine", "extraction", "nodes", "edges", "metrics"} <= set(logs)
+    assert "triples" not in logs  # a view: no log, no directory
     run()
     assert _logs(tmp_path / "wh") == logs

@@ -1,4 +1,4 @@
-"""Stage E — graph assembly: nodes / edges / triples tables.
+"""Stage E — graph assembly: the nodes and edges tables, and the triples view.
 
 DataFrame re-expression of the reference's store semantics
 (reference neo4j_store.py:109-164):
@@ -10,7 +10,10 @@ DataFrame re-expression of the reference's store semantics
 - edge upsert  = dedup on (src_id, rel_type, dst_id);
 - MATCH-before-MERGE = left-semi joins of edges against the node table on
   both endpoints (edges with missing endpoints silently drop);
-- triple view  = distinct (subj, pred, obj) — the P/R comparison artifact.
+- triple view  = the (subj, pred, obj) projection of the edges head — the
+  P/R comparison artifact. ``build_triples`` is its one definition:
+  ``sources/tableio`` serves the ``triples`` view through it, so no
+  triples table is written, merged or resumed.
 
 All aggregations are partial-aggregate friendly (map-side combine); AQE
 splits skewed reduce partitions on hot entities (common CVEs).
@@ -45,7 +48,8 @@ def build_edges(extraction: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 def build_triples(edges: DataFrame) -> DataFrame:
-    """(subj, pred, obj) per edge — reference neo4j_store.py:152-161.
+    """(subj, pred, obj) per edge — reference neo4j_store.py:152-161. The
+    catalog's ``triples`` view applies this to the edges head.
 
     No ``distinct``: ``edges`` must be unique on ``(src_id, rel_type,
     dst_id)``, as ``build_edges`` and ``apply_canonicalization`` return

@@ -3,15 +3,22 @@
 Stage graph (SURVEY.md §3.1 "Spark lifecycle"):
 
   transcripts ──C extract (fused kernel)──> extraction
-       extraction ──E commit_graph──> nodes / edges / triples
+       extraction ──E commit_graph──> nodes / edges
        extraction ──> metrics rows (run_id, stage, partition_id)
+
+``triples`` is not written: the catalog serves it as a view, the
+``(subj, pred, obj)`` projection of the edges head (``edges_canonical``
+when the run canonicalized, see ``sources/tableio``).
 
 Each stage commits a snapshot via the TableIO seam; a resumed run skips
 any stage already committed for its ``run_id`` (idempotent — re-running a
 finished run rewrites nothing and the triple set is unchanged, the
 run-twice test). Lineage is per-partition row counts in the ``metrics``
 table, satisfying the north_star's "per-partition lineage and metrics
-rows".
+rows". Every Spark job a stage submits carries the job description
+``<run_id>:<stage>`` (for example ``r1:extract`` or
+``r1:assemble/edges``), so Spark's status store and event log attribute
+each job to its stage.
 
 ``commit_graph`` is the one write path into the graph tables: batch and
 incremental runs call it through ``run_pipeline``, and every streaming
@@ -20,19 +27,19 @@ micro-batch calls it from ``streaming/stream_extract``.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.canonicalize import apply_canonicalization, build_alias_dictionary
 from ..operators.extraction import extract_graph_records_fused
-from ..operators.triples import build_edges, build_nodes, build_triples
+from ..operators.triples import build_edges, build_nodes
 from ..sources.tableio import LocalTableCatalog
 
 GRAPH_KEYS = {
     "nodes": ["node_label", "node_id"],
     "edges": ["src_id", "rel_type", "dst_id"],
-    "triples": ["subj", "pred", "obj"],
 }
 
 
@@ -41,6 +48,20 @@ class PipelineResult:
     run_id: str
     tables: dict[str, str] = field(default_factory=dict)
     counts: dict[str, int] = field(default_factory=dict)
+
+
+@contextmanager
+def _stage(spark: SparkSession, run_id: str, stage: str):
+    """Describe the Spark jobs submitted inside as ``<run_id>:<stage>``,
+    then restore the caller's description (job groups and other local
+    properties are left alone)."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"{run_id}:{stage}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
 
 
 def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
@@ -75,23 +96,12 @@ def commit_graph(
     stage: str,
     canonicalize: bool = False,
 ) -> None:
-    """MERGE one extraction into ``nodes``, ``edges`` and ``triples``.
+    """MERGE one extraction into ``nodes`` and ``edges``.
 
     Order: nodes first; then this extraction's edges, semi-joined
     against the HEAD ``nodes`` (MATCH-before-MERGE, so an endpoint
-    committed by an earlier run also counts); then the triples, built
-    from the ``edges`` table just committed, read back through its
-    stored schema (no job). Under today's rewrite merges that table is
-    the whole edges head, not this call's edges: the triples merge
-    already reads and rewrites the whole triples head, so this adds
-    about |edges| rows to that union and distinct, and in exchange
-    skips a second pass over the extraction and a second broadcast of
-    the node ids. On a 4-vCPU host (``local[4]``), committing 50 new
-    conversations into a warehouse of 10,000 (an edges head 200 times
-    the delta), the triples merge took about half the time of one built
-    from the delta. Under append commits (ROADMAP item 2) the committed
-    snapshot is the delta itself. The key-based MERGE keeps the result
-    identical to a rebuild.
+    committed by an earlier run also counts). The ``triples`` view
+    follows the committed edges head, so nothing else is written.
 
     Resume rule: each table is skipped when it already holds a commit
     under ``(run_id, stage)`` and its rows are then not even planned, so
@@ -99,58 +109,56 @@ def commit_graph(
     job, and a crash between two tables resumes at the first missing one.
 
     ``canonicalize=True`` enables stage D's alias layer (MinHash/LSH +
-    connected components over node surface forms) and builds the
-    triples from ``edges_canonical`` instead. OFF by default: the NER
-    path's ids are already exact-canonical and the parity gate requires
-    the exact triple set (SURVEY.md §7 step 6). The dictionary is
-    committed as the ``canonical_map`` table.
+    connected components over node surface forms) and commits
+    ``edges_canonical``, which the ``triples`` view then reads. OFF by
+    default: the NER path's ids are already exact-canonical and the
+    parity gate requires the exact triple set (SURVEY.md §7 step 6). The
+    dictionary is committed as the ``canonical_map`` table.
     """
 
     def merge(table: str, build) -> None:
         # ``build`` runs only for a table this commit has not written, so
         # a resume reads and plans nothing.
         if not catalog.committed(table, run_id, stage):
-            catalog.merge(
-                spark, build(), table, keys=GRAPH_KEYS[table],
-                run_id=run_id, stage=stage,
-            )
+            with _stage(spark, run_id, f"{stage}/{table}"):
+                catalog.merge(
+                    spark, build(), table, keys=GRAPH_KEYS[table],
+                    run_id=run_id, stage=stage,
+                )
 
     merge("nodes", lambda: build_nodes(extraction))
     merge("edges", lambda: build_edges(extraction, catalog.read(spark, "nodes")))
-    triples_from = "edges"
 
     # --- Stage D (optional): alias canonicalization -------------------------
-    # The rewrite is committed as its own `edges_canonical` table (and
-    # feeds the triples build) rather than silently diverging from the
-    # raw `edges` view: the raw edges/nodes tables keep surface-form ids
-    # for provenance, `edges_canonical`/`triples` carry resolved ids, and
-    # graph queries choose explicitly which layer they read.
+    # The rewrite is committed as its own `edges_canonical` table (which
+    # the `triples` view then reads) rather than silently diverging from
+    # the raw `edges` table: the raw edges/nodes tables keep surface-form
+    # ids for provenance, `edges_canonical`/`triples` carry resolved ids,
+    # and graph queries choose explicitly which layer they read.
     if canonicalize:
-        if not catalog.committed("canonical_map", run_id, "canonicalize"):
-            # Conservative threshold: ids are already exact-canonical, so
-            # only near-identical surface forms (punctuation/underscore
-            # variants) may merge — 0.75 would falsely merge distinct
-            # domains that differ by one char (evil-1 vs evil-2).
-            alias = build_alias_dictionary(
-                catalog.read(spark, "nodes"), jaccard_threshold=0.9
-            )
-            catalog.overwrite(alias, "canonical_map", run_id, "canonicalize")
-        if not catalog.committed("edges_canonical", run_id, "canonicalize"):
-            # edges_canonical is DERIVED (current edges × current alias
-            # map), so it is recomputed and overwritten whole — a MERGE
-            # would keep rows rewritten under superseded alias mappings
-            # forever when the dictionary changes across runs.
-            catalog.overwrite(
-                apply_canonicalization(
-                    catalog.read(spark, "edges"), catalog.read(spark, "canonical_map")
-                ),
-                "edges_canonical",
-                run_id,
-                "canonicalize",
-            )
-        triples_from = "edges_canonical"
-
-    merge("triples", lambda: build_triples(catalog.read(spark, triples_from)))
+        with _stage(spark, run_id, "canonicalize"):
+            if not catalog.committed("canonical_map", run_id, "canonicalize"):
+                # Conservative threshold: ids are already exact-canonical,
+                # so only near-identical surface forms (punctuation/
+                # underscore variants) may merge — 0.75 would falsely merge
+                # distinct domains that differ by one char (evil-1 vs evil-2).
+                alias = build_alias_dictionary(
+                    catalog.read(spark, "nodes"), jaccard_threshold=0.9
+                )
+                catalog.overwrite(alias, "canonical_map", run_id, "canonicalize")
+            if not catalog.committed("edges_canonical", run_id, "canonicalize"):
+                # edges_canonical is DERIVED (current edges × current alias
+                # map), so it is recomputed and overwritten whole — a MERGE
+                # would keep rows rewritten under superseded alias mappings
+                # forever when the dictionary changes across runs.
+                catalog.overwrite(
+                    apply_canonicalization(
+                        catalog.read(spark, "edges"), catalog.read(spark, "canonical_map")
+                    ),
+                    "edges_canonical",
+                    run_id,
+                    "canonicalize",
+                )
 
 
 def run_pipeline(
@@ -198,18 +206,19 @@ def run_pipeline(
         catalog.committed("extraction", run_id, "extract")
         and catalog.committed("metrics", run_id, "extract-metrics")
     ):
-        extraction = extract_graph_records_fused(
-            transcripts, input_pregrouped=input_pregrouped
-        )
-        catalog.overwrite(extraction, "extraction", run_id, "extract")
-        catalog.merge(
-            spark,
-            _partition_metrics(catalog.read(spark, "extraction"), run_id, "extract"),
-            "metrics",
-            keys=["run_id", "stage", "partition_id", "metric"],
-            run_id=run_id,
-            stage="extract-metrics",
-        )
+        with _stage(spark, run_id, "extract"):
+            extraction = extract_graph_records_fused(
+                transcripts, input_pregrouped=input_pregrouped
+            )
+            catalog.overwrite(extraction, "extraction", run_id, "extract")
+            catalog.merge(
+                spark,
+                _partition_metrics(catalog.read(spark, "extraction"), run_id, "extract"),
+                "metrics",
+                keys=["run_id", "stage", "partition_id", "metric"],
+                run_id=run_id,
+                stage="extract-metrics",
+            )
 
     # --- Stage E: graph tables (MERGE upserts — incremental-run ready) -----
     commit_graph(
@@ -251,14 +260,15 @@ def run_incremental(
         todo = transcripts
     result = run_pipeline(spark, todo, catalog, run_id=run_id, collect_counts=False)
     if not catalog.committed("conv_seen", run_id, "conv-seen"):
-        catalog.merge(
-            spark,
-            todo.select("conv_id").distinct(),
-            "conv_seen",
-            keys=["conv_id"],
-            run_id=run_id,
-            stage="conv-seen",
-        )
+        with _stage(spark, run_id, "conv-seen"):
+            catalog.merge(
+                spark,
+                todo.select("conv_id").distinct(),
+                "conv_seen",
+                keys=["conv_id"],
+                run_id=run_id,
+                stage="conv-seen",
+            )
     for t in ("nodes", "edges", "triples"):
         result.counts[t] = catalog.rows(t)
     return result
@@ -273,7 +283,8 @@ def audit_graph_tables(
     (``operators/quality_checks``); returns (table, check, violations,
     passed) and, when ``run_id`` is given, merges the results into the
     ``metrics`` table as stage='audit' rows (partition_id −1, value =
-    violations) so audits live next to the lineage they guard. A
+    violations) so audits live next to the lineage they guard. The
+    ``triples`` checks run over the view, so they audit its base. A
     ``run_id`` whose audit rows are already committed gets the results
     back but commits nothing."""
     from ..operators.quality_checks import not_null, run_checks

@@ -27,6 +27,15 @@ action carries: ``read`` passes the stored schema, so it submits no
 schema-inference job, and ``rows`` answers a table's row count from the
 log alone. Entries written before these two fields existed still read
 and count, through schema inference and a ``count()``.
+
+``triples`` is a view, not a table: ``build_triples``' projection of the
+edges head, resolved on every read the way an Iceberg catalog resolves a
+view. It stores nothing, so it has no log, ``committed`` is ``False`` and
+every write to it raises ``ValueError``. Its base is ``edges_canonical``
+when that head was derived from the current ``edges`` head (the two heads
+share a ``run_id``; an ``edges`` compaction keeps the rows and does not
+count), else ``edges``. A ``triples/`` directory left by an
+older warehouse is never read.
 """
 
 from __future__ import annotations
@@ -39,6 +48,10 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+from ..operators.triples import build_triples
+
+TRIPLES = "triples"  # a view: build_triples over its base edges table
 
 
 class LocalTableCatalog:
@@ -55,7 +68,7 @@ class LocalTableCatalog:
 
     def log(self, name: str) -> list[dict]:
         path = self._log_path(name)
-        if not os.path.exists(path):
+        if name == TRIPLES or not os.path.exists(path):
             return []
         with open(path) as f:
             return json.load(f)
@@ -72,7 +85,25 @@ class LocalTableCatalog:
         os.replace(tmp, self._log_path(name))
 
     def exists(self, name: str) -> bool:
-        return bool(self.log(name))
+        return bool(self.log(self._base(name)))
+
+    def _base(self, name: str) -> str:
+        """The table that stores ``name``'s rows: ``name`` itself, or the
+        base of the ``triples`` view (see the module docstring)."""
+        if name != TRIPLES:
+            return name
+        # A compaction rewrites the same rows, so it does not move the
+        # head the canonical table was derived from.
+        canonical = self.log("edges_canonical")
+        edges = [e for e in self.log("edges") if e["operation"] != "compact"]
+        if canonical and edges and canonical[-1]["run_id"] == edges[-1]["run_id"]:
+            return "edges_canonical"
+        return "edges"
+
+    @staticmethod
+    def _writable(name: str) -> None:
+        if name == TRIPLES:
+            raise ValueError(f"{name} is a view over the edges head; write edges instead")
 
     def committed(self, name: str, run_id: str, stage: str) -> bool:
         """Has (run_id, stage) already committed to this table? (resume)"""
@@ -95,7 +126,7 @@ class LocalTableCatalog:
         chain); any other operation materializes fully."""
         by_snap = {e["snapshot"]: e for e in entries}
         chain: list[dict] = []
-        e: dict | None = head or entries[-1]
+        e: dict | None = head or (entries[-1] if entries else None)
         while e is not None:
             chain.append(e)
             parent = e.get("parent") if e["operation"] == "append" else None
@@ -151,7 +182,9 @@ class LocalTableCatalog:
         older than the vacuum horizon raises ``FileNotFoundError`` naming
         the reclaimed snapshot (the log keeps every record, only data
         files are reclaimed — a silent partial read would be worse than
-        failing)."""
+        failing). A view reads its base, at the base's snapshot ids."""
+        if name == TRIPLES:
+            return build_triples(self.read(spark, self._base(name), as_of_snapshot))
         entries = self.log(name)
         if as_of_snapshot is not None:
             entries = [e for e in entries if e["snapshot"] <= as_of_snapshot]
@@ -176,8 +209,9 @@ class LocalTableCatalog:
     def rows(self, name: str) -> int:
         """Row count of the table head, from the log: the head's ``rows``,
         summed along its append chain. Only a chain with an entry that
-        predates the ``rows`` field is counted with a Spark job."""
-        entries = self.log(name)
+        predates the ``rows`` field is counted with a Spark job. A view
+        counts its base."""
+        entries = self.log(self._base(name))
         if not entries:
             raise FileNotFoundError(f"table {name} has no committed snapshot")
         chain = self._chain(entries)
@@ -195,6 +229,7 @@ class LocalTableCatalog:
         per-batch cost is proportional to the BATCH, not the table.
         Small files accrete across batches; run ``compact`` periodically
         to materialize the chain into one snapshot, then ``vacuum``."""
+        self._writable(name)
         entries = self.log(name)
         parent = entries[-1]["snapshot"] if entries else None
         self._write(
@@ -206,6 +241,7 @@ class LocalTableCatalog:
         self, df: DataFrame, name: str, run_id: str = "", stage: str = ""
     ) -> None:
         """Full-snapshot replace (checkpoint write)."""
+        self._writable(name)
         self._write(df, name, {"run_id": run_id, "stage": stage, "operation": "overwrite"})
 
     def merge(
@@ -224,15 +260,17 @@ class LocalTableCatalog:
         same batch twice is a no-op on content.
 
         Precondition: the rows of ``df`` are unique on ``keys``. Every
-        caller meets it (``build_nodes``, ``build_edges`` and
-        ``build_triples`` return rows unique on their merge keys). So a
+        caller meets it (``build_nodes`` and ``build_edges`` return rows
+        unique on their merge keys). So a
         merge into a table with no commit is a plain write of ``df``.
         Into an existing table it is a rewrite: the head and ``df`` are
         unioned and, per key, the incoming row wins through ``max_by``
         over a commit flag; a table whose columns are all keys needs only
         a ``distinct`` over the union (and avoids an empty-struct
-        ``max_by``, a fragile edge case).
+        ``max_by``, a fragile edge case). The merged snapshot keeps
+        ``df``'s column order, as a plain write does.
         """
+        self._writable(name)
         record = {"run_id": run_id, "stage": stage, "operation": "merge"}
         if not self.exists(name):
             self._write(df, name, record)
@@ -248,7 +286,7 @@ class LocalTableCatalog:
                 .agg(
                     F.max_by(F.struct(*value_cols), F.col("_commit")).alias("_v")
                 )
-                .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in value_cols])
+                .select(*[F.col(f"_v.{c}").alias(c) if c in value_cols else c for c in df.columns])
             )
         self._write(merged, name, record)
 
@@ -273,6 +311,7 @@ class LocalTableCatalog:
         equality filters prune files. Returns the number of files in the
         new snapshot.
         """
+        self._writable(name)
         entries = self.log(name)
         if not entries:
             raise FileNotFoundError(f"table {name} has no committed snapshot")
@@ -370,6 +409,7 @@ class LocalTableCatalog:
         kept head survives — a vacuum can never tear a live chain.
         Returns the snapshot ids removed. Equivalent of Iceberg's
         expire_snapshots."""
+        self._writable(name)
         entries = self.log(name)
         if len(entries) <= keep_last:
             return []

@@ -43,7 +43,8 @@ def stream_extract(
     available_now: bool = True,
     max_files_per_trigger: int | None = 8,
 ):
-    """Stream transcripts from ``input_dir`` into nodes/edges/triples.
+    """Stream transcripts from ``input_dir`` into nodes and edges (the
+    ``triples`` view follows the edges head).
 
     Returns the started StreamingQuery; with ``available_now`` the query
     drains existing files and stops (test/backfill mode), otherwise it
